@@ -30,8 +30,9 @@ object Bench {
     // A thrown query must NOT be recorded as if its time-to-exception were
     // a measurement (round 7: 12 broken queries sat in the bench as fake
     // ~0.35 s rows). Track errors separately; they are excluded from the
-    // total and listed under "errors" in the output line.
-    val errored = scala.collection.mutable.LinkedHashSet.empty[String]
+    // total and listed under "errors" in the output line with the cause of
+    // each query's first failure.
+    val errored = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Frozen-artifact build ledger: train-once memo builds (IVF centroids,
     // census/bloom bytes, materialized manifests) are paid by whichever
     // query FIRST touches the memo, so its per-query number includes the
@@ -72,7 +73,10 @@ object Bench {
       mPeak.set(0L)
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => errored += name }
+        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+          errored.getOrElseUpdate(name,
+            s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(160)}")
+        }
         (System.nanoTime() - t0) / 1e9
       }
       ops.FrozenCaches.drainBuildLog().foreach(e => builds += ((e.artifact, name, e.sec)))
@@ -119,7 +123,8 @@ object Bench {
     val slow = results.toSeq.sortBy { case (k, v) => (-r3(v), k) }.take(10)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) r3(results.values.sum) else 0.0
-    val errs = errored.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errs = errored.toSeq.sortBy(_._1)
+      .map { case (k, v) => Verify.jsonStr(k) + ":" + Verify.jsonStr(v) }.mkString("{", ",", "}")
     // build order preserved: artifact -> (builder query, build seconds)
     val ledger = builds.map { case (a, q, s) =>
       "{\"artifact\":\"" + a + "\",\"built_by\":\"" + q + "\",\"sec\":" + r3(s) + "}"

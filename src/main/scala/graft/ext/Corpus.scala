@@ -2596,38 +2596,6 @@ object Corpus {
         (contamination <= lit(MaxContamination)).as("pass_decontam"))
   }
 
-  /** Diagnostics seam for [[graft.tools.FeatProfile]]: each subplan of
-    * [[manifestDocFeatures]] over the registered fresh slice, named, so a
-    * study can time them independently. Not part of any query. */
-  private[graft] def featProfileProbe(spark: SparkSession,
-                                      dir: String): Seq[(String, () => DataFrame)] = {
-    val docs = Tables.documents(spark, dir)
-    val old = deltaOldSlice(docs)
-    val nw = deltaNewSlice(docs)
-    val (base, thrTot, thrN) = frozenManifestBase(spark, dir)
-    val census = spark.read.parquet(s"$base/census.parquet")
-    val weights = spark.read.parquet(s"$base/weights.parquet")
-    val evalh = spark.read.parquet(s"$base/evalh.parquet")
-    val delta = snapshotDeltaOn(old, nw).localCheckpoint()
-    val fresh = delta.filter(col("status").isin("added", "changed")).select("doc_id")
-    val snap = nw.join(fresh, Seq("doc_id"), "left_semi").localCheckpoint()
-    val train = snap.filter(pmod(col("doc_id"), lit(10L)) =!= lit(BenchSlice))
-    Seq(
-      "quality" -> (() => graft.ext.Text.qualityFilterRowsOn(train)),
-      "repetition" -> (() => graft.ext.Text.repetitionStatsOn(train)),
-      "fluency" -> (() => graft.ext.Text.lmFluencyAgainstOn(train, census)),
-      "classifier" -> (() => graft.ext.Quality.qsKeepWithThreshold(train, weights, thrTot, thrN)),
-      "decontam" -> (() => decontaminateAgainstHashesOn(train, evalh)),
-      "textstats" -> (() => graft.ext.Text.textStatsRowsOn(snap)),
-      "split" -> (() => splitRowsOn(snap)),
-      "mixcopies" -> (() => mixCopiesOn(snap)),
-      "fp" -> (() => snap.select(col("doc_id"),
-        md5(graft.ext.Text.normalized(col("text"))).as("fp"))),
-      "all_joined" -> (() => manifestDocFeatures(snap, census, weights, thrTot, thrN, evalh)),
-      "all_ckpt" -> (() => manifestDocFeatures(snap, census, weights, thrTot, thrN, evalh)
-        .withColumn("is_canonical", lit(null).cast("boolean")).localCheckpoint()))
-  }
-
   /** The frozen funnel-verdict recomposition from warehouse gate bits and
     * a CURRENT canonical verdict — [[graft.ext.Curation.verdictExprs]],
     * the SAME expression definition the one-shot funnel composes, so a

@@ -827,8 +827,8 @@ object Dedup {
       .select("doc_a", "doc_b")
 
   /** Round count of the LAST [[propagateComponents]] run in this JVM —
-    * a diagnostics/spec hook (DedupSpec's O(log n) chain bound, the
-    * CcSkewStudy), not part of the operator API. */
+    * a spec hook (DedupSpec's O(log n) chain bound), not part of the
+    * operator API. */
   private[graft] val lastPropagationRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // Env-gated (GRAFT_CC_DEBUG) per-round shuffle meter for the CC loop:
@@ -1294,7 +1294,7 @@ object Dedup {
     * (6% churn at [[graft.ext.Corpus.DeltaMod]] = 50 — production
     * ingestion shape) so every delta class (added, removed, changed,
     * unchanged) is exercised: the old snapshot's manifest + edges come
-    * from the frozen store, and the update reconciles them to the new
+    * from the frozen artifacts, and the update reconciles them to the new
     * snapshot. Its oracle is the SAME from-scratch recursive closure over
     * the new snapshot — the incremental path earns correctness by
     * matching the full rebuild. */

@@ -824,15 +824,13 @@ object Similarity {
     * frozen-index path ([[knnIvfPq]]) so the two can never drift. */
   private def ivfPqSearch(embeddings: DataFrame, cent: DataFrame, cbd: DataFrame,
                           sub: DataFrame, nProbe: Int, pcfg: PqCfg,
-                          sharedPids: Option[DataFrame] = None,
-                          sharedCodes: Option[DataFrame] = None,
-                          sharedLut: Option[DataFrame] = None): DataFrame = {
+                          sharedPids: Option[DataFrame] = None): DataFrame = {
     import pcfg.{m, refine}
     val e = withNorm(embeddings)
     val pids = sharedPids.getOrElse(probeIds(embeddings))
     val cells = assignCells(e, cent).select("vec_id", "cell")
-    val coded = sharedCodes.getOrElse(pqCodesWide(sub, cbd, m)).join(cells, "vec_id")
-    val lutW = sharedLut.getOrElse(pqLutWide(sub, cbd, m, pids))
+    val coded = pqCodesWide(sub, cbd, m).join(cells, "vec_id")
+    val lutW = pqLutWide(sub, cbd, m, pids)
     val queries = probeFilterWith(e, pids)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
     val pcells = probeCells(queries,
@@ -852,9 +850,7 @@ object Similarity {
     knnIvfPqFrozen(spark, dir, None)
 
   private def knnIvfPqFrozen(spark: SparkSession, dir: String,
-                             pids: Option[DataFrame],
-                             sharedCodes: Option[DataFrame] = None,
-                             sharedLut: Option[DataFrame] = None): DataFrame = {
+                             pids: Option[DataFrame]): DataFrame = {
     // static Lloyd width (oracle hardcodes the same 64) + frozen models:
     // quantizer AND codebooks train once per corpus; every invocation
     // after that is encode + probe + ADC + re-rank only
@@ -864,8 +860,7 @@ object Similarity {
     ivfPqSearch(emb,
       frozenCentroids(spark, dir, kcfg),
       frozenCodebook(spark, dir, pcfg),
-      pqSub(emb, pcfg.m, pcfg.dims / pcfg.m), NProbe, pcfg, pids,
-      sharedCodes, sharedLut)
+      pqSub(emb, pcfg.m, pcfg.dims / pcfg.m), NProbe, pcfg, pids)
   }
 
   /** Frozen-model form of the flat-PQ scan, mirroring [[knnIvfPq]]: the
@@ -879,16 +874,14 @@ object Similarity {
     knnPqFrozen(spark, dir, None)
 
   private def knnPqFrozen(spark: SparkSession, dir: String,
-                          sharedPids: Option[DataFrame],
-                          sharedCodes: Option[DataFrame] = None,
-                          sharedLut: Option[DataFrame] = None): DataFrame = {
+                          sharedPids: Option[DataFrame]): DataFrame = {
     val cfg = PqCfg()
     val emb = Tables.embeddings(spark, dir)
     val sub = pqSub(emb, cfg.m, cfg.dims / cfg.m)
     val cbd = frozenCodebook(spark, dir, cfg)
     val pids = sharedPids.getOrElse(probeIds(emb))
-    val codesW = sharedCodes.getOrElse(pqCodesWide(sub, cbd, cfg.m))
-    val lutW = sharedLut.getOrElse(pqLutWide(sub, cbd, cfg.m, pids))
+    val codesW = pqCodesWide(sub, cbd, cfg.m)
+    val lutW = pqLutWide(sub, cbd, cfg.m, pids)
     val w = Window.partitionBy("q_id").orderBy(col("adc").asc, col("vec_id"))
     val adcRanked = codesW.crossJoin(broadcast(lutW))
       .filter(col("vec_id") =!= col("q_id"))
@@ -1251,8 +1244,7 @@ object Similarity {
     // (codesW/lutW) was tried and measured WORSE (20→28 steady-state
     // jobs, 134→361 tasks — the materialization cascade plus the lost
     // stage fusion cost more than the duplicated encode saves at any
-    // probe budget); the seams remain on the Frozen carriers for callers
-    // with bigger shared fan-out.
+    // probe budget).
     val emb = Tables.embeddings(spark, dir)
     val pids = Some(probeIds(emb))
     val bf = knnBruteForceOn(emb, pids).select(col("q_id"), col("neighbor_id")).persist()

@@ -1821,9 +1821,9 @@ object Text {
     * ceiling the gate is property-based (TextSpec: the n-merge table is a
     * PREFIX of the (n+k)-merge table, segmentations reassemble their
     * words, per-word piece counts are monotone non-increasing in merge
-    * count) and the cost shape is measured by
-    * [[graft.tools.TokenizerScaleStudy]] (driver jobs scale with merges,
-    * per-merge wall is lexicon-bounded — flat across 10× corpus). */
+    * count). Cost is lexicon-bounded by construction: driver jobs scale
+    * with merges, and every merge round aggregates the distinct-word
+    * lexicon, never the corpus. */
   val BpeMerges = 10
   val BpeMinPair = 2L
 
@@ -2012,8 +2012,7 @@ object Text {
     * vocabularies come through `unigramTrainOn`'s `seedTop` knob — beyond
     * the ceiling the gate is property-based (TextSpec: single-char
     * coverage floor intact, segmentations reassemble, aggregate fertility
-    * non-increasing in seed size) with the cost shape measured by
-    * [[graft.tools.TokenizerScaleStudy]]. */
+    * non-increasing in seed size). */
   val UniSeedTop = 24
   val UniEmRounds = 2
 

@@ -14,8 +14,8 @@ package graft.ops
   * cleaned) the first time the new generation is requested. On a path the
   * local walk cannot see (remote FS), the signature degrades to a
   * constant and the contract falls back to the previous one: call
-  * [[clearAll]] after swapping data. Fresh JVMs (the driver's per-round
-  * Verify/Bench runs) start empty and need nothing.
+  * [[clearAll]] after swapping data. Artifacts live in this JVM only:
+  * there is no on-disk store, so a fresh JVM starts empty and rebuilds.
   *
   * Each hosting object registers its clear hook at class-init; hooks also
   * best-effort delete any temp-dir artifacts they own (the dup-cluster
@@ -26,31 +26,7 @@ package graft.ops
   * persisted/checkpointed DataFrames. [[graft.Bench]] blanket-unpersists
   * every persistent RDD between queries; a cached frame carried across
   * queries would lose its blocks with no lineage fallback and fail a
-  * later query with checkpoint-block-not-found.
-  *
-  * ==Cross-JVM store==
-  * Labeled memos can additionally persist to a content-keyed ON-DISK
-  * store (OPT-IN: env `GRAFT_FROZEN_DIR=<dir>` or system property
-  * `graft.frozen.dir`; off by default — see [[storeRoot]]), so a fresh
-  * JVM in a long-lived deployment stops re-paying every base build
-  * (VERDICT r17 task 1: the bench's `frozen_builds` ledger is empty on a
-  * second run at the same build when the store is enabled).
-  * Store keys fold in FOUR freshness dimensions — corpus path, corpus
-  * content signature ([[dirSig]]), the memo's knob key `k`, and a
-  * CODE-VERSION salt derived from the compiled classes' own [[dirSig]] —
-  * so a recompile (possibly changed builder semantics) or a data swap can
-  * never serve a stale artifact; the failure mode of salting is always a
-  * rebuild, never a wrong answer. Disk loads log NO build event (nothing
-  * was built). Values whose strings point into `graft_*` temp dirs are
-  * RELOCATED into the store at persist time (the temp root moves under
-  * the generation dir and every path in the value is remapped), which is
-  * why store-backed values are excluded from `beforeClear` hooks: their
-  * state belongs to the store, survives JVM exit, and is reclaimed by
-  * generation eviction (a new generation of the same lineage deletes its
-  * siblings) plus a startup sweep of generations whose corpus dir
-  * vanished or that went unread for 7 days. Unlabeled memos, unwalkable
-  * corpora (sig 0 — the remote-FS degradation), and null values never
-  * persist, preserving the previous clearAll-based contract for them. */
+  * later query with checkpoint-block-not-found. */
 object FrozenCaches {
   private val hooks = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
@@ -148,289 +124,6 @@ object FrozenCaches {
     } catch { case _: Throwable => 0L }
   }
 
-  // ------------------------------------------------------- cross-JVM store
-
-  /** Store root, resolved once per JVM. None — the DEFAULT — disables
-    * persistence: a benchmark or verification run must compute every
-    * artifact from the corpus inputs it is pointed at, never from state a
-    * previous JVM left on disk (a warm store would also distort a
-    * core-count scaling comparison, since only the cold run pays builds).
-    * A long-lived production deployment opts IN with env
-    * `GRAFT_FROZEN_DIR=<dir>` (or system property `graft.frozen.dir`,
-    * which the test harness uses to keep the store's contract spec'd).
-    * The first resolution also runs the garbage sweep. */
-  private[graft] lazy val storeRoot: Option[java.nio.file.Path] =
-    sys.props.get("graft.frozen.dir").orElse(sys.env.get("GRAFT_FROZEN_DIR"))
-      .filter(p => p.nonEmpty && p != "off")
-      .map(java.nio.file.Paths.get(_))
-      .flatMap { p =>
-        try {
-          java.nio.file.Files.createDirectories(p)
-          sweep(p)
-          Some(p.toAbsolutePath.normalize)
-        } catch { case _: Throwable => None }
-      }
-
-  /** Code-version salt: a CONTENT hash (sorted entry name + size + CRC32)
-    * of the code source hosting this class. ANY main-code recompile
-    * changes it, invalidating every stored artifact — deliberately
-    * conservative: the store may only ever serve artifacts built by the
-    * exact bytes that are running. Content, not location/mtime, because
-    * sbt's forked `run` repackages the classes into a FRESH temp jar per
-    * invocation (a fresh jar under `target/bg-jobs`) — a location- or
-    * mtime-based salt would differ on every run and the store would never
-    * hit across JVMs (the exact failure this store exists to fix). None
-    * (no code source resolvable) disables persistence rather than risking
-    * a stale hit. */
-  private[graft] lazy val codeSalt: Option[String] =
-    try {
-      val loc = FrozenCaches.getClass.getProtectionDomain.getCodeSource.getLocation
-      val p = java.nio.file.Paths.get(loc.toURI)
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      if (java.nio.file.Files.isDirectory(p)) {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.forEach { f =>
-          if (java.nio.file.Files.isRegularFile(f)) {
-            val crc = new java.util.zip.CRC32()
-            crc.update(java.nio.file.Files.readAllBytes(f))
-            entries += s"${p.relativize(f)}:${java.nio.file.Files.size(f)}:${crc.getValue}"
-          }
-        } finally walk.close()
-      } else {
-        val jar = new java.util.jar.JarFile(p.toFile)
-        try {
-          val en = jar.entries()
-          while (en.hasMoreElements) {
-            val e = en.nextElement()
-            if (!e.isDirectory && !e.getName.startsWith("META-INF/"))
-              entries += s"${e.getName}:${e.getSize}:${e.getCrc}"
-          }
-        } finally jar.close()
-      }
-      if (entries.isEmpty) None
-      else Some(sha(entries.sorted.mkString("\n")))
-    } catch { case _: Throwable => None }
-
-  private def sha(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    d.take(16).map(b => f"${b & 0xff}%02x").mkString
-  }
-
-  /** Delete store generations whose corpus dir no longer exists (temp
-    * corpora from past test runs) or that went unread for 7 days; then
-    * drop emptied lineage/label dirs. Best-effort, once per JVM. */
-  private def sweep(root: java.nio.file.Path): Unit = try {
-    import java.nio.file.Files
-    val cutoff = System.currentTimeMillis() - 7L * 24 * 3600 * 1000
-    def children(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
-      val s = Files.list(p)
-      try { import scala.jdk.CollectionConverters._; s.iterator().asScala.toSeq }
-      finally s.close()
-    }
-    for (label <- children(root) if Files.isDirectory(label);
-         lineage <- children(label) if Files.isDirectory(lineage)) {
-      for (gen <- children(lineage) if Files.isDirectory(gen)) {
-        val meta = gen.resolve("meta.txt")
-        val corpusGone =
-          try {
-            Files.exists(meta) &&
-              !Files.exists(java.nio.file.Paths.get(Files.readAllLines(meta).get(0)))
-          } catch { case _: Throwable => false }
-        val tooOld =
-          try Files.getLastModifiedTime(gen).toMillis < cutoff
-          catch { case _: Throwable => false }
-        // abandoned staging dirs only: another JVM may be MID-PERSIST
-        // right now (its staged tree is already moved here), so a fresh
-        // .tmp dir must survive the sweep — an hour-old one is a crash
-        // leftover, not an in-flight publish
-        val halfWritten = gen.getFileName.toString.startsWith(".tmp") &&
-          (try Files.getLastModifiedTime(gen).toMillis <
-            System.currentTimeMillis() - 3600L * 1000
-           catch { case _: Throwable => false })
-        if (corpusGone || tooOld || halfWritten) deleteTree(gen.toString)
-      }
-      if (children(lineage).isEmpty) Files.deleteIfExists(lineage)
-    }
-  } catch { case _: Throwable => () }
-
-  // Owned-path detection: every path-valued memo's builder writes into ONE
-  // fresh `graft_*` dir under java.io.tmpdir (the repo-wide convention);
-  // any string in a memo value under such a root is a path this memo owns.
-  // Plain data strings (BPE tokens, lang codes) never live under tmpdir.
-  private lazy val tmpPrefix: String =
-    java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-      .toAbsolutePath.normalize.toString + "/"
-
-  private def ownedRoot(s: String): Option[String] =
-    if (!s.startsWith(tmpPrefix)) None
-    else {
-      val rest = s.substring(tmpPrefix.length)
-      val i = rest.indexOf('/')
-      val first = if (i < 0) rest else rest.substring(0, i)
-      if (first.startsWith("graft_")) Some(tmpPrefix + first) else None
-    }
-
-  private def stringsIn(v: Any): List[String] = v match {
-    case s: String => s :: Nil
-    case it: Iterable[_] => it.iterator.flatMap(stringsIn).toList
-    case p: Product => p.productIterator.flatMap(stringsIn).toList
-    case _ => Nil
-  }
-
-  // Rewrite every owned path in a value from one root to another. Covers
-  // the value shapes memos actually hold (String, TupleN of String/Long,
-  // Seqs); anything else passes through untouched (and such a memo would
-  // have reported no owned root, so remap never fires on it).
-  private def remapPaths(v: Any, from: String, to: String): Any = {
-    def r(x: Any): Any = x match {
-      case s: String if s == from => to
-      case s: String if s.startsWith(from + "/") => to + s.substring(from.length)
-      case t: (_, _) => (r(t._1), r(t._2))
-      case t: (_, _, _) => (r(t._1), r(t._2), r(t._3))
-      case t: (_, _, _, _) => (r(t._1), r(t._2), r(t._3), r(t._4))
-      case t: (_, _, _, _, _) => (r(t._1), r(t._2), r(t._3), r(t._4), r(t._5))
-      case it: Seq[_] => it.map(r)
-      case other => other
-    }
-    r(v)
-  }
-
-  /** Recursive move with cross-filesystem copy fallback (tmpdir and the
-    * store may be different mounts). */
-  private def moveTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    try Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: Throwable =>
-        val walk = Files.walk(src)
-        try walk.forEach { f =>
-          val t = dst.resolve(src.relativize(f))
-          if (Files.isDirectory(f)) Files.createDirectories(t)
-          else Files.copy(f, t, StandardCopyOption.REPLACE_EXISTING)
-        } finally walk.close()
-        deleteTree(src.toString)
-    }
-  }
-
-  /** Store directory name for a label: prefixed `graft_<label>` so a
-    * store-backed parquet scan carries the same `graft_…` marker near the
-    * FRONT of its path as a freshly built temp-dir artifact — the
-    * plan-pin specs match that marker in the FileScan location, which
-    * explain truncates to ~100 chars (the lineage/generation hashes would
-    * push a suffix marker past the cut). */
-  private def labelDir(label: String): String = "graft_" + label
-
-  private def storeLoad[V](root: java.nio.file.Path, label: String,
-                           lineage: String, gen: String): Option[V] = try {
-    import java.nio.file.Files
-    val genDir = root.resolve(labelDir(label)).resolve(lineage).resolve(gen)
-    if (!Files.exists(genDir.resolve("_frozen_ok"))) None
-    else {
-      val in = new java.io.ObjectInputStream(
-        Files.newInputStream(genDir.resolve("value.bin")))
-      val v = try in.readObject().asInstanceOf[V] finally in.close()
-      // touch: the 7-day sweep measures time-since-last-READ, not write
-      try Files.setLastModifiedTime(genDir,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      catch { case _: Throwable => () }
-      Some(v)
-    }
-  } catch { case _: Throwable => None }
-
-  /** Persist a freshly built value: relocate its owned temp root (if any)
-    * into the generation dir, serialize the remapped value, and publish
-    * with an atomic same-dir rename. Returns the remapped value on
-    * success; None leaves the caller on the unpersisted in-JVM path. A
-    * successful publish evicts sibling generations of the same lineage
-    * (older data signatures / code salts of this corpus+knob). */
-  private def storePersist[V](root: java.nio.file.Path, label: String,
-                              lineage: String, gen: String, dir: String,
-                              v: V): Option[V] = {
-    import java.nio.file.Files
-    val lineageDir = root.resolve(labelDir(label)).resolve(lineage)
-    val genDir = lineageDir.resolve(gen)
-    var tmp: java.nio.file.Path = null
-    var movedFrom: String = null
-    try {
-      val roots = stringsIn(v).flatMap(ownedRoot).distinct
-      if (roots.length > 1) return None // unexpected shape: stay in-JVM
-      Files.createDirectories(lineageDir)
-      tmp = Files.createTempDirectory(lineageDir, ".tmp")
-      val v2 = roots match {
-        case Nil => v
-        case r :: _ =>
-          // keep the temp root's BASENAME (`graft_<label>…`): the plan-pin
-          // specs prove frozen-warehouse reads by matching that marker in
-          // the scan path, and a store-relocated artifact must carry the
-          // same evidence as a freshly built one
-          val base = java.nio.file.Paths.get(r).getFileName.toString
-          moveTree(java.nio.file.Paths.get(r), tmp.resolve(base))
-          movedFrom = r
-          // remap against the FINAL location; valid the moment tmp is
-          // renamed to genDir (inside the memo lock, so no reader races)
-          val remapped = remapPaths(v, r, genDir.resolve(base).toString).asInstanceOf[V]
-          // remapPaths covers the value SHAPES memos hold today (String,
-          // TupleN, Seq) while stringsIn — which decided the relocation —
-          // walks every Product/Iterable. If a future memo value shape
-          // slips through the remap, publishing it would store dead
-          // paths: verify nothing still points at the moved root and
-          // abort (the catch below rolls the move back, the memo stays
-          // in-JVM) rather than persist a broken artifact.
-          if (stringsIn(remapped).exists(s => s == r || s.startsWith(r + "/")))
-            throw new IllegalStateException(
-              s"memo value shape not covered by remapPaths (root $r) — extend remapPaths")
-          remapped
-      }
-      val out = new java.io.ObjectOutputStream(
-        Files.newOutputStream(tmp.resolve("value.bin")))
-      try out.writeObject(v2) finally out.close()
-      Files.write(tmp.resolve("meta.txt"),
-        java.util.List.of(dir, label, lineage, gen))
-      Files.write(tmp.resolve("_frozen_ok"), java.util.List.of("ok"))
-      try Files.move(tmp, genDir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: Throwable if Files.exists(genDir) =>
-          // another JVM published the same key first: adopt theirs
-          val theirs = storeLoad[V](root, label, lineage, gen)
-          if (theirs.isEmpty) {
-            // theirs is unreadable; restore our temp root and stay in-JVM
-            if (movedFrom != null) {
-              val from = java.nio.file.Paths.get(movedFrom)
-              moveTree(tmp.resolve(from.getFileName.toString), from)
-            }
-            deleteTree(tmp.toString)
-            return None
-          }
-          deleteTree(tmp.toString)
-          return theirs
-      }
-      // evict superseded generations of this lineage
-      val ls = Files.list(lineageDir)
-      try {
-        import scala.jdk.CollectionConverters._
-        ls.iterator().asScala
-          .filter(p => p.getFileName.toString != gen &&
-            !p.getFileName.toString.startsWith(".tmp"))
-          .foreach(p => deleteTree(p.toString))
-      } finally ls.close()
-      Some(v2)
-    } catch {
-      case _: Throwable =>
-        // best-effort rollback so the in-JVM value's paths stay live
-        try {
-          if (movedFrom != null && tmp != null) {
-            val from = java.nio.file.Paths.get(movedFrom)
-            val staged = tmp.resolve(from.getFileName.toString)
-            if (Files.exists(staged) && !Files.exists(from))
-              moveTree(staged, from)
-          }
-          if (tmp != null) deleteTree(tmp.toString)
-        } catch { case _: Throwable => () }
-        None
-    }
-  }
-
   /** A corpus-keyed artifact memo that self-registers with [[clearAll]].
     * `get` takes the corpus path EXPLICITLY (every frozen artifact
     * describes some corpus) and folds [[dirSig]] into the cache key, so
@@ -447,18 +140,10 @@ object FrozenCaches {
   final class Memo[K, V](beforeClear: java.util.Collection[V] => Unit = null,
                          label: String = null) {
     private val m = new java.util.HashMap[(String, Long, K), V]()
-    // keys whose value lives in (was loaded from or relocated into) the
-    // cross-JVM store: their on-disk state belongs to the store, so
-    // beforeClear hooks — which delete temp-dir state — must skip them
-    private val fromStore = new java.util.HashSet[(String, Long, K)]()
     register { () =>
       this.synchronized {
-        if (beforeClear != null) {
-          val own = new java.util.ArrayList[V]()
-          m.forEach((k, v) => if (!fromStore.contains(k)) own.add(v))
-          if (!own.isEmpty) beforeClear(own)
-        }
-        m.clear(); fromStore.clear()
+        if (beforeClear != null && !m.isEmpty) beforeClear(new java.util.ArrayList[V](m.values()))
+        m.clear()
       }
     }
     def get(dir: String, k: K)(build: => V): V = {
@@ -470,41 +155,21 @@ object FrozenCaches {
     }
 
     private def getWithKey(key: (String, Long, K))(build: => V): V = this.synchronized {
-      val (dir, sig, k) = key
+      val (dir, _, k) = key
       if (m.containsKey(key)) m.get(key)
       else {
         // a new generation of this corpus supersedes older ones: evict
-        // them (and clean their on-disk state) before building.
-        // Store-backed stale entries keep their disk state — the store's
-        // own generation eviction (at the NEW generation's publish) and
-        // the startup sweep reclaim it.
+        // them (and clean their on-disk state) before building
         val stale = new java.util.ArrayList[V]()
         val it = m.entrySet().iterator()
         while (it.hasNext) {
           val e = it.next()
           if (e.getKey._1 == dir && e.getKey._3 == k) {
-            if (!fromStore.contains(e.getKey)) stale.add(e.getValue)
-            fromStore.remove(e.getKey)
+            stale.add(e.getValue)
             it.remove()
           }
         }
         if (beforeClear != null && !stale.isEmpty) beforeClear(stale)
-        // cross-JVM store: labeled + walkable-corpus + salted builds only
-        val storeNames: Option[(java.nio.file.Path, String, String)] =
-          if (label == null || sig == 0L) None
-          else for (root <- storeRoot; salt <- codeSalt)
-            yield (root,
-              sha(dir + "\u0000" + String.valueOf(k)),
-              sha(java.lang.Long.toHexString(sig) + "\u0000" + salt))
-        storeNames.flatMap { case (root, lin, gen) =>
-          storeLoad[V](root, label, lin, gen)
-        } match {
-          case Some(loaded) =>
-            // nothing was built: no ledger event, by design
-            m.put(key, loaded); fromStore.add(key)
-            return loaded
-          case None => ()
-        }
         val v =
           if (label == null) build
           else {
@@ -527,16 +192,8 @@ object FrozenCaches {
             buildLog.add(BuildEvent(label, dir, exclusive))
             built
           }
-        val vOut = storeNames match {
-          case Some((root, lin, gen)) if v != null =>
-            storePersist[V](root, label, lin, gen, dir, v) match {
-              case Some(v2) => fromStore.add(key); v2
-              case None => v
-            }
-          case _ => v
-        }
-        m.put(key, vOut)
-        vOut
+        m.put(key, v)
+        v
       }
     }
   }

@@ -1,21 +1,17 @@
 package graft.ops
 
-/** Env-gated (`GRAFT_PROF=1`) job labels for the incremental-update
-  * family's many small driver actions: wraps an action in
-  * `setJobDescription` so a job-level profile (graft.tools.JobProfile)
-  * can attribute per-job wall to pipeline stages — the guide's "label
-  * your jobs" discipline, applied to the one code path whose cost is
-  * job COUNT rather than any single plan. Restores the caller's
-  * description (descriptions are thread-local) and is zero-overhead
-  * when the env var is unset. */
+/** Job labels for the incremental-update family's many small driver
+  * actions: wraps an action in `setJobDescription` so a job-level profile
+  * (graft.tools.JobProfile) can attribute per-job wall to pipeline stages
+  * — the guide's "label your jobs" discipline, applied to the one code
+  * path whose cost is job COUNT rather than any single plan. Always on;
+  * restores the caller's description afterwards (descriptions are
+  * thread-local). */
 object Prof {
-  private val on = sys.env.contains("GRAFT_PROF")
-  def apply[T](spark: org.apache.spark.sql.SparkSession, label: String)(body: => T): T =
-    if (!on) body
-    else {
-      val sc = spark.sparkContext
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(label)
-      try body finally sc.setJobDescription(prev)
-    }
+  def apply[T](spark: org.apache.spark.sql.SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prev)
+  }
 }

@@ -217,7 +217,10 @@ object Reference {
     // per-(push, city) hash aggregate using FILTER clauses — no persist, no
     // semi-join, one scan of events. The age-window comparisons are done on
     // exact epoch-micros integers (equivalent to the minute doubles: both
-    // sides divide by the same positive constant).
+    // sides divide by the same positive constant). The mean gain averages
+    // exact BIGINT cents (gains carry two decimals): a double avg's
+    // summation order decides which side of an r6 tie it lands on, so Spark
+    // and DuckDB could round the same mean apart.
     val lim = s"age_min <= $T2Minutes"
     val per = cityJoined(spark, dir)
       .groupBy("push_id", "city")
@@ -235,7 +238,8 @@ object Reference {
       .withColumn("views_gained",
         when(col("qualified"), greatest(lit(0.0), col("l_val") - col("f_val"))))
       .groupBy("city")
-      .agg(r6(avg(col("views_gained"))).as("avg_views_gained"),
+      .agg(r6(sum(Num.cents(col("views_gained"))).cast("double") /
+          (count(col("views_gained")).cast("double") * lit(100.0))).as("avg_views_gained"),
         sum(when(col("qualified"), 1L).otherwise(0L)).as("n_pushes_used"),
         count(lit(1)).as("n_pushes_all"))
       .filter(col("n_pushes_all") >= lit(MinPushesPerCity) && col("n_pushes_used") > 0)
@@ -243,7 +247,9 @@ object Reference {
       .orderBy(col("avg_views_gained").desc, col("city"))
   }
 
-  val c1Sql: String =
+  lazy val c1Sql: String = {
+    val meanGain = s"CAST(sum(${Num.centsSql("views_gained")}) AS DOUBLE) / " +
+      "(CAST(count(views_gained) AS DOUBLE) * 100.0)"
     s"""WITH $cityJoinedSql,
        |per AS (
        |  SELECT push_id, city,
@@ -259,12 +265,13 @@ object Reference {
        |         CASE WHEN f_us IS NOT NULL AND f_us - posted_us <= $T1Micros AND l_us > f_us
        |              THEN greatest(0.0, l_val - f_val) END AS views_gained
        |  FROM per)
-       |SELECT city, ${r6Sql("avg(views_gained)")} AS avg_views_gained,
+       |SELECT city, ${r6Sql(meanGain)} AS avg_views_gained,
        |       CAST(sum(CASE WHEN qualified THEN 1 ELSE 0 END) AS BIGINT) AS n_pushes_used
        |FROM q
        |GROUP BY city
        |HAVING count(*) >= $MinPushesPerCity AND sum(CASE WHEN qualified THEN 1 ELSE 0 END) > 0
        |ORDER BY avg_views_gained DESC, city""".stripMargin
+  }
 
   /** The city HAVING gate alone (A5, analyse.py:419-422). */
   def c2CityGate(spark: SparkSession, dir: String): DataFrame =

@@ -1,11 +1,10 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Measurement mains behind the numbers recorded in BASELINE.md — not part
-  * of the query registry, but kept in-tree so every published recall /
-  * trade-off figure is reproducible with one `runMain`. */
+/** Developer mains for inspecting registry queries — selective
+  * correctness dumps, executed plans and per-job profiles. Not part of the
+  * query registry; each runs with one `runMain`. */
 object Tools {
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -37,17 +36,9 @@ object VerifySome {
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       spark.catalog.clearCache()
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import graft.Verify.jsonStr
     val json = graft.SparkEntry.oracleSql.view.filterKeys(names.contains)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
@@ -158,182 +149,6 @@ object JobProfile {
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
         System.gc(); Thread.sleep(300)
       }
-    }
-    spark.stop()
-  }
-}
-
-/** Stage-level timing of [[graft.ext.Corpus.manifestDocFeatures]]'s
-  * subplans over the registered fresh slice — the measurement behind the
-  * round-18 feature-pass fusion: the composed checkpoint showed 10 s
-  * (23 jobs) at sf0.1 in JobProfile, and this isolates which of the eight
-  * doc-local passes pays it.
-  * `runMain graft.tools.FeatProfile [sfDir]` */
-object FeatProfile {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = Tools.session()
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    import graft.ops.Tables
-    val docs = Tables.documents(spark, sfDir)
-    val probe = graft.ext.Corpus.featProfileProbe(spark, sfDir)
-    (1 to 2).foreach { run =>
-      probe.foreach { case (name, mk) =>
-        val t0 = System.nanoTime()
-        val df = mk()
-        val n = df.count()
-        println(f"FEAT run$run $name%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s  rows=$n")
-        if (run == 2 && sys.env.contains("GRAFT_FEAT_PLAN")) {
-          df.collect()
-          println(s"----- $name executed plan -----")
-          println(df.queryExecution.executedPlan.toString)
-        }
-      }
-      spark.catalog.clearCache()
-      System.gc(); Thread.sleep(300)
-    }
-    spark.stop()
-  }
-}
-
-/** recall@5 of every ANN variant against the brute-force top-5 on a testdata
-  * dir (arg 0, default sf0.01): the per-probe |bf ∩ variant| / 5, averaged.
-  * PQ variants rank by L2 rather than cosine, so a recall below 1.0 mixes
-  * metric disagreement with index loss — comparing `s_knn_ivfpq` against
-  * `s_knn_pq` (same metric, same knobs) isolates what the IVF cell bound
-  * alone drops. */
-object AnnRecall {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = Tools.session()
-    def top5(name: String): Map[Long, Set[Long]] =
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .select("q_id", "neighbor_id").collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val bf = top5("s_knn_bruteforce")
-    spark.catalog.clearCache()
-    for (v <- Seq("s_knn_lsh", "s_knn_ivf", "s_knn_ivf_kmeans", "s_knn_pq", "s_knn_ivfpq")) {
-      val got = top5(v)
-      val recall = bf.keys.toSeq.map(q => (bf(q) intersect got.getOrElse(q, Set.empty)).size / 5.0)
-      println(f"$v%-18s recall@5 = ${recall.sum / recall.size}%.3f over ${recall.size} probes ($sfDir)")
-      spark.catalog.clearCache()
-    }
-    spark.stop()
-  }
-}
-
-/** Production-vocab tokenizer study (VERDICT r17 task 2): trains BPE at
-  * `nMerges` (default 256 — 25× the oracle ceiling) and the unigram LM at
-  * `seedTop` (default 1024 — 42× the ceiling) on each given testdata dir,
-  * reporting wall time, learned model size, and the DRIVER JOB COUNT of
-  * the BPE merge loop (one census + one checkpoint per merge — the
-  * accepted-and-measured cost of exact sequential greedy BPE; batching
-  * non-interacting merges was rejected because it can diverge from the
-  * sequential tie-break order the oracle pins). Run across sf0.01 and
-  * sf0.1 to see the lexicon-bounded shape: per-merge wall should be flat
-  * across 10× corpus growth because every round aggregates the DISTINCT-
-  * word lexicon, never the corpus.
-  * `runMain graft.tools.TokenizerScaleStudy [nMerges] [seedTop] [dir ...]` */
-object TokenizerScaleStudy {
-  def main(args: Array[String]): Unit = {
-    val nMerges = args.headOption.map(_.toInt).getOrElse(256)
-    val seedTop = args.drop(1).headOption.map(_.toInt).getOrElse(1024)
-    val dirs = if (args.length > 2) args.drop(2).toSeq
-               else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = Tools.session()
-    spark.range(1000000).selectExpr("sum(id)").collect() // JIT warmup
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
-    for (dir <- dirs) {
-      val docs = graft.ops.Tables.documents(spark, dir)
-      val lexSize = graft.ext.Text.bpeSegmentOn(docs, 0).count() // census size; warms footer caches
-      val j0 = jobs.get(); val t0 = System.nanoTime()
-      val merges = graft.ext.Text.bpeTrainOn(docs, nMerges).collect()
-      val tBpe = (System.nanoTime() - t0) / 1e9
-      val jBpe = jobs.get() - j0
-      spark.catalog.clearCache()
-      val t1 = System.nanoTime()
-      val vocab = graft.ext.Text.unigramTrainOn(docs, seedTop = seedTop).collect()
-      val tUni = (System.nanoTime() - t1) / 1e9
-      spark.catalog.clearCache()
-      println(f"TOK_SCALE $dir lexicon=$lexSize bpe: merges=${merges.length}/$nMerges " +
-        f"wall=${tBpe}%.1fs jobs=$jBpe per_merge=${tBpe / math.max(1, merges.length)}%.3fs " +
-        f"| unigram: seedTop=$seedTop vocab=${vocab.length} wall=${tUni}%.1fs")
-      System.gc(); Thread.sleep(300)
-    }
-    spark.stop()
-  }
-}
-
-/** Giant-component skew study for the CC loop (VERDICT r17 task 6):
-  * drives [[graft.ext.Dedup.propagateComponents]] over ENGINEERED
-  * single-component edge tables at and beyond sf0.1 node counts —
-  * `chain` (edges i—i+1: worst-case diameter, the round-count stressor)
-  * and `star` (edges 0—i: every label collapses onto one hot key
-  * immediately, the shuffle-skew stressor). A literal all-dup corpus is
-  * driven at this seam deliberately: identical docs collapse in the
-  * EXACT-dedup stage before banding (`dd_exact` keep-first), and an
-  * all-identical corpus would explode the banded candidate build to
-  * O(n²) pairs upstream of clustering — the engineered edge tables put
-  * the full corpus in ONE component without that unrelated blowup.
-  * Run with GRAFT_CC_DEBUG=1 to get the per-round shuffle-byte lines
-  * (CC_ROUND ... shuf_read/shuf_write/max_task_read) this study records
-  * in BASELINE.md. `runMain graft.tools.CcSkewStudy [chain|star|both] [n ...]` */
-object CcSkewStudy {
-  def main(args: Array[String]): Unit = {
-    val shape = args.headOption.getOrElse("both")
-    val sizes = if (args.length > 1) args.drop(1).toSeq.map(_.toLong)
-                else Seq(60000L, 600000L, 6000000L)
-    val spark = Tools.session()
-    spark.range(1000000).selectExpr("sum(id)").collect() // JIT warmup
-    for (n <- sizes; s <- Seq("chain", "star") if shape == "both" || shape == s) {
-      val ids = spark.range(n).select(col("id").as("doc_id"))
-      val pairs = s match {
-        case "chain" => spark.range(n - 1)
-          .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-        case _ => spark.range(1, n)
-          .select(lit(0L).as("doc_a"), col("id").as("doc_b"))
-      }
-      val t0 = System.nanoTime()
-      val out = graft.ext.Dedup.propagateComponents(ids, pairs, checkpointRounds = true)
-      val agg = out.agg(count(lit(1)), countDistinct(col("cluster_id")),
-        max(col("cluster_size"))).head()
-      val dt = (System.nanoTime() - t0) / 1e9
-      require(agg.getLong(1) == 1L && agg.getLong(2) == n,
-        s"engineered $s graph did not converge to one n-sized component: $agg")
-      println(f"CC_SKEW shape=$s n=$n rounds=${graft.ext.Dedup.lastPropagationRounds.get()} " +
-        f"wall=${dt}%.1fs (one component of $n nodes, verified)")
-      spark.catalog.clearCache()
-      System.gc(); Thread.sleep(300)
-    }
-    spark.stop()
-  }
-}
-
-/** dup-clusters lineage study: persist-per-round vs localCheckpoint-per-round
-  * (args: testdata dirs, default sf0.1). Min of 2 runs each, caches cleared
-  * between — the measurement behind the `checkpointRounds` knob note. */
-object CcCheckpointBench {
-  def main(args: Array[String]): Unit = {
-    val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
-    val spark = Tools.session()
-    spark.range(1000000).selectExpr("sum(id)").collect() // JIT warmup
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    for (dir <- dirs; ckpt <- Seq(false, true)) {
-      val ts = (1 to reps).map { _ =>
-        val docs = graft.ops.Tables.documents(spark, dir)
-        val t0 = System.nanoTime()
-        graft.ext.Dedup.dupClustersOn(docs, checkpointRounds = ckpt).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        System.gc(); Thread.sleep(300)
-        dt
-      }
-      val all = ts.map(t => f"$t%.2f").mkString(", ")
-      println(f"dup_clusters $dir checkpointRounds=$ckpt: min ${ts.min}%.2f s (runs: $all)")
     }
     spark.stop()
   }

@@ -629,7 +629,7 @@ class DedupSpec extends SparkSpec {
     // the chain i—(i+1) is the worst case for label propagation (one
     // component, diameter n); pointer jumping must close it in ~log₂(n)
     // rounds, not n — the property behind the loop's no-iteration-cap
-    // exactness claim and the CcSkewStudy numbers in BASELINE.md
+    // exactness claim
     for (n <- Seq(64L, 512L)) {
       val ids = spark.range(n).select(col("id").as("doc_id"))
       val pairs = spark.range(n - 1)

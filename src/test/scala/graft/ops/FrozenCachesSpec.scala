@@ -117,90 +117,30 @@ class FrozenCachesSpec extends SparkSpec {
     } finally FrozenCaches.deleteTree(tmp)
   }
 
-  test("store: a fresh memo instance (new-JVM stand-in) loads from disk — no build, no ledger event") {
-    assume(FrozenCaches.storeRoot.isDefined, "frozen store disabled in this env")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fp_store").toString
+  test("Prof labels the jobs it wraps and restores the caller's description") {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(d => d == "x" || d == "prof_spec_outer").foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
     try {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(tmp, "a.txt"), "one")
-      var builds = 0
-      val first = new FrozenCaches.Memo[Int, Seq[(String, Long)]](label = "spec_store_plain")
-      val v1 = first.get(tmp, 7) { builds += 1; Seq(("tok", 42L), ("en", 9L)) }
-      FrozenCaches.drainBuildLog()
-      // a fresh Memo instance shares no in-memory state with `first` —
-      // the only way it can answer without building is the disk store
-      val second = new FrozenCaches.Memo[Int, Seq[(String, Long)]](label = "spec_store_plain")
-      val v2 = second.get(tmp, 7) { builds += 1; Seq(("never", 0L)) }
-      assert(builds === 1 && v2 === v1)
-      assert(!FrozenCaches.drainBuildLog().exists(_.artifact == "spec_store_plain"),
-        "a disk load must not log a build event")
-      // knob key participates: k=8 is a different artifact
-      assert(second.get(tmp, 8) { builds += 1; Seq(("other", 1L)) } === Seq(("other", 1L)))
-      assert(builds === 2)
-    } finally FrozenCaches.deleteTree(tmp)
-  }
-
-  test("store: corpus change under the path invalidates the on-disk artifact too") {
-    assume(FrozenCaches.storeRoot.isDefined, "frozen store disabled in this env")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fp_store_inv").toString
-    try {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(tmp, "a.txt"), "one")
-      var builds = 0
-      new FrozenCaches.Memo[Unit, Long](label = "spec_store_inv").get(tmp, ()) { builds += 1; 1L }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(tmp, "a.txt"), "twoo")
-      val fresh = new FrozenCaches.Memo[Unit, Long](label = "spec_store_inv")
-      assert(fresh.get(tmp, ()) { builds += 1; 2L } === 2L, "stale store artifact served")
-      assert(builds === 2)
-    } finally FrozenCaches.deleteTree(tmp)
-  }
-
-  test("store: a parquet-backed value is relocated into the store and survives a new memo") {
-    assume(FrozenCaches.storeRoot.isDefined, "frozen store disabled in this env")
-    val corpus = java.nio.file.Files.createTempDirectory("graft_fp_store_pq").toString
-    try {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(corpus, "a.txt"), "data")
-      val storeRoot = FrozenCaches.storeRoot.get.toString
-      var tempRoot: String = null
-      val first = new FrozenCaches.Memo[Unit, String](
-        beforeClear = _.forEach(p => FrozenCaches.deleteTree(
-          java.nio.file.Paths.get(p).getParent.toString)),
-        label = "spec_store_pq")
-      val path1 = first.get(corpus, ()) {
-        tempRoot = java.nio.file.Files.createTempDirectory("graft_spec_pq").toString
-        val p = tempRoot + "/t.parquet"
-        spark.range(5).write.parquet(p)
-        p
-      }
-      // the value was remapped into the store; the temp root moved away
-      assert(path1.startsWith(storeRoot), s"value not relocated: $path1")
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tempRoot)),
-        "temp root must MOVE into the store, not linger in tmpdir")
-      assert(spark.read.parquet(path1).count() === 5)
-      // fresh memo (new-JVM stand-in): same path from disk, still readable
-      val second = new FrozenCaches.Memo[Unit, String](label = "spec_store_pq")
-      val path2 = second.get(corpus, ())(fail("must load, not build"))
-      assert(path2 === path1 && spark.read.parquet(path2).count() === 5)
-      // clearAll must NOT delete store-owned state (the beforeClear hook
-      // deletes temp parents — store-backed values are excluded from it)
-      FrozenCaches.clearAll()
-      assert(spark.read.parquet(path1).count() === 5)
-    } finally FrozenCaches.deleteTree(corpus)
-  }
-
-  test("store: unlabeled memos and unwalkable corpora never persist") {
-    assume(FrozenCaches.storeRoot.isDefined, "frozen store disabled in this env")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fp_store_no").toString
-    try {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(tmp, "a.txt"), "x")
-      var builds = 0
-      new FrozenCaches.Memo[Unit, Int]().get(tmp, ()) { builds += 1; 1 }
-      new FrozenCaches.Memo[Unit, Int]().get(tmp, ()) { builds += 1; 1 }
-      assert(builds === 2, "unlabeled memo must stay in-JVM only")
-      // sig==0 (nonexistent dir) is the remote-FS degradation: no persist
-      val gone = tmp + "/does-not-exist"
-      new FrozenCaches.Memo[Unit, Int](label = "spec_store_sig0").get(gone, ()) { builds += 1; 1 }
-      new FrozenCaches.Memo[Unit, Int](label = "spec_store_sig0").get(gone, ()) { builds += 1; 1 }
-      assert(builds === 4, "sig==0 must never hit the store")
-    } finally FrozenCaches.deleteTree(tmp)
+      sc.setJobDescription("prof_spec_outer")
+      Prof(spark, "x")(spark.range(10).count())
+      assert(sc.getLocalProperty("spark.job.description") === "prof_spec_outer")
+      spark.range(10).count()
+      // the listener bus delivers asynchronously; one count() may run
+      // several jobs, all under the same description
+      val deadline = System.nanoTime() + 10000000000L
+      while (!seen.contains("prof_spec_outer") && System.nanoTime() < deadline) Thread.sleep(20)
+      import scala.jdk.CollectionConverters._
+      assert(seen.asScala.toSeq.distinct === Seq("x", "prof_spec_outer"))
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("clearAll invalidates the frozen census/sketch/model caches; rebuilds are identical") {
