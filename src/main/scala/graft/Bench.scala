@@ -14,13 +14,17 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JIT + codegen + parquet-footer caches otherwise land
-    // on whichever query happens to run first and distort its number.
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      SparkEntry.queries.get("m_project_filter_sort").foreach(_(spark, sfDir).count())
-      SparkEntry.queries.get("m_min_max_by").foreach(_(spark, sfDir).count())
-      SparkEntry.queries.get("m_derived_cols").foreach(_(spark, sfDir).count())
-    } catch { case _: Throwable => () }
+    // on whichever query happens to run first and distort its number. A
+    // failed warm-up step is recorded with its cause under "warmup_errors"
+    // (same format as "errors") and the run goes on.
+    def cause(e: Throwable): String =
+      s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(160)}"
+    val warmupErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def warm(name: String)(body: => Unit): Unit =
+      try body catch { case e: Throwable => warmupErrors(name) = cause(e) }
+    warm("range_sum")(spark.range(1000000).selectExpr("sum(id)").collect())
+    for (q <- Seq("m_project_filter_sort", "m_min_max_by", "m_derived_cols"))
+      warm(q)(SparkEntry.queries(q)(spark, sfDir).count())
     // min of 2 runs = steady-state throughput: run 1 additionally pays
     // one-time janino codegen compilation per unique plan (~1-3s for the
     // window/agg-heavy plans), a fixed cost that amortizes away at real
@@ -74,8 +78,7 @@ object Bench {
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-          errored.getOrElseUpdate(name,
-            s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(160)}")
+          errored.getOrElseUpdate(name, cause(e))
         }
         (System.nanoTime() - t0) / 1e9
       }
@@ -123,8 +126,9 @@ object Bench {
     val slow = results.toSeq.sortBy { case (k, v) => (-r3(v), k) }.take(10)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) r3(results.values.sum) else 0.0
-    val errs = errored.toSeq.sortBy(_._1)
+    def jsonMap(m: Iterable[(String, String)]): String = m
       .map { case (k, v) => Verify.jsonStr(k) + ":" + Verify.jsonStr(v) }.mkString("{", ",", "}")
+    val errs = jsonMap(errored.toSeq.sortBy(_._1))
     // build order preserved: artifact -> (builder query, build seconds)
     val ledger = builds.map { case (a, q, s) =>
       "{\"artifact\":\"" + a + "\",\"built_by\":\"" + q + "\",\"sec\":" + r3(s) + "}"
@@ -137,7 +141,7 @@ object Bench {
       .mkString("{", ",", "}")
     def r1(v: Double): Double = math.round(v * 10.0) / 10.0
     val ioTotals = s""""shuffle_read_mb":${r1(io.valuesIterator.map(_._1).sum)},"shuffle_write_mb":${r1(io.valuesIterator.map(_._2).sum)},"spill_mb":${r1(io.valuesIterator.map(_._3).sum)},"peak_mem_mb_max":${r1(io.valuesIterator.map(_._4).foldLeft(0.0)(math.max))}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","frozen_builds":$ledger,"io_mb":$ioJson,"queries":$qs,"slowest":$slow,"errors":$errs,"n_errors":${errored.size},$ioTotals,"total_sec":$total}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","frozen_builds":$ledger,"io_mb":$ioJson,"queries":$qs,"slowest":$slow,"warmup_errors":${jsonMap(warmupErrors)},"errors":$errs,"n_errors":${errored.size},$ioTotals,"total_sec":$total}""")
     spark.stop()
   }
 }

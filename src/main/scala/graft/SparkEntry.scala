@@ -11,7 +11,7 @@ import graft.{queries => q}
   * place.
   */
 object SparkEntry {
-  private val registry: Seq[Q] =
+  private[graft] val registry: Seq[Q] =
     q.Micro.all ++ q.Reference.all ++ q.Sessions.all ++ q.Relational.all ++ q.Sketches.all ++
       ext.Text.all ++ ext.Corpus.all ++ ext.Dedup.all ++ ext.Similarity.all ++
       ext.Curation.all ++ ext.Quality.all ++ multimodal.Multimodal.all
@@ -31,10 +31,23 @@ object SparkEntry {
     * rounds, the LSH signature tables) — the multi-consumer frames a
     * one-shot job wants warm. A long-lived session invoking registry
     * queries repeatedly should call `spark.catalog.clearCache()` between
-    * queries (Verify and Bench both do), or the block store accumulates. */
-  def entry(spark: SparkSession): DataFrame = {
+    * queries (Verify and Bench both do), or the block store accumulates.
+    *
+    * ORDER CONTRACT: query builders and the library's `*On`/`*From`
+    * functions return unsorted frames. Each registered query's presentation
+    * order is data on its [[Q]] (`order`), and [[run]] applies it as the
+    * last operator, here and in [[queries]] — the one place a presentation
+    * sort runs. Compositions and streaming call the library functions and
+    * never pay a sort they do not need. */
+  def entry(spark: SparkSession): DataFrame =
+    run(registry.find(_.name == "c1_city_league").get, spark, "/root/testdata/sf0.001")
+
+  /** Pins the session, builds the query and applies its presentation
+    * order. */
+  private def run(query: Q, spark: SparkSession, dir: String): DataFrame = {
     pinSession(spark)
-    q.Reference.c1CityLeague(spark, "/root/testdata/sf0.001")
+    val df = query.fn(spark, dir)
+    if (query.order.isEmpty) df else df.orderBy(query.order: _*)
   }
 
   /** ansi=false per the session contract; timeZone=UTC so the
@@ -64,14 +77,10 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. Each wrapper
     * pins the SESSION CONTRACT (ansi=false, see entry()) so registry
     * queries self-protect under an arbitrary caller session exactly as
-    * they did when the readers pinned it. */
+    * they did when the readers pinned it, and applies the query's
+    * presentation order (ORDER CONTRACT, see entry()). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map { q =>
-      q.name -> { (spark: SparkSession, dir: String) =>
-        pinSession(spark)
-        q.fn(spark, dir)
-      }
-    }.toMap
+    registry.map(q => q.name -> ((spark: SparkSession, dir: String) => run(q, spark, dir))).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

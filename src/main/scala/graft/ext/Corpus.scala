@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * different cluster sizes / partitionings) emits the identical mix —
   * the property that makes a 100 TB mixing job resumable and auditable.
   * Everything is map-side arithmetic (no UDFs, no shuffles except the
-  * final presentation sort / the packing window), so the plans scale
+  * packing window), so the plans scale
   * linearly with corpus size.
   */
 object Corpus {
@@ -42,7 +42,7 @@ object Corpus {
     * consumer repartitions; the mix decision never looks at another row. */
   /** The per-doc copy-count decision alone — (doc_id, source, lang, rate_q,
     * n_copies), no explode: the pipeline-manifest family's carry/recompute
-    * unit ([[mixRowsOn]] builds on it, so the two cannot drift). Pure
+    * unit ([[mixOn]] builds on it, so the two cannot drift). Pure
     * doc-local arithmetic: a snapshot delta re-decides ONLY fresh docs. */
   def mixCopiesOn(docs: DataFrame): DataFrame = {
     val rq = rateQ(col("source"))
@@ -54,18 +54,15 @@ object Corpus {
           when(pmod(docHash, lit(4L)) < pmod(col("rate_q"), lit(4L)), 1L).otherwise(0L))
   }
 
-  /** Unsorted mix — purely stateless per-row arithmetic, so it runs
-    * unchanged on a STREAMING documents frame (no watermark, no state:
-    * each micro-batch mixes independently and the hash decisions are the
-    * same ones the batch run makes — StreamsSpec asserts the parity). */
-  def mixRowsOn(docs: DataFrame): DataFrame =
+  /** Purely stateless per-row arithmetic, so the mix runs unchanged on a
+    * STREAMING documents frame (no watermark, no state: each micro-batch
+    * mixes independently and the hash decisions are the same ones the
+    * batch run makes — StreamsSpec asserts the parity). */
+  def mixOn(docs: DataFrame): DataFrame =
     mixCopiesOn(docs)
       .filter(col("n_copies") > 0)
       .select(col("doc_id"), col("source"), col("lang"), col("rate_q"),
         explode(sequence(lit(1L), col("n_copies"))).as("copy_idx"))
-
-  def mixOn(docs: DataFrame): DataFrame =
-    mixRowsOn(docs).orderBy("doc_id", "copy_idx")
 
   def mix(spark: SparkSession, dir: String): DataFrame =
     mixOn(Tables.documents(spark, dir))
@@ -84,7 +81,7 @@ object Corpus {
        |ORDER BY doc_id, copy_idx""".stripMargin
   }
 
-  val mixSql: String = mixSqlFor("documents")
+  lazy val mixSql: String = mixSqlFor("documents")
 
   // ---------------------------------------------------------- sequence packing
   /** Context length of the packing target, in tokens. */
@@ -114,7 +111,6 @@ object Corpus {
       .groupBy("lang", "chunk_id")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("tokens_started"),
         min("doc_id").as("first_doc_id"), max("doc_id").as("last_doc_id"))
-      .orderBy("lang", "chunk_id")
   }
 
   def seqPack(spark: SparkSession, dir: String): DataFrame =
@@ -188,7 +184,6 @@ object Corpus {
       .groupBy("lang", "shard", "chunk_id")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("tokens_started"),
         min("doc_id").as("first_doc_id"), max("doc_id").as("last_doc_id"))
-      .orderBy("lang", "shard", "chunk_id")
 
   def seqPackSharded(spark: SparkSession, dir: String): DataFrame =
     seqPackShardedOn(Tables.documents(spark, dir))
@@ -226,7 +221,7 @@ object Corpus {
   /** Oracle twin of [[seqPackShardedOn]]: the shard is the same portable
     * doc-hash mod [[PackShards]], so DuckDB reproduces the exact shard
     * assignment and per-(lang, shard) running sums. */
-  val seqPackShardedSql: String = {
+  lazy val seqPackShardedSql: String = {
     s"""WITH ${seqPackDocCtesSql("documents")}
        |SELECT lang, shard, chunk_id,
        |       count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS tokens_started,
@@ -273,7 +268,6 @@ object Corpus {
           .otherwise(r6(col("total_tokens") / (col("n_chunks") * lit(ContextTokens)).cast("double")))
           .as("fill_ratio"),
         r6(col("n_split_docs") / col("n_docs").cast("double")).as("split_ratio"))
-      .orderBy("lang")
   }
 
   def packEfficiency(spark: SparkSession, dir: String): DataFrame =
@@ -340,10 +334,7 @@ object Corpus {
 
   /** Scoring against an already-built hash set — shared by the one-shot
     * form and the frozen registered query. */
-  /** Unsorted scoring rows — the composition seam (the funnel joins the
-    * verdicts on doc_id; only the registered listing pays the
-    * presentation sort). */
-  def decontaminateAgainstHashesRowsOn(train: DataFrame, benchHashes: DataFrame): DataFrame = {
+  def decontaminateAgainstHashesOn(train: DataFrame, benchHashes: DataFrame): DataFrame = {
     // explode_outer keeps shingle-less docs in the output with n_grams = 0
     val tg = train.select(col("doc_id"),
         explode_outer(Dedup.shingles3(graft.ext.Text.tokens(col("text")))).as("gram"))
@@ -360,19 +351,10 @@ object Corpus {
         (col("contamination") <= lit(MaxContamination)).as("keep"))
   }
 
-  def decontaminateAgainstHashesOn(train: DataFrame, benchHashes: DataFrame): DataFrame =
-    decontaminateAgainstHashesRowsOn(train, benchHashes).orderBy("doc_id")
-
   def decontaminateOn(docs: DataFrame): DataFrame =
     decontaminateAgainstOn(
       docs.filter(pmod(col("doc_id"), lit(10)) =!= lit(BenchSlice)),
       docs.filter(pmod(col("doc_id"), lit(10)) === lit(BenchSlice)))
-
-  /** Unsorted twin of [[decontaminateOn]] — the composition seam. */
-  def decontaminateRowsOn(docs: DataFrame): DataFrame =
-    decontaminateAgainstHashesRowsOn(
-      docs.filter(pmod(col("doc_id"), lit(10)) =!= lit(BenchSlice)),
-      evalShingleHashes(docs.filter(pmod(col("doc_id"), lit(10)) === lit(BenchSlice))))
 
   /** Frozen eval-shingle hash set per corpus (train-once contract, same
     * as the fluency census): the registered query and the funnel family
@@ -392,12 +374,7 @@ object Corpus {
   }
 
   def decontaminate(spark: SparkSession, dir: String): DataFrame =
-    decontaminateRows(spark, dir).orderBy("doc_id")
-
-  /** Unsorted frozen-set scoring — [[decontaminate]] minus the
-    * presentation sort, for composing consumers (the funnel build). */
-  def decontaminateRows(spark: SparkSession, dir: String): DataFrame =
-    decontaminateAgainstHashesRowsOn(
+    decontaminateAgainstHashesOn(
       Tables.documents(spark, dir)
         .filter(pmod(col("doc_id"), lit(10)) =!= lit(BenchSlice)),
       frozenEvalHashes(spark, dir))
@@ -463,8 +440,7 @@ object Corpus {
     * of the document itself: reproducible across runs, cluster sizes and
     * partitionings, stable under a re-ingest that assigns fresh doc_ids,
     * and exact duplicates always land in the same split (no train/test
-    * leakage through copies). Pure map-side projection; the only shuffle is
-    * the presentation sort.
+    * leakage through copies). Pure map-side projection, no shuffle.
     *
     * The salt ("split:") decorrelates this hash from every other decision
     * hash in the engine (mix/tmix/shard) — a doc's split must not predict
@@ -473,7 +449,7 @@ object Corpus {
   val ValPct = 5L // test gets the remainder
 
   /** The split assignment as a COLUMN over any frame exposing `text` —
-    * the ONE definition behind [[splitRowsOn]] and the media manifest's
+    * the ONE definition behind [[splitOn]] and the media manifest's
     * doc-local split state ([[graft.multimodal.Multimodal.mmDocLocalOn]],
     * whose snapshot frames carry no lang column). */
   def splitAssign: org.apache.spark.sql.Column = {
@@ -483,14 +459,11 @@ object Corpus {
       .otherwise(lit("test"))
   }
 
-  /** Unsorted per-doc assignment — stateless row-local arithmetic, safe on
-    * a streaming frame like the other manifest ops. */
-  def splitRowsOn(docs: DataFrame): DataFrame =
+  /** Per-doc assignment — stateless row-local arithmetic, safe on a
+    * streaming frame like the other manifest ops. */
+  def splitOn(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"), splitAssign.as("split"),
       size(Text.tokens(col("text"))).cast("long").as("n_tok"))
-
-  def splitOn(docs: DataFrame): DataFrame =
-    splitRowsOn(docs).orderBy("doc_id")
 
   def split(spark: SparkSession, dir: String): DataFrame =
     splitOn(Tables.documents(spark, dir))
@@ -545,7 +518,7 @@ object Corpus {
        |       n_tok
        |FROM hashed ORDER BY doc_id""".stripMargin
 
-  val splitSql: String = splitSqlFor("documents")
+  lazy val splitSql: String = splitSqlFor("documents")
 
   // ------------------------------------------------- leakage-safe split
   /** LEAKAGE-SAFE split manifest — the REPAIR for what `t_split_leakage`
@@ -590,7 +563,6 @@ object Corpus {
     inheritedSplitFrom(clusters, docs.select(col("doc_id"), splitAssign.as("own_split")))
       .select(col("doc_id"), col("cluster_id"), col("split"),
         (col("split") =!= col("own_split")).as("moved"))
-      .orderBy("doc_id")
 
   def splitSafe(spark: SparkSession, dir: String): DataFrame =
     splitSafeOn(Tables.documents(spark, dir), Dedup.dupClusters(spark, dir))
@@ -612,7 +584,7 @@ object Corpus {
     * splits — the eval-contamination check a pipeline runs after
     * splitting, because hash-random splits place near-duplicates on
     * opposite sides of the boundary and the test metric silently becomes
-    * a memorization probe. Composes the split manifest ([[splitRowsOn]])
+    * a memorization probe. Composes the split manifest ([[splitOn]])
     * with the MinHash edge table (`Dedup.dupEdgesOn` — banded candidates,
     * never all-pairs): each edge's endpoints look up their split, the
     * (split, split) pair normalizes alphabetically, and the report
@@ -624,7 +596,7 @@ object Corpus {
     * |corpus|-row split manifest (bucketed/co-partitioned in a warehouse),
     * then a ≤6-group aggregate. */
   def splitLeakageOn(docs: DataFrame): DataFrame = {
-    val sp = splitRowsOn(docs).select(col("doc_id"), col("split"))
+    val sp = splitOn(docs).select(col("doc_id"), col("split"))
     val pairs = Dedup.dupEdgesOn(docs)
       .join(sp.select(col("doc_id").as("doc_a"), col("split").as("sa")), "doc_a")
       .join(sp.select(col("doc_id").as("doc_b"), col("split").as("sb")), "doc_b")
@@ -639,7 +611,6 @@ object Corpus {
       .select(col("split_a"), col("split_b"),
         coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
         (col("split_a") =!= col("split_b")).as("is_leak"))
-      .orderBy("split_a", "split_b")
   }
 
   def splitLeakage(spark: SparkSession, dir: String): DataFrame =
@@ -693,7 +664,6 @@ object Corpus {
       .groupBy("lang", "bucket")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
         min("n_tok").as("min_tok"), max("n_tok").as("max_tok"))
-      .orderBy("lang", "bucket")
 
   def lengthBuckets(spark: SparkSession, dir: String): DataFrame =
     lengthBucketsOn(Tables.documents(spark, dir))
@@ -731,7 +701,6 @@ object Corpus {
       .select(col("lang"),
         col("sk.p50_cents").as("p50_tok"), col("sk.p90_cents").as("p90_tok"),
         col("sk.p99_cents").as("p99_tok"), col("sk.n").as("n_docs"))
-      .orderBy("lang")
   }
 
   def lengthQuantiles(spark: SparkSession, dir: String): DataFrame =
@@ -752,7 +721,7 @@ object Corpus {
     * upsampling scheme, α = 0.5): each language's share of the output corpus
     * is ∝ sqrt(its input share), so dominant languages shrink and
     * low-resource ones grow, at CONSTANT total corpus size. Unlike
-    * [[mixRowsOn]]'s fixed per-source rates, the rates here are DATA-DRIVEN
+    * [[mixOn]]'s fixed per-source rates, the rates here are DATA-DRIVEN
     * — yet every decision is exact integer arithmetic: weights are
     * floor(sqrt(share)·2^20) (IEEE sqrt is correctly rounded and ·2^20 is
     * exact, so both engines compute the identical integer), per-lang quotas
@@ -871,7 +840,6 @@ object Corpus {
       .filter(col("n_copies") > 0)
       .select(col("doc_id"), col("lang"), col("source"), col("quota"), col("n_copies"),
         explode(sequence(lit(1L), col("n_copies"))).as("copy_idx"))
-      .orderBy("doc_id", "copy_idx")
   }
 
   /** Unpruned reference form — the spec's oracle for pruned ≡ exact. */
@@ -893,7 +861,6 @@ object Corpus {
       .filter(col("n_copies") > 0)
       .select(col("doc_id"), col("lang"), col("source"), col("quota"), col("n_copies"),
         explode(sequence(lit(1L), col("n_copies"))).as("copy_idx"))
-      .orderBy("doc_id", "copy_idx")
   }
 
   def tempMix(spark: SparkSession, dir: String): DataFrame =
@@ -1001,7 +968,6 @@ object Corpus {
           .otherwise(graft.ops.Num.r6(col("n_contaminated") / col("n_grams"))))
       .select(col("doc_id"), col("n_grams"), col("n_contaminated"), col("contamination"),
         (col("contamination") <= lit(MaxContamination)).as("keep"))
-      .orderBy("doc_id")
   }
 
   def decontaminateBloomOn(docs: DataFrame): DataFrame =
@@ -1095,7 +1061,6 @@ object Corpus {
     top.withColumn("rank",
         row_number().over(Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
       .select("rank", "doc_id", "lang", "source", "n_tokens", "score")
-      .orderBy("rank")
   }
 
   def dsirSelectOn(docs: DataFrame,
@@ -1185,7 +1150,6 @@ object Corpus {
     prunedRanksByLang(keyed, alloc, margin)
       .filter(col("rk").isNotNull && col("rk") <= col("needed"))
       .select(col("doc_id"), col("lang"), col("rk"))
-      .orderBy("doc_id")
   }
 
   /** Unpruned reference form — the spec's oracle for pruned ≡ exact. */
@@ -1207,7 +1171,6 @@ object Corpus {
     ranked.join(broadcast(alloc), Seq("lang"))
       .filter(col("rk") <= col("quota"))
       .select(col("doc_id"), col("lang"), col("rk"))
-      .orderBy("doc_id")
   }
 
   def stratifiedSample(spark: SparkSession, dir: String): DataFrame =
@@ -1270,7 +1233,6 @@ object Corpus {
         max("pad_len").as("pad_len"))
       .withColumn("padded_tokens", col("n_docs") * col("pad_len"))
       .withColumn("waste", col("padded_tokens") - col("n_tokens"))
-      .orderBy("lang", "bucket", "batch_id")
   }
 
   def batchManifest(spark: SparkSession, dir: String): DataFrame =
@@ -1355,12 +1317,11 @@ object Corpus {
       // gid disambiguates a subtotal's NULL marker from a genuine NULL
       // lang/source value AND restores a total sort order when data NULLs
       // exist (caller-supplied frames may have them)
-      .orderBy(col("lang").asc_nulls_first, col("source").asc_nulls_first, col("gid"))
 
   def corpusRollup(spark: SparkSession, dir: String): DataFrame =
     corpusRollupOn(Tables.documents(spark, dir))
 
-  val corpusRollupSql: String =
+  lazy val corpusRollupSql: String =
     s"""WITH $fpJoinCtes
        |SELECT lang, source,
        |       CAST(grouping(lang, source) AS BIGINT) AS gid,
@@ -1389,7 +1350,7 @@ object Corpus {
     * semantics).
     *
     * 100 TB design: pure row-local arithmetic + explode (map-side, no
-    * shuffle but the presentation sort); chunk counts are
+    * shuffle); chunk counts are
     * 1 + ceil((n−C)/S) in exact integer arithmetic so both engines emit
     * identical manifests. */
   def chunkWindowsOn(docs: DataFrame, chunk: Long = ChunkTokens,
@@ -1412,7 +1373,6 @@ object Corpus {
         md5(concat_ws(" ", slice(col("toks"),
           (col("start_tok") + 1).cast("int"),
           (col("end_tok") - col("start_tok")).cast("int")))).as("chunk_hash"))
-      .orderBy("doc_id", "chunk_id")
   }
 
   def chunkWindows(spark: SparkSession, dir: String): DataFrame =
@@ -1442,7 +1402,7 @@ object Corpus {
   /** The chunk's content hash over the `win` relation. */
   private def chunkHashSql: String = "md5(array_to_string(t[start_tok + 1:end_tok], ' '))"
 
-  val chunkWindowsSql: String =
+  lazy val chunkWindowsSql: String =
     s"""WITH $chunkCtes
        |SELECT doc_id, chunk_id, start_tok, end_tok,
        |       end_tok - start_tok AS chunk_tok,
@@ -1467,12 +1427,11 @@ object Corpus {
       .agg(count(lit(1)).as("n_copies"),
         countDistinct(col("doc_id")).as("n_docs"),
         min(col("doc_id")).as("canonical_doc_id"))
-      .orderBy("chunk_hash")
 
   def chunkDedup(spark: SparkSession, dir: String): DataFrame =
     chunkDedupOn(Tables.documents(spark, dir))
 
-  val chunkDedupSql: String =
+  lazy val chunkDedupSql: String =
     s"""WITH $chunkCtes
        |SELECT $chunkHashSql AS chunk_hash,
        |       CAST(count(*) AS BIGINT) AS n_copies,
@@ -1502,12 +1461,11 @@ object Corpus {
         r6(avg(when(col("n_fp") > 1, 1.0).otherwise(0.0))).as("dup_rate"),
         r6(avg(when(col("n_tok") < lit(ShortDocTokens), 1.0).otherwise(0.0))).as("short_rate"))
       .withColumn("keep", col("dup_rate") <= lit(SourceDupMax))
-      .orderBy("source")
 
   def sourceStats(spark: SparkSession, dir: String): DataFrame =
     sourceStatsOn(Tables.documents(spark, dir))
 
-  val sourceStatsSql: String =
+  lazy val sourceStatsSql: String =
     s"""WITH $fpJoinCtes,
        |agg AS (
        |  SELECT source,
@@ -1535,7 +1493,7 @@ object Corpus {
     * both snapshots by doc_id (sources/Formats bucketed tables) runs it
     * shuffle-free. */
   def snapshotDeltaOn(oldDocs: DataFrame, newDocs: DataFrame): DataFrame =
-    snapshotDeltaRowsOn(oldDocs, newDocs).orderBy("doc_id")
+    deltaFromFps(deltaFp(oldDocs), deltaFp(newDocs))
 
   /** The snapshot fingerprint projection — null-safe (a NULL-text doc
     * coalesces to a sentinel no md5 hex can collide with), so fp nullness
@@ -1544,14 +1502,6 @@ object Corpus {
     * misread as 'added'/'removed'. */
   private[graft] def deltaFp(df: DataFrame): DataFrame = df.select(col("doc_id"),
     coalesce(md5(graft.ext.Text.normalized(col("text"))), lit("<null>")).as("fp"))
-
-  /** Unsorted delta classify — the update-path twin (round 19, the
-    * `*Rows` discipline): every warehouse update consumes the delta via
-    * filters and joins, so the registered listing's corpus-wide range
-    * exchange + sort rode into each update's eager checkpoint for
-    * nothing. Only [[snapshotDeltaOn]] (the presentation row) sorts. */
-  def snapshotDeltaRowsOn(oldDocs: DataFrame, newDocs: DataFrame): DataFrame =
-    deltaFromFps(deltaFp(oldDocs), deltaFp(newDocs))
 
   /** Delta classify against STORED old-side fingerprints (round 19): the
     * manifest warehouse already carries every old doc's content
@@ -1654,7 +1604,7 @@ object Corpus {
     * doc_id-keyed anti/semi joins. The carried-over fraction — at real
     * ingestion cadence, almost everything — is never rewritten. */
   def applyDeltaOn(oldDocs: DataFrame, newDocs: DataFrame): DataFrame = {
-    val delta = snapshotDeltaRowsOn(oldDocs, newDocs)
+    val delta = snapshotDeltaOn(oldDocs, newDocs)
     val retire = delta.filter(col("status").isin("removed", "changed")).select("doc_id")
     val ingest = delta.filter(col("status").isin("added", "changed")).select("doc_id")
     val carried = oldDocs.join(retire, Seq("doc_id"), "left_anti")
@@ -1663,7 +1613,6 @@ object Corpus {
       .select(col("doc_id"),
         coalesce(md5(graft.ext.Text.normalized(col("text"))), lit("<null>")).as("fp"),
         col("lang"), col("source"))
-      .orderBy("doc_id")
   }
 
   def applyDelta(spark: SparkSession, dir: String): DataFrame = {
@@ -1708,7 +1657,7 @@ object Corpus {
     // under dynamic allocation — the one-shot-update trade
     // [[graft.ext.Dedup.dupClustersOn]] documents; cluster callers running
     // dynamic allocation should persist() instead and clearCache() after.
-    val delta = snapshotDeltaRowsOn(oldDocs, newDocs).localCheckpoint(eager = false)
+    val delta = snapshotDeltaOn(oldDocs, newDocs).localCheckpoint(eager = false)
     val o = fpOf(oldDocs).localCheckpoint(eager = false)
     val n = fpOf(newDocs)
     def arm(statuses: Seq[String], side: DataFrame, from: Long, to: Long) =
@@ -1719,7 +1668,6 @@ object Corpus {
     arm(Seq("removed", "changed"), o, 1L, 2L)
       .unionByName(arm(Seq("unchanged"), o, 1L, Scd2Open))
       .unionByName(arm(Seq("added", "changed"), n, 2L, Scd2Open))
-      .orderBy("doc_id", "valid_from")
   }
 
   def scd2History(spark: SparkSession, dir: String): DataFrame = {
@@ -1793,7 +1741,6 @@ object Corpus {
         r6(col("n_old") / col("t_old")).as("share_old"),
         r6(col("n_new") / col("t_new")).as("share_new"),
         r6(col("n_new") / col("t_new") - col("n_old") / col("t_old")).as("share_delta"))
-      .orderBy("lang", "source")
   }
 
   def sourceDrift(spark: SparkSession, dir: String): DataFrame = {
@@ -1867,7 +1814,6 @@ object Corpus {
         when(col("psi_total") < lit(PsiStable), "stable")
           .when(col("psi_total") < lit(PsiModerate), "moderate")
           .otherwise("shifted"))
-      .orderBy("bucket")
   }
 
   def psiDrift(spark: SparkSession, dir: String): DataFrame = {
@@ -1905,7 +1851,7 @@ object Corpus {
        |ORDER BY bucket""".stripMargin
   }
 
-  val sourceDriftSql: String =
+  lazy val sourceDriftSql: String =
     s"""WITH o AS (
        |  SELECT lang, source, count(*) AS n FROM documents
        |  WHERE $deltaOldWhereSql GROUP BY 1, 2),
@@ -1976,7 +1922,6 @@ object Corpus {
       .groupBy("lang", "source")
       .agg(sum(col("d_docs")).as("n_docs"), sum(col("d_tokens")).as("n_tokens"))
       .filter(col("n_docs") > 0)
-      .orderBy("lang", "source")
   }
 
   /** Self-contained form over two snapshot frames (the library API /
@@ -1985,7 +1930,7 @@ object Corpus {
     * from the old snapshot. The registered query [[ivmStats]] instead
     * reads the base view from the frozen per-corpus store. */
   def ivmStatsOn(oldDocs: DataFrame, newDocs: DataFrame): DataFrame = {
-    val delta = snapshotDeltaRowsOn(oldDocs, newDocs)
+    val delta = snapshotDeltaOn(oldDocs, newDocs)
     val retired = delta.filter(col("status").isin("removed", "changed")).select("doc_id")
     val ingested = delta.filter(col("status").isin("added", "changed")).select("doc_id")
     ivmStatsFrom(ivmBaseViewOn(oldDocs),
@@ -2013,7 +1958,7 @@ object Corpus {
       ivmBaseViewOn(old).write.parquet(p)
       p
     }
-    val delta = snapshotDeltaRowsOn(old, nw)
+    val delta = snapshotDeltaOn(old, nw)
     val retired = delta.filter(col("status").isin("removed", "changed")).select("doc_id")
     val ingested = delta.filter(col("status").isin("added", "changed")).select("doc_id")
     ivmStatsFrom(spark.read.parquet(basePath),
@@ -2048,8 +1993,7 @@ object Corpus {
     * shard), so each sort is corpus/shards-sized — production raises the
     * shard count until a shard's manifest fits a partition (the
     * `t_seq_pack_sharded` convention), and the trainer reads shard files
-    * sequentially by position. No global sort exists (the final orderBy is
-    * presentation, stable under the manifest's own key). */
+    * sequentially by position. No global sort exists. */
   val ShuffleEpochs = 2
   val ShuffleShards = 8
 
@@ -2063,7 +2007,6 @@ object Corpus {
       .withColumn("shard", pmod(col("h"), lit(shards.toLong)))
       .withColumn("pos", row_number().over(w).cast("long"))
       .select(col("epoch"), col("shard"), col("pos"), col("doc_id"))
-      .orderBy("epoch", "shard", "pos")
   }
 
   /** The permutation core over an explicit packed-chunk unit table (lang,
@@ -2086,7 +2029,6 @@ object Corpus {
       .withColumn("pos", row_number().over(w).cast("long"))
       .select(col("epoch"), col("shard"), col("pos"),
         col("lang"), col("pack_shard"), col("chunk_id"))
-      .orderBy("epoch", "shard", "pos")
   }
 
   /** Packed chunk units of a composed manifest — the trainer's read
@@ -2178,9 +2120,9 @@ object Corpus {
     *
     * Composition discipline (the funnel's, one level up): this query has
     * NO stage logic of its own — the Spark side calls the exact per-stage
-    * entry points the registry runs ([[mixRowsOn]], the materialized
+    * entry points the registry runs ([[mixOn]], the materialized
     * funnel manifest, the materialized dup-cluster manifest + keep-best
-    * choice, [[splitRowsOn]], [[seqPackDocRowsOn]]), and the oracle embeds
+    * choice, [[splitOn]], [[seqPackDocRowsOn]]), and the oracle embeds
     * the per-stage ORACLE SQLs as subqueries (the pack stage composes
     * [[seqPackDocCtesSql]] over the filtered spine — the same
     * parameterized chain `t_seq_pack_sharded` runs over the full corpus).
@@ -2196,12 +2138,12 @@ object Corpus {
     val docs = Tables.documents(spark, dir)
     assembleManifest(
       spine = docs.select("doc_id", "lang", "source"),
-      mx = mixRowsOn(docs).groupBy("doc_id").agg(count(lit(1)).as("n_copies")),
-      fn = graft.ext.Curation.funnelManifest(spark, dir)
+      mx = mixOn(docs).groupBy("doc_id").agg(count(lit(1)).as("n_copies")),
+      fn = graft.ext.Curation.curationFunnel(spark, dir)
         .select(col("doc_id"), col("kept").as("f_kept"), col("drop_reason").as("f_reason")),
       dc = graft.ext.Dedup.dupClusters(spark, dir).select("doc_id", "cluster_id"),
       kb = graft.ext.Dedup.keepBest(spark, dir).select("cluster_id", "keep_doc_id"),
-      sp = splitRowsOn(docs).select("doc_id", "split"),
+      sp = splitOn(docs).select("doc_id", "split"),
       packTok = ids => docs.select("doc_id", "lang", "text")
         .join(ids, Seq("doc_id"))
         .withColumn("n_tok", size(Text.tokens(col("text"))).cast("long"))
@@ -2285,7 +2227,6 @@ object Corpus {
         col("packed"),
         coalesce(col("shard"), lit(-1L)).as("shard"),
         coalesce(col("chunk_id"), lit(-1L)).as("chunk_id"))
-      .orderBy("doc_id")
   }
 
   /** The pre-verdict spine as ONE projection of a [[manifestDocFeatures]]
@@ -2410,7 +2351,6 @@ object Corpus {
         countDistinct(col("chunk_id")).as("n_chunks"),
         sum(col("n_chars")).as("n_chars_total"),
         countDistinct(col("lang")).as("n_langs"))
-      .orderBy("shard")
   }
 
   /** Oracle: the same consumer aggregate over the composed manifest
@@ -2659,7 +2599,7 @@ object Corpus {
       // per-doc feature warehouse + the base canonical verdict
       val census = spark.read.parquet(s"$base/census.parquet")
       val evalh = spark.read.parquet(s"$base/evalh.parquet")
-      val canon = graft.ext.Text.fingerprintRowsOn(old)
+      val canon = graft.ext.Text.fingerprintOn(old)
         .select(col("doc_id"), (col("is_canonical") === lit(1L)).as("is_canonical"))
       manifestDocFeatures(old, census, weights, thrTot, thrN, evalh)
         .join(canon, Seq("doc_id"))
@@ -2693,7 +2633,7 @@ object Corpus {
     * old snapshot. */
   def manifestBase(spark: SparkSession, dir: String): DataFrame = {
     val (base, _, _) = frozenManifestBase(spark, dir)
-    spark.read.parquet(s"$base/manifest.parquet").orderBy("doc_id")
+    spark.read.parquet(s"$base/manifest.parquet")
   }
 
   lazy val manifestBaseSql: String =
@@ -2816,8 +2756,7 @@ object Corpus {
     // classified against the WAREHOUSE's stored fingerprints (round 19):
     // the old side is a narrow feature-table read, so the classify scans
     // only the NEW snapshot's text — at corpus scale this halves the
-    // update's irreducible text work. Unsorted: every consumer below is a
-    // filter or join.
+    // update's irreducible text work.
     val delta = graft.ops.Prof(spark, "mwu: delta ckpt")(
       snapshotDeltaFromStoredFps(featOld.select("doc_id", "fp"), nw).localCheckpoint())
     val gone = delta.filter(col("status").isin("removed", "changed")).select("doc_id")
@@ -3035,7 +2974,7 @@ object Corpus {
       weights = spark.read.parquet(s"$base/weights.parquet"),
       thrTot = thrTot, thrN = thrN,
       evalh = spark.read.parquet(s"$base/evalh.parquet"))
-      .manifest.orderBy("doc_id")
+      .manifest
   }
 
   lazy val manifestRolledSql: String = {
@@ -3120,7 +3059,6 @@ object Corpus {
       .groupBy("change_class")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("kept_after"), 1L).otherwise(0L)).as("n_kept_after"))
-      .orderBy("change_class")
   }
 
   def manifestDelta(spark: SparkSession, dir: String): DataFrame = {
@@ -3214,7 +3152,6 @@ object Corpus {
         graft.ops.Num.r6(col("rate_new")).as("rate_new"),
         graft.ops.Num.r6(col("rate_new") - col("rate_old")).as("rate_delta"),
         (abs(col("rate_new") - col("rate_old")) >= lit(GateDriftShift)).as("shifted"))
-      .orderBy("gate")
   }
 
   def gateDrift(spark: SparkSession, dir: String): DataFrame = {
@@ -3281,7 +3218,7 @@ object Corpus {
     * update is spec-tested against (ManifestIncrSpec): every document's
     * features recompute fresh, the funnel verdict comes through the
     * STREAMING funnel's independent frozen-artifact entry point
-    * ([[graft.ext.Curation.curationFunnelAgainstHashesRowsOn]]), clusters
+    * ([[graft.ext.Curation.curationFunnelAgainstHashesOn]]), clusters
     * through the one-shot [[graft.ext.Dedup.dupClustersOn]], and packing
     * re-tokenizes text — so a carried warehouse row that drifted from
     * what a recompute would produce cannot hash-match. */
@@ -3289,60 +3226,63 @@ object Corpus {
                                      weights: DataFrame, thrTot: Long, thrN: Long,
                                      evalh: DataFrame): DataFrame = {
     val train = snap.filter(pmod(col("doc_id"), lit(10L)) =!= lit(BenchSlice))
-    val canon = graft.ext.Text.fingerprintRowsOn(snap)
+    val canon = graft.ext.Text.fingerprintOn(snap)
       .select(col("doc_id"), (col("is_canonical") === lit(1L)).as("is_canonical"))
-    val fn = graft.ext.Curation.curationFunnelAgainstHashesRowsOn(
+    val fn = graft.ext.Curation.curationFunnelAgainstHashesOn(
         train, census, evalh, canon,
         graft.ext.Quality.qsKeepWithThreshold(train, weights, thrTot, thrN))
       .select(col("doc_id"), col("kept").as("f_kept"), col("drop_reason").as("f_reason"))
     val dcFull = graft.ext.Dedup.dupClustersOn(snap)
     assembleManifest(
       spine = snap.select("doc_id", "lang", "source"),
-      mx = mixRowsOn(snap).groupBy("doc_id").agg(count(lit(1)).as("n_copies")),
+      mx = mixOn(snap).groupBy("doc_id").agg(count(lit(1)).as("n_copies")),
       fn = fn,
       dc = dcFull.select("doc_id", "cluster_id"),
       kb = graft.ext.Dedup.keepBestOn(snap, dcFull).select("cluster_id", "keep_doc_id"),
-      sp = splitRowsOn(snap).select("doc_id", "split"),
+      sp = splitOn(snap).select("doc_id", "split"),
       packTok = ids => snap.select("doc_id", "lang", "text").join(ids, Seq("doc_id"))
         .withColumn("n_tok", size(graft.ext.Text.tokens(col("text"))).cast("long"))
         .select("lang", "doc_id", "n_tok"))
   }
 
   lazy val all: Seq[Q] = Seq(
-    Q("t_corpus_mix", mix _, mixSql),
-    Q("t_epoch_shuffle", epochShuffle _, epochShuffleSql),
-    Q("t_apply_delta", applyDelta _, applyDeltaSql),
-    Q("t_scd2_history", scd2History _, scd2HistorySql),
-    Q("t_source_drift", sourceDrift _, sourceDriftSql),
-    Q("t_psi_drift", psiDrift _, psiDriftSql),
-    Q("t_ivm_stats", ivmStats _, ivmStatsSql),
-    Q("t_temp_mix", tempMix _, tempMixSql),
-    Q("t_split", split _, splitSql),
-    Q("t_split_safe", splitSafe _, splitSafeSql),
-    Q("t_split_leakage", splitLeakage _, splitLeakageSql),
-    Q("t_length_buckets", lengthBuckets _, lengthBucketsSql),
-    Q("t_length_quantiles", lengthQuantiles _, lengthQuantilesSql),
-    Q("t_batch_manifest", batchManifest _, batchManifestSql),
-    Q("t_seq_pack", seqPack _, seqPackSql),
-    Q("t_seq_pack_sharded", seqPackSharded _, seqPackShardedSql),
-    Q("t_pipeline_manifest", pipelineManifest _, pipelineManifestSql),
-    Q("t_manifest_consume", manifestConsume _, manifestConsumeSql),
-    Q("t_manifest_base", manifestBase _, manifestBaseSql),
-    Q("t_manifest_delta", manifestDelta _, manifestDeltaSql),
-    Q("t_gate_drift", gateDrift _, gateDriftSql),
-    Q("t_manifest_incremental", manifestIncremental _, manifestIncrementalSql),
-    Q("t_manifest_rolled", manifestRolled _, manifestRolledSql),
-    Q("t_pack_efficiency", packEfficiency _, packEfficiencySql),
-    Q("t_decontaminate", decontaminate _, decontaminateSql),
+    Q("t_corpus_mix", mix _, mixSql, col("doc_id"), col("copy_idx")),
+    Q("t_epoch_shuffle", epochShuffle _, epochShuffleSql, col("epoch"), col("shard"), col("pos")),
+    Q("t_apply_delta", applyDelta _, applyDeltaSql, col("doc_id")),
+    Q("t_scd2_history", scd2History _, scd2HistorySql, col("doc_id"), col("valid_from")),
+    Q("t_source_drift", sourceDrift _, sourceDriftSql, col("lang"), col("source")),
+    Q("t_psi_drift", psiDrift _, psiDriftSql, col("bucket")),
+    Q("t_ivm_stats", ivmStats _, ivmStatsSql, col("lang"), col("source")),
+    Q("t_temp_mix", tempMix _, tempMixSql, col("doc_id"), col("copy_idx")),
+    Q("t_split", split _, splitSql, col("doc_id")),
+    Q("t_split_safe", splitSafe _, splitSafeSql, col("doc_id")),
+    Q("t_split_leakage", splitLeakage _, splitLeakageSql, col("split_a"), col("split_b")),
+    Q("t_length_buckets", lengthBuckets _, lengthBucketsSql, col("lang"), col("bucket")),
+    Q("t_length_quantiles", lengthQuantiles _, lengthQuantilesSql, col("lang")),
+    Q("t_batch_manifest", batchManifest _, batchManifestSql,
+      col("lang"), col("bucket"), col("batch_id")),
+    Q("t_seq_pack", seqPack _, seqPackSql, col("lang"), col("chunk_id")),
+    Q("t_seq_pack_sharded", seqPackSharded _, seqPackShardedSql,
+      col("lang"), col("shard"), col("chunk_id")),
+    Q("t_pipeline_manifest", pipelineManifest _, pipelineManifestSql, col("doc_id")),
+    Q("t_manifest_consume", manifestConsume _, manifestConsumeSql, col("shard")),
+    Q("t_manifest_base", manifestBase _, manifestBaseSql, col("doc_id")),
+    Q("t_manifest_delta", manifestDelta _, manifestDeltaSql, col("change_class")),
+    Q("t_gate_drift", gateDrift _, gateDriftSql, col("gate")),
+    Q("t_manifest_incremental", manifestIncremental _, manifestIncrementalSql, col("doc_id")),
+    Q("t_manifest_rolled", manifestRolled _, manifestRolledSql, col("doc_id")),
+    Q("t_pack_efficiency", packEfficiency _, packEfficiencySql, col("lang")),
+    Q("t_decontaminate", decontaminate _, decontaminateSql, col("doc_id")),
     // same semantics as t_decontaminate (bloom only PRUNES; the exact
     // verify join rejects its false positives) → the oracle is shared
-    Q("t_decontaminate_bloom", decontaminateBloom _, decontaminateSql),
-    Q("t_dsir_select", dsirSelect _, dsirSelectSql),
-    Q("t_stratified_sample", stratifiedSample _, stratifiedSampleSql),
-    Q("t_source_stats", sourceStats _, sourceStatsSql),
-    Q("t_chunk_windows", chunkWindows _, chunkWindowsSql),
-    Q("t_chunk_dedup", chunkDedup _, chunkDedupSql),
-    Q("t_corpus_rollup", corpusRollup _, corpusRollupSql),
-    Q("t_snapshot_delta", snapshotDelta _, snapshotDeltaSql),
+    Q("t_decontaminate_bloom", decontaminateBloom _, decontaminateSql, col("doc_id")),
+    Q("t_dsir_select", dsirSelect _, dsirSelectSql, col("rank")),
+    Q("t_stratified_sample", stratifiedSample _, stratifiedSampleSql, col("doc_id")),
+    Q("t_source_stats", sourceStats _, sourceStatsSql, col("source")),
+    Q("t_chunk_windows", chunkWindows _, chunkWindowsSql, col("doc_id"), col("chunk_id")),
+    Q("t_chunk_dedup", chunkDedup _, chunkDedupSql, col("chunk_hash")),
+    Q("t_corpus_rollup", corpusRollup _, corpusRollupSql,
+      col("lang").asc_nulls_first, col("source").asc_nulls_first, col("gid")),
+    Q("t_snapshot_delta", snapshotDelta _, snapshotDeltaSql, col("doc_id")),
   )
 }

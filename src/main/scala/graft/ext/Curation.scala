@@ -33,20 +33,14 @@ object Curation {
     * classifier gate (trained weights + corpus-mean calibration, both
     * derived from the FULL corpus exactly as `t_quality_score` registers
     * them) is the learned complement to the three rule gates. */
-  def curationFunnelOn(docs: DataFrame): DataFrame =
-    curationFunnelRowsOn(docs).orderBy("doc_id")
-
-  /** Unsorted funnel frame — the aggregation-friendly form
-    * ([[gatePatternsOn]] consumes it; a presentation sort of the
-    * corpus-sized verdict frame is pure waste under a ≤64-row groupBy). */
-  def curationFunnelRowsOn(docs: DataFrame): DataFrame = {
+  def curationFunnelOn(docs: DataFrame): DataFrame = {
     val train = docs.filter(pmod(col("doc_id"), lit(10L)) =!= lit(Corpus.BenchSlice))
     funnelTail(train,
-      f = Text.lmFluencyRowsOn(docs).select(col("doc_id"), col("is_fluent")),
-      g = Quality.qualityScoreRowsOn(docs)
+      f = Text.lmFluencyOn(docs).select(col("doc_id"), col("is_fluent")),
+      g = Quality.qualityScoreOn(docs)
         .select(col("doc_id"), col("keep").as("pass_classifier")),
-      d = Corpus.decontaminateRowsOn(docs).select(col("doc_id"), col("keep").as("pass_decontam")),
-      c = Text.fingerprintRowsOn(docs)
+      d = Corpus.decontaminateOn(docs).select(col("doc_id"), col("keep").as("pass_decontam")),
+      c = Text.fingerprintOn(docs)
         .select(col("doc_id"), (col("is_canonical") === lit(1L)).as("is_canonical")))
   }
 
@@ -70,17 +64,10 @@ object Curation {
   def curationFunnelAgainstHashesOn(train: DataFrame, census: DataFrame,
                                     evalHashes: DataFrame, canon: DataFrame,
                                     classifier: DataFrame): DataFrame =
-    curationFunnelAgainstHashesRowsOn(train, census, evalHashes, canon, classifier)
-      .orderBy("doc_id")
-
-  /** Unsorted twin of [[curationFunnelAgainstHashesOn]]. */
-  def curationFunnelAgainstHashesRowsOn(train: DataFrame, census: DataFrame,
-                                        evalHashes: DataFrame, canon: DataFrame,
-                                        classifier: DataFrame): DataFrame =
     funnelTail(train,
-      f = Text.lmFluencyAgainstRowsOn(train, census).select(col("doc_id"), col("is_fluent")),
+      f = Text.lmFluencyAgainstOn(train, census).select(col("doc_id"), col("is_fluent")),
       g = classifier.select(col("doc_id"), col("pass_classifier")),
-      d = Corpus.decontaminateAgainstHashesRowsOn(train, evalHashes)
+      d = Corpus.decontaminateAgainstHashesOn(train, evalHashes)
         .select(col("doc_id"), col("keep").as("pass_decontam")),
       c = canon.select(col("doc_id"), col("is_canonical")))
 
@@ -108,7 +95,7 @@ object Curation {
     * drift. */
   private def funnelTail(train: DataFrame, f: DataFrame, g: DataFrame,
                          d: DataFrame, c: DataFrame): DataFrame = {
-    val q = Text.qualityFilterRowsOn(train).select(col("doc_id"), lit(true).as("pass_quality"))
+    val q = Text.qualityFilterOn(train).select(col("doc_id"), lit(true).as("pass_quality"))
     val r = Text.repetitionStatsOn(train).select(col("doc_id"), col("keep").as("pass_repetition"))
     val pq = coalesce(col("pass_quality"), lit(false))
     val pr = coalesce(col("pass_repetition"), lit(false))
@@ -136,7 +123,7 @@ object Curation {
     * defaults and [[verdictExprs]] are shared verbatim with the unfused
     * tail, so the two forms cannot drift. */
   private def funnelTailFused(train: DataFrame, fgd: DataFrame, c: DataFrame): DataFrame = {
-    val q = Text.qualityFilterRowsOn(train).select(col("doc_id"), lit(true).as("pass_quality"))
+    val q = Text.qualityFilterOn(train).select(col("doc_id"), lit(true).as("pass_quality"))
     val r = Text.repetitionStatsOn(train).select(col("doc_id"), col("keep").as("pass_repetition"))
     val pq = coalesce(col("pass_quality"), lit(false))
     val pr = coalesce(col("pass_repetition"), lit(false))
@@ -174,7 +161,7 @@ object Curation {
     // the frozen models are the identical artifacts the standalone rows
     // replay — the census, the weight table, and the full-pool
     // calibration pair, which IS the in-plan corpus-mean aggregate
-    // [[graft.ext.Quality.qsScoreAgainstRowsOn]] computes (both integer
+    // [[graft.ext.Quality.qsScoreAgainstOn]] computes (both integer
     // sums over the identical scored pool, frozen under the train-once
     // contract like the weights themselves).
     val (thrTot, thrN) = Quality.frozenQsCalibration(spark, dir)
@@ -183,7 +170,7 @@ object Curation {
       Quality.frozenQsWeights(spark, dir), thrTot, thrN,
       Corpus.frozenEvalHashes(spark, dir))
     funnelTailFused(train, fgd,
-      c = Text.fingerprintRowsOn(docs)
+      c = Text.fingerprintOn(docs)
         .select(col("doc_id"), (col("is_canonical") === lit(1L)).as("is_canonical")))
   }
 
@@ -210,15 +197,10 @@ object Curation {
     spark.read.parquet(path)
   }
 
-  def curationFunnel(spark: SparkSession, dir: String): DataFrame =
-    // parquet round-trip loses row order; re-sort to the listing contract
-    frozenFunnelRows(spark, dir).orderBy("doc_id")
-
-  /** The frozen funnel verdict manifest, unsorted — the composition seam
-    * other pipeline stages read ([[graft.ext.Corpus.pipelineManifest]]):
-    * same materialized table as `t_curation_funnel`, so a composed
+  /** The frozen funnel verdict manifest — also the table other pipeline
+    * stages read ([[graft.ext.Corpus.pipelineManifest]]), so a composed
     * pipeline can never disagree with the registered funnel. */
-  def funnelManifest(spark: SparkSession, dir: String): DataFrame =
+  def curationFunnel(spark: SparkSession, dir: String): DataFrame =
     frozenFunnelRows(spark, dir)
 
   /** [[curationFunnelSql]] split across two snapshot relations: the three
@@ -316,7 +298,7 @@ object Curation {
     * embeds the funnel oracle — the report cannot drift from the verdicts
     * it summarizes. */
   def gatePatternsOn(docs: DataFrame): DataFrame =
-    gatePatternsFrom(curationFunnelRowsOn(docs))
+    gatePatternsFrom(curationFunnelOn(docs))
 
   /** Pattern aggregation over an already-computed funnel frame — split so
     * the registered query can ride the frozen-census funnel. */
@@ -329,12 +311,6 @@ object Curation {
       .agg(count(lit(1)).as("n_docs"))
       .withColumn("share",
         graft.ops.Num.r6(col("n_docs").cast("double") / sum(col("n_docs")).over(w)))
-      // `kept` closes the sort key (ADVICE r16): it is in the GROUP BY, and
-      // omitting it makes byte-stable order depend on kept staying a pure
-      // function of the other gate bits — true today, not guaranteed
-      .orderBy(col("n_docs").desc, col("pass_quality"), col("pass_repetition"),
-        col("is_fluent"), col("pass_classifier"), col("pass_decontam"),
-        col("is_canonical"), col("kept"))
   }
 
   def gatePatterns(spark: SparkSession, dir: String): DataFrame =
@@ -357,8 +333,13 @@ object Curation {
        |ORDER BY n_docs DESC, pass_quality, pass_repetition, is_fluent,
        |         pass_classifier, pass_decontam, is_canonical, kept""".stripMargin
 
-  val all: Seq[Q] = Seq(
-    Q("t_curation_funnel", curationFunnel _, curationFunnelSql),
-    Q("t_gate_patterns", gatePatterns _, gatePatternsSql),
+  lazy val all: Seq[Q] = Seq(
+    Q("t_curation_funnel", curationFunnel _, curationFunnelSql, col("doc_id")),
+    // `kept` closes the sort key (ADVICE r16): it is in the GROUP BY, and
+    // omitting it makes byte-stable order depend on kept staying a pure
+    // function of the other gate bits — true today, not guaranteed
+    Q("t_gate_patterns", gatePatterns _, gatePatternsSql,
+      col("n_docs").desc, col("pass_quality"), col("pass_repetition"), col("is_fluent"),
+      col("pass_classifier"), col("pass_decontam"), col("is_canonical"), col("kept")),
   )
 }

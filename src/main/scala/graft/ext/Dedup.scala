@@ -28,7 +28,6 @@ object Dedup {
       .groupBy("fp")
       .agg(min(col("doc_id")).as("canonical_doc_id"), count(lit(1)).as("n_docs"))
       .select("canonical_doc_id", "n_docs")
-      .orderBy("canonical_doc_id")
 
   def exact(spark: SparkSession, dir: String): DataFrame =
     exactOn(Tables.documents(spark, dir))
@@ -163,7 +162,6 @@ object Dedup {
     val mh = minhashSigsOn(docs, numHashes).persist()
     val cand = minhashCandidates(mh, numHashes, numBands)
     minhashEstJaccard(cand, mh, numHashes)
-      .orderBy("doc_a", "doc_b")
   }
 
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
@@ -219,7 +217,7 @@ object Dedup {
     s"$agree / ${numHashes.toDouble}"
   }
 
-  val minhashLshSql: String =
+  lazy val minhashLshSql: String =
     s"""WITH ${minhashCandCtes(NumHashes, NumBands)}
        |SELECT c.doc_a, c.doc_b, ${agreeSql(NumHashes)} AS est_jaccard
        |FROM cand c JOIN mh x ON c.doc_a = x.doc_id JOIN mh y ON c.doc_b = y.doc_id
@@ -288,7 +286,6 @@ object Dedup {
         coalesce(col("n_eval_matches"), lit(0L)).as("n_eval_matches"),
         coalesce(col("max_est_jaccard"), lit(0.0)).as("max_est_jaccard"),
         col("n_eval_matches").isNull.as("keep"))
-      .orderBy("doc_id")
     (out, Seq(tSigs, eSigs))
   }
 
@@ -356,7 +353,6 @@ object Dedup {
         coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
         coalesce(col("n_unique"), lit(0L)).as("n_unique"),
         coalesce(col("novelty"), lit(1.0)).as("novelty"))
-      .orderBy("doc_id")
   }
 
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame =
@@ -398,11 +394,9 @@ object Dedup {
   private def bitValueSql(b: Int): String =
     if (b == 63) "(-9223372036854775807 - 1)" else (1L << b).toString
 
-  /** Unordered fingerprints — the shared subplan. The registry query
-    * (simhashOn) adds the presentation sort; simhashPairsOn must NOT
-    * inherit it, or the persisted pair input carries a useless full
-    * range-shuffle+sort before the band join re-shuffles anyway. */
-  def simhashFps(docs: DataFrame): DataFrame = {
+  /** Per-doc fingerprints — also the shared subplan of
+    * [[simhashPairsOn]]. */
+  def simhashOn(docs: DataFrame): DataFrame = {
     val exploded = docs
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
       .withColumn("h_lo", conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long"))
@@ -417,9 +411,6 @@ object Dedup {
       when(col(s"w_$b") > lit(0), lit(bitValue(b))).otherwise(lit(0L))).reduce(_ + _)
     votes.select(col("doc_id"), fp.as("simhash"))
   }
-
-  def simhashOn(docs: DataFrame): DataFrame =
-    simhashFps(docs).orderBy("doc_id")
 
   def simhash(spark: SparkSession, dir: String): DataFrame =
     simhashOn(Tables.documents(spark, dir))
@@ -472,7 +463,7 @@ object Dedup {
     require(hammingMax >= 0, s"hammingMax=$hammingMax must be non-negative")
     val bandBits = SimBits / nBands
     val mask = (1L << bandBits) - 1 // bandBits ≤ 32 in practice; < 64 by require
-    val fp = simhashFps(docs).persist() // both sides of the band self-join; unsorted
+    val fp = simhashOn(docs).persist() // both sides of the band self-join; unsorted
     val bands = fp.select(col("doc_id"), col("simhash"), explode(array((0 until nBands).map { k =>
       struct(lit(k).as("band_idx"),
         shiftright(col("simhash"), k * bandBits).bitwiseAND(lit(mask)).as("band"))
@@ -484,7 +475,6 @@ object Dedup {
         bit_count(col("l.simhash").bitwiseXOR(col("r.simhash"))).cast("long").as("hamming"))
       .distinct()
       .filter(col("hamming") <= lit(hammingMax))
-      .orderBy("doc_a", "doc_b")
   }
 
   def simhashPairs(spark: SparkSession, dir: String): DataFrame =
@@ -566,7 +556,6 @@ object Dedup {
       .filter(col("jaccard") >= lit(JaccardMin))
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"), col("n_inter"), col("n_union"),
         r6(col("jaccard")).as("jaccard"))
-      .orderBy("doc_a", "doc_b")
   }
 
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
@@ -612,13 +601,12 @@ object Dedup {
       .filter(col("jaccard") >= lit(JaccardMin))
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"),
         r6(col("jaccard")).as("jaccard"))
-      .orderBy("doc_a", "doc_b")
   }
 
   def ngramJaccardLsh(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardLshOn(Tables.documents(spark, dir))
 
-  val ngramJaccardLshSql: String =
+  lazy val ngramJaccardLshSql: String =
     s"""WITH ${minhashCandCtes(NumHashes, NumBands)},
        |g AS (SELECT doc_id, ${grams2Sql("t")} AS grams FROM toks),
        |p AS (
@@ -689,7 +677,6 @@ object Dedup {
       .withColumn("keep", col("dup_frac") <= lit(SpanDupFracMax))
       .select("doc_id", "n_tokens", "n_spans", "n_dup_spans", "covered_tokens",
         "dup_frac", "keep")
-      .orderBy("doc_id")
   }
 
   def spanCoverage(spark: SparkSession, dir: String): DataFrame =
@@ -745,7 +732,6 @@ object Dedup {
       .select(col("doc_id"), size(col("t")).cast("long").as("n_tokens"),
         (size(col("t")) - size(col("retained"))).cast("long").as("n_removed"),
         md5(concat_ws(" ", col("retained"))).as("retained_md5"))
-      .orderBy("doc_id")
   }
 
   def spanTrim(spark: SparkSession, dir: String): DataFrame =
@@ -812,7 +798,6 @@ object Dedup {
                     checkpointRounds: Boolean = true): DataFrame =
     propagateComponents(docs.select("doc_id"),
       dupEdgesOn(docs, numHashes, numBands), checkpointRounds)
-      .orderBy("doc_id")
 
   /** The thresholded near-dup pair table — the edge set [[dupClustersOn]]
     * clusters over, exposed as warehouse state in its own right: the
@@ -1017,7 +1002,7 @@ object Dedup {
     dupWarehouseUpdateOn(oldDocs, newDocs, oldManifest, oldEdges, numHashes,
       numBands, checkpointRounds, oldSigs, precomputedDelta, precomputedFresh,
       oldFps)
-      .manifest.orderBy("doc_id")
+      .manifest
 
   /** The dedup warehouse of one snapshot: the cluster manifest, the
     * near-dup edge table, and the per-doc signature table — exactly what
@@ -1072,7 +1057,7 @@ object Dedup {
     val delta = precomputedDelta.getOrElse(
       graft.ops.Prof(oldDocs.sparkSession, "dwu: delta ckpt")(
         oldFps.map(f => graft.ext.Corpus.snapshotDeltaFromStoredFps(f, newDocs))
-          .getOrElse(graft.ext.Corpus.snapshotDeltaRowsOn(oldDocs, newDocs))
+          .getOrElse(graft.ext.Corpus.snapshotDeltaOn(oldDocs, newDocs))
           .localCheckpoint()))
     val gone = delta.filter(col("status").isin("removed", "changed")).select("doc_id")
     val fresh = delta.filter(col("status").isin("added", "changed")).select("doc_id")
@@ -1111,11 +1096,6 @@ object Dedup {
       .join(gone.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_anti")
       .join(gone.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
 
-    // UNSORTED (round 19, the `*Rows` twins discipline): the warehouse
-    // manifest's consumers are joins, unions and warehouse writes — a
-    // corpus-wide range exchange + sort here rode into every composed
-    // update's checkpoint for nothing. Presentation rows sort at the edge
-    // ([[dupClustersIncrementalOn]], [[dupClustersRolled]]).
     val manifestNew = componentUpdateFrom(oldManifest, delta, keptEdges,
         freshEdges, checkpointRounds)
     // kept ∪ fresh edges are disjoint by construction (a fresh edge always
@@ -1216,8 +1196,7 @@ object Dedup {
   }
 
   def dupClusters(spark: SparkSession, dir: String): DataFrame =
-    // parquet round-trip loses row order; re-sort to the manifest contract
-    frozenManifest(spark, dir).orderBy("doc_id")
+    frozenManifest(spark, dir)
 
   /** Frozen warehouse state of the simulated OLD snapshot (manifest + edge
     * table) — what a real ingestion pipeline has on disk when a new
@@ -1253,7 +1232,7 @@ object Dedup {
         .persist()
       edges.write.parquet(s"$base/edges.parquet")
       propagateComponents(old.select("doc_id"), edges, checkpointRounds = true)
-        .orderBy("doc_id").write.parquet(s"$base/manifest.parquet")
+        .write.parquet(s"$base/manifest.parquet")
       edges.unpersist()
       sigs.unpersist()
       // the content-fingerprint table (round 19): warehouse state a real
@@ -1277,7 +1256,7 @@ object Dedup {
   def dupClustersBase(spark: SparkSession, dir: String): DataFrame = {
     val old = graft.ext.Corpus.deltaOldSlice(Tables.documents(spark, dir))
     val (manifestPath, _, _, _) = frozenIncrementalBase(spark, dir, old)
-    spark.read.parquet(manifestPath).orderBy("doc_id")
+    spark.read.parquet(manifestPath)
   }
 
   lazy val dupClustersBaseSql: String =
@@ -1394,7 +1373,7 @@ object Dedup {
       spark.read.parquet(m1), spark.read.parquet(e1),
       oldSigs = Some(spark.read.parquet(g1)),
       oldFps = Some(spark.read.parquet(f1)))
-      .manifest.orderBy("doc_id")
+      .manifest
   }
 
   /** Oracle: deliberately the from-scratch closure over the final rolled
@@ -1463,7 +1442,7 @@ object Dedup {
        |FROM comp c JOIN sizes s ON c.cluster_id = s.cluster_id
        |ORDER BY c.doc_id""".stripMargin
 
-  val dupClustersSql: String = dupClustersSqlFor("documents")
+  lazy val dupClustersSql: String = dupClustersSqlFor("documents")
 
   // ------------------------------------------------- dedup savings report
   /** Cluster-size histogram over the near-dup components: how many
@@ -1481,7 +1460,6 @@ object Dedup {
       .select(col("cluster_size"), col("n_clusters"),
         (col("cluster_size") * col("n_clusters")).as("n_docs"),
         ((col("cluster_size") - 1) * col("n_clusters")).as("n_removable"))
-      .orderBy("cluster_size")
 
   def clusterStatsOn(docs: DataFrame,
                      numHashes: Int = NumHashes, numBands: Int = NumBands): DataFrame =
@@ -1501,7 +1479,7 @@ object Dedup {
 
   // ------------------------------------------------- quality-aware dedup
   /** Keep-BEST dedup: per near-dup cluster, the survivor is the member
-    * with the highest composite quality score ([[Text.textStatsRowsOn]]),
+    * with the highest composite quality score ([[Text.textStatsOn]]),
     * doc_id as tiebreak — the curation refinement over keep-min-id
     * canonical dedup (a boilerplate notice and the full article can share
     * a cluster; production pipelines keep the better copy, not the
@@ -1528,10 +1506,9 @@ object Dedup {
         min(col("cluster_size")).as("cluster_size"))
       .select(col("cluster_id"), col("keep_doc_id"), col("keep_score"),
         col("cluster_size"), (col("cluster_size") - lit(1L)).as("n_removed"))
-      .orderBy("cluster_id")
 
   def keepBestOn(docs: DataFrame, manifest: DataFrame): DataFrame =
-    keepBestFrom(manifest, Text.textStatsRowsOn(docs))
+    keepBestFrom(manifest, Text.textStatsOn(docs))
 
   def keepBest(spark: SparkSession, dir: String): DataFrame =
     keepBestOn(Tables.documents(spark, dir), frozenManifest(spark, dir))
@@ -1552,7 +1529,7 @@ object Dedup {
        |       cluster_size, CAST(cluster_size - 1 AS BIGINT) AS n_removed
        |FROM ranked WHERE rn = 1 ORDER BY cluster_id""".stripMargin
 
-  val keepBestSql: String = keepBestSqlFor("documents")
+  lazy val keepBestSql: String = keepBestSqlFor("documents")
 
   // ------------------------------------------------- embedding near-dup
   /** Embedding-cosine near-dup with banded sign-LSH blocking: band j's
@@ -1607,7 +1584,6 @@ object Dedup {
         Similarity.fastDot(col("x.embedding"), col("y.embedding")) / (col("x.nrm") * col("y.nrm")))
       .filter(col("cos") >= lit(CosineMin))
       .select(col("vec_a"), col("vec_b"), r6(col("cos")).as("cosine"))
-      .orderBy("vec_a", "vec_b")
   }
 
   def embedNearDup(spark: SparkSession, dir: String): DataFrame =
@@ -1642,8 +1618,8 @@ object Dedup {
        |ORDER BY vec_a, vec_b""".stripMargin
   }
 
-  val embedNearDupSql: String = embedNearDupSqlFor(EmbedPlanes, EmbedBands)
-  val embedNearDupScaleSql: String = embedNearDupSqlFor(EmbedScalePlanes, EmbedScaleBands)
+  lazy val embedNearDupSql: String = embedNearDupSqlFor(EmbedPlanes, EmbedBands)
+  lazy val embedNearDupScaleSql: String = embedNearDupSqlFor(EmbedScalePlanes, EmbedScaleBands)
 
   // ------------------------------------------------------- semantic dedup
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
@@ -1696,7 +1672,6 @@ object Dedup {
       .join(dupOf, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"), col("dup_of"),
         col("dup_of").isNull.as("is_kept"))
-      .orderBy("vec_id")
   }
 
   def semDedup(spark: SparkSession, dir: String): DataFrame =
@@ -1796,13 +1771,12 @@ object Dedup {
       .withColumn("n_pairs_at_or_above", sum(col("n_pairs")).over(w).cast("long"))
       .select(r6(col("est_jaccard")).as("est_jaccard"),
         col("n_pairs"), col("n_pairs_at_or_above"))
-      .orderBy(col("est_jaccard").desc)
   }
 
   def thresholdCurve(spark: SparkSession, dir: String): DataFrame =
     thresholdCurveOn(Tables.documents(spark, dir))
 
-  val thresholdCurveSql: String =
+  lazy val thresholdCurveSql: String =
     s"""WITH lsh AS (SELECT * FROM ($minhashLshSql)),
        |g AS (SELECT est_jaccard, count(*) AS n_pairs FROM lsh GROUP BY 1)
        |SELECT ${r6Sql("est_jaccard")} AS est_jaccard, n_pairs,
@@ -1811,27 +1785,28 @@ object Dedup {
        |         AS n_pairs_at_or_above
        |FROM g ORDER BY est_jaccard DESC""".stripMargin
 
-  val all: Seq[Q] = Seq(
-    Q("dd_exact", exact _, exactSql),
-    Q("dd_threshold_curve", thresholdCurve _, thresholdCurveSql),
-    Q("dd_minhash_lsh", minhashLsh _, minhashLshSql),
-    Q("dd_simhash", simhash _, simhashSql),
-    Q("dd_simhash_pairs", simhashPairs _, simhashPairsSql),
-    Q("dd_ngram_jaccard", ngramJaccard _, ngramJaccardSql),
-    Q("dd_ngram_jaccard_lsh", ngramJaccardLsh _, ngramJaccardLshSql),
-    Q("dd_span_coverage", spanCoverage _, spanCoverageSql),
-    Q("dd_span_trim", spanTrim _, spanTrimSql),
-    Q("dd_embed_neardup", embedNearDup _, embedNearDupSql),
-    Q("dd_embed_neardup_scale", embedNearDupScale _, embedNearDupScaleSql),
-    Q("dd_semdedup", semDedup _, semDedupSql),
-    Q("dd_dup_clusters", dupClusters _, dupClustersSql),
-    Q("dd_clusters_base", dupClustersBase _, dupClustersBaseSql),
-    Q("dd_clusters_incremental", dupClustersIncremental _, dupClustersIncrementalSql),
-    Q("dd_clusters_rolled", dupClustersRolled _, dupClustersRolledSql),
-    Q("t_decontaminate_fuzzy", fuzzyDecontaminate _, fuzzyDecontaminateSql),
-    Q("dd_cluster_stats", clusterStats _, clusterStatsSql),
-    Q("dd_keep_best", keepBest _, keepBestSql),
-    Q("t_ngram_novelty", ngramNovelty _, ngramNoveltySql),
+  lazy val all: Seq[Q] = Seq(
+    Q("dd_exact", exact _, exactSql, col("canonical_doc_id")),
+    Q("dd_threshold_curve", thresholdCurve _, thresholdCurveSql, col("est_jaccard").desc),
+    Q("dd_minhash_lsh", minhashLsh _, minhashLshSql, col("doc_a"), col("doc_b")),
+    Q("dd_simhash", simhash _, simhashSql, col("doc_id")),
+    Q("dd_simhash_pairs", simhashPairs _, simhashPairsSql, col("doc_a"), col("doc_b")),
+    Q("dd_ngram_jaccard", ngramJaccard _, ngramJaccardSql, col("doc_a"), col("doc_b")),
+    Q("dd_ngram_jaccard_lsh", ngramJaccardLsh _, ngramJaccardLshSql, col("doc_a"), col("doc_b")),
+    Q("dd_span_coverage", spanCoverage _, spanCoverageSql, col("doc_id")),
+    Q("dd_span_trim", spanTrim _, spanTrimSql, col("doc_id")),
+    Q("dd_embed_neardup", embedNearDup _, embedNearDupSql, col("vec_a"), col("vec_b")),
+    Q("dd_embed_neardup_scale", embedNearDupScale _, embedNearDupScaleSql,
+      col("vec_a"), col("vec_b")),
+    Q("dd_semdedup", semDedup _, semDedupSql, col("vec_id")),
+    Q("dd_dup_clusters", dupClusters _, dupClustersSql, col("doc_id")),
+    Q("dd_clusters_base", dupClustersBase _, dupClustersBaseSql, col("doc_id")),
+    Q("dd_clusters_incremental", dupClustersIncremental _, dupClustersIncrementalSql, col("doc_id")),
+    Q("dd_clusters_rolled", dupClustersRolled _, dupClustersRolledSql, col("doc_id")),
+    Q("t_decontaminate_fuzzy", fuzzyDecontaminate _, fuzzyDecontaminateSql, col("doc_id")),
+    Q("dd_cluster_stats", clusterStats _, clusterStatsSql, col("cluster_size")),
+    Q("dd_keep_best", keepBest _, keepBestSql, col("cluster_id")),
+    Q("t_ngram_novelty", ngramNovelty _, ngramNoveltySql, col("doc_id")),
     Q("dd_lsh_recall", lshRecall _, lshRecallSql),
   )
 }

@@ -44,7 +44,7 @@ object Quality {
     * its boolean verdict, and the conjunction as `keep`. Ratios are
     * r6-rounded BEFORE the threshold compare so the Spark and DuckDB
     * verdicts flip on identical values. */
-  def gopherRulesRowsOn(docs: DataFrame): DataFrame = {
+  def gopherRulesOn(docs: DataFrame): DataFrame = {
     val toks = Text.tokens(col("text"))
     val lines = split(col("text"), "\n")
     val base = docs
@@ -97,9 +97,6 @@ object Quality {
         col("r_bullet") && col("r_ellipsis") && col("r_alpha") &&
         col("r_stop")).as("keep"))
   }
-
-  def gopherRulesOn(docs: DataFrame): DataFrame =
-    gopherRulesRowsOn(docs).orderBy("doc_id")
 
   def gopherRules(spark: SparkSession, dir: String): DataFrame =
     gopherRulesOn(Tables.documents(spark, dir))
@@ -164,7 +161,7 @@ object Quality {
     * streaming ingest unchanged. (This corpus has single-line unpunctuated
     * docs, so every page fails — the rule mechanics are exercised on
     * synthetic multi-line docs in QualitySpec.) */
-  def c4CleanRowsOn(docs: DataFrame): DataFrame = {
+  def c4CleanOn(docs: DataFrame): DataFrame = {
     val lines = split(col("text"), "\n")
     val kept = filter(lines, l =>
       l.rlike("[.!?\"]\\s*$") &&
@@ -184,9 +181,6 @@ object Quality {
           !col("has_brace")).as("keep"),
         col("cleaned"))
   }
-
-  def c4CleanOn(docs: DataFrame): DataFrame =
-    c4CleanRowsOn(docs).orderBy("doc_id")
 
   def c4Clean(spark: SparkSession, dir: String): DataFrame =
     c4CleanOn(Tables.documents(spark, dir))
@@ -222,11 +216,7 @@ object Quality {
     * [[Text.lmFluencyAgainstOn]] output schema) — split out so the
     * registered query can ride the FROZEN heavy-gram census instead of
     * re-running the census aggregation on every invocation. */
-  /** Unsorted bucket rows — the composition seam ([[ccnetMixFrom]] and
-    * any per-bucket aggregate consume these; the ntile ordering inside
-    * the window is its own deterministic sort, so input/output order is
-    * irrelevant to the values). */
-  def ccnetBucketsRowsFrom(fluency: DataFrame): DataFrame = {
+  def ccnetBucketsFrom(fluency: DataFrame): DataFrame = {
     val w = Window.partitionBy("lang")
       .orderBy(col("fluency").desc_nulls_last, col("doc_id"))
     fluency
@@ -238,9 +228,6 @@ object Quality {
           .otherwise(lit("tail")).as("bucket"))
   }
 
-  def ccnetBucketsFrom(fluency: DataFrame): DataFrame =
-    ccnetBucketsRowsFrom(fluency).orderBy("doc_id")
-
   /** Per-language head/middle/tail terciles over the LM-fluency score
     * ([[Text.lmFluencyOn]] — higher = more common bigrams = CCNet's
     * lower-perplexity "head"). Docs with no bigrams carry no signal and
@@ -248,10 +235,10 @@ object Quality {
     * break on doc_id so the ntile boundary is deterministic on both
     * engines. */
   def ccnetBucketsOn(docs: DataFrame): DataFrame =
-    ccnetBucketsFrom(Text.lmFluencyRowsOn(docs))
+    ccnetBucketsFrom(Text.lmFluencyOn(docs))
 
   def ccnetBuckets(spark: SparkSession, dir: String): DataFrame =
-    ccnetBucketsFrom(Text.lmFluencyRows(spark, dir))
+    ccnetBucketsFrom(Text.lmFluency(spark, dir))
 
   lazy val ccnetBucketsSql: String =
     s"""WITH fl AS (SELECT * FROM (${Text.lmFluencySql}) WHERE n_bigrams > 0),
@@ -284,16 +271,15 @@ object Quality {
           .otherwise(lit(1L)))
       .withColumn("keep", pmod(h, lit(4L)) < col("rate_q"))
       .select(col("doc_id"), col("lang"), col("bucket"), col("rate_q"), col("keep"))
-      .orderBy("doc_id")
   }
 
   def ccnetMixOn(docs: DataFrame): DataFrame =
-    ccnetMixFrom(ccnetBucketsRowsFrom(Text.lmFluencyRowsOn(docs)))
+    ccnetMixFrom(ccnetBucketsFrom(Text.lmFluencyOn(docs)))
 
   def ccnetMix(spark: SparkSession, dir: String): DataFrame =
-    ccnetMixFrom(ccnetBucketsRowsFrom(Text.lmFluencyRows(spark, dir)))
+    ccnetMixFrom(ccnetBucketsFrom(Text.lmFluency(spark, dir)))
 
-  val ccnetMixSql: String = {
+  lazy val ccnetMixSql: String = {
     val h = Dedup.baseHashSql("('ccmix:' || CAST(doc_id AS VARCHAR))")
     s"""WITH cb AS (SELECT * FROM (${ccnetBucketsSql}))
        |SELECT doc_id, lang, bucket,
@@ -363,7 +349,7 @@ object Quality {
     * (sum, count) aggregate broadcast back over the scored frame: O(1)
     * threshold state regardless of corpus size (a median would need a
     * corpus-wide value collection). */
-  def qsScoreAgainstRowsOn(docs: DataFrame, weights: DataFrame): DataFrame = {
+  def qsScoreAgainstOn(docs: DataFrame, weights: DataFrame): DataFrame = {
     // two consumers (threshold aggregate + final projection): checkpoint so
     // the feature explode + broadcast join + per-doc aggregate runs ONCE.
     // localCheckpoint, not persist — blocks free via the ContextCleaner when
@@ -381,18 +367,6 @@ object Quality {
         (col("score").cast("decimal(38,0)") * col("n_tot").cast("decimal(38,0)")
           > col("tot_score").cast("decimal(38,0)")).as("keep"))
   }
-
-  def qsScoreAgainstOn(docs: DataFrame, weights: DataFrame): DataFrame =
-    qsScoreAgainstRowsOn(docs, weights).orderBy("doc_id")
-
-  /** Unsorted classifier-gate rows over the frozen weights — the
-    * composition seam (the funnel joins the verdicts on doc_id; only the
-    * registered listing pays the presentation sort). */
-  def qualityScoreRows(spark: SparkSession, dir: String): DataFrame =
-    qsScoreAgainstRowsOn(Tables.documents(spark, dir), frozenQsWeights(spark, dir))
-
-  def qualityScoreRowsOn(docs: DataFrame, posSource: String = QsPosSource): DataFrame =
-    qsScoreAgainstRowsOn(docs, qsWeightsOn(docs, posSource))
 
   def qualityScoreOn(docs: DataFrame, posSource: String = QsPosSource): DataFrame =
     qsScoreAgainstOn(docs, qsWeightsOn(docs, posSource))
@@ -500,7 +474,6 @@ object Quality {
       .select(col("bucket"), col("n_docs"), col("n_pos"),
         r6(col("n_pos") / col("n_docs").cast("double")).as("pos_rate"),
         col("min_score"), col("max_score"))
-      .orderBy("bucket")
   }
 
   def qualityCalibrationOn(docs: DataFrame, posSource: String = QsPosSource): DataFrame =
@@ -541,7 +514,7 @@ object Quality {
        |  FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id)""".stripMargin
   }
 
-  val qualityScoreSql: String =
+  lazy val qualityScoreSql: String =
     s"""WITH $qsScoredCtesSql,
        |thr AS (SELECT CAST(sum(score) AS HUGEINT) AS tot_score,
        |               CAST(count(*) AS HUGEINT) AS n_tot FROM scored)
@@ -600,7 +573,7 @@ object Quality {
        |ORDER BY s.doc_id""".stripMargin
   }
 
-  val qualityCalibrationSql: String =
+  lazy val qualityCalibrationSql: String =
     s"""WITH $qsScoredCtesSql,
        |bounds AS (SELECT min(score) AS lo, max(score) AS hi FROM scored),
        |bucketed AS (
@@ -614,12 +587,12 @@ object Quality {
        |       min(score) AS min_score, max(score) AS max_score
        |FROM bucketed GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val all: Seq[Q] = Seq(
-    Q("t_gopher_rules", gopherRules _, gopherRulesSql),
-    Q("t_c4_clean", c4Clean _, c4CleanSql),
-    Q("t_ccnet_buckets", ccnetBuckets _, ccnetBucketsSql),
-    Q("t_ccnet_mix", ccnetMix _, ccnetMixSql),
-    Q("t_quality_score", qualityScore _, qualityScoreSql),
-    Q("t_quality_calibration", qualityCalibration _, qualityCalibrationSql),
+  lazy val all: Seq[Q] = Seq(
+    Q("t_gopher_rules", gopherRules _, gopherRulesSql, col("doc_id")),
+    Q("t_c4_clean", c4Clean _, c4CleanSql, col("doc_id")),
+    Q("t_ccnet_buckets", ccnetBuckets _, ccnetBucketsSql, col("doc_id")),
+    Q("t_ccnet_mix", ccnetMix _, ccnetMixSql, col("doc_id")),
+    Q("t_quality_score", qualityScore _, qualityScoreSql, col("doc_id")),
+    Q("t_quality_calibration", qualityCalibration _, qualityCalibrationSql, col("bucket")),
   )
 }

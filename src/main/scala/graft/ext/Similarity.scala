@@ -135,7 +135,6 @@ object Similarity {
       // global window over the ≤ ProbeBudget surviving rows only
       .withColumn("probe_rank", row_number().over(w).cast("long"))
       .select(col("probe_rank"), col("vec_id"))
-      .orderBy("probe_rank")
   }
 
   def probeSet(spark: SparkSession, dir: String): DataFrame =
@@ -162,13 +161,12 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long")) // DuckDB ranks are BIGINT
       .filter(col("rank") <= lit(TopK))
       .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), r6(col("cos")).as("cosine"))
-      .orderBy("q_id", "rank")
   }
 
   def knnBruteForce(spark: SparkSession, dir: String): DataFrame =
     knnBruteForceOn(Tables.embeddings(spark, dir))
 
-  val knnBruteForceSql: String =
+  lazy val knnBruteForceSql: String =
     s"""WITH e AS (SELECT vec_id, embedding, ${normSql("embedding")} AS nrm FROM embeddings),
        |q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm FROM e WHERE ${probeInSql("vec_id", "e")}),
        |scored AS (
@@ -223,13 +221,12 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long")) // DuckDB ranks are BIGINT
       .filter(col("rank") <= lit(TopK))
       .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), r6(col("cos")).as("cosine"))
-      .orderBy("q_id", "rank")
   }
 
   def knnLsh(spark: SparkSession, dir: String): DataFrame =
     knnLshOn(Tables.embeddings(spark, dir))
 
-  val knnLshSql: String =
+  lazy val knnLshSql: String =
     s"""WITH e AS (
        |  SELECT vec_id, embedding, ${normSql("embedding")} AS nrm,
        |         ${signBucketSql("embedding")} AS bucket
@@ -327,7 +324,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long")) // DuckDB ranks are BIGINT
       .filter(col("rank") <= lit(TopK))
       .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), r6(col("cos")).as("cosine"))
-      .orderBy("q_id", "rank")
   }
 
   /** `nProbe` is the recall/cost knob: candidates per probe are bounded by
@@ -347,7 +343,7 @@ object Similarity {
   def knnIvf(spark: SparkSession, dir: String): DataFrame =
     knnIvfOn(Tables.embeddings(spark, dir))
 
-  val knnIvfSql: String =
+  lazy val knnIvfSql: String =
     s"""WITH e AS (SELECT vec_id, label, embedding, ${normSql("embedding")} AS nrm FROM embeddings),
        |$centroidsSql,
        |cellc AS (SELECT label AS cell, centroid, ${normSql("centroid")} AS c_nrm FROM cent),
@@ -571,7 +567,7 @@ object Similarity {
        |  FROM e JOIN cells_a a ON e.vec_id = a.vec_id AND a.rn = 1)""".stripMargin
   }
 
-  val knnIvfKmeansSql: String = {
+  lazy val knnIvfKmeansSql: String = {
     s"""WITH $kmeansCellsSql,
        |q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm FROM e WHERE ${probeInSql("vec_id", "e")}),
        |pc AS (
@@ -604,13 +600,12 @@ object Similarity {
         dot(col("emb_d"), col("centroid")) / (norm(col("emb_d")) * norm(col("centroid"))))
       .select(col("vec_id"), col("label"), col("n").as("label_n"),
         r6(col("cos_to_centroid")).as("cos_to_centroid"))
-      .orderBy("vec_id")
   }
 
   def labelCentroids(spark: SparkSession, dir: String): DataFrame =
     labelCentroidsOn(Tables.embeddings(spark, dir))
 
-  val labelCentroidsSql: String =
+  lazy val labelCentroidsSql: String =
     s"""WITH $centroidsSql,
        |j AS (
        |  SELECT e.vec_id, e.label, c.n,
@@ -751,7 +746,6 @@ object Similarity {
     if (refine <= 0)
       adcRanked.filter(col("rank") <= lit(TopK))
         .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), r6(col("adc")).as("dist_sq"))
-        .orderBy("q_id", "rank")
     else {
       // probes × refine rows broadcast back against the raw vectors
       val ev = embeddings.select(col("vec_id"),
@@ -766,7 +760,6 @@ object Similarity {
         .withColumn("rank", row_number().over(wr).cast("long"))
         .filter(col("rank") <= lit(TopK))
         .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), r6(col("d2")).as("dist_sq"))
-        .orderBy("q_id", "rank")
     }
 
   def knnPqOn(embeddings: DataFrame, cfg: PqCfg = PqCfg()): DataFrame = {
@@ -962,7 +955,7 @@ object Similarity {
        |FROM rr WHERE rank <= $TopK
        |ORDER BY q_id, rank""".stripMargin
 
-  val knnPqSql: String = {
+  lazy val knnPqSql: String = {
     val cfg = PqCfg()
     s"""WITH ${pqCtesSql(cfg)},
        |adcs AS (
@@ -975,7 +968,7 @@ object Similarity {
        |${pqRerankTailSql(cfg.refine)}""".stripMargin
   }
 
-  val knnIvfPqSql: String = {
+  lazy val knnIvfPqSql: String = {
     val cfg = PqCfg()
     s"""WITH $kmeansCellsSql,
        |${pqCtesSql(cfg)},
@@ -1019,15 +1012,15 @@ object Similarity {
     * training; the oracle shares [[kmeansCellsSql]] with the IVF family. */
   def kmeansAssignOn(embeddings: DataFrame, cfg: KmeansCfg = KmeansCfg()): DataFrame = {
     val cent = kmeansCentroidsOn(embeddings, cfg).persist()
-    assignCellsAgainstOn(embeddings, cent).orderBy("vec_id")
+    assignCellsAgainstOn(embeddings, cent)
   }
 
   def kmeansAssign(spark: SparkSession, dir: String): DataFrame =
     // frozen quantizer (train-once contract): assignment-only per call
     assignCellsAgainstOn(Tables.embeddings(spark, dir),
-      frozenCentroids(spark, dir, KmeansCfg(dims = Dims))).orderBy("vec_id")
+      frozenCentroids(spark, dir, KmeansCfg(dims = Dims)))
 
-  val kmeansAssignSql: String =
+  lazy val kmeansAssignSql: String =
     s"""WITH $kmeansCellsSql
        |SELECT s.vec_id, s.cell,
        |       ${r6Sql(s"${dotSql("s.embedding", "c.centroid")} / (s.nrm * c.c_nrm)")} AS ccos
@@ -1058,13 +1051,12 @@ object Similarity {
       .select(col("label"), col("n"),
         r6(dot(col("centroid"), col("g_centroid"))
           / (norm(col("centroid")) * norm(col("g_centroid")))).as("drift_cos"))
-      .orderBy("label")
   }
 
   def embedDrift(spark: SparkSession, dir: String): DataFrame =
     embedDriftOn(Tables.embeddings(spark, dir))
 
-  val embedDriftSql: String = {
+  lazy val embedDriftSql: String = {
     val sums = (0 until Dims).map(i => s"sum(CAST(embedding[${i + 1}] AS DOUBLE))").mkString(", ")
     s"""WITH $centroidsSql,
        |g0 AS (SELECT count(*) AS g_n, [$sums] AS g_sums FROM embeddings),
@@ -1093,12 +1085,11 @@ object Similarity {
         r6(avg(col("x"))).as("mean"),
         r6(sqrt(greatest(lit(0.0),
           avg(col("x") * col("x")) - avg(col("x")) * avg(col("x"))))).as("std"))
-      .orderBy("dim")
 
   def dimStats(spark: SparkSession, dir: String): DataFrame =
     dimStatsOn(Tables.embeddings(spark, dir))
 
-  val dimStatsSql: String =
+  lazy val dimStatsSql: String =
     s"""WITH ex AS (
        |  SELECT r.i AS dim, CAST(embedding[r.i] AS DOUBLE) AS x
        |  FROM embeddings CROSS JOIN range(1, ${Dims + 1}) r(i))
@@ -1147,7 +1138,6 @@ object Similarity {
       .filter(col("rank") <= lit(TopK))
       .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"),
         col("label"), r6(col("cos")).as("cosine"))
-      .orderBy("q_id", "rank")
   }
 
   def hardNegatives(spark: SparkSession, dir: String): DataFrame =
@@ -1155,7 +1145,7 @@ object Similarity {
     hardNegativesSearch(Tables.embeddings(spark, dir),
       frozenCentroids(spark, dir, KmeansCfg(dims = Dims)), NProbe)
 
-  val hardNegativesSql: String =
+  lazy val hardNegativesSql: String =
     s"""WITH $kmeansCellsSql,
        |corpus AS (
        |  SELECT c.vec_id, c.embedding, c.nrm, c.cell, l.label
@@ -1209,9 +1199,8 @@ object Similarity {
     assignCellsAgainstOn(Tables.embeddings(spark, dir),
       frozenCentroids(spark, dir, KmeansCfg(dims = Dims)))
       .withColumn("keep", col("ccos") >= lit(OutlierCosMin))
-      .orderBy("vec_id")
 
-  val embedOutliersSql: String = {
+  lazy val embedOutliersSql: String = {
     val ccos = r6Sql(s"${dotSql("s.embedding", "c.centroid")} / (s.nrm * c.c_nrm)")
     s"""WITH $kmeansCellsSql
        |SELECT s.vec_id, s.cell, $ccos AS ccos, $ccos >= $OutlierCosMin AS keep
@@ -1263,14 +1252,13 @@ object Similarity {
       .unionByName(row("ivf_label", knnIvfOn(emb, NProbe, pids)))
       .unionByName(row("pq", knnPqFrozen(spark, dir, pids)))
       .unionByName(row("sq8", sq8))
-      .orderBy("method")
   }
 
   /** Oracle: the same membership join over the full brute-force and
     * per-method oracle queries as derived tables — recall is re-derived
     * from scratch on the oracle side, so a drift in ANY piece (ground
     * truth, quantizer training, search, re-rank) breaks the compare. */
-  val knnRecallSql: String = {
+  lazy val knnRecallSql: String = {
     def m(name: String, annSql: String): String =
       s"""SELECT '$name' AS method,
          |       CAST(count(DISTINCT b.q_id) AS BIGINT) AS n_queries,
@@ -1344,10 +1332,9 @@ object Similarity {
         coalesce(sum(col("hit")), lit(0L)).as("n_hits"))
       .select(col("nprobe").cast("long").as("nprobe"), col("n_queries"), col("n_pairs"),
         col("n_hits"), r6(col("n_hits").cast("double") / col("n_pairs")).as("recall"))
-      .orderBy("nprobe")
   }
 
-  val nprobeCurveSql: String =
+  lazy val nprobeCurveSql: String =
     s"""WITH $kmeansCellsSql,
        |q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm FROM e WHERE ${probeInSql("vec_id", "e")}),
        |pc AS (
@@ -1410,7 +1397,6 @@ object Similarity {
         r6(avg(col("d2"))).as("mean_sq_err"))
       .select(col("sub").cast("long").as("sub"), col("n_vecs"), col("n_codes_used"),
         col("mean_sq_err"))
-      .orderBy("sub")
 
   /** Caller-supplied-corpus form: distortion of `embeddings` against a
     * fixed trained codebook — what the retrain decision measures on each
@@ -1423,7 +1409,7 @@ object Similarity {
     pqDistortionOn(Tables.embeddings(spark, dir), frozenCodebook(spark, dir, cfg), cfg)
   }
 
-  val pqDistortionSql: String =
+  lazy val pqDistortionSql: String =
     s"""WITH ${pqCtesSql(PqCfg())},
        |asg AS (
        |  SELECT s.vec_id, s.sub, c.code, ${l2sqSql("s.sv", "c.cvec")} AS d2,
@@ -1459,7 +1445,7 @@ object Similarity {
     ivfBalanceOn(Tables.embeddings(spark, dir),
       frozenCentroids(spark, dir, KmeansCfg(dims = Dims)))
 
-  val ivfBalanceSql: String =
+  lazy val ivfBalanceSql: String =
     s"""WITH $kmeansCellsSql,
        |percell AS (SELECT cell, count(*) AS n FROM cells GROUP BY 1),
        |s AS (SELECT count(*) AS n_cells, CAST(sum(n) AS BIGINT) AS n_vecs,
@@ -1507,7 +1493,6 @@ object Similarity {
         coalesce(col("n_removed"), lit(0L)).as("n_removed"),
         (coalesce(col("n_old"), lit(0L)) + coalesce(col("n_added"), lit(0L))
           - coalesce(col("n_removed"), lit(0L))).as("n_new"))
-      .orderBy("cell")
   }
 
   private val ivfManifestCache = new graft.ops.FrozenCaches.Memo[Int, String](
@@ -1551,7 +1536,7 @@ object Similarity {
     * respective snapshot, so the Spark side's incremental arithmetic
     * (n_old + n_added − n_removed) must land exactly on the rebuilt
     * n_new. */
-  val ivfUpdateSql: String = {
+  lazy val ivfUpdateSql: String = {
     val (mod, add, rem) = (Corpus.DeltaMod, Corpus.DeltaAdded, Corpus.DeltaRemoved)
     s"""WITH $kmeansCellsSql,
        |base AS (SELECT cell, count(*) AS n FROM cells WHERE vec_id % $mod <> $add GROUP BY 1),
@@ -1692,13 +1677,12 @@ object Similarity {
         when(r === lit(Corpus.DeltaChanged),
           transform(col("embedding"), x => negate(x))).otherwise(col("embedding")))
     ivfWarehouseUpdateOn(s1, s2, frozenRolledManifest(spark, dir), cent)
-      .orderBy("vec_id")
   }
 
   /** Deliberately the full REBUILD: train the quantizer, build the final
     * snapshot (removals filtered, changed class negated), assign every
     * vector from scratch. */
-  val ivfRolledSql: String = {
+  lazy val ivfRolledSql: String = {
     val (mod, rem, chg, rem2) =
       (Corpus.DeltaMod, Corpus.DeltaRemoved, Corpus.DeltaChanged, RolledRemoved2)
     s"""WITH $kmeansCellsSql,
@@ -1777,7 +1761,7 @@ object Similarity {
 
   /** Oracle: the registered update-ledger oracle verbatim, then the same
     * integer-exact aggregate + r6-then-compare arithmetic. */
-  val ivfRetrainSql: String =
+  lazy val ivfRetrainSql: String =
     s"""WITH led AS (SELECT * FROM ($ivfUpdateSql)),
        |s AS (
        |  SELECT count(*) AS n_cells,
@@ -1883,7 +1867,7 @@ object Similarity {
   /** Oracle: one scratch-trained codebook + assignment (the pq CTEs), the
     * two residue-sliced ledgers, the verbatim update-ledger oracle for
     * churn, then the same r6-then-compare arithmetic. */
-  val pqRetrainSql: String = {
+  lazy val pqRetrainSql: String = {
     val (mod, add, rem) = (Corpus.DeltaMod, Corpus.DeltaAdded, Corpus.DeltaRemoved)
     val driftSql = r6Sql("mn / mb")
     val utilSql = r6Sql(s"cu / ${PqK}.0")
@@ -1949,13 +1933,12 @@ object Similarity {
       .withColumn("sx_j", element_at(col("sx"), col("j").cast("int")))
       .select(col("i").as("dim_i"), col("j").as("dim_j"),
         r6((col("sxy_v") - col("sx_i") * col("sx_j") / col("n")) / col("n")).as("cov"))
-      .orderBy("dim_i", "dim_j")
   }
 
   def covMatrix(spark: SparkSession, dir: String): DataFrame =
     covMatrixOn(Tables.embeddings(spark, dir))
 
-  val covMatrixSql: String =
+  lazy val covMatrixSql: String =
     s"""WITH ex AS (
        |  SELECT r.i AS i, s.j AS j,
        |         CAST(embedding[r.i] AS DOUBLE) AS x, CAST(embedding[s.j] AS DOUBLE) AS y
@@ -2031,7 +2014,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= lit(TopK))
       .select(col("q_id"), col("rank"), col("vec_id").as("neighbor_id"), r6(col("cos")).as("cosine"))
-      .orderBy("q_id", "rank")
   }
 
   def knnSq8(spark: SparkSession, dir: String): DataFrame = {
@@ -2070,29 +2052,29 @@ object Similarity {
        |FROM ranked WHERE rank <= $TopK
        |ORDER BY q_id, rank""".stripMargin
 
-  val all: Seq[Q] = Seq(
-    Q("s_probe_set", probeSet _, probeSetSql),
-    Q("s_knn_bruteforce", knnBruteForce _, knnBruteForceSql),
-    Q("s_knn_sq8", knnSq8 _, knnSq8Sql),
+  lazy val all: Seq[Q] = Seq(
+    Q("s_probe_set", probeSet _, probeSetSql, col("probe_rank")),
+    Q("s_knn_bruteforce", knnBruteForce _, knnBruteForceSql, col("q_id"), col("rank")),
+    Q("s_knn_sq8", knnSq8 _, knnSq8Sql, col("q_id"), col("rank")),
     Q("s_ivf_balance", ivfBalance _, ivfBalanceSql),
-    Q("s_ivf_update", ivfUpdate _, ivfUpdateSql),
-    Q("s_ivf_rolled", ivfRolled _, ivfRolledSql),
+    Q("s_ivf_update", ivfUpdate _, ivfUpdateSql, col("cell")),
+    Q("s_ivf_rolled", ivfRolled _, ivfRolledSql, col("vec_id")),
     Q("s_ivf_retrain", ivfRetrain _, ivfRetrainSql),
     Q("s_pq_retrain", pqRetrain _, pqRetrainSql),
-    Q("s_nprobe_curve", nprobeCurve _, nprobeCurveSql),
-    Q("s_pq_distortion", pqDistortion _, pqDistortionSql),
-    Q("s_cov_matrix", covMatrix _, covMatrixSql),
-    Q("s_knn_recall", knnRecall _, knnRecallSql),
-    Q("s_knn_lsh", knnLsh _, knnLshSql),
-    Q("s_knn_ivf", knnIvf _, knnIvfSql),
-    Q("s_knn_ivf_kmeans", knnIvfKmeans _, knnIvfKmeansSql),
-    Q("s_knn_pq", knnPq _, knnPqSql),
-    Q("s_knn_ivfpq", knnIvfPq _, knnIvfPqSql),
-    Q("s_label_centroids", labelCentroids _, labelCentroidsSql),
-    Q("s_kmeans_assign", kmeansAssign _, kmeansAssignSql),
-    Q("s_embed_outliers", embedOutliers _, embedOutliersSql),
-    Q("s_hard_negatives", hardNegatives _, hardNegativesSql),
-    Q("s_dim_stats", dimStats _, dimStatsSql),
-    Q("s_embed_drift", embedDrift _, embedDriftSql),
+    Q("s_nprobe_curve", nprobeCurve _, nprobeCurveSql, col("nprobe")),
+    Q("s_pq_distortion", pqDistortion _, pqDistortionSql, col("sub")),
+    Q("s_cov_matrix", covMatrix _, covMatrixSql, col("dim_i"), col("dim_j")),
+    Q("s_knn_recall", knnRecall _, knnRecallSql, col("method")),
+    Q("s_knn_lsh", knnLsh _, knnLshSql, col("q_id"), col("rank")),
+    Q("s_knn_ivf", knnIvf _, knnIvfSql, col("q_id"), col("rank")),
+    Q("s_knn_ivf_kmeans", knnIvfKmeans _, knnIvfKmeansSql, col("q_id"), col("rank")),
+    Q("s_knn_pq", knnPq _, knnPqSql, col("q_id"), col("rank")),
+    Q("s_knn_ivfpq", knnIvfPq _, knnIvfPqSql, col("q_id"), col("rank")),
+    Q("s_label_centroids", labelCentroids _, labelCentroidsSql, col("vec_id")),
+    Q("s_kmeans_assign", kmeansAssign _, kmeansAssignSql, col("vec_id")),
+    Q("s_embed_outliers", embedOutliers _, embedOutliersSql, col("vec_id")),
+    Q("s_hard_negatives", hardNegatives _, hardNegativesSql, col("q_id"), col("rank")),
+    Q("s_dim_stats", dimStats _, dimStatsSql, col("dim")),
+    Q("s_embed_drift", embedDrift _, embedDriftSql, col("label")),
   )
 }

@@ -49,11 +49,8 @@ object Text {
   /** Per-document quality metrics: token count, mean token length,
     * punctuation ratio, stopword ratio, and a composite quality score —
     * the length/punct/stopword heuristics of C4/Gopher-style filters. */
-  /** Unsorted per-doc stats — pure row-local projections, so the frame
-    * streams unchanged (the quality filter's streaming twin builds on
-    * this); the registry query adds the presentation sort. */
   /** The per-doc stat COLUMNS over `col("text")` — ONE definition,
-    * projected by [[textStatsRowsOn]] and composed inline by the manifest
+    * projected by [[textStatsOn]] and composed inline by the manifest
     * feature fusion (round 18:
     * [[graft.ext.Corpus.manifestDocFeatures]] computes all doc-local
     * features in a single projection instead of joining per-feature
@@ -82,17 +79,14 @@ object Text {
 
   /** The quality-gate predicate over [[textStatsCols]] OUTPUT columns
     * (the r6-rounded ratios, exactly what the registered filter compares)
-    * — shared by [[qualityFilterRowsOn]] and the manifest feature fusion. */
+    * — shared by [[qualityFilterOn]] and the manifest feature fusion. */
   private[graft] def qualityPassCol: Column =
     col("n_tokens") >= lit(MinTokens) &&
       (col("punct_ratio") < lit(MaxPunctRatio) || col("punct_ratio").isNull) &&
       col("quality_score") >= lit(MinQuality)
 
-  def textStatsRowsOn(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id") +: textStatsCols: _*)
-
   def textStatsOn(docs: DataFrame): DataFrame =
-    textStatsRowsOn(docs).orderBy("doc_id")
+    docs.select(col("doc_id") +: textStatsCols: _*)
 
   def textStats(spark: SparkSession, dir: String): DataFrame =
     textStatsOn(Tables.documents(spark, dir))
@@ -124,7 +118,7 @@ object Text {
        |       ${r6Sql("(((least(1.0, n_tokens / 100.0) + (1.0 - least(1.0, punct_ratio * 10.0))) + least(1.0, stop_ratio * 5.0)) / 3.0)")} AS quality_score
        |FROM ratios ORDER BY doc_id""".stripMargin
 
-  val textStatsSql: String = textStatsSqlFor("documents")
+  lazy val textStatsSql: String = textStatsSqlFor("documents")
 
   /** Language ID via marker-word n-gram counts (the classic stopword
     * heuristic — fastText-style models plug in here the same way, as a
@@ -150,7 +144,6 @@ object Text {
           .otherwise(lit("es")))
       .withColumn("is_match", when(col("predicted_lang") === col("lang"), lit(1L)).otherwise(lit(0L)))
       .select("doc_id", "lang", "c_en", "c_de", "c_fr", "c_es", "predicted_lang", "is_match")
-      .orderBy("doc_id")
   }
 
   def langId(spark: SparkSession, dir: String): DataFrame =
@@ -195,13 +188,12 @@ object Text {
       .withColumn("share", r6(col("n_docs") / sum("n_docs").over(wl)))
       .select(col("lang"), col("predicted_lang"), col("n_docs"), col("share"),
         (col("lang") === col("predicted_lang")).as("is_correct"))
-      .orderBy("lang", "predicted_lang")
   }
 
   def langIdConfusion(spark: SparkSession, dir: String): DataFrame =
     langIdConfusionOn(Tables.documents(spark, dir))
 
-  val langIdConfusionSql: String =
+  lazy val langIdConfusionSql: String =
     s"""WITH li AS (SELECT lang, predicted_lang FROM ($langIdSql)),
        |cm AS (SELECT lang, predicted_lang, CAST(count(*) AS BIGINT) AS n_docs
        |       FROM li GROUP BY 1, 2)
@@ -221,7 +213,6 @@ object Text {
       .withColumn("n_bpe_tokens", regexp_count(col("text"), lit(bpePattern)).cast("long"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .select("doc_id", "n_ws_tokens", "n_bpe_tokens", "n_chars")
-      .orderBy("doc_id")
 
   def tokenCount(spark: SparkSession, dir: String): DataFrame =
     tokenCountOn(Tables.documents(spark, dir))
@@ -250,12 +241,11 @@ object Text {
         col("chars_per_token"),
         r6(element_at(col("q"), 1)).as("p50_tokens"),
         r6(element_at(col("q"), 2)).as("p95_tokens"))
-      .orderBy("lang")
 
   def tokenFertility(spark: SparkSession, dir: String): DataFrame =
     tokenFertilityOn(Tables.documents(spark, dir))
 
-  val tokenFertilitySql: String =
+  lazy val tokenFertilitySql: String =
     s"""WITH per AS (
        |  SELECT lang,
        |         CAST(len(regexp_extract_all(text, '$bpePattern')) AS BIGINT) AS n_bpe_tokens,
@@ -287,10 +277,7 @@ object Text {
     * Spark's replace-all default). */
   def normalizedSql(e: String): String = s"lower(regexp_replace($e, '\\s+', ' ', 'g'))"
 
-  /** Unsorted fingerprint rows — the composition seam (the funnel's
-    * canonical gate and the manifest-base feature build join these on
-    * doc_id; only the registered listing pays the presentation sort). */
-  def fingerprintRowsOn(docs: DataFrame): DataFrame = {
+  def fingerprintOn(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy("fp")
     docs
       .withColumn("fp", md5(normalized(col("text"))))
@@ -298,9 +285,6 @@ object Text {
       .withColumn("is_canonical", when(col("doc_id") === col("canonical_doc_id"), lit(1L)).otherwise(lit(0L)))
       .select("doc_id", "fp", "canonical_doc_id", "is_canonical")
   }
-
-  def fingerprintOn(docs: DataFrame): DataFrame =
-    fingerprintRowsOn(docs).orderBy("doc_id")
 
   def fingerprint(spark: SparkSession, dir: String): DataFrame =
     fingerprintOn(Tables.documents(spark, dir))
@@ -351,7 +335,6 @@ object Text {
         size(col("wh")).cast("long").as("n_windows"),
         size(col("fps")).cast("long").as("n_fingerprints"),
         coalesce(array_min(col("fps")), lit(-1L)).as("min_fp"))
-      .orderBy("doc_id")
   }
 
   def winnowFingerprints(spark: SparkSession, dir: String): DataFrame =
@@ -413,22 +396,19 @@ object Text {
     * the length / punctuation / stopword gates, emit the metrics that
     * justified the decision. This is the shape a pretraining pipeline runs
     * corpus-wide — a codegen'd filter over the per-doc stats, no shuffle at
-    * all until the output sort. */
+    * all. */
   val MinTokens = 5L
   val MaxPunctRatio = 0.2
   val MinQuality = 0.4
 
-  /** Unsorted filter — stateless per-row gates, so it runs unchanged on a
-    * STREAMING documents frame (each micro-batch filters independently and
-    * makes the same keep decisions the batch run makes; StreamsSpec
-    * asserts the parity). The registry query adds the presentation sort. */
-  def qualityFilterRowsOn(docs: DataFrame): DataFrame =
-    textStatsRowsOn(docs)
+  /** Stateless per-row gates, so the filter runs unchanged on a STREAMING
+    * documents frame (each micro-batch filters independently and makes the
+    * same keep decisions the batch run makes; StreamsSpec asserts the
+    * parity). */
+  def qualityFilterOn(docs: DataFrame): DataFrame =
+    textStatsOn(docs)
       .filter(qualityPassCol)
       .select("doc_id", "n_tokens", "punct_ratio", "quality_score")
-
-  def qualityFilterOn(docs: DataFrame): DataFrame =
-    qualityFilterRowsOn(docs).orderBy("doc_id")
 
   def qualityFilter(spark: SparkSession, dir: String): DataFrame =
     qualityFilterOn(Tables.documents(spark, dir))
@@ -444,7 +424,7 @@ object Text {
        |  AND quality_score >= $MinQuality
        |ORDER BY doc_id""".stripMargin
 
-  val qualityFilterSql: String = qualityFilterSqlFor("documents")
+  lazy val qualityFilterSql: String = qualityFilterSqlFor("documents")
 
   // ---------------------------------------------------- repetition filtering
   /** Gopher-style repetition gates (Rae et al. 2021 §A1.1): documents whose
@@ -472,7 +452,7 @@ object Text {
     * feature plan carried 43 exchanges at 200 fresh docs). The sorted-run
     * fold yields the identical integer with ZERO exchanges — "most
     * frequent element's count" needs no cross-row state. Same trade
-    * [[textStatsRowsOn]] already makes (aggregate/filter HOFs over the
+    * [[textStatsOn]] already makes (aggregate/filter HOFs over the
     * token array beat shuffles; at corpus scale the removed shuffles
     * carried (doc_id, token) pairs — corpus-token-proportional bytes). */
   private def maxRunCount(arr: Column): Column =
@@ -515,7 +495,7 @@ object Text {
   private[graft] def repetitionKeepCol: Column = repetitionCols.last
 
   def repetitionStatsOn(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id") +: repetitionCols: _*).orderBy("doc_id")
+    docs.select(col("doc_id") +: repetitionCols: _*)
 
   def repetitionStats(spark: SparkSession, dir: String): DataFrame =
     repetitionStatsOn(Tables.documents(spark, dir))
@@ -551,7 +531,7 @@ object Text {
        |          AND top_2gram_frac <= $Top2GramMax) AS keep
        |FROM m ORDER BY doc_id""".stripMargin
 
-  val repetitionStatsSql: String = repetitionStatsSqlFor("documents")
+  lazy val repetitionStatsSql: String = repetitionStatsSqlFor("documents")
 
   // --------------------------------------------- CMS-pruned heavy hitters
   /** EXACT heavy hitters with bounded aggregate state — the scale form the
@@ -601,7 +581,6 @@ object Text {
       .groupBy("gram")
       .agg(count(lit(1)).as("n"))
       .filter(col("n") >= lit(HeavyHitterMin))
-      .orderBy(col("n").desc, col("gram"))
   }
 
   def heavyHittersOn(docs: DataFrame): DataFrame =
@@ -660,7 +639,6 @@ object Text {
       .filter(col("rank") <= lit(TopKeywords))
       .select(col("doc_id"), col("rank"), col("term"), col("tf"), col("df"),
         r6(col("tfidf")).as("tfidf"))
-      .orderBy("doc_id", "rank")
   }
 
   def tfidfKeywords(spark: SparkSession, dir: String): DataFrame =
@@ -721,7 +699,6 @@ object Text {
       .withColumn("clean", piiClean(col("seeded_text")))
       .select(col("doc_id"), col("n_emails"), col("n_phones"), col("n_ips"),
         length(col("clean")).cast("long").as("clean_len"), md5(col("clean")).as("clean_md5"))
-      .orderBy("doc_id")
 
   def piiScrub(spark: SparkSession, dir: String): DataFrame =
     piiScrubOn(Tables.documents(spark, dir))
@@ -781,10 +758,7 @@ object Text {
   /** Score documents against a FIXED heavy-gram census (the deployment
     * entry point: the census trains once, then any amount of new text
     * streams through — see Streams.fluencyBatches). */
-  /** Unsorted scoring rows — the composition seam (the funnel and the
-    * ccnet bucket family consume the verdicts by join/aggregate; only the
-    * registered listing pays the presentation sort). */
-  def lmFluencyAgainstRowsOn(docs: DataFrame, heavy: DataFrame): DataFrame = {
+  def lmFluencyAgainstOn(docs: DataFrame, heavy: DataFrame): DataFrame = {
     val scored = fluencyGrams(docs).join(broadcast(heavy), Seq("gram"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
@@ -798,12 +772,6 @@ object Text {
         coalesce(col("fluency") >= lit(FluencyMin), lit(false)).as("is_fluent"))
   }
 
-  def lmFluencyAgainstOn(docs: DataFrame, heavy: DataFrame): DataFrame =
-    lmFluencyAgainstRowsOn(docs, heavy).orderBy("doc_id")
-
-  def lmFluencyRowsOn(docs: DataFrame): DataFrame =
-    lmFluencyAgainstRowsOn(docs, fluencyCensusOn(docs))
-
   def lmFluencyOn(docs: DataFrame): DataFrame =
     lmFluencyAgainstOn(docs, fluencyCensusOn(docs))
 
@@ -815,12 +783,7 @@ object Text {
     new graft.ops.FrozenCaches.Memo[Unit, Seq[(String, Long)]](label = "fluency_census")
 
   def lmFluency(spark: SparkSession, dir: String): DataFrame =
-    lmFluencyRows(spark, dir).orderBy("doc_id")
-
-  /** Unsorted frozen-census scoring — the registered [[lmFluency]] minus
-    * the presentation sort, for composing consumers (the funnel build). */
-  def lmFluencyRows(spark: SparkSession, dir: String): DataFrame =
-    lmFluencyAgainstRowsOn(Tables.documents(spark, dir),
+    lmFluencyAgainstOn(Tables.documents(spark, dir),
       frozenFluencyCensus(spark, dir))
 
   /** The frozen heavy-gram census as a frame — the model half of the
@@ -859,7 +822,7 @@ object Text {
        |FROM $spine d LEFT JOIN sc ON d.doc_id = sc.doc_id
        |ORDER BY d.doc_id""".stripMargin
 
-  val lmFluencySql: String =
+  lazy val lmFluencySql: String =
     s"""WITH toks AS (SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
        |grams AS (SELECT doc_id, unnest(${ngramsSql("t", 2)}) AS gram FROM toks),
        |heavy AS (SELECT gram, count(*) AS n FROM grams
@@ -908,13 +871,12 @@ object Text {
         coalesce(col("n_types"), lit(0L)).as("n_types"),
         coalesce(col("type_token_ratio"), lit(0.0)).as("type_token_ratio"),
         coalesce(col("entropy"), lit(0.0)).as("entropy"))
-      .orderBy("doc_id")
   }
 
   def tokenEntropy(spark: SparkSession, dir: String): DataFrame =
     tokenEntropyOn(Tables.documents(spark, dir))
 
-  val tokenEntropySql: String =
+  lazy val tokenEntropySql: String =
     s"""WITH tok AS (SELECT doc_id, unnest(${tokensSql("text")}) AS tok FROM documents),
        |pt AS (SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY 1, 2),
        |pd AS (
@@ -961,13 +923,12 @@ object Text {
         sum(col("c")).over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow))
           / col("n")))
       .select(col("rank"), col("tok"), col("c"), col("cum_frac"))
-      .orderBy("rank")
   }
 
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame =
     vocabCoverageOn(Tables.documents(spark, dir))
 
-  val vocabCoverageSql: String =
+  lazy val vocabCoverageSql: String =
     s"""WITH tokc AS (
        |  SELECT tok, CAST(count(*) AS BIGINT) AS c
        |  FROM (SELECT unnest(${tokensSql("text")}) AS tok FROM documents)
@@ -1023,13 +984,12 @@ object Text {
     scored.orderBy(col("pmi").desc, col("bigram")).limit(PmiTopK)
       .withColumn("rank", row_number().over(ord).cast("long"))
       .select(col("rank"), col("bigram"), col("n_pair"), col("pmi"))
-      .orderBy("rank")
   }
 
   def bigramPmi(spark: SparkSession, dir: String): DataFrame =
     bigramPmiOn(Tables.documents(spark, dir))
 
-  val bigramPmiSql: String =
+  lazy val bigramPmiSql: String =
     s"""WITH toks AS (SELECT ${tokensSql("text")} AS t FROM documents),
        |uni AS (
        |  SELECT w, CAST(count(*) AS BIGINT) AS c
@@ -1152,7 +1112,6 @@ object Text {
       .filter(col("rank") <= lit(Bm25TopK))
       .select(col("query_id"), col("rank"), col("doc_id"), col("n_terms_hit"),
         r6(col("score")).as("score"))
-      .orderBy("query_id", "rank")
   }
 
   def bm25TopK(spark: SparkSession, dir: String): DataFrame =
@@ -1265,7 +1224,6 @@ object Text {
         coalesce(col("r_dense"), lit(-1L)).as("r_dense"),
         coalesce(col("r_sparse"), lit(-1L)).as("r_sparse"),
         r6(col("rrf")).as("rrf_score"))
-      .orderBy("query_id", "rank")
 
   def hybridRrfOn(docs: DataFrame, embeddings: DataFrame): DataFrame = {
     val probeIds = graft.ext.Similarity.probeFilter(embeddings)
@@ -1394,7 +1352,6 @@ object Text {
         col("n_hits"), col("n_possible"),
         when(col("n_possible") === lit(0L), lit(0.0))
           .otherwise(r6(col("n_hits").cast("double") / col("n_possible"))).as("recall"))
-      .orderBy("system")
   }
 
   def hybridRecall(spark: SparkSession, dir: String): DataFrame = {
@@ -1708,7 +1665,6 @@ object Text {
     words.crossJoin(broadcast(vs))
       .select(w.as("word"), n.cast("long").as("n_chars"),
         walk.getField("np").as("n_pieces"), walk.getField("seg").as("segmentation"))
-      .orderBy("word")
   }
 
   def wordpiece(spark: SparkSession, dir: String): DataFrame =
@@ -1771,13 +1727,12 @@ object Text {
       .agg(count(lit(1)).as("n_words"), sum(col("n_pieces")).as("n_subwords"))
       .select(col("lang"), col("n_words"), col("n_subwords"),
         r6(col("n_subwords").cast("double") / col("n_words")).as("fertility"))
-      .orderBy("lang")
   }
 
   def wordpieceFertility(spark: SparkSession, dir: String): DataFrame =
     wordpieceFertilityOn(Tables.documents(spark, dir))
 
-  val wordpieceFertilitySql: String =
+  lazy val wordpieceFertilitySql: String =
     s"""WITH RECURSIVE $wordpieceCtes,
        |ltoks AS (SELECT lang, unnest(${tokensSql("text")}) AS w FROM documents)
        |SELECT t.lang, count(*) AS n_words,
@@ -1880,7 +1835,6 @@ object Text {
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
     }
     rows.toDF("merge_rank", "left_sym", "right_sym", "merged", "cnt")
-      .orderBy("merge_rank")
   }
 
   /** Oracle: the same rounds unrolled as a CTE chain. Every per-round CTE
@@ -1952,7 +1906,6 @@ object Text {
     segd.select(col("w").as("word"), length(col("w")).cast("long").as("n_chars"),
         size(syms).cast("long").as("n_pieces"),
         array_join(syms, " ").as("segmentation"))
-      .orderBy("word")
   }
 
   def bpeSegmentOn(docs: DataFrame, nMerges: Int = BpeMerges): DataFrame = {
@@ -2117,7 +2070,6 @@ object Text {
       }
       vocab.select(col("piece"), length(col("piece")).cast("long").as("n_chars"),
           col("cnt"), col("wgt").as("weight"))
-        .orderBy("piece")
     } finally lex.unpersist(blocking = false)
   }
 
@@ -2136,7 +2088,6 @@ object Text {
   def unigramTrain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     frozenUnigram(spark, dir).toDF("piece", "n_chars", "cnt", "weight")
-      .orderBy("piece")
   }
 
   /** The apply step: the corpus lexicon Viterbi-segmented under a given
@@ -2151,7 +2102,6 @@ object Text {
       .select(col("w").as("word"), length(col("w")).cast("long").as("n_chars"),
         size(col("starts")).cast("long").as("n_pieces"),
         concat_ws(" ", uniPieces).as("segmentation"))
-      .orderBy("word")
 
   def unigramSegmentOn(docs: DataFrame, rounds: Int = UniEmRounds): DataFrame =
     unigramSegmentFrom(docs,
@@ -2282,7 +2232,6 @@ object Text {
     try side(bpeLex, "bpe")
       .unionByName(side(uniLex, "unigram"))
       .unionByName(side(wpLex, "wordpiece"))
-      .orderBy("tokenizer", "lang")
       .localCheckpoint()
     finally census.unpersist(blocking = false)
   }
@@ -2319,34 +2268,36 @@ object Text {
        |       ${r6Sql("n_subwords / CAST(n_words AS DOUBLE)")} AS fertility
        |FROM sides ORDER BY tokenizer, lang""".stripMargin
 
-  val all: Seq[Q] = Seq(
-    Q("t_text_stats", textStats _, textStatsSql),
-    Q("t_bpe_train", bpeTrain _, bpeTrainSql),
-    Q("t_bpe_segment", bpeSegment _, bpeSegmentSql),
-    Q("t_unigram_train", unigramTrain _, unigramTrainSql),
-    Q("t_unigram_segment", unigramSegment _, unigramSegmentSql),
-    Q("t_tokenizer_fertility", tokenizerFertility _, tokenizerFertilitySql),
-    Q("t_wordpiece", wordpiece _, wordpieceSql),
-    Q("t_wordpiece_fertility", wordpieceFertility _, wordpieceFertilitySql),
-    Q("t_quality_filter", qualityFilter _, qualityFilterSql),
-    Q("t_pii_scrub", piiScrub _, piiScrubSql),
+  lazy val all: Seq[Q] = Seq(
+    Q("t_text_stats", textStats _, textStatsSql, col("doc_id")),
+    Q("t_bpe_train", bpeTrain _, bpeTrainSql, col("merge_rank")),
+    Q("t_bpe_segment", bpeSegment _, bpeSegmentSql, col("word")),
+    Q("t_unigram_train", unigramTrain _, unigramTrainSql, col("piece")),
+    Q("t_unigram_segment", unigramSegment _, unigramSegmentSql, col("word")),
+    Q("t_tokenizer_fertility", tokenizerFertility _, tokenizerFertilitySql,
+      col("tokenizer"), col("lang")),
+    Q("t_wordpiece", wordpiece _, wordpieceSql, col("word")),
+    Q("t_wordpiece_fertility", wordpieceFertility _, wordpieceFertilitySql, col("lang")),
+    Q("t_quality_filter", qualityFilter _, qualityFilterSql, col("doc_id")),
+    Q("t_pii_scrub", piiScrub _, piiScrubSql, col("doc_id")),
     Q("t_ngram_freq", ngramFreq _, ngramFreqSql),
-    Q("t_lang_id", langId _, langIdSql),
-    Q("t_langid_confusion", langIdConfusion _, langIdConfusionSql),
-    Q("t_token_count", tokenCount _, tokenCountSql),
-    Q("t_token_fertility", tokenFertility _, tokenFertilitySql),
-    Q("t_fingerprint", fingerprint _, fingerprintSql),
-    Q("t_winnow_fp", winnowFingerprints _, winnowFingerprintsSql),
-    Q("t_repetition", repetitionStats _, repetitionStatsSql),
-    Q("t_tfidf_keywords", tfidfKeywords _, tfidfKeywordsSql),
-    Q("t_heavy_hitters", heavyHitters _, heavyHittersSql),
-    Q("t_lm_fluency", lmFluency _, lmFluencySql),
-    Q("t_token_entropy", tokenEntropy _, tokenEntropySql),
-    Q("t_vocab_coverage", vocabCoverage _, vocabCoverageSql),
-    Q("t_bigram_pmi", bigramPmi _, bigramPmiSql),
-    Q("t_bm25_topk", bm25TopK _, bm25TopKSql),
-    Q("t_hybrid_rrf", hybridRrf _, hybridRrfSql),
-    Q("t_hybrid_recall", hybridRecall _, hybridRecallSql),
-    Q("t_hybrid_against", hybridAgainst _, hybridAgainstSql),
+    Q("t_lang_id", langId _, langIdSql, col("doc_id")),
+    Q("t_langid_confusion", langIdConfusion _, langIdConfusionSql,
+      col("lang"), col("predicted_lang")),
+    Q("t_token_count", tokenCount _, tokenCountSql, col("doc_id")),
+    Q("t_token_fertility", tokenFertility _, tokenFertilitySql, col("lang")),
+    Q("t_fingerprint", fingerprint _, fingerprintSql, col("doc_id")),
+    Q("t_winnow_fp", winnowFingerprints _, winnowFingerprintsSql, col("doc_id")),
+    Q("t_repetition", repetitionStats _, repetitionStatsSql, col("doc_id")),
+    Q("t_tfidf_keywords", tfidfKeywords _, tfidfKeywordsSql, col("doc_id"), col("rank")),
+    Q("t_heavy_hitters", heavyHitters _, heavyHittersSql, col("n").desc, col("gram")),
+    Q("t_lm_fluency", lmFluency _, lmFluencySql, col("doc_id")),
+    Q("t_token_entropy", tokenEntropy _, tokenEntropySql, col("doc_id")),
+    Q("t_vocab_coverage", vocabCoverage _, vocabCoverageSql, col("rank")),
+    Q("t_bigram_pmi", bigramPmi _, bigramPmiSql, col("rank")),
+    Q("t_bm25_topk", bm25TopK _, bm25TopKSql, col("query_id"), col("rank")),
+    Q("t_hybrid_rrf", hybridRrf _, hybridRrfSql, col("query_id"), col("rank")),
+    Q("t_hybrid_recall", hybridRecall _, hybridRecallSql, col("system")),
+    Q("t_hybrid_against", hybridAgainst _, hybridAgainstSql, col("query_id"), col("rank")),
   )
 }

@@ -150,9 +150,9 @@ object Multimodal {
     * so hashes go through the text form; bytes and chars differ and both
     * sides use octet/char-aware functions accordingly.) */
   def mediaMeta(spark: SparkSession, dir: String): DataFrame =
-    mediaMetaOn(Tables.documents(spark, dir)).orderBy("doc_id")
+    mediaMetaOn(Tables.documents(spark, dir))
 
-  /** Caller-supplied-frame form of [[mediaMeta]] (unordered). */
+  /** Caller-supplied-frame form of [[mediaMeta]]. */
   def mediaMetaOn(docs: DataFrame): DataFrame =
     docs
       .withColumn("payload", encode(col("text"), "UTF-8"))
@@ -238,7 +238,6 @@ object Multimodal {
       .groupBy("media_type")
       .agg(count(lit(1)).as("n_docs"), sum("n_frames").cast("long").as("total_frames"),
         r6(avg(col("feat_sum"))).as("avg_feat_sum"))
-      .orderBy("media_type")
   }
 
   /** Frame-sampling stats as a registered ORACLED query: media → chunked
@@ -252,14 +251,13 @@ object Multimodal {
       .agg(count(lit(1)).as("n_frames"),
         sum(col("n_bytes")).cast("long").as("total_bytes"),
         countDistinct(col("checksum")).as("n_distinct_checksums"))
-      .orderBy("doc_bucket")
   }
 
   /** Oracle twin of [[featurePipeline]]. Mirrors StubCodec.decode +
     * resize(4) exactly: window = max(1, n/8) bytes, feature_i = mean of
     * window i's unsigned bytes as REAL, resize pairs (f_2i + f_2i+1)/2 as
     * REAL, feat_sum = left-fold double sum of the 4 resized components. */
-  val featurePipelineSql: String = {
+  lazy val featurePipelineSql: String = {
     s"""WITH m AS (
        |  SELECT doc_id, $mediaTypeSql AS media_type,
        |         hex(encode(text)) AS hx, octet_length(encode(text)) AS n
@@ -356,7 +354,6 @@ object Multimodal {
       .groupBy("media_type", "phash")
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("canonical_doc_id"))
       .filter(col("n_docs") > 1)
-      .orderBy("media_type", "phash")
   }
 
   /** Oracle twin: payload bytes via the proven hex-slice route; the same
@@ -521,7 +518,6 @@ object Multimodal {
   def dctDedup(spark: SparkSession, dir: String): DataFrame =
     dctBandPairs(spark, dir)
       .filter(col("hamming") <= lit(DctHamMax))
-      .orderBy("doc_a", "doc_b")
 
   /** Curve depth: hamming levels 0..16 reported (one band's worth of bits). */
   val HcLevels = 16
@@ -546,7 +542,6 @@ object Multimodal {
       .withColumn("n_cum", sum("n_pairs").over(w))
       .select(col("hamming"), col("n_pairs"), col("n_cum"),
         (col("hamming") < lit(DctBands.toLong)).as("is_complete"))
-      .orderBy("hamming")
   }
 
   // --------------------------------------------- media decontamination
@@ -586,7 +581,6 @@ object Multimodal {
         coalesce(col("n_eval_matches"), lit(0L)).as("n_eval_matches"),
         coalesce(col("min_hamming"), lit(64L)).as("min_hamming"),
         col("n_eval_matches").isNull.as("keep"))
-      .orderBy("doc_id")
   }
 
   /** Registered form: the deterministic doc_id slice stands in as the eval
@@ -941,7 +935,7 @@ object Multimodal {
     // checkpoints them at consumption, so the composed assembly still
     // materializes each state table once.
     val afNew = afOld.join(gone, Seq("doc_id"), "left_anti")
-      .unionByName(alignFilterRowsOn(freshDocs, embeddings))
+      .unionByName(alignFilterOn(freshDocs, embeddings))
     val dlNew = dlOld.join(gone, Seq("doc_id"), "left_anti")
       .unionByName(mmDocLocalOn(freshDocs))
     MediaManifestWarehouse(wh, clusters, afNew, dlNew)
@@ -962,7 +956,7 @@ object Multimodal {
       val old = graft.ext.Corpus.deltaOldSlice(Tables.documents(spark, dir))
       val emb = Tables.embeddings(spark, dir)
       val base = java.nio.file.Files.createTempDirectory("graft_mm_manifest_base").toString
-      alignFilterRowsOn(old, emb).write.parquet(s"$base/af.parquet")
+      alignFilterOn(old, emb).write.parquet(s"$base/af.parquet")
       mmDocLocalOn(old).write.parquet(s"$base/dl.parquet")
       (s"$base/af.parquet", s"$base/dl.parquet")
     }
@@ -1029,7 +1023,7 @@ object Multimodal {
       pairs.write.parquet(s"$base/pairs.parquet")
       graft.ext.Dedup.propagateComponents(old.select("doc_id"),
           pairs.select("doc_a", "doc_b"), checkpointRounds = true)
-        .orderBy("doc_id").write.parquet(s"$base/manifest.parquet")
+        .write.parquet(s"$base/manifest.parquet")
       pairs.unpersist()
       fp.unpersist()
       // identity fingerprints next to the perceptual hashes (round 19):
@@ -1050,7 +1044,7 @@ object Multimodal {
     * banded DCT pairing over the old snapshot. */
   def mediaDedupBase(spark: SparkSession, dir: String): DataFrame = {
     val (_, pPath, _, _) = frozenMediaBase(spark, dir)
-    spark.read.parquet(pPath).orderBy("doc_a", "doc_b")
+    spark.read.parquet(pPath)
   }
 
   lazy val mediaDedupBaseSql: String =
@@ -1076,7 +1070,7 @@ object Multimodal {
     mediaWarehouseUpdateOn(old, nw,
         spark.read.parquet(hPath), spark.read.parquet(pPath),
         oldFps = Some(spark.read.parquet(fPath)))
-      .pairs.orderBy("doc_a", "doc_b")
+      .pairs
   }
 
   lazy val mediaDedupIncrementalSql: String =
@@ -1120,7 +1114,7 @@ object Multimodal {
       val base = java.nio.file.Files.createTempDirectory("graft_mm_rolled").toString
       w1.wh.hashes.write.parquet(s"$base/hashes.parquet")
       w1.wh.pairs.write.parquet(s"$base/pairs.parquet")
-      w1.clusters.orderBy("doc_id").write.parquet(s"$base/manifest.parquet")
+      w1.clusters.write.parquet(s"$base/manifest.parquet")
       w1.af.write.parquet(s"$base/af.parquet")
       w1.docLocal.write.parquet(s"$base/dl.parquet")
       // roll the identity-fingerprint table with the rest of the state
@@ -1143,7 +1137,7 @@ object Multimodal {
     mediaWarehouseUpdateOn(s1, s2,
         spark.read.parquet(hPath), spark.read.parquet(pPath),
         oldFps = Some(spark.read.parquet(fPath)))
-      .pairs.orderBy("doc_a", "doc_b")
+      .pairs
   }
 
   /** Registered incremental media CLUSTER manifest — one delta + pair
@@ -1160,7 +1154,7 @@ object Multimodal {
         spark.read.parquet(hPath), spark.read.parquet(pPath),
         spark.read.parquet(mPath),
         oldFps = Some(spark.read.parquet(fPath)))
-      ._2.orderBy("doc_id")
+      ._2
   }
 
   lazy val mediaClustersIncrementalSql: String =
@@ -1185,7 +1179,7 @@ object Multimodal {
         spark.read.parquet(hPath), spark.read.parquet(pPath),
         spark.read.parquet(mPath),
         oldFps = Some(spark.read.parquet(fPath)))
-      ._2.orderBy("doc_id")
+      ._2
   }
 
   /** Registered steady-state rolled COMPOSED manifest: hop 2 of the media
@@ -1301,8 +1295,7 @@ object Multimodal {
   }
 
   def mediaDupClusters(spark: SparkSession, dir: String): DataFrame =
-    // parquet round-trip loses row order; re-sort to the manifest contract
-    frozenMediaClusters(spark, dir).orderBy("doc_id")
+    frozenMediaClusters(spark, dir)
 
   /** The shared closure tail over the DCT pair relation: `comp`
     * (doc_id, cluster_id) + `sizes` — composed by both cluster oracles so
@@ -1350,7 +1343,6 @@ object Multimodal {
         min(col("cluster_size")).as("cluster_size"))
       .select(col("cluster_id"), col("keep_doc_id"), col("keep_bytes"),
         col("cluster_size"), (col("cluster_size") - lit(1L)).as("n_removed"))
-      .orderBy("cluster_id")
 
   /** Byte election from an EXISTING cluster manifest, deriving byte
     * counts from the docs frame. */
@@ -1408,10 +1400,7 @@ object Multimodal {
     * warehouse state in the incremental family, so the election (and the
     * composed manifest that consumes it, [[mmManifestFromState]]) reads
     * no payload and no caption. */
-  /** Unsorted election rows — the composition seam (manifest assembly and
-    * funnel join the election by cluster_id; only the registered listing
-    * pays the presentation sort). */
-  def mediaKeepBestAlignedRowsFrom(manifest: DataFrame, af: DataFrame): DataFrame =
+  def mediaKeepBestAlignedFrom(manifest: DataFrame, af: DataFrame): DataFrame =
     manifest
       .join(af.select(col("doc_id"), col("align_cos")), Seq("doc_id"))
       .filter(col("cluster_size") > 1)
@@ -1424,15 +1413,12 @@ object Multimodal {
       .select(col("cluster_id"), col("keep_doc_id"), col("keep_align_cos"),
         col("cluster_size"), (col("cluster_size") - lit(1L)).as("n_removed"))
 
-  def mediaKeepBestAlignedFrom(manifest: DataFrame, af: DataFrame): DataFrame =
-    mediaKeepBestAlignedRowsFrom(manifest, af).orderBy("cluster_id")
-
   def mediaKeepBestAlignedOn(docs: DataFrame, embeddings: DataFrame): DataFrame =
-    mediaKeepBestAlignedFrom(mediaDupClustersOn(docs), alignFilterRowsOn(docs, embeddings))
+    mediaKeepBestAlignedFrom(mediaDupClustersOn(docs), alignFilterOn(docs, embeddings))
 
   def mediaKeepBestAligned(spark: SparkSession, dir: String): DataFrame =
     mediaKeepBestAlignedFrom(frozenMediaClusters(spark, dir),
-      alignFilterRowsOn(Tables.documents(spark, dir), Tables.embeddings(spark, dir)))
+      alignFilterOn(Tables.documents(spark, dir), Tables.embeddings(spark, dir)))
 
   /** The aligned election as CTEs over `comp`/`sizes` and an `af` CTE
     * (relations `kaj`, `kar`, `ka`) — composed by the aligned-keep-best
@@ -1501,14 +1487,7 @@ object Multimodal {
       .select(col("doc_id"), col("source"), cap.as("cap"))
   }
 
-  /** Unsorted alignment verdicts — the composition seam: every consumer
-    * that joins or aggregates the verdicts (the manifest family, the
-    * elections, the funnel, the streaming twins) reads this form, so the
-    * presentation sort is paid only by the registered listing
-    * ([[alignFilterOn]]) instead of being embedded — as a global range
-    * exchange — inside every composed plan (guide §2.4: an orderBy used
-    * only for output determinism is an Exchange you did not need). */
-  def alignFilterRowsOn(docs: DataFrame, embeddings: DataFrame): DataFrame = {
+  def alignFilterOn(docs: DataFrame, embeddings: DataFrame): DataFrame = {
     import graft.ext.Similarity
     val emb = embeddings.select(col("vec_id").as("doc_id"), col("embedding"))
     captionEmbeddings(docs).join(emb, Seq("doc_id"))
@@ -1523,9 +1502,6 @@ object Multimodal {
           r6(col("dp") / (col("nc") * col("ne")))).otherwise(lit(0.0)).as("align_cos"))
       .withColumn("keep", col("align_cos") > lit(AlignMin))
   }
-
-  def alignFilterOn(docs: DataFrame, embeddings: DataFrame): DataFrame =
-    alignFilterRowsOn(docs, embeddings).orderBy("doc_id")
 
   def alignFilter(spark: SparkSession, dir: String): DataFrame =
     alignFilterOn(Tables.documents(spark, dir), Tables.embeddings(spark, dir))
@@ -1569,7 +1545,7 @@ object Multimodal {
        |FROM scored ORDER BY doc_id""".stripMargin
   }
 
-  val alignFilterSql: String = alignFilterSqlFor("documents")
+  lazy val alignFilterSql: String = alignFilterSqlFor("documents")
 
   // ------------------------------------------------- media curation funnel
   /** Decode-quality gate thresholds (the LAION-style min-size / aspect
@@ -1626,7 +1602,6 @@ object Multimodal {
         (pdc && pe && pa && ps).as("kept"),
         when(!pdc, "decode").when(!pe, "no_embedding")
           .when(!pa, "alignment").when(!ps, "near_dup").as("drop_reason"))
-      .orderBy("doc_id")
   }
 
   /** Doc-local funnel-state row: the decode-gate inputs (ONE codec pass at
@@ -1649,15 +1624,15 @@ object Multimodal {
                            checkpointClusters: Boolean = true): DataFrame = {
     // ONE caption-tower pass feeds both the gate bits and the election —
     // checkpointed so the one-pass claim is structural: without it Spark
-    // may re-evaluate the alignFilterOn subtree, internal global orderBy
-    // included, once per consuming branch unless exchange reuse happens
+    // may re-evaluate the alignFilterOn subtree once per consuming branch
+    // unless exchange reuse happens
     // to fire. The cluster frame checkpoints only when COMPUTED (the
     // mmManifestFromState rationale): a frozen parquet read re-scans
     // cheaply per branch and stays visible to plan pins
-    val afAll = alignFilterRowsOn(docs, embeddings).localCheckpoint()
+    val afAll = alignFilterOn(docs, embeddings).localCheckpoint()
     val cl0 = clusters.select("doc_id", "cluster_id", "cluster_size")
     val cl = if (checkpointClusters) cl0.localCheckpoint() else cl0
-    val ka = mediaKeepBestAlignedRowsFrom(cl, afAll)
+    val ka = mediaKeepBestAlignedFrom(cl, afAll)
       .select("cluster_id", "keep_doc_id")
     mmFunnelAssemble(mmFunnelDocStateOn(docs),
       afAll.select(col("doc_id"), col("keep")), cl, ka)
@@ -1684,9 +1659,6 @@ object Multimodal {
         "is_survivor", "kept")
       .agg(count(lit(1)).as("n_docs"))
       .withColumn("share", r6(col("n_docs").cast("double") / sum(col("n_docs")).over(w)))
-      // `kept` closes the sort key (ADVICE r16; the t_gate_patterns rule)
-      .orderBy(col("n_docs").desc, col("media_type"), col("pass_decode"),
-        col("has_embedding"), col("pass_align"), col("is_survivor"), col("kept"))
   }
 
   /** Frozen funnel verdict rows per corpus — the text family's
@@ -2046,7 +2018,7 @@ object Multimodal {
     val afC = stateCkpt(af)
     val dlC = stateCkpt(docLocal)
     val ka = derivedCkpt(
-      mediaKeepBestAlignedRowsFrom(cl, afC).select("cluster_id", "keep_doc_id"))
+      mediaKeepBestAlignedFrom(cl, afC).select("cluster_id", "keep_doc_id"))
     // the manifest ships the LEAKAGE-SAFE split (VERDICT r16 task 1):
     // docLocal carries the doc-local content-hash assignment; every
     // cluster member inherits its canonical's — the `mm_split_safe` rule,
@@ -2087,7 +2059,6 @@ object Multimodal {
         col("mm_kept"), col("split"), col("packed"),
         coalesce(col("shard"), lit(-1L)).as("shard"),
         coalesce(col("chunk_id"), lit(-1L)).as("chunk_id"))
-      .orderBy("doc_id")
   }
 
   def mmPipelineManifestOn(docs: DataFrame, embeddings: DataFrame): DataFrame =
@@ -2096,7 +2067,7 @@ object Multimodal {
     // so the composed manifest can never disagree with them. The manifest
     // spine is the alignment gate's domain: documents with media AND an
     // embedding row (the image-tower output the gate scores against).
-    mmManifestFromState(alignFilterRowsOn(docs, embeddings), mediaDupClustersOn(docs),
+    mmManifestFromState(alignFilterOn(docs, embeddings), mediaDupClustersOn(docs),
       mmDocLocalOn(docs))
 
   def mmPipelineManifest(spark: SparkSession, dir: String): DataFrame =
@@ -2105,7 +2076,7 @@ object Multimodal {
     // incremental family only in where the OTHER state tables come from;
     // no cluster checkpoint: the parquet scan per branch IS the design
     mmManifestFromState(
-      alignFilterRowsOn(Tables.documents(spark, dir), Tables.embeddings(spark, dir)),
+      alignFilterOn(Tables.documents(spark, dir), Tables.embeddings(spark, dir)),
       frozenMediaClusters(spark, dir),
       mmDocLocalOn(Tables.documents(spark, dir)),
       checkpointClusters = false)
@@ -2188,7 +2159,6 @@ object Multimodal {
       .select(col("split_a"), col("split_b"),
         coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
         (col("split_a") =!= col("split_b")).as("is_leak"))
-      .orderBy("split_a", "split_b")
   }
 
   def mmSplitLeakage(spark: SparkSession, dir: String): DataFrame =
@@ -2208,7 +2178,6 @@ object Multimodal {
         docs.select(col("doc_id"), graft.ext.Corpus.splitAssign.as("own_split")))
       .select(col("doc_id"), col("cluster_id"), col("split"),
         (col("split") =!= col("own_split")).as("moved"))
-      .orderBy("doc_id")
 
   def mmSplitSafeOn(docs: DataFrame): DataFrame =
     mmSplitSafeFrom(docs, mediaDupClustersOn(docs))
@@ -2286,7 +2255,6 @@ object Multimodal {
           .otherwise(r6(col("total_bytes") /
             (col("n_chunks") * lit(MediaPackChunkBytes)).cast("double"))).as("fill_ratio"),
         r6(col("n_split_objs") / col("n_objs").cast("double")).as("split_ratio"))
-      .orderBy("media_type")
   }
 
   def mmPackEfficiency(spark: SparkSession, dir: String): DataFrame =
@@ -2340,7 +2308,6 @@ object Multimodal {
       .withColumn("pos", row_number().over(w).cast("long"))
       .select(col("epoch"), col("shard"), col("pos"),
         col("media_type"), col("pack_shard"), col("chunk_id"))
-      .orderBy("epoch", "shard", "pos")
   }
 
   /** The packed chunk units of a training manifest — the trainer's media
@@ -2421,33 +2388,40 @@ object Multimodal {
        |FROM sbase ORDER BY epoch, shard, pos""".stripMargin
   }
 
-  val all: Seq[Q] = Seq(
-    Q("mm_media_meta", mediaMeta _, mediaMetaSql),
-    Q("mm_align_filter", alignFilter _, alignFilterSql),
-    Q("mm_feature_pipeline", featurePipeline _, featurePipelineSql),
-    Q("mm_frame_sample", frameSample _, frameSampleSql),
-    Q("mm_phash_dedup", phashDedup _, phashDedupSql),
-    Q("mm_dct_dedup", dctDedup _, dctDedupSql),
-    Q("mm_decontaminate", mediaDecontaminate _, mediaDecontaminateSql),
-    Q("mm_dedup_base", mediaDedupBase _, mediaDedupBaseSql),
-    Q("mm_dedup_incremental", mediaDedupIncremental _, mediaDedupIncrementalSql),
-    Q("mm_dedup_rolled", mediaDedupRolled _, mediaDedupRolledSql),
-    Q("mm_clusters_incremental", mediaClustersIncremental _, mediaClustersIncrementalSql),
-    Q("mm_clusters_rolled", mediaClustersRolled _, mediaClustersRolledSql),
-    Q("mm_dup_clusters", mediaDupClusters _, mediaDupClustersSql),
-    Q("mm_hamming_curve", hammingCurve _, hammingCurveSql),
-    Q("mm_keep_best", mediaKeepBest _, mediaKeepBestSql),
-    Q("mm_keep_best_aligned", mediaKeepBestAligned _, mediaKeepBestAlignedSql),
-    Q("mm_manifest_incremental", mediaManifestIncremental _, mediaManifestIncrementalSql),
-    Q("mm_manifest_rolled", mediaManifestRolled _, mediaManifestRolledSql),
-    Q("mm_pipeline_manifest", mmPipelineManifest _, mmPipelineManifestSql),
-    Q("mm_split_leakage", mmSplitLeakage _, mmSplitLeakageSql),
-    Q("mm_split_safe", mmSplitSafe _, mmSplitSafeSql),
-    Q("mm_pack_efficiency", mmPackEfficiency _, mmPackEfficiencySql),
-    Q("mm_epoch_shuffle", mmEpochShuffle _, mmEpochShuffleSql),
+  lazy val all: Seq[Q] = Seq(
+    Q("mm_media_meta", mediaMeta _, mediaMetaSql, col("doc_id")),
+    Q("mm_align_filter", alignFilter _, alignFilterSql, col("doc_id")),
+    Q("mm_feature_pipeline", featurePipeline _, featurePipelineSql, col("media_type")),
+    Q("mm_frame_sample", frameSample _, frameSampleSql, col("doc_bucket")),
+    Q("mm_phash_dedup", phashDedup _, phashDedupSql, col("media_type"), col("phash")),
+    Q("mm_dct_dedup", dctDedup _, dctDedupSql, col("doc_a"), col("doc_b")),
+    Q("mm_decontaminate", mediaDecontaminate _, mediaDecontaminateSql, col("doc_id")),
+    Q("mm_dedup_base", mediaDedupBase _, mediaDedupBaseSql, col("doc_a"), col("doc_b")),
+    Q("mm_dedup_incremental", mediaDedupIncremental _, mediaDedupIncrementalSql,
+      col("doc_a"), col("doc_b")),
+    Q("mm_dedup_rolled", mediaDedupRolled _, mediaDedupRolledSql, col("doc_a"), col("doc_b")),
+    Q("mm_clusters_incremental", mediaClustersIncremental _, mediaClustersIncrementalSql,
+      col("doc_id")),
+    Q("mm_clusters_rolled", mediaClustersRolled _, mediaClustersRolledSql, col("doc_id")),
+    Q("mm_dup_clusters", mediaDupClusters _, mediaDupClustersSql, col("doc_id")),
+    Q("mm_hamming_curve", hammingCurve _, hammingCurveSql, col("hamming")),
+    Q("mm_keep_best", mediaKeepBest _, mediaKeepBestSql, col("cluster_id")),
+    Q("mm_keep_best_aligned", mediaKeepBestAligned _, mediaKeepBestAlignedSql, col("cluster_id")),
+    Q("mm_manifest_incremental", mediaManifestIncremental _, mediaManifestIncrementalSql,
+      col("doc_id")),
+    Q("mm_manifest_rolled", mediaManifestRolled _, mediaManifestRolledSql, col("doc_id")),
+    Q("mm_pipeline_manifest", mmPipelineManifest _, mmPipelineManifestSql, col("doc_id")),
+    Q("mm_split_leakage", mmSplitLeakage _, mmSplitLeakageSql, col("split_a"), col("split_b")),
+    Q("mm_split_safe", mmSplitSafe _, mmSplitSafeSql, col("doc_id")),
+    Q("mm_pack_efficiency", mmPackEfficiency _, mmPackEfficiencySql, col("media_type")),
+    Q("mm_epoch_shuffle", mmEpochShuffle _, mmEpochShuffleSql,
+      col("epoch"), col("shard"), col("pos")),
     Q("mm_retrieval_recall", mmRetrievalRecall _, mmRetrievalRecallSql),
     Q("mm_retrieval_recall_i2t", mmRetrievalRecallI2t _, mmRetrievalRecallI2tSql),
-    Q("mm_curation_funnel", mmCurationFunnel _, mmCurationFunnelSql),
-    Q("mm_gate_patterns", mmGatePatterns _, mmGatePatternsSql),
+    Q("mm_curation_funnel", mmCurationFunnel _, mmCurationFunnelSql, col("doc_id")),
+    // `kept` closes the sort key (ADVICE r16; the t_gate_patterns rule)
+    Q("mm_gate_patterns", mmGatePatterns _, mmGatePatternsSql,
+      col("n_docs").desc, col("media_type"), col("pass_decode"), col("has_embedding"),
+      col("pass_align"), col("is_survivor"), col("kept")),
   )
 }

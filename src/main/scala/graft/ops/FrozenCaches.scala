@@ -11,11 +11,11 @@ package graft.ops
   * under a previously-read path and retrain instead of silently serving a
   * model of the old data (the round-7 testdata-regeneration footgun).
   * A stale generation's artifacts are evicted (and their on-disk state
-  * cleaned) the first time the new generation is requested. On a path the
-  * local walk cannot see (remote FS), the signature degrades to a
-  * constant and the contract falls back to the previous one: call
-  * [[clearAll]] after swapping data. Artifacts live in this JVM only:
-  * there is no on-disk store, so a fresh JVM starts empty and rebuilds.
+  * cleaned) the first time the new generation is requested. The listing
+  * goes through the Hadoop `FileSystem` of the path's URI, so plain
+  * paths, `file:` URIs and remote stores (`s3a://`, `hdfs://`) all get a
+  * real signature. Artifacts live in this JVM only: there is no on-disk
+  * store, so a fresh JVM starts empty and rebuilds.
   *
   * Each hosting object registers its clear hook at class-init; hooks also
   * best-effort delete any temp-dir artifacts they own (the dup-cluster
@@ -89,9 +89,12 @@ object FrozenCaches {
   // artifacts that own on-disk state (the dup-cluster manifest's temp
   // dirs) are cleaned by their beforeClear hooks — run them on JVM exit
   // too, so short-lived sessions don't leak a parquet copy per corpus
+  private def report(what: String, e: Throwable): Unit =
+    System.err.println(s"FrozenCaches: $what failed: ${e.getClass.getName}: ${e.getMessage}")
+  // registering throws only once the JVM is already shutting down
   try Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    try clearAll() catch { case _: Throwable => () }))
-  catch { case _: Throwable => () }
+    try clearAll() catch { case e: Throwable => report("clearAll at shutdown", e) }))
+  catch { case e: IllegalStateException => report("shutdown hook registration", e) }
 
   /** Cheap content signature of a file or directory: file count, total
     * bytes and max mtime folded into one long. Not collision-proof
@@ -102,26 +105,36 @@ object FrozenCaches {
     * The walk runs on every [[Memo.get]] — that is the PRICE of immediate
     * staleness detection (the contract FrozenCachesSpec pins: swap data
     * under a path, the very next get retrains, no clearAll needed). It is
-    * microseconds on directory-sized corpora; a deployment on a listing-
+    * cheap on directory-sized corpora; a deployment on a listing-
     * expensive store that holds its data immutable can front the readers
-    * with its own latch instead. */
+    * with its own latch instead.
+    *
+    * The listing uses the Hadoop `FileSystem` of the path's URI and the
+    * active session's Hadoop configuration (its credentials and FS
+    * settings). A path that does not exist signs as 0; any other listing
+    * failure propagates. It walks plain `listStatus` results: the located
+    * listing (`listFiles`) reads each local file's permissions by running
+    * `ls`, about 35 ms per call on a 10-file corpus against 0.1 ms. */
   def dirSig(path: String): Long = {
-    try {
-      val p = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(p)) return 0L
-      var n = 0L; var bytes = 0L; var mt = 0L
-      val walk = java.nio.file.Files.walk(p)
-      try walk.forEach { f =>
-        if (java.nio.file.Files.isRegularFile(f)) {
-          n += 1
-          bytes += java.nio.file.Files.size(f)
-          mt = math.max(mt, java.nio.file.Files.getLastModifiedTime(f).toMillis)
-        }
-      } finally walk.close()
-      var h = 1125899906842597L
-      h = h * 31 + n; h = h * 31 + bytes; h = h * 31 + mt
-      h
-    } catch { case _: Throwable => 0L }
+    import org.apache.hadoop.fs.FileStatus
+    val p = new org.apache.hadoop.fs.Path(path)
+    val conf = org.apache.spark.sql.SparkSession.getActiveSession
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(conf)
+    var n = 0L; var bytes = 0L; var mt = 0L
+    def walk(s: FileStatus): Unit =
+      if (s.isDirectory) fs.listStatus(s.getPath).foreach(walk)
+      else {
+        n += 1
+        bytes += s.getLen
+        mt = math.max(mt, s.getModificationTime)
+      }
+    try walk(fs.getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => return 0L }
+    var h = 1125899906842597L
+    h = h * 31 + n; h = h * 31 + bytes; h = h * 31 + mt
+    h
   }
 
   /** A corpus-keyed artifact memo that self-registers with [[clearAll]].

@@ -20,7 +20,6 @@ object Micro {
     Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") < lit("1996-01-01").cast("timestamp") && col("l_quantity") > lit(45.0))
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-      .orderBy("l_orderkey", "l_linenumber")
 
   val projectFilterSortSql: String =
     """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
@@ -39,7 +38,6 @@ object Micro {
       .withColumn("bin_label", Binning.hhmmLabel(Binning.floorBin(col("minute_of_day"), 10)))
       .withColumn("value_clipped", greatest(lit(0.0), col("value") - lit(100.0)))
       .select("event_id", "push_id", "h", "m", "minute_of_day", "bin_label", "value_clipped")
-      .orderBy("event_id")
 
   lazy val derivedColsSql: String =
     s"""SELECT event_id,
@@ -61,7 +59,6 @@ object Micro {
       // a needless hash hazard
       .withColumn("date_roundtrip_us", unix_micros(try_to_timestamp(col("o_orderdate").cast("string"))))
       .select("o_orderkey", "status_num", "prio_num", "date_roundtrip_us")
-      .orderBy("o_orderkey")
 
   val tryCastsSql: String =
     """SELECT o_orderkey,
@@ -77,7 +74,6 @@ object Micro {
       .filter(col("age_group").isNotNull)
       .groupBy("category", "age_group")
       .agg(count(lit(1)).as("n_customers"), r6(avg(col("c_acctbal"))).as("avg_balance"))
-      .orderBy("category", "age_group")
 
   lazy val whenContainsSql: String =
     s"""SELECT category, age_group, count(*) AS n_customers, ${r6Sql("avg(c_acctbal)")} AS avg_balance
@@ -97,7 +93,6 @@ object Micro {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === lit(1))
       .select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-      .orderBy("o_custkey")
   }
 
   val dedupFirstSql: String =
@@ -115,7 +110,6 @@ object Micro {
     Tables.customer(spark, dir)
       .join(active, col("c_custkey") === col("o_custkey"), "left_semi")
       .select("c_custkey", "c_name", "c_mktsegment")
-      .orderBy("c_custkey")
   }
 
   val semiHavingSql: String =
@@ -134,7 +128,6 @@ object Micro {
         max_by(col("value"), col("event_id")).as("last_value"),
         min(col("value")).as("min_value"), max(col("value")).as("max_value"),
         count(lit(1)).as("n_events"))
-      .orderBy("event_type")
 
   val minMaxBySql: String =
     """SELECT event_type,
@@ -151,7 +144,6 @@ object Micro {
       .filter(col("qty_bin").isNotNull)
       .groupBy("qty_bin")
       .agg(count(lit(1)).as("n_items"), r6(avg(col("l_extendedprice"))).as("avg_price"))
-      .orderBy("qty_bin")
 
   lazy val cutRightClosedSql: String =
     s"""SELECT qty_bin, count(*) AS n_items, ${r6Sql("avg(l_extendedprice)")} AS avg_price
@@ -171,10 +163,9 @@ object Micro {
     val w = Window.orderBy("ship_day")
     daily
       .withColumn("smoothed", r6(Smoothing.centeredMean(col("n_items").cast("double"), w, 3)))
-      .orderBy("ship_day")
   }
 
-  val rollingDailySql: String =
+  lazy val rollingDailySql: String =
     s"""WITH daily AS (
        |  SELECT strftime(l_shipdate, '%Y-%m-%d') AS ship_day, count(*) AS n_items
        |  FROM lineitem GROUP BY 1)
@@ -191,7 +182,6 @@ object Micro {
       .withColumn("k_str", get_json_object(col("props"), "$.k"))
       .withColumn("k_num", expr("try_cast(get_json_object(props, '$.k') AS bigint)"))
       .select("event_id", "k_str", "k_num")
-      .orderBy("event_id")
 
   val jsonExtractSql: String =
     """SELECT event_id,
@@ -233,7 +223,6 @@ object Micro {
       .groupBy("mk")
       .agg(sum("c").as("n_rows"), countDistinct(col("mv")).as("n_vals"),
         min("mn").as("min_keys"), countDistinct(col("type_val")).as("n_types"))
-      .orderBy("mk")
   }
 
   val mapOpsSql: String =
@@ -270,9 +259,8 @@ object Micro {
       .agg(count(lit(1)).as("n_events"), r6(sum(col("value"))).as("sum_value"))
       .select(unix_micros(col("win.start")).as("win_start_us"), col("event_type"),
         col("n_events"), col("sum_value"))
-      .orderBy("win_start_us", "event_type")
 
-  val tumblingWindowSql: String =
+  lazy val tumblingWindowSql: String =
     s"""SELECT epoch_us(time_bucket(INTERVAL '10 minutes', ts)) AS win_start_us, event_type,
        |       count(*) AS n_events, ${r6Sql("sum(value)")} AS sum_value
        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
@@ -287,9 +275,8 @@ object Micro {
       .agg(count(lit(1)).as("n_events"), r6(sum(col("value"))).as("sum_value"))
       .select(unix_micros(col("win.start")).as("win_start_us"), col("event_type"),
         col("n_events"), col("sum_value"))
-      .orderBy("win_start_us", "event_type")
 
-  val slidingWindowSql: String =
+  lazy val slidingWindowSql: String =
     s"""SELECT epoch_us(time_bucket(INTERVAL '5 minutes', ts) - k * INTERVAL '5 minutes') AS win_start_us,
        |       event_type, count(*) AS n_events, ${r6Sql("sum(value)")} AS sum_value
        |FROM events, (SELECT unnest([0, 1]) AS k)
@@ -305,7 +292,6 @@ object Micro {
       .groupBy("l_orderkey")
       .agg(array_join(sort_array(collect_list(col("l_quantity").cast("long"))), ",").as("quantities"),
         count(lit(1)).as("n_items"))
-      .orderBy("l_orderkey")
 
   val collectSortedSql: String =
     """SELECT l_orderkey,
@@ -313,20 +299,23 @@ object Micro {
       |       count(*) AS n_items
       |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val all: Seq[Q] = Seq(
-    Q("m_project_filter_sort", projectFilterSort _, projectFilterSortSql),
-    Q("m_collect_sorted", collectSorted _, collectSortedSql),
-    Q("m_derived_cols", derivedCols _, derivedColsSql),
-    Q("m_try_cast", tryCasts _, tryCastsSql),
-    Q("m_when_contains", whenContains _, whenContainsSql),
-    Q("m_dedup_first", dedupFirst _, dedupFirstSql),
-    Q("m_semi_having", semiHaving _, semiHavingSql),
-    Q("m_min_max_by", minMaxBy _, minMaxBySql),
-    Q("m_cut_right_closed", cutRightClosed _, cutRightClosedSql),
-    Q("m_rolling_daily", rollingDaily _, rollingDailySql),
-    Q("m_json_extract", jsonExtract _, jsonExtractSql),
-    Q("m_map_ops", mapOps _, mapOpsSql),
-    Q("w_tumbling_window", tumblingWindow _, tumblingWindowSql),
-    Q("w_sliding_window", slidingWindow _, slidingWindowSql),
+  lazy val all: Seq[Q] = Seq(
+    Q("m_project_filter_sort", projectFilterSort _, projectFilterSortSql,
+      col("l_orderkey"), col("l_linenumber")),
+    Q("m_collect_sorted", collectSorted _, collectSortedSql, col("l_orderkey")),
+    Q("m_derived_cols", derivedCols _, derivedColsSql, col("event_id")),
+    Q("m_try_cast", tryCasts _, tryCastsSql, col("o_orderkey")),
+    Q("m_when_contains", whenContains _, whenContainsSql, col("category"), col("age_group")),
+    Q("m_dedup_first", dedupFirst _, dedupFirstSql, col("o_custkey")),
+    Q("m_semi_having", semiHaving _, semiHavingSql, col("c_custkey")),
+    Q("m_min_max_by", minMaxBy _, minMaxBySql, col("event_type")),
+    Q("m_cut_right_closed", cutRightClosed _, cutRightClosedSql, col("qty_bin")),
+    Q("m_rolling_daily", rollingDaily _, rollingDailySql, col("ship_day")),
+    Q("m_json_extract", jsonExtract _, jsonExtractSql, col("event_id")),
+    Q("m_map_ops", mapOps _, mapOpsSql, col("mk")),
+    Q("w_tumbling_window", tumblingWindow _, tumblingWindowSql,
+      col("win_start_us"), col("event_type")),
+    Q("w_sliding_window", slidingWindow _, slidingWindowSql,
+      col("win_start_us"), col("event_type")),
   )
 }

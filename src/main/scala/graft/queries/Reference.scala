@@ -40,7 +40,6 @@ object Reference {
     agg
       .withColumn("smoothed_rate", r6(Smoothing.centeredMean(col("avg_rate"), w, 2)))
       .withColumn("time_days", r6(col("bin_center") / lit(1440.0)))
-      .orderBy("category", "age_group", "bin_center")
   }
 
   lazy val a1Sql: String =
@@ -72,9 +71,8 @@ object Reference {
   def a2LagRates(spark: SparkSession, dir: String): DataFrame =
     withLagRates(withPushAge(Tables.events(spark, dir)))
       .select(col("push_id"), col("event_id"), col("rate"), col("mid_age"))
-      .orderBy("push_id", "event_id")
 
-  val a2Sql: String =
+  lazy val a2Sql: String =
     s"""WITH $agedSql,
        |${lagRatesSql("aged")}
        |SELECT push_id, event_id, rate, mid_age
@@ -97,7 +95,6 @@ object Reference {
     Binning.zeroFillDomain(spark, 144, 10, "minute_bin", counts, Seq("n_pushes" -> lit(0L)))
       .withColumn("bin_label", Binning.hhmmLabel(col("minute_bin")))
       .select("minute_bin", "bin_label", "n_pushes")
-      .orderBy("minute_bin")
   }
 
   lazy val b1Sql: String =
@@ -135,10 +132,9 @@ object Reference {
     filled
       .withColumn("smoothed_rate", r6(Smoothing.centeredMean(col("avg_initial_rate"), w, 1)))
       .select("posting_hour", "avg_initial_rate", "smoothed_rate", "n_pushes")
-      .orderBy("posting_hour")
   }
 
-  val b2Sql: String =
+  lazy val b2Sql: String =
     s"""WITH $agedSql,
        |lim AS (SELECT * FROM aged WHERE age_min <= $InitialWindowMinutes),
        |${firstLastAggSql("lim")},
@@ -244,7 +240,6 @@ object Reference {
         count(lit(1)).as("n_pushes_all"))
       .filter(col("n_pushes_all") >= lit(MinPushesPerCity) && col("n_pushes_used") > 0)
       .select("city", "avg_views_gained", "n_pushes_used")
-      .orderBy(col("avg_views_gained").desc, col("city"))
   }
 
   lazy val c1Sql: String = {
@@ -278,9 +273,8 @@ object Reference {
     cityJoined(spark, dir).groupBy("push_id", "city").agg(count(lit(1)).as("n_rows"))
       .groupBy("city").agg(count(lit(1)).as("n_pushes"))
       .filter(col("n_pushes") >= lit(MinPushesPerCity))
-      .orderBy("city")
 
-  val c2Sql: String =
+  lazy val c2Sql: String =
     s"""WITH $cityJoinedSql,
        |pushes AS (SELECT push_id, city FROM j GROUP BY 1, 2)
        |SELECT city, count(*) AS n_pushes FROM pushes
@@ -291,9 +285,8 @@ object Reference {
   def c3PushExtremes(spark: SparkSession, dir: String): DataFrame =
     pushGains(spark, dir)
       .select("push_id", "city", "f_age", "l_age", "views_gained")
-      .orderBy("push_id")
 
-  val c3Sql: String =
+  lazy val c3Sql: String =
     s"""WITH $pushGainsSql
        |SELECT push_id, city, f_age, l_age, views_gained
        |FROM gains ORDER BY push_id""".stripMargin
@@ -325,7 +318,7 @@ object Reference {
           .otherwise(0L)).as("n_used"))
   }
 
-  val c4Sql: String =
+  lazy val c4Sql: String =
     s"""WITH $cityJoinedSql,
        |per AS (
        |  SELECT push_id, city,
@@ -340,14 +333,15 @@ object Reference {
        |       CAST(sum(CASE WHEN f1_us IS NOT NULL AND l_us > f1_us THEN 1 ELSE 0 END) AS BIGINT) AS n_used
        |FROM per WHERE city IN (SELECT city FROM gate)""".stripMargin
 
-  val all: Seq[Q] = Seq(
-    Q("a1_rate_curves", a1RateCurves _, a1Sql),
-    Q("a2_lag_rates", a2LagRates _, a2Sql),
-    Q("b1_pushes_by_timebin", b1PushesByTimebin _, b1Sql),
-    Q("b2_initial_rate_by_hour", b2InitialRateByHour _, b2Sql),
-    Q("c1_city_league", c1CityLeague _, c1Sql),
-    Q("c2_city_gate", c2CityGate _, c2Sql),
-    Q("c3_push_extremes", c3PushExtremes _, c3Sql),
+  lazy val all: Seq[Q] = Seq(
+    Q("a1_rate_curves", a1RateCurves _, a1Sql,
+      col("category"), col("age_group"), col("bin_center")),
+    Q("a2_lag_rates", a2LagRates _, a2Sql, col("push_id"), col("event_id")),
+    Q("b1_pushes_by_timebin", b1PushesByTimebin _, b1Sql, col("minute_bin")),
+    Q("b2_initial_rate_by_hour", b2InitialRateByHour _, b2Sql, col("posting_hour")),
+    Q("c1_city_league", c1CityLeague _, c1Sql, col("avg_views_gained").desc, col("city")),
+    Q("c2_city_gate", c2CityGate _, c2Sql, col("city")),
+    Q("c3_push_extremes", c3PushExtremes _, c3Sql, col("push_id")),
     Q("c4_discard_census", c4DiscardCensus _, c4Sql),
   )
 }

@@ -42,7 +42,6 @@ object Relational {
       .filter(col("is_left") === lit(1))
       .select(col("event_id").as("click_event_id"), col("user_id"),
         col("ts_us").as("click_ts_us"), col("last_purchase_value"), col("last_purchase_ts_us"))
-      .orderBy("click_event_id")
   }
 
   val asofJoinSql: String =
@@ -82,10 +81,9 @@ object Relational {
         col("l_extendedprice") >= col("lo") && col("l_extendedprice") < col("hi"))
       .groupBy("band_id", "lo", "hi")
       .agg(count(lit(1)).as("n_items"), r6(avg(col("l_discount"))).as("avg_discount"))
-      .orderBy("band_id")
   }
 
-  val rangeJoinSql: String =
+  lazy val rangeJoinSql: String =
     s"""WITH bands AS (
        |  SELECT range AS band_id, CAST(range * 10000 AS DOUBLE) AS lo,
        |         CAST((range + 1) * 10000 AS DOUBLE) AS hi
@@ -108,7 +106,6 @@ object Relational {
       .select(col("o_custkey").as("c_custkey"))
     furn.intersect(active).withColumn("tag", lit("furniture_active"))
       .unionByName(furn.except(active).withColumn("tag", lit("furniture_inactive")))
-      .orderBy("tag", "c_custkey")
   }
 
   val setOpsSql: String =
@@ -128,7 +125,6 @@ object Relational {
       .filter(col("age_group").isNotNull)
       .rollup("category", "age_group")
       .agg(count(lit(1)).as("n_customers"), r6(sum(col("c_acctbal"))).as("sum_balance"))
-      .orderBy(col("category").asc_nulls_first, col("age_group").asc_nulls_first)
 
   lazy val rollupAggSql: String =
     s"""SELECT category, age_group, count(*) AS n_customers, ${r6Sql("sum(c_acctbal)")} AS sum_balance
@@ -149,7 +145,6 @@ object Relational {
       .withColumn("rk", row_number().over(w).cast("long")) // DuckDB ranks are BIGINT
       .filter(col("rk") <= lit(3))
       .select(col("c_mktsegment"), col("rk"), col("o_orderkey"), col("o_totalprice"))
-      .orderBy("c_mktsegment", "rk")
   }
 
   val topKPerGroupSql: String =
@@ -176,10 +171,9 @@ object Relational {
       .withColumn("cum_spend", r6(sum(col("o_totalprice")).over(wCum)))
       .select("o_custkey", "o_orderkey", "rk", "drk", "quartile", "pct_rank", "cume",
         "next_price", "second_price", "cum_spend")
-      .orderBy("o_custkey", "o_orderkey")
   }
 
-  val windowFamilySql: String =
+  lazy val windowFamilySql: String =
     s"""SELECT o_custkey, o_orderkey,
        |       rank() OVER wo AS rk,
        |       dense_rank() OVER wo AS drk,
@@ -203,7 +197,6 @@ object Relational {
       .pivot("o_orderstatus", Seq("O", "F", "P"))
       .agg(count(lit(1)))
       .na.fill(0L, Seq("O", "F", "P"))
-      .orderBy("o_orderpriority")
 
   val pivotStatusSql: String =
     """SELECT o_orderpriority,
@@ -223,7 +216,6 @@ object Relational {
           .select("o_custkey"),
         col("c_custkey") === col("o_custkey"), "left_anti")
       .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
 
   val antiJoinSql: String =
     """SELECT c_custkey, c_name FROM customer
@@ -242,9 +234,8 @@ object Relational {
         r6(expr("percentile(l_extendedprice, 0.9)")).as("p90"),
         r6(expr("percentile(l_extendedprice, 0.99)")).as("p99"),
         count(lit(1)).as("n"))
-      .orderBy("l_returnflag")
 
-  val percentilesSql: String =
+  lazy val percentilesSql: String =
     s"""SELECT l_returnflag,
        |       ${r6Sql("quantile_cont(l_extendedprice, 0.5)")} AS p50,
        |       ${r6Sql("quantile_cont(l_extendedprice, 0.9)")} AS p90,
@@ -273,7 +264,6 @@ object Relational {
       // partial-aggregate ordering noise can cross the r6 boundary
       .agg((sum(Num.cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 10000.0)) / lit(10000.0)).as("revenue"),
         count(lit(1)).as("n_lineitems"))
-      .orderBy("r_name", "p_brand")
 
   lazy val starJoinSql: String =
     s"""SELECT r_name, p_brand,
@@ -299,7 +289,6 @@ object Relational {
       .select(col("nationkey"),
         coalesce(col("n_customers"), lit(0L)).as("n_customers"),
         coalesce(col("n_suppliers"), lit(0L)).as("n_suppliers"))
-      .orderBy("nationkey")
   }
 
   val outerJoinSql: String =
@@ -319,9 +308,8 @@ object Relational {
       .select(col("l_orderkey"), col("l_linenumber"),
         expr("stack(3, 'price', l_extendedprice, 'discount', l_discount, 'tax', l_tax) AS (component, amount)"))
       .select(col("l_orderkey"), col("l_linenumber"), col("component"), r6(col("amount")).as("amount"))
-      .orderBy("l_orderkey", "l_linenumber", "component")
 
-  val unpivotSql: String =
+  lazy val unpivotSql: String =
     s"""SELECT l_orderkey, l_linenumber, component, ${r6Sql("amount")} AS amount
        |FROM (
        |  SELECT l_orderkey, l_linenumber, 'price' AS component, l_extendedprice AS amount FROM lineitem
@@ -346,7 +334,6 @@ object Relational {
       .withColumn("cents", cents)
       .withColumn("trailing_30d_spend", sum(col("cents")).over(w) / lit(100.0))
       .select("o_custkey", "o_orderkey", "day", "trailing_30d_spend")
-      .orderBy("o_custkey", "day", "o_orderkey")
   }
 
   lazy val rangeFrameSql: String =
@@ -377,7 +364,6 @@ object Relational {
         (sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))) / lit(10000.0)).as("sum_disc_price"),
         r6(avg(col("l_quantity"))).as("avg_qty"),
         count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
   }
 
   lazy val pricingSummarySql: String =
@@ -419,23 +405,26 @@ object Relational {
        |              WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity >= 49)
        |ORDER BY o.o_orderkey""".stripMargin
 
-  val existsSubquerySql: String = existsSubquerySqlFor("orders", "lineitem")
+  lazy val existsSubquerySql: String = existsSubquerySqlFor("orders", "lineitem")
 
-  val all: Seq[Q] = Seq(
-    Q("r_star_join", starJoin _, starJoinSql),
-    Q("r_pricing_summary", pricingSummary _, pricingSummarySql),
-    Q("r_range_frame", rangeFrame _, rangeFrameSql),
+  lazy val all: Seq[Q] = Seq(
+    Q("r_star_join", starJoin _, starJoinSql, col("r_name"), col("p_brand")),
+    Q("r_pricing_summary", pricingSummary _, pricingSummarySql,
+      col("l_returnflag"), col("l_linestatus")),
+    Q("r_range_frame", rangeFrame _, rangeFrameSql,
+      col("o_custkey"), col("day"), col("o_orderkey")),
     Q("r_exists_subquery", existsSubquery _, existsSubquerySql),
-    Q("r_outer_join", outerJoin _, outerJoinSql),
-    Q("r_unpivot", unpivot _, unpivotSql),
-    Q("r_asof_join", asofJoin _, asofJoinSql),
-    Q("r_range_join", rangeJoin _, rangeJoinSql),
-    Q("r_set_ops", setOps _, setOpsSql),
-    Q("r_rollup", rollupAgg _, rollupAggSql),
-    Q("r_topk_per_group", topKPerGroup _, topKPerGroupSql),
-    Q("r_window_family", windowFamily _, windowFamilySql),
-    Q("r_pivot", pivotStatus _, pivotStatusSql),
-    Q("r_anti_join", antiJoin _, antiJoinSql),
-    Q("r_percentiles", percentiles _, percentilesSql),
+    Q("r_outer_join", outerJoin _, outerJoinSql, col("nationkey")),
+    Q("r_unpivot", unpivot _, unpivotSql, col("l_orderkey"), col("l_linenumber"), col("component")),
+    Q("r_asof_join", asofJoin _, asofJoinSql, col("click_event_id")),
+    Q("r_range_join", rangeJoin _, rangeJoinSql, col("band_id")),
+    Q("r_set_ops", setOps _, setOpsSql, col("tag"), col("c_custkey")),
+    Q("r_rollup", rollupAgg _, rollupAggSql,
+      col("category").asc_nulls_first, col("age_group").asc_nulls_first),
+    Q("r_topk_per_group", topKPerGroup _, topKPerGroupSql, col("c_mktsegment"), col("rk")),
+    Q("r_window_family", windowFamily _, windowFamilySql, col("o_custkey"), col("o_orderkey")),
+    Q("r_pivot", pivotStatus _, pivotStatusSql, col("o_orderpriority")),
+    Q("r_anti_join", antiJoin _, antiJoinSql, col("c_custkey")),
+    Q("r_percentiles", percentiles _, percentilesSql, col("l_returnflag")),
   )
 }

@@ -35,10 +35,9 @@ object Sessions {
       .agg(min("ts_us").as("session_start_us"), max("ts_us").as("session_end_us"),
         count(lit(1)).as("n_events"), r6(sum(col("value"))).as("sum_value"))
       .drop("session_seq")
-      .orderBy("user_id", "session_start_us")
   }
 
-  val sessionizeSql: String =
+  lazy val sessionizeSql: String =
     s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us, value FROM events),
        |lagd AS (
        |  SELECT *, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_us
@@ -66,9 +65,8 @@ object Sessions {
       .agg(count(lit(1)).as("n_events"), r6(sum(col("value"))).as("sum_value"))
       .select(col("user_id"), unix_micros(col("win.start")).as("session_start_us"),
         unix_micros(col("win.end")).as("session_end_us"), col("n_events"), col("sum_value"))
-      .orderBy("user_id", "session_start_us")
 
-  val sessionWindowAggSql: String =
+  lazy val sessionWindowAggSql: String =
     s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us, value FROM events),
        |lagd AS (
        |  SELECT *, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_us
@@ -127,7 +125,7 @@ object Sessions {
   def funnel(spark: SparkSession, dir: String): DataFrame =
     funnelOn(Tables.events(spark, dir))
 
-  val funnelSql: String =
+  lazy val funnelSql: String =
     s"""WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
        |v AS (SELECT user_id, min(ts_us) AS t_view FROM e
        |      WHERE event_type = 'view' GROUP BY 1),
@@ -181,7 +179,6 @@ object Sessions {
           .cast("long").as("weeks_since"))
       .groupBy("cohort_week", "weeks_since")
       .agg(count(lit(1)).as("n_active"))
-      .orderBy("cohort_week", "weeks_since")
 
   def cohortsOn(events: DataFrame): DataFrame =
     cohortsFromPairs(cohortPairsOn(events))
@@ -243,7 +240,6 @@ object Sessions {
       .filter(col("tag") === lit(1))
       .select(col("event_id"), col("user_id"), col("ts_us"),
         col("quote_event_id"), col("quote_ts_us"), col("quote_value"))
-      .orderBy("event_id")
   }
 
   def asofJoin(spark: SparkSession, dir: String): DataFrame =
@@ -285,7 +281,6 @@ object Sessions {
       .filter(col("tag") === lit(0))
       .select(col("event_id"), col("user_id"), col("ts_us"),
         col("quote_event_id"), col("quote_ts_us"), col("quote_value"))
-      .orderBy("event_id")
   }
 
   def asofForward(spark: SparkSession, dir: String): DataFrame =
@@ -313,7 +308,6 @@ object Sessions {
         when(in, col("quote_event_id")).as("quote_event_id"),
         when(in, col("quote_ts_us")).as("quote_ts_us"),
         when(in, col("quote_value")).as("quote_value"))
-      .orderBy("event_id")
   }
 
   def asofHorizon(spark: SparkSession, dir: String): DataFrame =
@@ -380,7 +374,6 @@ object Sessions {
         col("v_ts_us") >= col("c_ts_us") - lit(GapUs))
       .select(col("click_event_id"), col("user_id"), col("c_ts_us"),
         col("view_event_id"), col("v_ts_us"), col("view_value"))
-      .orderBy("click_event_id", "view_event_id")
   }
 
   def clickAttribution(spark: SparkSession, dir: String): DataFrame =
@@ -417,7 +410,6 @@ object Sessions {
           col("v_ts_us") >= col("c_ts_us") - lit(GapUs),
         "left_anti")
       .select(col("click_event_id"), col("user_id"), col("c_ts_us"))
-      .orderBy("click_event_id")
   }
 
   def unattributed(spark: SparkSession, dir: String): DataFrame =
@@ -484,14 +476,13 @@ object Sessions {
       .select(col("event_type"), col("bucket_us"), col("n"),
         r6(mu).as("base_mean"), r6(sqrt(varP)).as("base_std"),
         r6(z).as("z"), (r6(z) >= lit(SpikeZ)).as("is_spike"))
-      .orderBy("event_type", "bucket_us")
   }
 
   def rateSpike(spark: SparkSession, dir: String): DataFrame =
     rateSpikeOn(Tables.events(spark, dir)
       .withColumn("ts_us", unix_micros(col("ts"))))
 
-  val rateSpikeSql: String =
+  lazy val rateSpikeSql: String =
     s"""WITH e AS (
        |  SELECT event_type, (epoch_us(ts) // $HourUs) * $HourUs AS bucket_us FROM events),
        |counts AS (SELECT event_type, bucket_us, count(*) AS n FROM e GROUP BY 1, 2),
@@ -519,16 +510,18 @@ object Sessions {
        |       ${r6Sql("(n - mu) / greatest(sqrt(varp), 1.0)")} >= $SpikeZ AS is_spike
        |FROM scored ORDER BY event_type, bucket_us""".stripMargin
 
-  val all: Seq[Q] = Seq(
-    Q("w_sessionize", sessionize _, sessionizeSql),
-    Q("w_rate_spike", rateSpike _, rateSpikeSql),
-    Q("w_asof_join", asofJoin _, asofJoinSql),
-    Q("w_asof_forward", asofForward _, asofForwardSql),
-    Q("w_asof_horizon", asofHorizon _, asofHorizonSql),
-    Q("w_click_attribution", clickAttribution _, clickAttributionSql),
-    Q("w_unattributed", unattributed _, unattributedSql),
-    Q("w_session_window", sessionWindowAgg _, sessionWindowAggSql),
+  lazy val all: Seq[Q] = Seq(
+    Q("w_sessionize", sessionize _, sessionizeSql, col("user_id"), col("session_start_us")),
+    Q("w_rate_spike", rateSpike _, rateSpikeSql, col("event_type"), col("bucket_us")),
+    Q("w_asof_join", asofJoin _, asofJoinSql, col("event_id")),
+    Q("w_asof_forward", asofForward _, asofForwardSql, col("event_id")),
+    Q("w_asof_horizon", asofHorizon _, asofHorizonSql, col("event_id")),
+    Q("w_click_attribution", clickAttribution _, clickAttributionSql,
+      col("click_event_id"), col("view_event_id")),
+    Q("w_unattributed", unattributed _, unattributedSql, col("click_event_id")),
+    Q("w_session_window", sessionWindowAgg _, sessionWindowAggSql,
+      col("user_id"), col("session_start_us")),
     Q("w_funnel", funnel _, funnelSql),
-    Q("w_cohorts", cohorts _, cohortsSql),
+    Q("w_cohorts", cohorts _, cohortsSql, col("cohort_week"), col("weeks_since")),
   )
 }

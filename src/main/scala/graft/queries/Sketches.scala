@@ -26,10 +26,9 @@ object Sketches {
         r6(kmv(col("uid_str"))).as("est_distinct_users"),
         countDistinct(col("user_id")).as("exact_distinct_users"),
         count(lit(1)).as("n_events"))
-      .orderBy("event_type")
   }
 
-  val kmvDistinctSql: String = {
+  lazy val kmvDistinctSql: String = {
     val est = KmvSketch.estimateSql("CAST(user_id AS VARCHAR)", "events", "event_type")
     s"""WITH est AS ($est),
        |exact AS (
@@ -50,7 +49,6 @@ object Sketches {
       .filter(col("age_group").isNotNull)
       .cube("category", "age_group")
       .agg(count(lit(1)).as("n_customers"), r6(sum(col("c_acctbal"))).as("sum_balance"))
-      .orderBy(col("category").asc_nulls_first, col("age_group").asc_nulls_first)
 
   lazy val cubeAggSql: String =
     s"""SELECT category, age_group, count(*) AS n_customers, ${r6Sql("sum(c_acctbal)")} AS sum_balance
@@ -74,7 +72,6 @@ object Sketches {
       .agg(count(lit(1)).as("pc"), sum(col("value").cast("long")).as("pv"))
       .groupBy("event_type")
       .agg(sum("pc").as("n_events"), sum("pv").as("sum_value_floor"))
-      .orderBy("event_type")
 
   val saltedAggSql: String =
     """SELECT event_type, count(*) AS n_events,
@@ -108,7 +105,6 @@ object Sketches {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         sum(graft.ops.Num.cents(col("value")) * col("weight")).as("weighted_cents"))
-      .orderBy("event_type")
   }
 
   lazy val saltedJoinSql: String = {
@@ -154,9 +150,8 @@ object Sketches {
         // diagnosable from the correctness record, not just a hash mismatch
         r6(col("p50")).as("exact_p50"),
         col("n_events"))
-      .orderBy("event_type")
 
-  val approxAggSql: String =
+  lazy val approxAggSql: String =
     s"""SELECT event_type, TRUE AS approx_users_ok, TRUE AS approx_p50_ok,
        |       count(DISTINCT user_id) AS exact_users,
        |       ${r6Sql("quantile_cont(value, 0.5)")} AS exact_p50,
@@ -189,7 +184,6 @@ object Sketches {
         col("sk.p90_cents").as("p90_cents"),
         col("sk.p99_cents").as("p99_cents"),
         col("sk.n").as("n_events"))
-      .orderBy("event_type")
   }
 
   lazy val quantileSketchSql: String = {
@@ -228,7 +222,6 @@ object Sketches {
         col("sk.p90_cents").as("p90_cents"),
         col("sk.p99_cents").as("p99_cents"),
         col("sk.n").as("n_events"))
-      .orderBy("event_type")
   }
 
   val quantileSignedSql: String = {
@@ -256,9 +249,8 @@ object Sketches {
         Seq(Seq(col("o_orderstatus"), col("order_year")), Seq(col("o_orderstatus")), Seq()),
         col("o_orderstatus"), col("order_year"))
       .agg(count(lit(1)).as("n_orders"), r6(sum(col("o_totalprice"))).as("sum_price"))
-      .orderBy(col("o_orderstatus").asc_nulls_first, col("order_year").asc_nulls_first)
 
-  val groupingSetsAggSql: String =
+  lazy val groupingSetsAggSql: String =
     s"""SELECT o_orderstatus, order_year, count(*) AS n_orders, ${r6Sql("sum(o_totalprice)")} AS sum_price
        |FROM (SELECT o_orderstatus, substr(CAST(o_orderdate AS VARCHAR), 1, 4) AS order_year, o_totalprice
        |      FROM orders)
@@ -384,7 +376,6 @@ object Sketches {
         col("sk.p90_cents").as("p90_cents"),
         col("sk.p99_cents").as("p99_cents"),
         col("sk.n").as("n_events"))
-      .orderBy("event_type")
   }
 
   lazy val quantileShardsSql: String = {
@@ -401,16 +392,18 @@ object Sketches {
        |ORDER BY e.event_type""".stripMargin
   }
 
-  val all: Seq[Q] = Seq(
-    Q("k_kmv_distinct", kmvDistinct _, kmvDistinctSql),
+  lazy val all: Seq[Q] = Seq(
+    Q("k_kmv_distinct", kmvDistinct _, kmvDistinctSql, col("event_type")),
     Q("k_kmv_overlap", kmvOverlap _, kmvOverlapSql),
-    Q("k_cube", cubeAgg _, cubeAggSql),
-    Q("k_grouping_sets", groupingSetsAgg _, groupingSetsAggSql),
-    Q("k_salted_agg", saltedAgg _, saltedAggSql),
-    Q("k_salted_join", saltedJoin _, saltedJoinSql),
-    Q("k_approx_agg", approxAgg _, approxAggSql),
-    Q("k_quantile_sketch", quantileSketch _, quantileSketchSql),
-    Q("k_quantile_signed", quantileSigned _, quantileSignedSql),
-    Q("k_quantile_shards", quantileShards _, quantileShardsSql),
+    Q("k_cube", cubeAgg _, cubeAggSql,
+      col("category").asc_nulls_first, col("age_group").asc_nulls_first),
+    Q("k_grouping_sets", groupingSetsAgg _, groupingSetsAggSql,
+      col("o_orderstatus").asc_nulls_first, col("order_year").asc_nulls_first),
+    Q("k_salted_agg", saltedAgg _, saltedAggSql, col("event_type")),
+    Q("k_salted_join", saltedJoin _, saltedJoinSql, col("event_type")),
+    Q("k_approx_agg", approxAgg _, approxAggSql, col("event_type")),
+    Q("k_quantile_sketch", quantileSketch _, quantileSketchSql, col("event_type")),
+    Q("k_quantile_signed", quantileSigned _, quantileSignedSql, col("event_type")),
+    Q("k_quantile_shards", quantileShards _, quantileShardsSql, col("event_type")),
   )
 }

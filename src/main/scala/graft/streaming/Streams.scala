@@ -1072,7 +1072,7 @@ object Streams {
         // both batch-sized and final (checkpointed — each feeds the state
         // append AND the verdict assembly)
         val featNew = M.mmFunnelDocStateOn(b).localCheckpoint()
-        val afNew = M.alignFilterRowsOn(b, embeddings)
+        val afNew = M.alignFilterOn(b, embeddings)
           .select(col("doc_id"), col("align_cos"), col("keep")).localCheckpoint()
         // dedup + cluster reconcile: the registered incremental algorithm
         // with its streamed-ingest seams (added-only delta, stream hashes)
@@ -1111,7 +1111,7 @@ object Streams {
           .map(_.unionByName(featNew)).getOrElse(featNew.toDF())
         val af = committedStateBefore(spark, statePath, "af", id, committed)
           .map(_.unionByName(afNew)).getOrElse(afNew.toDF())
-        val ka = M.mediaKeepBestAlignedRowsFrom(revised, af)
+        val ka = M.mediaKeepBestAlignedFrom(revised, af)
           .select("cluster_id", "keep_doc_id")
         val base = feat.join(revised.select("doc_id"), Seq("doc_id"), "left_semi")
         try {

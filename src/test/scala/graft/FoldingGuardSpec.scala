@@ -23,11 +23,19 @@ import java.io.File
   *  1. NO strict val may interpolate ANY cross-object member — val, lazy
   *     val, or def (zero-arg or called): a def's OUTPUT is frozen into
   *     the caller just the same, computed against whatever mid-init state
-  *     the target object happens to be in. Every such site must be a
-  *     `lazy val`, forced at first runtime use when every object
-  *     initializer has completed (round 16 converted all 41 sites);
+  *     the target object happens to be in. The member may be named
+  *     qualified (`${Obj.member}`, anywhere inside the interpolation), by
+  *     a bare name an `import Obj._` / `import Obj.{member}` brings into
+  *     scope, or reached through a chain of SAME-object defs and lazy
+  *     vals the strict val interpolates or calls (their output is
+  *     computed during the strict val's own initialization). Every such
+  *     site must be a `lazy val`, forced at first runtime use when every
+  *     object initializer has completed (round 16 converted all 41 sites);
   *  2. NO strict val may interpolate a SAME-object strict val declared on
-  *     a later line (the same freeze, no cycle needed).
+  *     a later line (the same freeze, no cycle needed);
+  *  3. every registry list (`all`) is a `lazy val`: a strict one forces
+  *     each oracle SQL it names inside its object's initializer, so the
+  *     lazy SQLs of rule 1 would freeze all the same.
   *
   * Literal `final val`s are exempt: a compile-time constant has no field
   * initialization at all ([[graft.ext.Similarity]] `Sq8Levels`). The
@@ -104,21 +112,98 @@ class FoldingGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   private lazy val byObj: Map[String, Map[String, Member]] =
     allMembers.groupBy(_.obj).map { case (o, ms) => o -> ms.map(m => m.name -> m).toMap }
 
-  // ${...Obj.member} — greedy dotted prefix so the LAST two segments are
-  // captured (handles ${graft.ext.Corpus.DeltaChanged}). Plain refs and
-  // def CALLS are flagged alike: a def's output is frozen into the caller
-  // just the same, computed against mid-init target state (rule 1 above;
-  // the self-check pins a baseHashSql("q") call firing).
-  private val crossRe = """\$\{(?:\w+\.)*(\w+)\.(\w+)""".r
+  // Obj.member anywhere inside an interpolation — greedy dotted prefix so
+  // the LAST two segments are captured (handles
+  // ${graft.ext.Corpus.DeltaChanged} and ${r6Sql(Smoothing.meanSql(..))}).
+  // Plain refs and def CALLS are flagged alike: a def's output is frozen
+  // into the caller just the same, computed against mid-init target state
+  // (rule 1 above; the self-check pins a baseHashSql("q") call firing).
+  private val crossRe = """(?:\w+\.)*(\w+)\.(\w+)""".r
+  // a bare name inside an interpolation: a same-object member or one an
+  // import brought into scope
+  private val bareRe = """(?<![\w.])([A-Za-z_]\w*)""".r
   // $name / ${name} — the same-object shorthand
   private val selfRe = """\$\{?(\w+)\}?""".r
+  // import a.b.Obj._ / import a.b.Obj.{x, y}
+  private val importRe = """^\s*import\s+(?:[\w.]*\.)?(\w+)\.(?:_|\{([^}]*)\})\s*$""".r
 
-  private def crossValRefs(m: Member, index: Map[String, Map[String, Member]]) = for {
-    r <- crossRe.findAllMatchIn(m.body).toSeq
-    if r.group(1) != m.obj
-    objMembers <- index.get(r.group(1)).toSeq
-    t <- objMembers.get(r.group(2)).toSeq if t.kind != "const"
-  } yield t
+  /** The interpolated expressions of a body: each brace-balanced `${...}`
+    * and each `$name` (`$$` is a literal dollar). */
+  private def interpolations(body: String): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var i = 0
+    while (i < body.length - 1) {
+      val c = body(i + 1)
+      if (body(i) != '$') i += 1
+      else if (c == '$') i += 2
+      else if (c == '{') {
+        var depth = 1
+        var j = i + 2
+        while (j < body.length && depth > 0) {
+          if (body(j) == '{') depth += 1 else if (body(j) == '}') depth -= 1
+          j += 1
+        }
+        out += body.substring(i + 2, j - 1)
+        i = j
+      } else if (c.isLetter || c == '_') {
+        var j = i + 1
+        while (j < body.length && (body(j).isLetterOrDigit || body(j) == '_')) j += 1
+        out += body.substring(i + 1, j)
+        i = j
+      } else i += 1
+    }
+    out.result()
+  }
+
+  /** Source file -> its imports of single objects: (object name, the
+    * selected names, or None for a wildcard). */
+  private def importsOf(text: String): Seq[(String, Option[Set[String]])] =
+    text.split("\n").toSeq.flatMap(l => importRe.findFirstMatchIn(l)).map { m =>
+      m.group(1) -> Option(m.group(2)).map(_.split(",").map(_.trim)
+        .filterNot(_.contains("=>")).toSet)
+    }
+
+  private def fileOf(m: Member): String = m.file.takeWhile(_ != ':')
+
+  /** Every cross-object non-constant member `m` freezes into its value:
+    * qualified refs, imported bare names, and — transitively — the
+    * cross-object refs of the same-object defs and lazy vals it names
+    * (interpolated, or called anywhere in `m`'s own initializer). */
+  private def crossValRefs(m: Member, index: Map[String, Map[String, Member]],
+                           imports: Map[String, Seq[(String, Option[Set[String]])]] =
+                             importsByFile): Seq[Member] = {
+    val own = index.getOrElse(m.obj, Map.empty)
+    def imported(name: String): Seq[Member] = for {
+      (o, sel) <- imports.getOrElse(fileOf(m), Nil) if o != m.obj && sel.forall(_(name))
+      t <- index.get(o).flatMap(_.get(name)).toSeq
+    } yield t
+    def direct(x: Member): (Seq[Member], Seq[Member]) = {
+      val exprs = interpolations(x.body).map(_.replaceAll("\"[^\"]*\"", "\"\""))
+      // the initializer's own code: string literals and comments removed
+      val code = if (x ne m) Nil
+        else Seq(x.body.replaceAll("(?s)\"\"\".*?\"\"\"|\"[^\"\n]*\"|/\\*.*?\\*/|//[^\n]*", " "))
+      val qualified = for {
+        e <- exprs; r <- crossRe.findAllMatchIn(e).toSeq if r.group(1) != x.obj
+        t <- index.get(r.group(1)).flatMap(_.get(r.group(2))).toSeq
+      } yield t
+      val bare = exprs.flatMap(e => bareRe.findAllMatchIn(e).map(_.group(1))).distinct
+      val called = code.flatMap(e => bareRe.findAllMatchIn(e).map(_.group(1)))
+      val same = (bare ++ called).distinct.flatMap(own.get).filter(t => t.name != x.name &&
+        (t.kind == "def" || t.kind == "lazy"))
+      (qualified ++ bare.filterNot(own.contains).flatMap(imported), same)
+    }
+    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+    def walk(x: Member): Seq[Member] =
+      if (!seen.add(x.name)) Nil
+      else {
+        val (cross, same) = direct(x)
+        cross ++ same.flatMap(walk)
+      }
+    walk(m).filter(_.kind != "const").distinct
+  }
+
+  private lazy val importsByFile: Map[String, Seq[(String, Option[Set[String]])]] =
+    scalaFiles(new File("src/main/scala/graft")).map(f => f.getPath -> importsOf(readUtf8(f))).toMap
 
   test("no strict val interpolates any cross-object member — make it a lazy val") {
     val bad = for {
@@ -141,6 +226,15 @@ class FoldingGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(bad.isEmpty,
       "same-object forward interpolation freezes the type default — move the " +
         "constant above its user or make the user lazy:\n" + bad.mkString("\n"))
+  }
+
+  test("registry lists are lazy: no object initializer forces its oracle SQLs") {
+    // seen: with strict lists, a fresh JVM that touched Corpus first
+    // rendered `doc_id % 0` into the dd_clusters_rolled and s_ivf_* oracles
+    val strict = allMembers.filter(m => m.name == "all" && m.kind != "lazy")
+    assert(allMembers.count(_.name == "all") >= 10, "scan lost the registry lists")
+    assert(strict.isEmpty,
+      "strict registry lists: " + strict.map(m => s"${m.file}:${m.line}").mkString(", "))
   }
 
   test("scanner self-check: a synthetic offending source is detected (vacuity control)") {
@@ -168,6 +262,33 @@ class FoldingGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     val fwd = selfRe.findAllMatchIn(bySample("badSql").body).map(_.group(1)).toSeq
       .flatMap(n => bySample.get(n)).filter(t => t.kind == "val" && t.line > bySample("badSql").line)
     assert(fwd.map(_.name) == Seq("LaterVal"), s"got $fwd")
+  }
+
+  test("scanner self-check: imported names and same-object def chains are followed") {
+    val text =
+      """object Fake2 {
+        |  import Pushes._
+        |  import graft.ops.Num.{r6Sql}
+        |  private def chainSql: String = s"x ${Dims.cleanCitySql("n_name")} y"
+        |  lazy val lazyChainSql = s"z $chainSql"
+        |  val viaImport = s"a $MinPushesPerCity b ${r6Sql("avg(x)")}"
+        |  val viaChain = s"a $lazyChainSql b"
+        |  val clean = s"a ${1 + 2} b"
+        |  val viaCall: String = chainSql + "x"
+        |}""".stripMargin
+    val sample = parse("Fake2", "fake2.scala", text)
+    val index = byObj + ("Fake2" -> sample.map(m => m.name -> m).toMap)
+    val imports = Map("fake2.scala" -> importsOf(text))
+    def hits(name: String) = crossValRefs(sample.find(_.name == name).get, index, imports)
+      .map(t => (t.obj, t.name))
+    assert(hits("viaImport") == Seq(("Pushes", "MinPushesPerCity"), ("Num", "r6Sql")),
+      s"got ${hits("viaImport")}")
+    assert(hits("viaChain") == Seq(("Dims", "cleanCitySql")), s"got ${hits("viaChain")}")
+    assert(hits("clean").isEmpty)
+    assert(hits("viaCall") == Seq(("Dims", "cleanCitySql")), s"got ${hits("viaCall")}")
+    // the real tree's import scan sees Reference's object import
+    assert(importsByFile.exists { case (f, is) =>
+      f.endsWith("Reference.scala") && is.contains("Pushes" -> None) })
   }
 
   test("nested object names stay disjoint from top-level objects (index shadowing guard)") {
@@ -227,6 +348,9 @@ class FoldingGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(byObj("Dedup")("fuzzyDecontaminateSql").kind == "lazy")
     assert(byObj("Curation")("curationFunnelSql").kind == "lazy")
     assert(byObj("Multimodal")("mediaClustersRolledSql").kind == "lazy")
+    // reached only through `import Pushes._` and the cityJoinedSql def
+    assert(byObj("Reference")("c2Sql").kind == "lazy")
+    assert(byObj("Reference")("c4Sql").kind == "lazy")
     // literal final vals are compile-time constants, exempt by design
     assert(byObj("Similarity")("Sq8Levels").kind == "const")
     // the constants the r15 bug froze are still strict vals the rules watch

@@ -13,6 +13,10 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Plan of the registered query: builder plus its presentation sort
+    * (the library `*On` frames are unsorted). */
+  private def registered(name: String): String = plan(SparkEntry.queries(name)(spark, dir))
+
   test("projected filtered scan pushes filters into the parquet reader") {
     val p = plan(Micro.projectFilterSort(spark, dir))
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate)"), p.take(2000))
@@ -44,7 +48,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("lag-rate pipeline has exactly one pre-window shuffle (by push key)") {
-    val p = plan(Reference.a2LagRates(spark, dir))
+    val p = registered("a2_lag_rates")
     // exchanges: one hashpartitioning(push_id) for the window + the final
     // rangepartitioning for the ORDER BY — nothing else
     val exchanges = "Exchange (hash|range)partitioning".r.findAllIn(p).size
@@ -58,8 +62,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("sharded packer's window and aggregate share one (lang, shard) shuffle") {
-    val p = plan(graft.ext.Corpus.seqPackShardedOn(
-      graft.ops.Tables.documents(spark, dir)))
+    val p = registered("t_seq_pack_sharded")
     // one hashpartitioning(lang, shard) feeds the running-sum window AND the
     // downstream partial-agg'd groupBy (its keys are a superset); the only
     // other exchange is the presentation sort's rangepartitioning
@@ -250,7 +253,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("epoch shuffle: rank windows partition by (epoch, shard) — no corpus-global sort before ranks") {
-    val p = plan(graft.ext.Corpus.epochShuffle(spark, dir))
+    val p = registered("t_epoch_shuffle")
     assert(p.contains("hashpartitioning(epoch"), "rank window not shard-partitioned:\n" + p.take(3000))
     // exactly one rangepartitioning: the presentation sort AFTER ranking
     assert("Exchange rangepartitioning".r.findAllIn(p).size <= 1,
@@ -352,7 +355,7 @@ class PlanSpec extends SparkSpec {
     // plan shows the pack rejoin over the checkpoint; the two warehouse
     // inputs are pinned on their own entry points (what the manifest
     // composes — a recompute there would be a recompute here)
-    val pf = plan(graft.ext.Curation.funnelManifest(spark, dir))
+    val pf = plan(graft.ext.Curation.curationFunnel(spark, dir))
     assert(pf.contains("graft_funnel_manifest"),
       "funnel manifest is not a warehouse read:\n" + pf.take(3000))
     val pd = plan(graft.ext.Dedup.dupClusters(spark, dir))
@@ -637,7 +640,7 @@ class PlanSpec extends SparkSpec {
 
   test("chunk windows: no shuffle before the presentation sort; rollup shares one partial agg") {
     val docs = graft.ops.Tables.documents(spark, dir)
-    val pc = plan(graft.ext.Corpus.chunkWindowsOn(docs))
+    val pc = registered("t_chunk_windows")
     // row-local explode: the ONLY exchanges are the reader's round-robin
     // and the final range partition for the sort
     val exchanges = "Exchange (hash|range)partitioning".r.findAllIn(pc).size

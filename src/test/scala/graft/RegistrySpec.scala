@@ -46,6 +46,39 @@ class RegistrySpec extends SparkSpec {
     assert(zeroDiv.isEmpty, s"zero modulus/divisor in: ${zeroDiv.keys}")
   }
 
+  test("each registered order runs once: the root global Sort of the registered plan") {
+    // no execution: the optimized plan's root must be a global Sort on
+    // exactly q.order (count() would let Catalyst drop it, so the run-all
+    // test below says nothing about order), and the builder's own frame
+    // must not end in a sort of its own
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    // by output name: the optimizer may re-id an attribute (the distinct-
+    // aggregate rewrite does) without changing which column it is
+    def key(o: Seq[SortOrder]) = o.map(s => (s.child match {
+      case a: Attribute => a.name
+      case e => e.sql
+    }, s.direction, s.nullOrdering))
+    val bad = SparkEntry.registry.filter(_.order.nonEmpty).sortBy(_.name).flatMap { q =>
+      try {
+        val df = SparkEntry.queries(q.name)(spark, dir)
+        val expected = key(df.orderBy(q.order: _*).queryExecution.analyzed.asInstanceOf[Sort].order)
+        val root = df.queryExecution.optimizedPlan match {
+          case Sort(order, true, _, _) if key(order) == expected => None
+          case p => Some(s"${q.name}: optimized root ${p.nodeName} is not a global Sort " +
+            s"on ${q.order.mkString(", ")}")
+        }
+        val builder = df.queryExecution.analyzed match {
+          case Sort(_, true, Sort(_, true, _, _), _) => Some(s"${q.name}: the builder sorts too")
+          case _ => None
+        }
+        root ++ builder
+      } catch { case e: Throwable => Some(s"${q.name}: ${e.getMessage.take(200)}") }
+    }
+    spark.catalog.clearCache()
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("every registered query executes and returns a non-degenerate schema at sf0.001") {
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try {

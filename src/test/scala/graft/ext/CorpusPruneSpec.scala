@@ -21,8 +21,11 @@ class CorpusPruneSpec extends SparkSpec {
       .toDF("doc_id", "lang", "source", "text")
   }
 
+  /** Rows in (doc_id, copy_idx) order: both forms return unsorted frames. */
   private def rows(df: DataFrame): Seq[String] =
-    df.collect().toSeq.map(_.toString)
+    df.orderBy(Seq("doc_id", "copy_idx").filter(df.columns.contains)
+      .map(col): _*)
+      .collect().toSeq.map(_.toString)
 
   test("stratified sample: pruned plan is bit-identical to the exact window on a skewed corpus") {
     val pruned = rows(Corpus.stratifiedSampleOn(skewed, budget = 120L))

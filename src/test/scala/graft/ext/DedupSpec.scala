@@ -204,10 +204,10 @@ class DedupSpec extends SparkSpec {
       (7L, y), (8L, w), (9L, w)).toDF("doc_id", "text")
     val incr = Dedup.dupClustersIncrementalOn(old, nw,
         Dedup.dupClustersOn(old), Dedup.dupEdgesOn(old))
-      .as[(Long, Long, Long, Boolean)].collect().toSeq
+      .orderBy("doc_id").as[(Long, Long, Long, Boolean)].collect().toSeq
     spark.catalog.clearCache()
     val scratch = Dedup.dupClustersOn(nw)
-      .as[(Long, Long, Long, Boolean)].collect().toSeq
+      .orderBy("doc_id").as[(Long, Long, Long, Boolean)].collect().toSeq
     spark.catalog.clearCache()
     assert(incr === scratch)
     // the interesting shapes actually happened
@@ -286,7 +286,7 @@ class DedupSpec extends SparkSpec {
     val nw = graft.ext.Corpus.deltaNewSlice(docs)
     val incr = Dedup.dupClustersIncrementalOn(old, nw,
         Dedup.dupClustersOn(old), Dedup.dupEdgesOn(old))
-      .as[(Long, Long, Long, Boolean)].collect().toSeq
+      .orderBy("doc_id").as[(Long, Long, Long, Boolean)].collect().toSeq
     spark.catalog.clearCache()
     // warehouse-signature path (the registered query's shape): unchanged
     // docs reuse stored signatures, only fresh docs get signed — must be
@@ -294,10 +294,10 @@ class DedupSpec extends SparkSpec {
     val incrSigs = Dedup.dupClustersIncrementalOn(old, nw,
         Dedup.dupClustersOn(old), Dedup.dupEdgesOn(old),
         oldSigs = Some(Dedup.minhashSigsOn(old)))
-      .as[(Long, Long, Long, Boolean)].collect().toSeq
+      .orderBy("doc_id").as[(Long, Long, Long, Boolean)].collect().toSeq
     spark.catalog.clearCache()
     val scratch = Dedup.dupClustersOn(nw)
-      .as[(Long, Long, Long, Boolean)].collect().toSeq
+      .orderBy("doc_id").as[(Long, Long, Long, Boolean)].collect().toSeq
     spark.catalog.clearCache()
     assert(incr.nonEmpty && incr === scratch)
     assert(incrSigs === scratch, "warehouse-sigs path diverged from sign-everything path")
@@ -474,7 +474,7 @@ class DedupSpec extends SparkSpec {
     assert(statuses === Set("added", "removed", "changed", "unchanged"))
     // the registered chained output equals a from-scratch cluster build of
     // the final snapshot (the same equality the DuckDB oracle re-proves)
-    val got = Dedup.dupClustersRolled(spark, dir).collect().map(_.toSeq).toSeq
+    val got = Dedup.dupClustersRolled(spark, dir).orderBy("doc_id").collect().map(_.toSeq).toSeq
     spark.catalog.clearCache()
     val want = Dedup.dupClustersOn(s2).orderBy("doc_id").collect().map(_.toSeq).toSeq
     spark.catalog.clearCache()
@@ -510,7 +510,7 @@ class DedupSpec extends SparkSpec {
     val manifest = Dedup.dupClustersOn(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
     spark.catalog.clearCache()
-    val stats = Dedup.clusterStatsOn(docs).collect()
+    val stats = Dedup.clusterStatsOn(docs).orderBy("cluster_size").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     spark.catalog.clearCache()
     val expected = manifest.filter(_._4).groupBy(_._3).toSeq.sortBy(_._1)
@@ -524,7 +524,7 @@ class DedupSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.ops.Tables.documents(spark, dir)
     val manifest = Dedup.dupClustersOn(docs)
-    val scores = Text.textStatsRowsOn(docs)
+    val scores = Text.textStatsOn(docs)
       .select(col("doc_id"), col("quality_score")).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val members = manifest.select("cluster_id", "doc_id").collect()
@@ -576,7 +576,7 @@ class DedupSpec extends SparkSpec {
 
   test("threshold curve partitions the candidate set and cumulates monotonically") {
     val docs = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
-    val curve = Dedup.thresholdCurveOn(docs)
+    val curve = Dedup.thresholdCurveOn(docs).orderBy(col("est_jaccard").desc)
       .as[(Double, Long, Long)].collect().toSeq
     val cand = Dedup.minhashLshOn(docs)
       .as[(Long, Long, Double)].collect().toSeq

@@ -87,10 +87,10 @@ class LibraryApiSpec extends SparkSpec {
   }
 
   test("corpus mixing and packing run on a hand-built documents frame") {
-    val mixed = Corpus.mixOn(docs).collect()
+    val mixed = Corpus.mixOn(docs).orderBy("doc_id", "copy_idx").collect()
     // deterministic: same input -> same mix, copies contiguous per doc
     assert(mixed.nonEmpty)
-    assert(Corpus.mixOn(docs).collect().toSeq === mixed.toSeq)
+    assert(Corpus.mixOn(docs).orderBy("doc_id", "copy_idx").collect().toSeq === mixed.toSeq)
     // copy_idx within each doc is 1..n with no gaps
     mixed.groupBy(_.getLong(0)).foreach { case (_, rows) =>
       assert(rows.map(_.getLong(4)).sorted.toSeq === (1L to rows.length).toSeq)
@@ -117,7 +117,8 @@ class LibraryApiSpec extends SparkSpec {
     assert(out(21L)._1 === 0L && out(21L)._3, "non-overlapping doc must be kept")
     assert(out(22L)._2 === 0.0 && out(22L)._3, "shingle-less doc is kept with contamination 0")
     // deterministic: same corpus -> same decisions
-    assert(Corpus.decontaminateOn(d).collect().toSeq === Corpus.decontaminateOn(d).collect().toSeq)
+    assert(Corpus.decontaminateOn(d).orderBy("doc_id").collect().toSeq ===
+      Corpus.decontaminateOn(d).orderBy("doc_id").collect().toSeq)
   }
 
   test("decontaminateAgainstOn takes a separate eval frame (the real-world entry point)") {
@@ -154,8 +155,9 @@ class LibraryApiSpec extends SparkSpec {
     // hash-Bernoulli 90/5/5: binomial noise at n=500 stays well within ±5pp
     assert(math.abs(bylot("train").toDouble / n - 0.90) < 0.05, bylot.toString)
     // a doc's split never changes across runs or input orderings
-    val a = out.collect().toSeq
-    val b = Corpus.splitOn(bigDocs.orderBy(org.apache.spark.sql.functions.rand(7))).collect().toSeq
+    val a = out.orderBy("doc_id").collect().toSeq
+    val b = Corpus.splitOn(bigDocs.orderBy(org.apache.spark.sql.functions.rand(7)))
+      .orderBy("doc_id").collect().toSeq
     assert(a === b, "split depends on input ordering")
   }
 
@@ -276,7 +278,7 @@ class LibraryApiSpec extends SparkSpec {
 
   test("split leakage report: six zero-filled combos, leak flag consistent, pair mass conserved") {
     val docs = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
-    val rep = Corpus.splitLeakageOn(docs).collect()
+    val rep = Corpus.splitLeakageOn(docs).orderBy("split_a", "split_b").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getBoolean(3)))
     // always exactly the six alphabetical combos, even where n_pairs = 0
     assert(rep.map(t => (t._1, t._2)).toSeq === Seq(
@@ -421,13 +423,14 @@ class LibraryApiSpec extends SparkSpec {
       assert(r.getLong(2) === r.getLong(1), s"${r.getString(0)} emitted ${r.getLong(2)} != quota ${r.getLong(1)}")
     }
     // deterministic: same input -> same mix
-    assert(outDf.collect().toSeq === Corpus.tempMixOn(bigDocs).collect().toSeq)
+    assert(outDf.orderBy("doc_id", "copy_idx").collect().toSeq ===
+      Corpus.tempMixOn(bigDocs).orderBy("doc_id", "copy_idx").collect().toSeq)
   }
 
   test("bloom decontamination is row-identical to the exact form, even with a tiny saturated bloom") {
     val docs = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
-    val exact = Corpus.decontaminateOn(docs).collect().toSeq
-    val bloom = Corpus.decontaminateBloomOn(docs).collect().toSeq
+    val exact = Corpus.decontaminateOn(docs).orderBy("doc_id").collect().toSeq
+    val bloom = Corpus.decontaminateBloomOn(docs).orderBy("doc_id").collect().toSeq
     assert(bloom === exact, "bloom prune changed a decontamination result")
     // 1024-bit bloom over thousands of shingles ≈ every probe passes: the
     // prune degrades to a no-op and the exact verify join must still reject
@@ -436,7 +439,7 @@ class LibraryApiSpec extends SparkSpec {
     val train = docs.filter(pmod(col("doc_id"), lit(10)) =!= lit(Corpus.BenchSlice))
     val evalDocs = docs.filter(pmod(col("doc_id"), lit(10)) === lit(Corpus.BenchSlice))
     val saturated = Corpus.decontaminateBloomAgainstOn(train, evalDocs, numBits = 1024L)
-      .collect().toSeq
+      .orderBy("doc_id").collect().toSeq
     assert(saturated === exact, "saturated bloom changed a decontamination result")
   }
 
@@ -480,7 +483,7 @@ class LibraryApiSpec extends SparkSpec {
     assert(rows.length === train.count(), "funnel must cover exactly the training pool")
     // independent recomputation of two gates: quality survivors + the
     // classifier's registered keep verdicts
-    val qSurvivors = Text.qualityFilterRowsOn(docs).select("doc_id")
+    val qSurvivors = Text.qualityFilterOn(docs).select("doc_id")
       .as[Long].collect().toSet
     val gKeep = Quality.qualityScoreOn(docs).select("doc_id", "keep")
       .as[(Long, Boolean)].collect().toMap
@@ -535,7 +538,8 @@ class LibraryApiSpec extends SparkSpec {
     // ranks are 1..quota within each lang, and the pick repeats exactly
     assert(out.groupBy("lang").agg(max("rk").as("mx"), count(lit(1)).as("c"))
       .filter(col("mx") =!= col("c")).count() === 0)
-    assert(out.collect().toSeq === Corpus.stratifiedSampleOn(bigDocs, budget = 100L).collect().toSeq)
+    assert(out.orderBy("doc_id").collect().toSeq ===
+      Corpus.stratifiedSampleOn(bigDocs, budget = 100L).orderBy("doc_id").collect().toSeq)
   }
 
   test("chunk windows: overlapping extents, short tail, no chunks for tokenless docs") {
@@ -647,7 +651,7 @@ class LibraryApiSpec extends SparkSpec {
       (2L, "will be edited", "old-src"), (3L, "will be dropped", "old-src"))
     val nw = docs((1L, "same   TEXT", "new-src"), // fp-unchanged → carried from OLD
       (2L, "will be edited v2", "new-src"), (4L, "brand new doc", "new-src"))
-    val got = Corpus.applyDeltaOn(old, nw)
+    val got = Corpus.applyDeltaOn(old, nw).orderBy("doc_id")
       .select("doc_id", "fp", "source").as[(Long, String, String)].collect().toSeq
     // identity: exactly the new snapshot's doc set with its fingerprints
     val wantFp = Corpus.snapshotDeltaOn(old, nw) // reuse the classifier for ids
@@ -677,7 +681,7 @@ class LibraryApiSpec extends SparkSpec {
       (1L, "one two three", "srcA"),
       (2L, "a b c d", "srcB"),
       (4L, "fresh doc here", "srcB"))  // added
-    val got = Corpus.ivmStatsOn(old, nw)
+    val got = Corpus.ivmStatsOn(old, nw).orderBy("lang", "source")
       .as[(String, String, Long, Long)].collect().toSeq
     // rebuild over the new snapshot
     val want = Seq(("en", "srcA", 1L, 3L), ("en", "srcB", 2L, 7L))
@@ -736,5 +740,23 @@ class LibraryApiSpec extends SparkSpec {
         case s => s
       }.toMap)
     }
+  }
+
+  test("former unsorted-twin siblings return unsorted frames (no global Sort in the plan)") {
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    // planned, never run: the embedding width does not matter
+    val emb = Seq((1L, Array(0.5f, 0.5f))).toDF("vec_id", "embedding")
+    val frames = Seq(
+      "Text.textStatsOn" -> Text.textStatsOn(docs),
+      "Quality.c4CleanOn" -> Quality.c4CleanOn(docs),
+      "Corpus.snapshotDeltaOn" -> Corpus.snapshotDeltaOn(docs, docs.filter(col("doc_id") > 1L)),
+      "Multimodal.alignFilterOn" -> graft.multimodal.Multimodal.alignFilterOn(docs, emb))
+    val sorted = frames.collect {
+      case (name, df) if df.queryExecution.optimizedPlan.exists {
+        case s: Sort => s.global
+        case _ => false
+      } => name
+    }
+    assert(sorted.isEmpty, s"global sorts in: ${sorted.mkString(", ")}")
   }
 }

@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
 class ManifestIncrSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
-  private def rows(df: DataFrame): Seq[Seq[Any]] =
-    df.collect().toSeq.map(_.toSeq)
+  /** Rows in `key` order: the update and rebuild frames are unsorted. */
+  private def rows(df: DataFrame, key: String = "doc_id"): Seq[Seq[Any]] =
+    df.orderBy(key).collect().toSeq.map(_.toSeq)
 
   test("incremental manifest on the registered churn slices matches the from-scratch rebuild") {
     val docs = Tables.documents(spark, dir)
@@ -529,7 +530,7 @@ class ManifestIncrSpec extends SparkSpec {
     val drained = Corpus.manifestWarehouseUpdateOn(spark, s0, empty,
       featOld, kbOld, dupM, dupE, dupS, census, weights, thrTot, thrN, evalh)
     assert(rows(drained.manifest).isEmpty)
-    assert(rows(drained.kb).isEmpty && rows(drained.dup.manifest).isEmpty)
+    assert(rows(drained.kb, "cluster_id").isEmpty && rows(drained.dup.manifest).isEmpty)
     spark.catalog.clearCache()
     // bootstrap-by-update: an EMPTY warehouse plus an all-'added' delta
     // must equal the frozen bootstrap's manifest (under the same models)
@@ -687,12 +688,12 @@ class ManifestIncrSpec extends SparkSpec {
     val fused = Corpus.manifestDocFeatures(snap, census, weights, thrTot, thrN, evalh)
       .select("doc_id", "is_fluent", "pass_classifier", "pass_decontam")
       .collect().map(r => r.getLong(0) -> (r.get(1), r.get(2), r.get(3))).toMap
-    val f = Text.lmFluencyAgainstRowsOn(train, census)
+    val f = Text.lmFluencyAgainstOn(train, census)
       .select("doc_id", "is_fluent").collect()
       .map(r => r.getLong(0) -> r.get(1)).toMap
     val g = Quality.qsKeepWithThreshold(train, weights, thrTot, thrN)
       .collect().map(r => r.getLong(0) -> r.get(1)).toMap
-    val d = Corpus.decontaminateAgainstHashesRowsOn(train, evalh)
+    val d = Corpus.decontaminateAgainstHashesOn(train, evalh)
       .select("doc_id", "keep").collect()
       .map(r => r.getLong(0) -> r.get(1)).toMap
     val trainIds = train.select("doc_id").as[Long].collect().toSet

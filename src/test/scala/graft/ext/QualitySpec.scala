@@ -21,7 +21,7 @@ class QualitySpec extends SparkSpec {
       "Does this question line have enough words?",   // kept
       "He said \"five words are quoted here\"",       // kept: ends in "
     ).mkString("\n")
-    val out = Quality.c4CleanRowsOn(docsDf(1L -> page))
+    val out = Quality.c4CleanOn(docsDf(1L -> page))
       .select("n_lines", "n_kept", "keep", "cleaned")
       .as[(Long, Long, Boolean, String)].head()
     assert(out._1 === 6L)
@@ -35,7 +35,7 @@ class QualitySpec extends SparkSpec {
 
   test("c4 page-level gates: lorem ipsum, '{', and too few surviving sentences each drop the page") {
     val good = Seq.fill(3)("This sentence has exactly six words total.").mkString("\n")
-    val out = Quality.c4CleanRowsOn(docsDf(
+    val out = Quality.c4CleanOn(docsDf(
       1L -> good,
       2L -> (good + "\nAnd some Lorem Ipsum filler appears here."),
       3L -> (good + "\nAn object literal { appears on this page."),
@@ -51,7 +51,7 @@ class QualitySpec extends SparkSpec {
 
   test("gopher rules fire independently and keep is their conjunction") {
     val fiftyGood = Seq.fill(25)("the with").mkString(" ") // 50 words, 2 stops, mean len 3.5
-    val out = Quality.gopherRulesRowsOn(docsDf(
+    val out = Quality.gopherRulesOn(docsDf(
       1L -> fiftyGood,                                   // passes everything
       2L -> "the with short doc",                        // fails word count only
       3L -> Seq.fill(50)("a").mkString(" "),             // mean len 1 + 1 stop-ish: fails r_mean_len, r_stop
@@ -93,12 +93,12 @@ class QualitySpec extends SparkSpec {
 
   test("ccnet mix keeps every head doc, rates map to buckets, and decisions are deterministic") {
     val docs = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
-    val out = Quality.ccnetMixOn(docs)
+    val out = Quality.ccnetMixOn(docs).orderBy("doc_id")
       .select("doc_id", "bucket", "rate_q", "keep")
       .as[(Long, String, Long, Boolean)].collect().toSeq
     assert(out.nonEmpty)
     // the manifest covers exactly the bucketed (scorable) docs
-    assert(out.map(_._1) === Quality.ccnetBucketsOn(docs)
+    assert(out.map(_._1) === Quality.ccnetBucketsOn(docs).orderBy("doc_id")
       .select("doc_id").as[Long].collect().toSeq)
     out.foreach { case (id, bucket, rateQ, keep) =>
       val want = bucket match {
@@ -108,7 +108,7 @@ class QualitySpec extends SparkSpec {
       if (bucket == "head") assert(keep, s"head doc $id dropped")
     }
     // hash decisions are a pure function of doc_id: a second run is identical
-    assert(Quality.ccnetMixOn(docs)
+    assert(Quality.ccnetMixOn(docs).orderBy("doc_id")
       .select("doc_id", "keep").as[(Long, Boolean)].collect().toSeq ===
       out.map(r => (r._1, r._4)))
     // middle/tail keep rates land near 1/2 and 1/4 (loose: hash-Bernoulli)

@@ -123,7 +123,8 @@ class SimilaritySpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.ops.Tables.embeddings(spark, dir)
     def res(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "rank", "neighbor_id").as[(Long, Long, Long)].collect().toSeq
+      df.select("q_id", "rank", "neighbor_id").orderBy("q_id", "rank")
+        .as[(Long, Long, Long)].collect().toSeq
     val bf = res(Similarity.knnBruteForceOn(emb))
     // 10 labels in the testdata → nProbe=10 probes every cell; the candidate
     // set is then the full corpus and the ranking must match exactly
@@ -168,7 +169,8 @@ class SimilaritySpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.ops.Tables.embeddings(spark, dir)
     def res(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "rank", "neighbor_id").as[(Long, Long, Long)].collect().toSeq
+      df.select("q_id", "rank", "neighbor_id").orderBy("q_id", "rank")
+        .as[(Long, Long, Long)].collect().toSeq
     // nProbe = KmeansK probes every cell → the ADC candidate set is the full
     // coded corpus and IVF-PQ must equal the flat-PQ search row for row
     // (same codebooks, same ADC keys, same re-rank)
@@ -202,7 +204,7 @@ class SimilaritySpec extends SparkSpec {
       (1L, Array(1.0f, 0.0f), 0), (2L, Array(1.0f, 0.0f), 0),
       (3L, Array(0.0f, 1.0f), 1), (4L, Array(0.0f, 1.0f), 1),
     ).toDF("vec_id", "embedding", "label")
-    val got = Similarity.embedDriftOn(df).collect()
+    val got = Similarity.embedDriftOn(df).orderBy("label").collect()
       .map(r => (r.getAs[Number](0).longValue, r.getLong(1), r.getDouble(2)))
     // global centroid (0.5, 0.5); each label centroid is an axis -> cos = 1/sqrt(2)
     assert(got.toSeq === Seq((0L, 2L, 0.707107), (1L, 2L, 0.707107)))
@@ -213,7 +215,7 @@ class SimilaritySpec extends SparkSpec {
       (1L, Array(1.0f, 10.0f), 0),
       (2L, Array(3.0f, 10.0f), 0),
     ).toDF("vec_id", "embedding", "label")
-    val got = Similarity.dimStatsOn(df).collect()
+    val got = Similarity.dimStatsOn(df).orderBy("dim").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     // dim 1: mean 2, E[x^2]-E[x]^2 = 5-4 = 1 -> std 1; dim 2: constant -> std 0
     assert(got.toSeq === Seq((1L, 2L, 2.0, 1.0), (2L, 2L, 10.0, 0.0)))
@@ -263,13 +265,14 @@ class SimilaritySpec extends SparkSpec {
   test("embed outlier gate: keep is exactly the ccos threshold, layered on the assignment table") {
     val emb = graft.ops.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val out = Similarity.embedOutliersOn(emb, Similarity.KmeansCfg(dims = Similarity.Dims))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
+      .orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
     spark.catalog.clearCache()
     assert(out.length === emb.count(), "manifest must cover every vector")
     assert(out.forall { case (_, _, ccos, keep) => keep === (ccos >= Similarity.OutlierCosMin) })
     // the gate is kmeansAssignOn plus a flag — the underlying table must agree
     val assign = Similarity.kmeansAssignOn(emb, Similarity.KmeansCfg(dims = Similarity.Dims))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     spark.catalog.clearCache()
     assert(out.map(t => (t._1, t._2, t._3)).toSeq === assign.toSeq)
     // monotone in the knob: relaxing the threshold never drops a kept vector
@@ -284,17 +287,19 @@ class SimilaritySpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.ops.Tables.embeddings(spark, dir)
     // kmeans IVF: registered (frozen quantizer) vs *On (retrains inline)
-    val kmFrozen = Similarity.knnIvfKmeans(spark, dir).collect().map(_.toSeq).toSeq
+    val kmFrozen = Similarity.knnIvfKmeans(spark, dir).orderBy("q_id", "rank")
+      .collect().map(_.toSeq).toSeq
     spark.catalog.clearCache()
     val kmTrained = Similarity.knnIvfKmeansOn(emb, cfg = Similarity.KmeansCfg(dims = Similarity.Dims))
-      .collect().map(_.toSeq).toSeq
+      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
     spark.catalog.clearCache()
     assert(kmFrozen === kmTrained)
     // IVF-PQ: frozen centroids + codebooks vs full inline training
-    val pqFrozen = Similarity.knnIvfPq(spark, dir).collect().map(_.toSeq).toSeq
+    val pqFrozen = Similarity.knnIvfPq(spark, dir).orderBy("q_id", "rank")
+      .collect().map(_.toSeq).toSeq
     spark.catalog.clearCache()
     val pqTrained = Similarity.knnIvfPqOn(emb, kcfg = Similarity.KmeansCfg(dims = Similarity.Dims))
-      .collect().map(_.toSeq).toSeq
+      .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
     spark.catalog.clearCache()
     assert(pqFrozen === pqTrained)
   }
@@ -320,7 +325,7 @@ class SimilaritySpec extends SparkSpec {
   test("covariance matrix: exact on a hand corpus, diagonal matches dim stats") {
     val hand = Seq(Array(1.0f, 2.0f), Array(3.0f, 4.0f), Array(5.0f, 6.0f))
       .toDF("embedding")
-    val got = Similarity.covMatrixOn(hand, d = 2)
+    val got = Similarity.covMatrixOn(hand, d = 2).orderBy("dim_i", "dim_j")
       .as[(Long, Long, Double)].collect().toSeq
     val c = graft.ops.Num.r6Double(8.0 / 3.0)
     assert(got === Seq((1L, 1L, c), (1L, 2L, c), (2L, 2L, c)))
@@ -369,6 +374,7 @@ class SimilaritySpec extends SparkSpec {
   test("nprobe curve: recall is monotone in nprobe and reaches exactly 1.0 at full probe") {
     val rows = Similarity.nprobeCurve(spark, "/root/testdata/sf0.001").collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getDouble(4)))
+      .sortBy(_._1) // by nprobe: the builder returns its rows unsorted
     assert(rows.map(_._1).toSeq === (1L to Similarity.KmeansK.toLong))
     // denominator is the brute-force truth at every sweep point
     assert(rows.map(_._2).distinct.length === 1, "truth-pair denominator drifted across the sweep")
@@ -383,7 +389,7 @@ class SimilaritySpec extends SparkSpec {
   test("pq distortion: one row per subspace, bounded utilization, frozen-model determinism") {
     val dir = "/root/testdata/sf0.001"
     val n = graft.ops.Tables.embeddings(spark, dir).count()
-    val a = Similarity.pqDistortion(spark, dir).collect()
+    val a = Similarity.pqDistortion(spark, dir).orderBy("sub").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     spark.catalog.clearCache()
     assert(a.map(_._1).toSeq === (0L until Similarity.PqM.toLong))
@@ -393,7 +399,7 @@ class SimilaritySpec extends SparkSpec {
       assert(err >= 0.0, s"sub $sub negative distortion")
     }
     // frozen codebook: a second invocation reports the identical table
-    val b = Similarity.pqDistortion(spark, dir).collect()
+    val b = Similarity.pqDistortion(spark, dir).orderBy("sub").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     spark.catalog.clearCache()
     assert(a.toSeq === b.toSeq)

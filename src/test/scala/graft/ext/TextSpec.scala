@@ -171,7 +171,7 @@ class TextSpec extends SparkSpec {
     val d = Seq((1L, "x y x y x y x y x y x y", "en", "s"),
       (2L, "solo solo solo", "en", "s")) // "solo solo" bigram count 2 < 5 -> pruned
       .toDF("doc_id", "text", "lang", "source")
-    val got = Text.bigramPmiOn(d).collect()
+    val got = Text.bigramPmiOn(d).orderBy("rank").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
     assert(got.map(_._2).toSeq === Seq("x y", "y x"), "only the floored pairs, PMI-ranked")
     assert(got.map(_._3).toSeq === Seq(6L, 5L))
@@ -185,7 +185,7 @@ class TextSpec extends SparkSpec {
   test("vocab coverage: frequency-ranked tokens with exact cumulative shares") {
     val docs = Seq((1L, "a a a b", "en", "s"), (2L, "b c", "en", "s"))
       .toDF("doc_id", "text", "lang", "source")
-    val got = Text.vocabCoverageOn(docs).collect()
+    val got = Text.vocabCoverageOn(docs).orderBy("rank").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
     // 6 tokens total: a x3, b x2, c x1
     assert(got.toSeq === Seq((1L, "a", 3L, 0.5), (2L, "b", 2L, 0.833333), (3L, "c", 1L, 1.0)))
@@ -239,7 +239,7 @@ class TextSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("spec"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val got = Text.wordpieceOn(docs, maxPiece = 4, topTokens = 16)
+    val got = Text.wordpieceOn(docs, maxPiece = 4, topTokens = 16).orderBy("word")
       .as[(String, Long, Long, String)].collect().toSeq
     spark.catalog.clearCache()
     assert(got === Seq(
@@ -302,7 +302,7 @@ class TextSpec extends SparkSpec {
       (lang, rs.size.toLong, sub,
         graft.ops.Num.r6Double(sub.toDouble / rs.size))
     }.toSeq.sortBy(_._1)
-    val got = Text.wordpieceFertility(spark, dir)
+    val got = Text.wordpieceFertility(spark, dir).orderBy("lang")
       .as[(String, Long, Long, Double)].collect().toSeq
     spark.catalog.clearCache()
     assert(got === want)
@@ -353,7 +353,7 @@ class TextSpec extends SparkSpec {
       10L -> "hash join hash other words here",   // 2×hash + join
       20L -> "hash join other words here pad pad", // 1×hash + join, longer
       30L -> "filter scan scan scan scan scan"))
-      .select("query_id", "rank", "doc_id", "n_terms_hit")
+      .select("query_id", "rank", "doc_id", "n_terms_hit").orderBy("query_id", "rank")
       .as[(Long, Long, Long, Long)].collect().toSeq
     val q0 = out.filter(_._1 == 0L)
     assert(q0.map(r => (r._2, r._3)) === Seq((1L, 10L), (2L, 20L)),
@@ -365,7 +365,7 @@ class TextSpec extends SparkSpec {
       1L -> "merge sort",
       2L -> "merge sort with many extra trailing words attached"))
       .filter(col("query_id") === 2L)
-      .select("rank", "doc_id").as[(Long, Long)].collect().toSeq
+      .select("rank", "doc_id").orderBy("rank").as[(Long, Long)].collect().toSeq
     assert(out2 === Seq((1L, 1L), (2L, 2L)), s"shorter doc must outrank: $out2")
   }
 

@@ -241,7 +241,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("hamming curve: cumulative mass is monotone and the DctHamMax cut equals the dedup row count") {
     val dir = "/root/testdata/sf0.001"
-    val rows = Multimodal.hammingCurve(spark, dir).collect()
+    val rows = Multimodal.hammingCurve(spark, dir).orderBy("hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
     assert(rows.map(_._1).toSeq === (0L to Multimodal.HcLevels.toLong))
     rows.foreach { case (h, _, _, comp) => assert(comp === (h < Multimodal.DctBands)) }
@@ -477,8 +477,9 @@ class MultimodalSpec extends SparkSpec {
       afOld,
       Multimodal.mmDocLocalOn(old).localCheckpoint(),
       emb)
-    val got = w.manifest.collect().map(_.toSeq).toSeq
-    val want = Multimodal.mmPipelineManifestOn(nw, emb).collect().map(_.toSeq).toSeq
+    val got = w.manifest.orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val want = Multimodal.mmPipelineManifestOn(nw, emb).orderBy("doc_id")
+      .collect().map(_.toSeq).toSeq
     assert(got.nonEmpty && got === want,
       "updated composed manifest drifted from the from-scratch composition")
     // the changed class genuinely re-scored: its caption text moved, so at
@@ -555,10 +556,10 @@ class MultimodalSpec extends SparkSpec {
         st.release(); raw.release()
         st = rolled
       }
-      val got = st.manifest.collect().map(_.toSeq).toSeq
+      val got = st.manifest.orderBy("doc_id").collect().map(_.toSeq).toSeq
       st.release()
       val want = Multimodal.mmPipelineManifestOn(snapDf(chain.last), emb)
-        .collect().map(_.toSeq).toSeq
+        .orderBy("doc_id").collect().map(_.toSeq).toSeq
       spark.catalog.clearCache()
       Prop(got == want) :| s"composed manifest drifted: got ${got.take(2)} want ${want.take(2)}"
     }
@@ -663,7 +664,7 @@ class MultimodalSpec extends SparkSpec {
     val mrows = Multimodal.mmPipelineManifestOn(docs, emb).collect()
     val splitOf = Multimodal.mmSplitSafeOn(docs)
       .select("doc_id", "split").as[(Long, String)].collect().toMap
-    val ownOf = graft.ext.Corpus.splitRowsOn(docs)
+    val ownOf = graft.ext.Corpus.splitOn(docs)
       .select("doc_id", "split").as[(Long, String)].collect().toMap
     val singletons = clusters.filter(_._3 == 1L).map(_._1).toSet
     val m = mrows.map(r => (r.getLong(0), r.getString(1), r.getBoolean(6),
@@ -837,10 +838,10 @@ class MultimodalSpec extends SparkSpec {
       st = rolled
       seen = nextSeen
     }
-    val got = st.manifest.collect().map(_.toSeq).toSeq
+    val got = st.manifest.orderBy("doc_id").collect().map(_.toSeq).toSeq
     st.release()
     val want = Multimodal.mmPipelineManifestOn(snapDf(full), emb)
-      .collect().map(_.toSeq).toSeq
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(got.nonEmpty && got === want,
       "chunked manifest bootstrap diverged from the one-shot composition")
     // the equality exercised real survivorship: some cluster loser exists

@@ -11,10 +11,12 @@ class FrozenCachesSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("clearAll invalidates the dup-cluster manifest; the rebuild is identical") {
-    val before = graft.ext.Dedup.dupClusters(spark, dir).collect().map(_.toSeq).toSeq
+    val before = graft.ext.Dedup.dupClusters(spark, dir).orderBy("doc_id")
+      .collect().map(_.toSeq).toSeq
     spark.catalog.clearCache()
     FrozenCaches.clearAll()
-    val after = graft.ext.Dedup.dupClusters(spark, dir).collect().map(_.toSeq).toSeq
+    val after = graft.ext.Dedup.dupClusters(spark, dir).orderBy("doc_id")
+      .collect().map(_.toSeq).toSeq
     spark.catalog.clearCache()
     assert(before.nonEmpty && before === after)
   }
@@ -56,6 +58,21 @@ class FrozenCachesSpec extends SparkSpec {
       assert(memo.get(tmp, ()) { builds += 1; null } === null)
       assert(builds === 1)
     } finally FrozenCaches.deleteTree(tmp)
+  }
+
+  test("dirSig lists through the path's FileSystem: a file: URI corpus signs and re-signs") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_fp_uri")
+    try {
+      java.nio.file.Files.writeString(tmp.resolve("a.txt"), "one")
+      val uri = tmp.toUri.toString
+      assert(uri.startsWith("file:"))
+      val sig = FrozenCaches.dirSig(uri)
+      assert(sig != 0L, "a file: URI corpus got the no-data signature")
+      assert(sig === FrozenCaches.dirSig(tmp.toString), "URI and plain path sign differently")
+      java.nio.file.Files.writeString(tmp.resolve("a.txt"), "twoo")
+      assert(FrozenCaches.dirSig(uri) != sig, "replacing a file left the signature unchanged")
+      assert(FrozenCaches.dirSig(tmp.resolve("missing").toUri.toString) === 0L)
+    } finally FrozenCaches.deleteTree(tmp.toString)
   }
 
   test("swapping the corpus under a path retrains the dup-cluster manifest") {
@@ -144,14 +161,19 @@ class FrozenCachesSpec extends SparkSpec {
   }
 
   test("clearAll invalidates the frozen census/sketch/model caches; rebuilds are identical") {
-    val fluencyBefore = graft.ext.Text.lmFluency(spark, dir).collect().map(_.toSeq).toSeq
-    val hhBefore = graft.ext.Text.heavyHitters(spark, dir).collect().map(_.toSeq).toSeq
-    val ivfBefore = graft.ext.Similarity.knnIvfKmeans(spark, dir).collect().map(_.toSeq).toSeq
+    import org.apache.spark.sql.functions.col
+    def fluency = graft.ext.Text.lmFluency(spark, dir).orderBy("doc_id")
+      .collect().map(_.toSeq).toSeq
+    def hh = graft.ext.Text.heavyHitters(spark, dir).orderBy(col("n").desc, col("gram"))
+      .collect().map(_.toSeq).toSeq
+    def ivf = graft.ext.Similarity.knnIvfKmeans(spark, dir).orderBy("q_id", "rank")
+      .collect().map(_.toSeq).toSeq
+    val (fluencyBefore, hhBefore, ivfBefore) = (fluency, hh, ivf)
     spark.catalog.clearCache()
     FrozenCaches.clearAll()
-    assert(fluencyBefore === graft.ext.Text.lmFluency(spark, dir).collect().map(_.toSeq).toSeq)
-    assert(hhBefore === graft.ext.Text.heavyHitters(spark, dir).collect().map(_.toSeq).toSeq)
-    assert(ivfBefore === graft.ext.Similarity.knnIvfKmeans(spark, dir).collect().map(_.toSeq).toSeq)
+    assert(fluencyBefore === fluency)
+    assert(hhBefore === hh)
+    assert(ivfBefore === ivf)
     spark.catalog.clearCache()
   }
 }

@@ -28,7 +28,8 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("salted aggregation equals the plain aggregation") {
-    val salted = Sketches.saltedAgg(spark, dir).as[(String, Long, Long)].collect().toSeq
+    val salted = Sketches.saltedAgg(spark, dir).orderBy("event_type")
+      .as[(String, Long, Long)].collect().toSeq
     val plain = graft.ops.Tables.events(spark, dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"), sum(col("value").cast("long")).as("sum_value_floor"))
@@ -37,7 +38,7 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("salted join equals the plain unsalted join and actually shuffles (no broadcast)") {
-    val got = Sketches.saltedJoin(spark, dir)
+    val got = Sketches.saltedJoin(spark, dir).orderBy("event_type")
       .as[(String, Long, Long)].collect().toSeq
     val dim = Sketches.TypeWeights.toDF("event_type", "weight")
     val plain = graft.ops.Tables.events(spark, dir)

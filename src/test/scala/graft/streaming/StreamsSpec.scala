@@ -21,7 +21,7 @@ class StreamsSpec extends SparkSpec {
         col("n_events"), graft.ops.Num.r6(col("sum_value")).as("sum_value"))
       .orderBy("win_start_us", "event_type")
       .collect()
-    val batch = Micro.tumblingWindow(spark, sfDir).collect()
+    val batch = Micro.tumblingWindow(spark, sfDir).orderBy("win_start_us", "event_type").collect()
     assert(streamed.length === batch.length)
     assert(streamed.toSeq === batch.toSeq)
   }
@@ -34,7 +34,7 @@ class StreamsSpec extends SparkSpec {
         col("n_events"), graft.ops.Num.r6(col("sum_value")).as("sum_value"))
       .orderBy("win_start_us", "event_type")
       .collect()
-    val batch = Micro.slidingWindow(spark, sfDir).collect()
+    val batch = Micro.slidingWindow(spark, sfDir).orderBy("win_start_us", "event_type").collect()
     assert(streamed.toSeq === batch.toSeq)
   }
 
@@ -895,7 +895,7 @@ class StreamsSpec extends SparkSpec {
     val stream = spark.readStream.schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
     val streamed = Streams.runToMemory(spark,
-      graft.ext.Text.qualityFilterRowsOn(stream), "t_quality_stream")
+      graft.ext.Text.qualityFilterOn(stream), "t_quality_stream")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batch = graft.ext.Text.qualityFilter(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -1656,7 +1656,7 @@ class StreamsSpec extends SparkSpec {
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
     val streamed = Streams.runToMemory(spark,
-      graft.ext.Corpus.mixRowsOn(stream), "t_mix_stream")
+      graft.ext.Corpus.mixOn(stream), "t_mix_stream")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(4))).toSet
     val batch = graft.ext.Corpus.mixOn(graft.ops.Tables.documents(spark, sfDir))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(4))).toSet
@@ -1860,7 +1860,7 @@ class StreamsSpec extends SparkSpec {
           col("n_events"), graft.ops.Num.r6(col("sum_value")).as("sum_value"))
         .orderBy("win_start_us", "event_type")
         .collect()
-      val batch = Micro.tumblingWindow(spark, sfDir).collect()
+      val batch = Micro.tumblingWindow(spark, sfDir).orderBy("win_start_us", "event_type").collect()
       assert(streamed.length === batch.length)
       assert(streamed.toSeq === batch.toSeq)
     } finally saved match {
@@ -2433,8 +2433,9 @@ class StreamsSpec extends SparkSpec {
     // the shared finisher over the streamed pairs = the registered query
     val tri = graft.queries.Sessions.cohortsFromPairs(
         streamedPairs.toSeq.toDF("user_id", "cohort_week", "active_week"))
+      .orderBy("cohort_week", "weeks_since")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val want = graft.queries.Sessions.cohorts(spark, sfDir)
+    val want = graft.queries.Sessions.cohorts(spark, sfDir).orderBy("cohort_week", "weeks_since")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(tri === want)
   }
