@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,16 +7,7 @@ object Verify {
     // extra args = optional query-name filter (dev loop: re-dump one query
     // without re-running the registry); the driver passes exactly two
     val Array(sfDir, outDir, only @ _*) = args: @unchecked
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new functions.GraftExtensions().apply(_))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = tools.Tools.session()
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }

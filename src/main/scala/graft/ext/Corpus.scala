@@ -179,6 +179,10 @@ object Corpus {
         .select("lang", "doc_id", "n_tok"),
       nShards)
 
+  /** Per-chunk manifest of [[seqPackDocRowsOn]]. Per micro-batch of
+    * [[graft.streaming.Streams.eachBatch]] each batch is just more shards:
+    * per-(lang, shard) token totals match the one-shot run and only chunk
+    * boundaries differ at batch edges. */
   def seqPackShardedOn(docs: DataFrame, nShards: Int = PackShards): DataFrame =
     seqPackDocRowsOn(docs, nShards)
       .groupBy("lang", "shard", "chunk_id")
@@ -321,7 +325,8 @@ object Corpus {
     * evaluation DataFrame (any frame with a `text` column — an eval suite
     * loaded from its own files, not a slice of the corpus). The registered
     * [[decontaminateOn]] delegates here with its deterministic doc_id-slice
-    * standing in as the eval set. */
+    * standing in as the eval set. Stateless per micro-batch of
+    * [[graft.streaming.Streams.eachBatch]]. */
   def decontaminateAgainstOn(train: DataFrame, evalDocs: DataFrame): DataFrame =
     decontaminateAgainstHashesOn(train, evalShingleHashes(evalDocs))
 
@@ -1045,9 +1050,9 @@ object Corpus {
 
   /** Score pool documents against a FIXED weight table (the deployment
     * entry point: weights train once on target ∪ pool-sample, then any
-    * amount of pool streams through — see Streams.dsirScoreBatches for
-    * the streaming form). Per-doc integer scores, no ranking — selection
-    * policy (top-K, threshold) is the caller's. */
+    * amount of pool streams through, stateless per micro-batch of
+    * [[graft.streaming.Streams.eachBatch]]). Per-doc integer scores, no
+    * ranking — selection policy (top-K, threshold) is the caller's. */
   def dsirScoreAgainstOn(docs: DataFrame, weights: DataFrame,
                          targetSource: String = DsirTargetSource): DataFrame =
     dsirTokens(docs)
@@ -1352,7 +1357,8 @@ object Corpus {
     * 100 TB design: pure row-local arithmetic + explode (map-side, no
     * shuffle); chunk counts are
     * 1 + ceil((n−C)/S) in exact integer arithmetic so both engines emit
-    * identical manifests. */
+    * identical manifests. Stateless per micro-batch of
+    * [[graft.streaming.Streams.eachBatch]]. */
   def chunkWindowsOn(docs: DataFrame, chunk: Long = ChunkTokens,
                      stride: Long = ChunkStride): DataFrame = {
     // stride = 0 would NULL out n_chunks under non-ANSI div (silent data
@@ -1778,7 +1784,8 @@ object Corpus {
   /** The length-bucket count table of a doc frame — the PSI monitor's
     * frozen-baseline seam: a long-lived monitor builds this ONCE on the
     * reference corpus and compares every new snapshot (or micro-batch —
-    * [[graft.streaming.Streams.psiDriftBatches]]) against it. */
+    * [[psiFromCounts]] per micro-batch of
+    * [[graft.streaming.Streams.eachBatch]]) against it. */
   def psiBucketsOn(docs: DataFrame): DataFrame =
     docs.select(size(Text.tokens(col("text"))).cast("long").as("n_tok"))
       .withColumn("bucket", least(lit(LengthBuckets - 1L), expr(s"n_tok div $LengthBucketWidth")))
@@ -1789,7 +1796,8 @@ object Corpus {
 
   /** PSI report from two prebuilt bucket-count tables — the form a
     * deployment actually runs (baseline counts are a frozen ≤|buckets|-row
-    * artifact, only the new side rescans data). */
+    * artifact, only the new side rescans data). Stateless per micro-batch
+    * of [[graft.streaming.Streams.eachBatch]] against a frozen baseline. */
   def psiFromCounts(oldCounts: DataFrame, newCounts: DataFrame): DataFrame = {
     // checkpointed (lazily): the ≤|buckets|-row cell frame feeds the totals
     // pair and the final projection (the sourceDriftOn two-consumer shape)
@@ -2430,10 +2438,12 @@ object Corpus {
     * document and the frozen models, so a snapshot delta invalidates
     * exactly the delta's rows — the property the whole update rests on.
     * Gate bits are NULL on the bench slice (the funnel never judges it),
-    * mirroring the funnel spine contract. */
-  private[graft] def manifestDocFeatures(snap: DataFrame, census: DataFrame,
-                                         weights: DataFrame, thrTot: Long, thrN: Long,
-                                         evalh: DataFrame): DataFrame = {
+    * mirroring the funnel spine contract. Stateless per micro-batch of
+    * [[graft.streaming.Streams.eachBatch]] — the stream-time half of
+    * [[manifestWarehouseUpdateOn]]'s `precomputedFeatFresh`. */
+  def manifestDocFeatures(snap: DataFrame, census: DataFrame,
+                          weights: DataFrame, thrTot: Long, thrN: Long,
+                          evalh: DataFrame): DataFrame = {
     val isTrain = pmod(col("doc_id"), lit(10L)) =!= lit(BenchSlice)
     val train = snap.filter(isTrain)
     // the three gates that genuinely need cross-row state (the broadcast
@@ -2737,11 +2747,12 @@ object Corpus {
     * ingestion loop's unit of work.
     *
     * `precomputedFeatFresh` is the STREAMED-INGEST seam: a deployment that
-    * runs documents through [[graft.streaming.Streams.manifestFeatureBatches]]
-    * as they arrive already holds every fresh document's feature row (the
-    * columns are doc-local under the frozen models, so stream-time rows
-    * are final), and the periodic reconciliation must not re-read the
-    * fresh text to recompute them. Contract: the supplied frame covers the
+    * runs [[manifestDocFeatures]] per micro-batch of
+    * [[graft.streaming.Streams.eachBatch]] as documents arrive already
+    * holds every fresh document's feature row (the columns are doc-local
+    * under the frozen models, so stream-time rows are final), and the
+    * periodic reconciliation must not re-read the fresh text to recompute
+    * them. Contract: the supplied frame covers the
     * delta's added ∪ changed doc_ids with [[manifestDocFeatures]] rows
     * (extra rows — e.g. ingested docs later retired — are semi-joined
     * away). StreamsSpec pins stream-fed reconcile ≡ batch update ≡

@@ -778,26 +778,9 @@ object Dedup {
     * cluster size, and whether this doc is the canonical survivor. */
   val ClusterEstMin = 0.5
 
-  /** `checkpointRounds` (default true) replaces each round's persist() with
-    * an eager localCheckpoint(): same caching, but the LOGICAL plan is cut
-    * each round, so per-round analysis/optimization/cache-lookup cost stays
-    * O(1) in round count instead of growing with the nested lineage.
-    * Measured (BASELINE.md round 7): sf0.1 min 3.1 s vs 5.9 s persist —
-    * and the persist path is BIMODAL (5.9–20 s across identical runs; the
-    * round-5 "13.4 s regression" was this mode, not box load) while the
-    * checkpointed path is stable; at 10× data 6.9 s vs 16.9 s. This is the
-    * same per-iteration checkpoint every production distributed-CC
-    * implementation carries. The trade: checkpointed blocks drop the
-    * lineage fallback, so an executor loss mid-job fails the query instead
-    * of recomputing — on a real cluster an iterative job at this round
-    * count either accepts that (retry is cheap, rounds are few) or swaps
-    * in reliable checkpointing to the cluster FS; `checkpointRounds =
-    * false` keeps the pure-lineage form for callers that need it. */
   def dupClustersOn(docs: DataFrame,
-                    numHashes: Int = NumHashes, numBands: Int = NumBands,
-                    checkpointRounds: Boolean = true): DataFrame =
-    propagateComponents(docs.select("doc_id"),
-      dupEdgesOn(docs, numHashes, numBands), checkpointRounds)
+                    numHashes: Int = NumHashes, numBands: Int = NumBands): DataFrame =
+    propagateComponents(docs.select("doc_id"), dupEdgesOn(docs, numHashes, numBands))
 
   /** The thresholded near-dup pair table — the edge set [[dupClustersOn]]
     * clusters over, exposed as warehouse state in its own right: the
@@ -816,39 +799,11 @@ object Dedup {
     * operator API. */
   private[graft] val lastPropagationRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  // Env-gated (GRAFT_CC_DEBUG) per-round shuffle meter for the CC loop:
-  // task-end shuffle read/write sums plus the max single-task shuffle
-  // read — the number that exposes a hot-label partition (one task
-  // draining an entire skewed key) that round totals would hide.
-  // keyed by applicationId so a restarted SparkContext in the same JVM
-  // gets its own listener (a stale registration would silently report
-  // 0 MB rounds); bytes from CONCURRENT non-CC jobs do land in the
-  // deltas — the study runs the loop alone, and the lines are debug
-  // output, not a gate
-  private val ccMeterApp = new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val ccRead = new java.util.concurrent.atomic.AtomicLong
-  private val ccWrite = new java.util.concurrent.atomic.AtomicLong
-  private[graft] val ccMaxTaskRead = new java.util.concurrent.atomic.AtomicLong
-  private def ensureCcMeter(sc: org.apache.spark.SparkContext): Unit =
-    if (ccMeterApp.getAndSet(sc.applicationId) != sc.applicationId)
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            val r = m.shuffleReadMetrics.totalBytesRead
-            ccRead.addAndGet(r)
-            ccWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            ccMaxTaskRead.accumulateAndGet(r, Math.max(_, _))
-          }
-        }
-      })
-
   /** Min-label propagation + pointer jumping over (ids, pair edges) — the
     * loop of [[dupClustersOn]], shared with the incremental update so the
     * two can never disagree on clustering semantics. Returns the manifest
     * columns (doc_id, cluster_id, cluster_size, is_canonical), unsorted. */
-  private[graft] def propagateComponents(ids: DataFrame, pairs: DataFrame,
-                                  checkpointRounds: Boolean): DataFrame = {
+  private[graft] def propagateComponents(ids: DataFrame, pairs: DataFrame): DataFrame = {
     val sym = pairs.union(pairs.select(col("doc_b"), col("doc_a"))).persist()
     // Only nodes with at least one edge can ever change label — a node
     // absent from the edge table is its own singleton component by
@@ -877,12 +832,8 @@ object Dedup {
     var curSum = labelSum(comp)
     var changed = 1L
     var rounds = 0
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    if (debug) ensureCcMeter(sym.sparkSession.sparkContext)
     while (changed > 0) {
       rounds += 1
-      val (r0, w0) = (ccRead.get(), ccWrite.get())
-      if (debug) ccMaxTaskRead.set(0L)
       val nbrMin = sym
         .join(comp.select(col("doc_id").as("nbr"), col("comp").as("nbr_comp")),
           col("doc_b") === col("nbr"))
@@ -901,24 +852,21 @@ object Dedup {
         .join(prop.select(col("doc_id").as("p_id"), col("comp").as("p_comp")).as("b"),
           col("a.comp") === col("p_id"))
         .select(col("a.doc_id").as("doc_id"), col("p_comp").as("comp"))
-      val t0 = System.nanoTime()
-      // LAZY checkpoint/persist: the convergence aggregate right below is
-      // the round's one action and materializes the cached blocks as it
-      // sums them — an eager checkpoint here would run the identical plan
-      // as a SEPARATE job first (round 18: two driver actions per round
-      // collapsed to one; same blocks, same lineage cut).
-      val next = if (checkpointRounds) jumped.localCheckpoint(eager = false)
-                 else jumped.persist()
+      // localCheckpoint, not persist: same caching, but the LOGICAL plan is
+      // cut each round, so per-round analysis/optimization/cache-lookup cost
+      // stays O(1) in round count instead of growing with the nested
+      // lineage. Measured (BASELINE.md round 7): sf0.1 min 3.1 s vs 5.9 s
+      // persist, and the persist path is BIMODAL (5.9–20 s across identical
+      // runs) while the checkpointed path is stable; at 10× data 6.9 s vs
+      // 16.9 s. The trade: checkpointed blocks drop the lineage fallback, so
+      // an executor loss mid-job fails the query instead of recomputing (on
+      // a real cluster: retry, or reliable checkpointing to the cluster FS).
+      // LAZY: the convergence aggregate right below is the round's one
+      // action and materializes the blocks as it sums them; an eager
+      // checkpoint would run the identical plan as a separate job first.
+      val next = jumped.localCheckpoint(eager = false)
       val nextSum = graft.ops.Prof(ids.sparkSession, s"cc: round $rounds")(
         labelSum(next))
-      if (debug) {
-        val mb = 1024.0 * 1024.0
-        println(f"CC_ROUND $rounds%d round=${(System.nanoTime() - t0) / 1e9}%.2f " +
-          f"shuf_read=${(ccRead.get() - r0) / mb}%.1fMB shuf_write=${(ccWrite.get() - w0) / mb}%.1fMB " +
-          f"max_task_read=${ccMaxTaskRead.get() / mb}%.1fMB")
-        if (sys.env.contains("GRAFT_CC_PLAN"))
-          println(jumped.queryExecution.executedPlan.toString.take(6000))
-      }
       changed = if (nextSum.compareTo(curSum) == 0) 0L else 1L
       curSum = nextSum
       comp.unpersist()
@@ -994,14 +942,12 @@ object Dedup {
   def dupClustersIncrementalOn(oldDocs: DataFrame, newDocs: DataFrame,
                                oldManifest: DataFrame, oldEdges: DataFrame,
                                numHashes: Int = NumHashes, numBands: Int = NumBands,
-                               checkpointRounds: Boolean = true,
                                oldSigs: Option[DataFrame] = None,
                                precomputedDelta: Option[DataFrame] = None,
                                precomputedFresh: Option[DataFrame] = None,
                                oldFps: Option[DataFrame] = None): DataFrame =
     dupWarehouseUpdateOn(oldDocs, newDocs, oldManifest, oldEdges, numHashes,
-      numBands, checkpointRounds, oldSigs, precomputedDelta, precomputedFresh,
-      oldFps)
+      numBands, oldSigs, precomputedDelta, precomputedFresh, oldFps)
       .manifest
 
   /** The dedup warehouse of one snapshot: the cluster manifest, the
@@ -1034,7 +980,6 @@ object Dedup {
   def dupWarehouseUpdateOn(oldDocs: DataFrame, newDocs: DataFrame,
                            oldManifest: DataFrame, oldEdges: DataFrame,
                            numHashes: Int = NumHashes, numBands: Int = NumBands,
-                           checkpointRounds: Boolean = true,
                            oldSigs: Option[DataFrame] = None,
                            precomputedDelta: Option[DataFrame] = None,
                            precomputedFresh: Option[DataFrame] = None,
@@ -1096,8 +1041,7 @@ object Dedup {
       .join(gone.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_anti")
       .join(gone.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
 
-    val manifestNew = componentUpdateFrom(oldManifest, delta, keptEdges,
-        freshEdges, checkpointRounds)
+    val manifestNew = componentUpdateFrom(oldManifest, delta, keptEdges, freshEdges)
     // kept ∪ fresh edges are disjoint by construction (a fresh edge always
     // touches a fresh doc; kept edges never do) and together exact; the
     // explicit select restores (doc_a, doc_b) column ORDER — the doc_b
@@ -1119,8 +1063,7 @@ object Dedup {
     * appear or vanish, so components not holding churned docs or fresh
     * edges are unchanged by construction. */
   private[graft] def componentUpdateFrom(oldManifest: DataFrame, delta: DataFrame,
-                                         keptEdges: DataFrame, freshEdges: DataFrame,
-                                         checkpointRounds: Boolean = true): DataFrame = {
+                                         keptEdges: DataFrame, freshEdges: DataFrame): DataFrame = {
     val gone = delta.filter(col("status").isin("removed", "changed")).select("doc_id")
     // components the delta can affect: those holding a removed/changed doc
     // or an endpoint of a fresh edge (added docs have no old component);
@@ -1165,7 +1108,7 @@ object Dedup {
             subEdges.count()) == 0)
         subIds.select(col("doc_id"), col("doc_id").as("cluster_id"),
           lit(1L).as("cluster_size"), lit(true).as("is_canonical"))
-      else propagateComponents(subIds, subEdges, checkpointRounds)
+      else propagateComponents(subIds, subEdges)
     oldManifest.join(touchedCompsCk, Seq("cluster_id"), "left_anti")
       .select("doc_id", "cluster_id", "cluster_size", "is_canonical")
       .unionByName(recomputed.select("doc_id", "cluster_id", "cluster_size", "is_canonical"))
@@ -1231,7 +1174,7 @@ object Dedup {
         .select("doc_a", "doc_b")
         .persist()
       edges.write.parquet(s"$base/edges.parquet")
-      propagateComponents(old.select("doc_id"), edges, checkpointRounds = true)
+      propagateComponents(old.select("doc_id"), edges)
         .write.parquet(s"$base/manifest.parquet")
       edges.unpersist()
       sigs.unpersist()

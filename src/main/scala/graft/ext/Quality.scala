@@ -398,7 +398,8 @@ object Quality {
   }
 
   /** Gate a pool against FIXED weights and a FIXED calibration pair:
-    * keep ⟺ score·n_cal &gt; Σ_cal (cross-multiplied, integer-exact). */
+    * keep ⟺ score·n_cal &gt; Σ_cal (cross-multiplied, integer-exact).
+    * Stateless per micro-batch of [[graft.streaming.Streams.eachBatch]]. */
   def qsKeepWithThreshold(docs: DataFrame, weights: DataFrame,
                           totScore: Long, nTot: Long): DataFrame =
     qsRawScores(docs, weights)

@@ -995,9 +995,9 @@ object Similarity {
   /** Public cell-assignment entry point: assign caller-supplied vectors to
     * a FIXED trained quantizer (cent_id/centroid/c_nrm columns, e.g. from
     * [[kmeansCentroidsOn]]) — the IVF index-ingestion step as a first-class
-    * operator, and what Streams.assignCellsBatches streams new vectors
-    * through. Emits (vec_id, cell, ccos): the assigned cell and the
-    * r6-rounded cosine to its centroid. */
+    * operator, and what [[graft.streaming.Streams.eachBatch]] streams new
+    * vectors through (stateless per micro-batch). Emits (vec_id, cell,
+    * ccos): the assigned cell and the r6-rounded cosine to its centroid. */
   def assignCellsAgainstOn(embeddings: DataFrame, cent: DataFrame): DataFrame =
     assignCells(withNorm(embeddings), cent.select("cent_id", "centroid", "c_nrm"))
       .join(broadcast(cent.select(col("cent_id").as("cell"),
@@ -1584,7 +1584,7 @@ object Similarity {
     * `precomputedAssign` is the STREAMED-INGEST seam (the ANN twin of
     * [[Corpus.manifestWarehouseUpdateOn]]'s `precomputedFeatFresh`): a
     * deployment that runs arriving vectors through
-    * [[graft.streaming.Streams.assignCellsBatches]] already holds every
+    * [[assignCellsAgainstOn]] per micro-batch already holds every
     * fresh vector's (vec_id, cell) row — assignment is vector-local under
     * the frozen quantizer, so ingest-time rows are final — and the
     * periodic reconciliation must not re-run the distance pass. Contract:

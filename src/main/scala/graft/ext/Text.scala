@@ -757,7 +757,8 @@ object Text {
 
   /** Score documents against a FIXED heavy-gram census (the deployment
     * entry point: the census trains once, then any amount of new text
-    * streams through — see Streams.fluencyBatches). */
+    * streams through, stateless per micro-batch of
+    * [[graft.streaming.Streams.eachBatch]]). */
   def lmFluencyAgainstOn(docs: DataFrame, heavy: DataFrame): DataFrame = {
     val scored = fluencyGrams(docs).join(broadcast(heavy), Seq("gram"), "left")
       .groupBy("doc_id")
@@ -1078,7 +1079,7 @@ object Text {
   /** Corpus-statistics model for BM25: the query-vocabulary df table and
     * the 1-row (n_docs, avgdl) frame — train once, then score any amount
     * of new text against it ([[bm25ScoreAgainstOn]],
-    * [[graft.streaming.Streams.bm25Batches]]). */
+    * per micro-batch of [[graft.streaming.Streams.eachBatch]]). */
   def bm25StatsOn(docs: DataFrame): (DataFrame, DataFrame) = {
     val (tf, dl) = bm25Postings(docs)
     (tf.groupBy("term").agg(count(lit(1)).as("df")),
@@ -1088,8 +1089,8 @@ object Text {
   /** Score documents against a FIXED BM25 model (the deployment entry
     * point): one row per (query, doc) hit with the r6 score, unranked —
     * global top-k is the consumer's final aggregate over all batches, not
-    * a per-batch operation. Stateless per row, so it runs unchanged on a
-    * streaming frame. */
+    * a per-batch operation. Stateless per row, so it runs unchanged per
+    * micro-batch of [[graft.streaming.Streams.eachBatch]]. */
   def bm25ScoreAgainstOn(docs: DataFrame, dft: DataFrame, stats: DataFrame): DataFrame = {
     val (tf, dl) = bm25Postings(docs)
     bm25ScoreTail(tf, dl, dft, stats, bm25QueryFrame(docs.sparkSession))
@@ -1403,8 +1404,8 @@ object Text {
     * train once, score any amount of new text). Returns RAW per-pair
     * scores: every (query, doc) pair with its dense cosine plus the BM25
     * score of the matching-term docs (0 where no query term hits).
-    * Stateless per row — [[graft.streaming.Streams.hybridScoreBatches]]
-    * runs it unchanged on a streaming frame; global ranking is the
+    * Stateless per row — [[graft.streaming.Streams.eachBatch]] runs it
+    * unchanged on each micro-batch of a stream; global ranking is the
     * consumer's aggregate ([[hybridAgainstOn]] for the one-shot form).
     *
     * 100 TB shape: queries + their vocabulary + the frozen model are

@@ -188,8 +188,8 @@ object Multimodal {
     * aggregates. Every column is a pure function of the document, so
     * stream-time rows are final — this is the table a media ingest
     * pipeline appends to as objects arrive
-    * ([[graft.streaming.Streams.mediaFeatureBatches]] streams batches
-    * through exactly this function), and the registered per-type report
+    * ([[graft.streaming.Streams.eachBatch]] streams batches through
+    * exactly this function), and the registered per-type report
     * is a re-aggregation of it (StreamsSpec pins both: union of per-batch
     * rows ≡ this table over the full corpus, and its rollup ≡
     * `mm_feature_pipeline`). */
@@ -561,7 +561,8 @@ object Multimodal {
     * corpus, so the eval band table BROADCASTS and the candidate join is
     * band-bucketed on the corpus side — one codec pass per side, zero
     * corpus-sized joins, and the final manifest join carries
-    * (doc_id, long, long), never a payload. */
+    * (doc_id, long, long), never a payload. Stateless per micro-batch of
+    * [[graft.streaming.Streams.eachBatch]]. */
   def mediaDecontaminateAgainstOn(train: DataFrame, evalDocs: DataFrame,
                                   hamMax: Int = DctHamMax): DataFrame = {
     val bt = dctBands(dctHashOn(fromDocuments(train)).toDF())
@@ -1022,7 +1023,7 @@ object Multimodal {
         .persist()
       pairs.write.parquet(s"$base/pairs.parquet")
       graft.ext.Dedup.propagateComponents(old.select("doc_id"),
-          pairs.select("doc_a", "doc_b"), checkpointRounds = true)
+          pairs.select("doc_a", "doc_b"))
         .write.parquet(s"$base/manifest.parquet")
       pairs.unpersist()
       fp.unpersist()
@@ -1265,8 +1266,7 @@ object Multimodal {
     graft.ext.Dedup.propagateComponents(
       docs.select("doc_id"),
       dctBandPairsOn(docs).filter(col("hamming") <= lit(DctHamMax.toLong))
-        .select("doc_a", "doc_b"),
-      checkpointRounds = true)
+        .select("doc_a", "doc_b"))
 
   /** Materialized media cluster manifest — the text family's
     * [[graft.ext.Dedup.dupClusters]] discipline (VERDICT r16 task 2): the

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming variants of the batch pipelines (SURVEY §2.10 /
@@ -132,7 +132,8 @@ object Streams {
     * is kept: a post-commit crash can still retry batch `id`, and that
     * retry reads the latest committed snapshot BELOW id. Only the engine's
     * current batch is ever retried, so snapshots below the predecessor are
-    * unreachable and safe to drop. */
+    * unreachable and safe to drop. A failed prune is printed with its
+    * cause to stderr and the batch goes on. */
   private def pruneSnapshotsBefore(spark: SparkSession, root: String, name: String,
                                    id: Long, committed: Set[Long]): Unit =
     try {
@@ -143,7 +144,10 @@ object Streams {
           fs.delete(new org.apache.hadoop.fs.Path(s"$root/$name/b$j"), true)
         }
       }
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"Streams: pruning $root/$name below batch $id failed: " +
+        s"${e.getClass.getName}: ${e.getMessage}")
+    }
 
   /** events.parquet schema with ts as raw TIMESTAMP(NANOS) int64 (read as
     * long via the same legacy conf Tables.events uses, then truncated to a
@@ -253,29 +257,6 @@ object Streams {
         unix_micros(col("v_ts")).as("v_ts_us"), col("view_value"))
   }
 
-  /** Streaming distribution-drift gate via foreachBatch: each micro-batch
-    * of documents builds its length-bucket histogram and PSIs against a
-    * FROZEN baseline count table ([[graft.ext.Corpus.psiBucketsOn]] over
-    * the reference corpus — the baseline must not drift per batch, the
-    * qualityScoreBatches contract). `onBatch` receives the per-bucket PSI
-    * report with the stable/moderate/shifted verdict — the ingest-time
-    * data-quality alarm that catches a length shift (truncation bug,
-    * boilerplate injection) the moment a bad batch lands, instead of at
-    * the next corpus-wide audit. Stateless across batches: a single-batch
-    * run equals the batch [[graft.ext.Corpus.psiFromCounts]] exactly
-    * (StreamsSpec parity). */
-  def psiDriftBatches(docs: DataFrame, baselineCounts: DataFrame,
-                      trigger: org.apache.spark.sql.streaming.Trigger =
-                        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                     (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.ext.Corpus.psiFromCounts(baselineCounts,
-          graft.ext.Corpus.psiBucketsOn(batch.toDF())), id)
-      }
-      .trigger(trigger)
-      .start()
-
   /** LEFT OUTER watermarked stream-stream join — the other half of the
     * stream-join family: clicks with no same-user view in the window must
     * STILL emit, null-padded, and a streaming engine can only do that
@@ -327,53 +308,41 @@ object Streams {
         col("sk.n").as("n_events"))
   }
 
-  /** Streaming sequence packing via foreachBatch: every micro-batch is
-    * packed independently by the SAME sharded packer the batch job runs
-    * ([[graft.ext.Corpus.seqPackShardedOn]]). Chunks never span
-    * micro-batches, exactly as they never span shards — each batch is just
-    * more shards — so per-(lang, shard) token totals are preserved against
-    * a one-shot batch run and only chunk boundaries differ at batch edges:
-    * the standard incremental-packing contract. `onBatch` receives the
-    * packed manifest and the micro-batch id (provenance for resume).
-    * `trigger` defaults to AvailableNow (drain-and-stop); pass e.g.
-    * `Trigger.ProcessingTime(...)` to pack a live growing source
-    * continuously. */
-  def packBatches(docs: DataFrame, nShards: Int = graft.ext.Corpus.PackShards,
-                  trigger: org.apache.spark.sql.streaming.Trigger =
-                    org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                 (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.ext.Corpus.seqPackShardedOn(batch.toDF(), nShards), id)
-      }
+  /** The micro-batch driver of the streaming family: runs `body` on every
+    * micro-batch of `df` as a bounded DataFrame, with its batch id, and
+    * starts the query under `trigger` — AvailableNow (drain and stop) by
+    * default; pass e.g. `Trigger.ProcessingTime(...)` to run a live growing
+    * source continuously.
+    *
+    * Stateless ingest is any batch operator applied per micro-batch
+    * against FROZEN inputs (a weight table, a census, a trained quantizer,
+    * a static eval suite): `eachBatch(docs)((b, id) =>
+    * sink(Corpus.dsirScoreAgainstOn(b, weights), id))`. When the operator
+    * judges each row alone given those inputs, the union of the batch
+    * outputs equals the one-shot run over all rows seen (StreamsSpec pins
+    * it for every operator whose scaladoc points here). Frozen inputs must
+    * not drift per batch, so train them once outside the stream; global
+    * decisions (top-k, fusion, rank) are the consumer's final aggregate
+    * over all batches. The stateful loops below (signature indexes,
+    * fingerprint logs, cluster manifests) run on this driver too.
+    *
+    * The graft functions (`float_dot`, bloom probes, ...) are registered on
+    * the session BEFORE `start()`: the streaming query's cloned session
+    * state only carries imperative registrations made before the clone,
+    * so a session built without `GraftExtensions` still resolves them in
+    * the batches. */
+  def eachBatch(df: DataFrame, trigger: Trigger = Trigger.AvailableNow())
+               (body: (DataFrame, Long) => Unit): StreamingQuery = {
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    df.writeStream
+      .foreachBatch((batch: Dataset[Row], id: Long) => body(batch.toDF(), id))
       .trigger(trigger)
       .start()
+  }
 
-  /** Streaming benchmark decontamination via foreachBatch: each micro-batch
-    * of arriving training documents is scored against the STATIC eval suite
-    * by the same [[graft.ext.Corpus.decontaminateAgainstOn]] the batch job
-    * runs. The contamination decision is per-document and the eval set is
-    * fixed, so the operator is STATELESS across batches: the union of batch
-    * outputs is row-identical to the one-shot batch run over all documents
-    * seen (StreamsSpec parity). The eval-shingle set rebuilds per trigger
-    * here for simplicity; a long-running ingest job precomputes the distinct
-    * eval-hash frame once — or its bloom filter
-    * ([[graft.ext.Corpus.decontaminateBloomAgainstOn]]'s build side) — and
-    * closes over it across triggers. */
-  def decontaminateBatches(docs: DataFrame, evalDocs: DataFrame,
-                           trigger: org.apache.spark.sql.streaming.Trigger =
-                             org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                          (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.ext.Corpus.decontaminateAgainstOn(batch.toDF(), evalDocs), id)
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming FUZZY decontamination via foreachBatch: each micro-batch of
-    * arriving training documents is judged against the STATIC eval suite by
-    * the same [[graft.ext.Dedup.fuzzyDecontaminateAgainstOn]] the batch job
+  /** Streaming FUZZY decontamination: each micro-batch of arriving
+    * training documents is judged against the STATIC eval suite by the
+    * same [[graft.ext.Dedup.fuzzyDecontaminateAgainstOn]] the batch job
     * runs. The MinHash verdict is per-train-doc against the fixed eval
     * signature set, so the operator is STATELESS across batches and the
     * union of batch outputs is row-identical to the one-shot run over all
@@ -383,188 +352,15 @@ object Streams {
     * trigger here; a long-running ingest precomputes that tiny table once
     * and closes over it. */
   def fuzzyDecontaminateBatches(docs: DataFrame, evalDocs: DataFrame,
-                                trigger: org.apache.spark.sql.streaming.Trigger =
-                                  org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                               (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // per-batch caches must be released here (a long-running trigger
-        // would otherwise persist two new signature tables every batch) —
-        // same discipline as minhashDedupBatches' newSigs.unpersist()
-        val (scored, caches) =
-          graft.ext.Dedup.fuzzyDecontaminateWithCaches(batch.toDF(), evalDocs)
-        try onBatch(scored, id)
-        finally caches.foreach(_.unpersist())
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming MEDIA decontamination via foreachBatch — the multimodal
-    * twin of [[fuzzyDecontaminateBatches]]: each micro-batch of arriving
-    * training media is judged against the STATIC eval suite by the same
-    * [[graft.multimodal.Multimodal.mediaDecontaminateAgainstOn]] the batch
-    * job runs (banded DCT perceptual hashes, min-hamming manifest). The
-    * verdict is per-train-object against the fixed eval hash set, so the
-    * operator is STATELESS across batches and the union of batch outputs
-    * is row-identical to the one-shot run over all documents seen
-    * (StreamsSpec parity). The eval hashes recompute per trigger here; a
-    * long-running ingest hashes that tiny set once and closes over it. */
-  def mediaDecontaminateBatches(docs: DataFrame, evalDocs: DataFrame,
-                                trigger: org.apache.spark.sql.streaming.Trigger =
-                                  org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                               (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.multimodal.Multimodal
-          .mediaDecontaminateAgainstOn(batch.toDF(), evalDocs), id)
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming chunk ingestion via foreachBatch: arriving documents are cut
-    * into their overlapping windows by the same
-    * [[graft.ext.Corpus.chunkWindowsOn]] the batch job runs — chunk
-    * extents are a pure function of each document alone, so the operator
-    * is STATELESS and the union of batch outputs is row-identical to the
-    * one-shot run (StreamsSpec parity). This is the front half of a
-    * streaming embedding-index ingest: chunks out of this hook feed
-    * [[assignCellsBatches]] once embedded. */
-  def chunkWindowsBatches(docs: DataFrame,
-                          trigger: org.apache.spark.sql.streaming.Trigger =
-                            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                         (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.ext.Corpus.chunkWindowsOn(batch.toDF()), id)
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming DSIR importance scoring via foreachBatch: pool documents
-    * stream through a FROZEN per-bucket weight table
-    * ([[graft.ext.Corpus.dsirWeightsOn]], trained once on target ∪
-    * pool-sample — the published method's setup, where the raw pool is
-    * unbounded but the two hashed-n-gram distributions come from fixed
-    * samples). Scoring is per-document against a broadcast table, so the
-    * operator is STATELESS across batches and the union of batch outputs
-    * is row-identical to the one-shot
-    * [[graft.ext.Corpus.dsirScoreAgainstOn]] over all documents seen
-    * (StreamsSpec parity). Selection policy (top-K, threshold) belongs to
-    * the consumer of the scores — a global top-K is not a streaming
-    * decision. */
-  def dsirScoreBatches(docs: DataFrame, weights: DataFrame,
-                       trigger: org.apache.spark.sql.streaming.Trigger =
-                         org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                      (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.ext.Corpus.dsirScoreAgainstOn(batch.toDF(), weights), id)
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming quality-classifier gating via foreachBatch: new documents
-    * score against the FROZEN weight table and the FROZEN calibration pair
-    * ([[graft.ext.Quality.qsWeightsOn]] / [[graft.ext.Quality.qsThresholdOn]],
-    * trained once on a reference corpus — the threshold must not drift per
-    * micro-batch). Stateless across batches; the union of batch outputs
-    * equals the one-shot [[graft.ext.Quality.qsKeepWithThreshold]] over all
-    * documents seen (StreamsSpec parity). */
-  def qualityScoreBatches(docs: DataFrame, weights: DataFrame,
-                          totScore: Long, nTot: Long,
-                          trigger: org.apache.spark.sql.streaming.Trigger =
-                            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                         (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.ext.Quality.qsKeepWithThreshold(batch.toDF(), weights, totScore, nTot), id)
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming LM-fluency gating via foreachBatch: new documents score
-    * against a FROZEN heavy-bigram census
-    * ([[graft.ext.Text.fluencyCensusOn]], trained once on a reference
-    * corpus). Stateless across batches; the union of batch outputs equals
-    * the one-shot [[graft.ext.Text.lmFluencyAgainstOn]] over all documents
-    * seen (StreamsSpec parity). */
-  def fluencyBatches(docs: DataFrame, census: DataFrame,
-                     trigger: org.apache.spark.sql.streaming.Trigger =
-                       org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                    (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.ext.Text.lmFluencyAgainstOn(batch.toDF(), census), id)
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming BM25 scoring via foreachBatch: new documents are scored
-    * against a FROZEN retrieval model ([[graft.ext.Text.bm25StatsOn]]'s
-    * query-vocabulary df table + (n_docs, avgdl) stats) — the ingestion
-    * shape of a retrieval/seed-set pipeline, where corpus statistics train
-    * once and arriving text streams through a broadcast-model scoring
-    * pass. Stateless across batches; union of batch outputs equals the
-    * one-shot [[graft.ext.Text.bm25ScoreAgainstOn]] (StreamsSpec parity).
-    * Global top-k is the consumer's aggregate over all batches. */
-  def bm25Batches(docs: DataFrame, dft: DataFrame, stats: DataFrame,
-                  trigger: org.apache.spark.sql.streaming.Trigger =
-                    org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                 (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.ext.Text.bm25ScoreAgainstOn(batch.toDF(), dft, stats), id)
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming IVF index ingestion via foreachBatch: new vectors are
-    * assigned to a FROZEN trained quantizer
-    * ([[graft.ext.Similarity.kmeansCentroidsOn]]) — the standard ANN
-    * index-build shape, where the coarse quantizer trains once on a sample
-    * and the corpus (or its growth) streams through a broadcast-centroid
-    * map pass. Stateless across batches; union of batch outputs equals the
-    * one-shot [[graft.ext.Similarity.assignCellsAgainstOn]] (StreamsSpec
-    * parity). */
-  def assignCellsBatches(vectors: DataFrame, cent: DataFrame,
-                         trigger: org.apache.spark.sql.streaming.Trigger =
-                           org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                        (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.ext.Similarity.assignCellsAgainstOn(batch.toDF(), cent), id)
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming HYBRID scoring via foreachBatch: arriving documents (one
-    * row per doc with BOTH modalities — doc_id, text, embedding) are
-    * scored against a FROZEN query table and frozen BM25 statistics
-    * through [[graft.ext.Text.hybridScoreAgainstOn]] — the deployment
-    * shape of hybrid retrieval ingest, where the query set and the sparse
-    * model are broadcast-sized state and new data streams through a
-    * stateless dense-cosine + sparse-BM25 scoring pass. Union of batch
-    * outputs equals the one-shot form over all rows seen (StreamsSpec
-    * parity); global per-query ranking/fusion is the consumer's final
-    * aggregate ([[graft.ext.Text.hybridAgainstOn]]), exactly the
-    * [[bm25Batches]] top-k convention. */
-  def hybridScoreBatches(rows: DataFrame, queries: DataFrame,
-                         dft: DataFrame, stats: DataFrame,
-                         trigger: org.apache.spark.sql.streaming.Trigger =
-                           org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                        (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    // the dense half needs the native float_dot: register BEFORE start so
-    // the streaming query's cloned session state inherits it (a session
-    // without GraftExtensions only carries imperative registrations made
-    // before the clone)
-    graft.functions.GraftFunctions.register(rows.sparkSession)
-    rows.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.ext.Text.hybridScoreAgainstOn(batch.toDF(), queries, dft, stats), id)
-      }
-      .trigger(trigger)
-      .start()
-  }
+                                trigger: Trigger = Trigger.AvailableNow())
+                               (onBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    eachBatch(docs, trigger) { (batch, id) =>
+      // per-batch caches must be released here (a long-running trigger
+      // would otherwise persist two new signature tables every batch)
+      val (scored, caches) = graft.ext.Dedup.fuzzyDecontaminateWithCaches(batch, evalDocs)
+      try onBatch(scored, id)
+      finally caches.foreach(_.unpersist())
+    }
 
   /** Incremental MinHash near-dup detection via foreachBatch: each
     * micro-batch's documents are signed with the SAME
@@ -590,18 +386,14 @@ object Streams {
   def minhashDedupBatches(docs: DataFrame, sigPath: String,
                           numHashes: Int = graft.ext.Dedup.NumHashes,
                           numBands: Int = graft.ext.Dedup.NumBands,
-                          trigger: org.apache.spark.sql.streaming.Trigger =
-                            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                         (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+                          trigger: Trigger = Trigger.AvailableNow())
+                         (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
     // a NEW query's engine ids restart at 0: offset by the committed
     // history so prior runs' state is read, never clobbered ([[batchIdBase]])
     val base = batchIdBase(docs.sparkSession, sigPath)
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        minhashDedupBatchBody(batch.toDF(), base + id, sigPath, numHashes, numBands)(onBatch)
-      }
-      .trigger(trigger)
-      .start()
+    eachBatch(docs, trigger) { (batch, id) =>
+      minhashDedupBatchBody(batch, base + id, sigPath, numHashes, numBands)(onBatch)
+    }
   }
 
   /** The per-batch body of [[minhashDedupBatches]], factored out so
@@ -615,18 +407,21 @@ object Streams {
     // persisted: consumed by its own bands, the union's bands, both
     // est-jaccard rejoins, and the state write
     val newSigs = D.minhashSigsOn(b, numHashes).persist()
-    // exactly-once: signatures of COMMITTED batches before this id
-    // only — a retry recomputes the identical pair set and rewrites
-    // its own batch dir (see the batch-id-keyed state contract above)
-    val committed = committedIds(spark, sigPath)
-    val old = committedStateBefore(spark, sigPath, "sigs", id, committed)
-    val all = old.map(_.unionByName(newSigs)).getOrElse(newSigs.toDF())
-    val cand = D.minhashCandidatesAgainst(newSigs, all, numHashes, numBands)
-    onBatch(D.minhashEstJaccard(cand, all, numHashes), id)
-    writeBatchState(newSigs, sigPath, "sigs", id)
-    commitBatch(spark, sigPath, id)
-    newSigs.unpersist()
-    ()
+    try {
+      // exactly-once: signatures of COMMITTED batches before this id
+      // only — a retry recomputes the identical pair set and rewrites
+      // its own batch dir (see the batch-id-keyed state contract above)
+      val committed = committedIds(spark, sigPath)
+      val old = committedStateBefore(spark, sigPath, "sigs", id, committed)
+      val all = old.map(_.unionByName(newSigs)).getOrElse(newSigs.toDF())
+      val cand = D.minhashCandidatesAgainst(newSigs, all, numHashes, numBands)
+      onBatch(D.minhashEstJaccard(cand, all, numHashes), id)
+      writeBatchState(newSigs, sigPath, "sigs", id)
+      commitBatch(spark, sigPath, id)
+    } finally {
+      newSigs.unpersist()
+      ()
+    }
   }
 
   /** The full curation funnel as one streaming ingest via foreachBatch —
@@ -655,62 +450,57 @@ object Streams {
   def curationFunnelBatches(docs: DataFrame, census: DataFrame, evalDocs: DataFrame,
                             fpPath: String,
                             qsWeights: DataFrame, qsThreshold: (Long, Long),
-                            trigger: org.apache.spark.sql.streaming.Trigger =
-                              org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                           (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-  {
+                            trigger: Trigger = Trigger.AvailableNow())
+                           (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
     // the eval suite is STATIC: build its broadcast-sized shingle hash set
     // ONCE for the stream's lifetime (persisted on first batch) instead of
     // re-tokenizing and re-distincting the eval docs every micro-batch
     val evalHashes = graft.ext.Corpus.evalShingleHashes(evalDocs).persist()
     // cross-run id offset — see [[batchIdBase]]
     val base = batchIdBase(docs.sparkSession, fpPath)
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id0: Long) =>
-        val id = base + id0
-        val spark = batch.sparkSession
-        // persisted: feeds the fingerprint log, the canonical join, and
-        // every gate's scan of the batch
-        val b = batch.toDF().persist()
-        // null-safe sentinel, as in Corpus.snapshotDeltaOn: a NULL-text doc
-        // must still group with its fellow NULL-fp docs in the canonical
-        // join (a NULL key would silently drop out of the equi-join, where
-        // the batch funnel's fingerprint window keeps NULL fps together)
-        val fps = b.select(col("doc_id"),
-          coalesce(md5(graft.ext.Text.normalized(col("text"))), lit("<null>")).as("fp"))
-        val committed = committedIds(spark, fpPath)
-        val prior = committedStateBefore(spark, fpPath, "fps", id, committed)
-        val seen = prior.map(_.unionByName(fps)).getOrElse(fps)
-        val canon = fps
-          .join(seen.groupBy("fp").agg(min(col("doc_id")).as("canonical_doc_id")), "fp")
-          .select(col("doc_id"), (col("doc_id") === col("canonical_doc_id")).as("is_canonical"))
-        val train = b.filter(pmod(col("doc_id"), lit(10L)) =!= lit(graft.ext.Corpus.BenchSlice))
-        // classifier gate: frozen weights + FROZEN calibration pair — the
-        // threshold must not drift per micro-batch, so it arrives as two
-        // longs trained alongside the weights (batch parity with the
-        // full-corpus funnel is exact because the batch funnel's gate uses
-        // the same full-corpus calibration)
-        val classifier = graft.ext.Quality.qsKeepWithThreshold(
-          train, qsWeights, qsThreshold._1, qsThreshold._2)
-        try {
-          onBatch(
-            graft.ext.Curation.curationFunnelAgainstHashesOn(train, census, evalHashes, canon,
-              classifier), id)
-          // batch-id-keyed state (the exactly-once contract above): a
-          // retried batch reads only committed-before-id fingerprints and
-          // rewrites its own dir. Double-reading its first attempt would
-          // actually be harmless HERE (canonical election is min-over-
-          // duplicates) — the discipline is kept uniform with the media
-          // funnel, where it is load-bearing.
-          writeBatchState(fps, fpPath, "fps", id)
-          commitBatch(spark, fpPath, id)
-        } finally {
-          b.unpersist()
-          ()
-        }
+    eachBatch(docs, trigger) { (batch, id0) =>
+      val id = base + id0
+      val spark = batch.sparkSession
+      // persisted: feeds the fingerprint log, the canonical join, and
+      // every gate's scan of the batch
+      val b = batch.persist()
+      // null-safe sentinel, as in Corpus.snapshotDeltaOn: a NULL-text doc
+      // must still group with its fellow NULL-fp docs in the canonical
+      // join (a NULL key would silently drop out of the equi-join, where
+      // the batch funnel's fingerprint window keeps NULL fps together)
+      val fps = b.select(col("doc_id"),
+        coalesce(md5(graft.ext.Text.normalized(col("text"))), lit("<null>")).as("fp"))
+      val committed = committedIds(spark, fpPath)
+      val prior = committedStateBefore(spark, fpPath, "fps", id, committed)
+      val seen = prior.map(_.unionByName(fps)).getOrElse(fps)
+      val canon = fps
+        .join(seen.groupBy("fp").agg(min(col("doc_id")).as("canonical_doc_id")), "fp")
+        .select(col("doc_id"), (col("doc_id") === col("canonical_doc_id")).as("is_canonical"))
+      val train = b.filter(pmod(col("doc_id"), lit(10L)) =!= lit(graft.ext.Corpus.BenchSlice))
+      // classifier gate: frozen weights + FROZEN calibration pair — the
+      // threshold must not drift per micro-batch, so it arrives as two
+      // longs trained alongside the weights (batch parity with the
+      // full-corpus funnel is exact because the batch funnel's gate uses
+      // the same full-corpus calibration)
+      val classifier = graft.ext.Quality.qsKeepWithThreshold(
+        train, qsWeights, qsThreshold._1, qsThreshold._2)
+      try {
+        onBatch(
+          graft.ext.Curation.curationFunnelAgainstHashesOn(train, census, evalHashes, canon,
+            classifier), id)
+        // batch-id-keyed state (the exactly-once contract above): a
+        // retried batch reads only committed-before-id fingerprints and
+        // rewrites its own dir. Double-reading its first attempt would
+        // actually be harmless HERE (canonical election is min-over-
+        // duplicates) — the discipline is kept uniform with the media
+        // funnel, where it is load-bearing.
+        writeBatchState(fps, fpPath, "fps", id)
+        commitBatch(spark, fpPath, id)
+      } finally {
+        b.unpersist()
+        ()
       }
-      .trigger(trigger)
-      .start()
+    }
   }
 
   // ------------------------------------------------ funnel / cohort twins
@@ -907,56 +697,6 @@ object Streams {
       }
   }
 
-  /** Streaming ingest of the manifest-update family's per-doc feature
-    * warehouse rows ([[graft.ext.Corpus.manifestDocFeatures]] — the five
-    * frozen gate bits, mix copy count, fingerprint, quality score, split
-    * and token count) against FROZEN models: every column is doc-local
-    * given the models, so each micro-batch computes its rows independently
-    * and the union across batches equals the batch run exactly
-    * (StreamsSpec parity). This is the INGEST half of the incremental
-    * manifest: arriving documents get their warehouse feature rows at
-    * stream time, and the periodic `t_manifest_incremental` reconciliation
-    * handles the cross-doc membership state (canonicals, clusters,
-    * elections, pack positions) that no per-batch computation can. */
-  def manifestFeatureBatches(docs: DataFrame, census: DataFrame,
-                             weights: DataFrame, threshold: (Long, Long),
-                             evalHashes: DataFrame,
-                             trigger: org.apache.spark.sql.streaming.Trigger =
-                               org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                            (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.ext.Corpus.manifestDocFeatures(batch.toDF(), census, weights,
-          threshold._1, threshold._2, evalHashes), id)
-      }
-      .trigger(trigger)
-      .start()
-
-  /** Streaming media ingest — the multimodal twin of
-    * [[manifestFeatureBatches]], and the canonical append-only 100 TB
-    * source: media objects arrive continuously, and each micro-batch runs
-    * the decode → feature-extract → resize plumbing ONCE at ingest time
-    * ([[graft.multimodal.Multimodal.mediaDocFeaturesOn]] — metadata,
-    * content hash, chunk counts, stub-codec descriptor summary), appending
-    * to the media feature warehouse so no downstream consumer ever decodes
-    * a payload twice. Every column is doc-local, so per-batch rows are
-    * final and their union equals the batch-built table exactly
-    * (StreamsSpec parity); the registered `mm_feature_pipeline` /
-    * `mm_media_meta` reports are re-aggregations of this warehouse. At
-    * scale the per-partition codec-init amortization inside
-    * `decodeFeatures` carries over unchanged — a micro-batch is just a
-    * bounded DataFrame. */
-  def mediaFeatureBatches(docs: DataFrame,
-                          trigger: org.apache.spark.sql.streaming.Trigger =
-                            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                         (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        onBatch(graft.multimodal.Multimodal.mediaDocFeaturesOn(batch.toDF()), id)
-      }
-      .trigger(trigger)
-      .start()
-
   /** Incremental perceptual-hash media dedup via foreachBatch — the
     * multimodal twin of [[minhashDedupBatches]]: each micro-batch's media
     * objects are DCT-hashed with the SAME
@@ -977,20 +717,19 @@ object Streams {
     * index, never corpus × corpus. */
   def mediaDedupBatches(docs: DataFrame, hashPath: String,
                         hamMax: Int = graft.multimodal.Multimodal.DctHamMax,
-                        trigger: org.apache.spark.sql.streaming.Trigger =
-                          org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                       (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+                        trigger: Trigger = Trigger.AvailableNow())
+                       (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
     // cross-run id offset — see [[batchIdBase]]
     val base = batchIdBase(docs.sparkSession, hashPath)
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id0: Long) =>
-        val id = base + id0
-        val M = graft.multimodal.Multimodal
-        val spark = batch.sparkSession
-        // persisted: consumed by its own bands, the union's bands, and the
-        // state append — released per batch (the minhashDedupBatches
-        // discipline)
-        val newFp = M.dctHashOn(M.fromDocuments(batch.toDF())).toDF().persist()
+    eachBatch(docs, trigger) { (batch, id0) =>
+      val id = base + id0
+      val M = graft.multimodal.Multimodal
+      val spark = batch.sparkSession
+      // persisted: consumed by its own bands, the union's bands, and the
+      // state append — released per batch (the minhashDedupBatches
+      // discipline)
+      val newFp = M.dctHashOn(M.fromDocuments(batch)).toDF().persist()
+      try {
         // exactly-once: committed-before-id index only; retry replays
         // idempotently (batch-id-keyed state contract)
         val committed = committedIds(spark, hashPath)
@@ -1000,11 +739,11 @@ object Streams {
           .filter(col("hamming") <= lit(hamMax)), id)
         writeBatchState(newFp, hashPath, "hashes", id)
         commitBatch(spark, hashPath, id)
+      } finally {
         newFp.unpersist()
         ()
       }
-      .trigger(trigger)
-      .start()
+    }
   }
 
   /** The full MEDIA curation funnel as one streaming ingest via
@@ -1017,7 +756,7 @@ object Streams {
     *
     *  - `feat`: append-only doc-local feature rows — ONE codec pass per
     *    object at ingest (decode-gate dims + media type + payload bytes,
-    *    the [[mediaFeatureBatches]] discipline);
+    *    the [[graft.multimodal.Multimodal.mediaDocFeaturesOn]] discipline);
     *  - `af`: append-only alignment verdicts — per-batch caption-tower
     *    scoring against the STATIC media-embedding table;
     *  - `hashes` / `pairs`: the [[mediaDedupBatches]] DCT index and pair
@@ -1045,18 +784,13 @@ object Streams {
     * update bounded to touched components — never a corpus rescan; the
     * verdict assembly joins only the touched clusters' members. */
   def mmCurationFunnelBatches(docs: DataFrame, embeddings: DataFrame, statePath: String,
-                              trigger: org.apache.spark.sql.streaming.Trigger =
-                                org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                             (onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-  {
+                              trigger: Trigger = Trigger.AvailableNow())
+                             (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
     // cross-run id offset — see [[batchIdBase]]
     val base = batchIdBase(docs.sparkSession, statePath)
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        mmCurationFunnelBatchBody(batch.toDF(), embeddings, statePath, base + id)(onBatch)
-      }
-      .trigger(trigger)
-      .start()
+    eachBatch(docs, trigger) { (batch, id) =>
+      mmCurationFunnelBatchBody(batch, embeddings, statePath, base + id)(onBatch)
+    }
   }
 
   /** The per-batch body of [[mmCurationFunnelBatches]], factored out so
@@ -1345,7 +1079,7 @@ object Streams {
       .format("memory")
       .queryName(name)
       .outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     spark.table(name)

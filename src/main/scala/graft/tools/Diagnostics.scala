@@ -6,8 +6,12 @@ import org.apache.spark.sql.SparkSession
   * correctness dumps, executed plans and per-job profiles. Not part of the
   * query registry; each runs with one `runMain`. */
 object Tools {
+  /** The session every main runs on (these, [[graft.Verify]] and
+    * [[graft.Bench]]), so their counts are taken on the same cores and
+    * confs: `local[$SPARK_GRAFT_CPUS]`, 4 when unset, with as many shuffle
+    * partitions. */
   def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.functions.GraftExtensions().apply(_))

@@ -634,7 +634,7 @@ class DedupSpec extends SparkSpec {
       val ids = spark.range(n).select(col("id").as("doc_id"))
       val pairs = spark.range(n - 1)
         .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-      val out = Dedup.propagateComponents(ids, pairs, checkpointRounds = true)
+      val out = Dedup.propagateComponents(ids, pairs)
         .select("doc_id", "cluster_id", "cluster_size", "is_canonical").collect()
       assert(out.length == n)
       assert(out.forall(r => r.getLong(1) == 0L && r.getLong(2) == n),

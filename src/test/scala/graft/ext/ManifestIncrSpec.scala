@@ -432,7 +432,7 @@ class ManifestIncrSpec extends SparkSpec {
 
   test("production loop end-to-end: streamed feature ingest feeds the reconcile, equals the batch update and the rebuild") {
     // The two proven halves joined at their seam: fresh documents arrive
-    // as a STREAM through Streams.manifestFeatureBatches (frozen base
+    // as a STREAM through Streams.eachBatch + manifestDocFeatures (frozen base
     // models — stream-time feature rows are final because every column is
     // doc-local), land in a feature warehouse table, and the periodic
     // manifestWarehouseUpdateOn reconciliation consumes THAT table via
@@ -475,8 +475,8 @@ class ManifestIncrSpec extends SparkSpec {
     val featDir = s"$root/features"
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$root/in")
-    val q = graft.streaming.Streams.manifestFeatureBatches(
-      stream, census, weights, (thrTot, thrN), evalh) { (feats, _) =>
+    val q = graft.streaming.Streams.eachBatch(stream) { (b, _) =>
+      val feats = Corpus.manifestDocFeatures(b, census, weights, thrTot, thrN, evalh)
       feats.write.mode("append").parquet(featDir) // the stream-built warehouse
     }
     q.awaitTermination()

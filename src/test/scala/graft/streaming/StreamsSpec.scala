@@ -919,7 +919,8 @@ class StreamsSpec extends SparkSpec {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Long)]
     val stream = spark.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.packBatches(stream) { (manifest, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val manifest = graft.ext.Corpus.seqPackShardedOn(b)
       val rows = manifest.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(3), r.getLong(4)))
       buf.synchronized { buf ++= rows }
@@ -959,7 +960,8 @@ class StreamsSpec extends SparkSpec {
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val stream = spark.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.manifestFeatureBatches(stream, census, weights, thr, evalh) { (feats, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val feats = graft.ext.Corpus.manifestDocFeatures(b, census, weights, thr._1, thr._2, evalh)
       val rows = feats.collect().map(_.toSeq)
       buf.synchronized { buf ++= rows }
     }
@@ -992,7 +994,8 @@ class StreamsSpec extends SparkSpec {
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val stream = spark.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.mediaFeatureBatches(stream) { (feats, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val feats = graft.multimodal.Multimodal.mediaDocFeaturesOn(b)
       val rows = feats.collect().map(_.toSeq)
       buf.synchronized { buf ++= rows }
     }
@@ -1020,7 +1023,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ANN production loop end-to-end: streamed cell assignment feeds the state-rolling manifest update") {
     // The vector-side twin of the manifest loop spec: arriving vectors
-    // (added + re-embedded) stream through assignCellsBatches against the
+    // (added + re-embedded) stream through assignCellsAgainstOn against the
     // frozen quantizer into an assignment warehouse, and the periodic
     // ivfWarehouseUpdateOn reconciliation consumes THAT table via
     // precomputedAssign instead of re-running the distance pass; the
@@ -1057,7 +1060,8 @@ class StreamsSpec extends SparkSpec {
     val asgDir = s"$base/assign"
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.assignCellsBatches(stream, cent) { (asg, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val asg = graft.ext.Similarity.assignCellsAgainstOn(b, cent)
       asg.write.mode("append").parquet(asgDir) // the assignment warehouse
     }
     q.awaitTermination()
@@ -1471,6 +1475,37 @@ class StreamsSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("a failing batch sink still releases the dedup loops' per-batch caches") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
+    val base = Files.createTempDirectory("graft_sink_failure").toString
+    Files.createDirectories(Paths.get(s"$base/in"))
+    graft.ops.Tables.documents(spark, sfDir)
+      .select("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(s"$base/tmp")
+    val part = new java.io.File(s"$base/tmp").listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, Paths.get(s"$base/in/b0.parquet"), StandardCopyOption.ATOMIC_MOVE)
+    val stream = spark.readStream.schema(documentsSchema).parquet(s"$base/in")
+    // the sink runs the emitted frame, so the batch's cache is built, then fails
+    def failingSink(out: DataFrame, id: Long): Unit = {
+      out.collect()
+      throw new IllegalStateException("sink down")
+    }
+    val loops = Seq[(String, ((DataFrame, Long) => Unit) => StreamingQuery)](
+      "minhashDedupBatches" -> (Streams.minhashDedupBatches(stream, s"$base/sigs")(_)),
+      "mediaDedupBatches" -> (Streams.mediaDedupBatches(stream, s"$base/hashes")(_)))
+    spark.catalog.clearCache()
+    loops.foreach { case (name, start) =>
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val err = intercept[StreamingQueryException](start(failingSink).awaitTermination())
+      assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage == "sink down"), s"$name failed for another reason: $err")
+      assert(spark.sparkContext.getPersistentRDDs.size === before,
+        s"$name left its per-batch cache behind after the sink failed")
+    }
+  }
+
   test("exactly-once state: a SECOND streaming query over the same state root reads history " +
       "and never clobbers it (cross-run id offset)") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -1531,7 +1566,8 @@ class StreamsSpec extends SparkSpec {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Boolean)]
     val stream = spark.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.mediaDecontaminateBatches(stream, evalDocs) { (scored, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val scored = graft.multimodal.Multimodal.mediaDecontaminateAgainstOn(b, evalDocs)
       val rows = scored.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       buf.synchronized { buf ++= rows }
@@ -1564,7 +1600,8 @@ class StreamsSpec extends SparkSpec {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double, Boolean)]
     val stream = spark.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.decontaminateBatches(stream, evalDocs) { (scored, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val scored = graft.ext.Corpus.decontaminateAgainstOn(b, evalDocs)
       val rows = scored.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getBoolean(4)))
       buf.synchronized { buf ++= rows }
@@ -1595,7 +1632,8 @@ class StreamsSpec extends SparkSpec {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long, String)]
     val stream = spark.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.chunkWindowsBatches(stream) { (chunks, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val chunks = graft.ext.Corpus.chunkWindowsOn(b)
       val rows = chunks.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getString(5)))
       buf.synchronized { buf ++= rows }
@@ -1683,7 +1721,8 @@ class StreamsSpec extends SparkSpec {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     val stream = spark.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.dsirScoreBatches(stream, weights) { (scored, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val scored = graft.ext.Corpus.dsirScoreAgainstOn(b, weights)
       val rows = scored.select("doc_id", "score", "n_tokens").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       buf.synchronized { buf ++= rows }
@@ -1719,7 +1758,8 @@ class StreamsSpec extends SparkSpec {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
     val stream = spark.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.qualityScoreBatches(stream, weights, tot, n) { (out, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val out = graft.ext.Quality.qsKeepWithThreshold(b, weights, tot, n)
       val rows = out.collect().map(r => (r.getLong(0), r.getBoolean(1)))
       buf.synchronized { buf ++= rows }
     }
@@ -1757,7 +1797,8 @@ class StreamsSpec extends SparkSpec {
     val verdicts = scala.collection.mutable.Map.empty[Long, (String, Double)]
     val stream = spark.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.psiDriftBatches(stream, baseline) { (report, id) =>
+    val q = Streams.eachBatch(stream) { (b, id) =>
+      val report = graft.ext.Corpus.psiFromCounts(baseline, graft.ext.Corpus.psiBucketsOn(b))
       val h = report.collect().head
       verdicts.synchronized {
         verdicts(id) = (h.getAs[String]("verdict"), h.getAs[Double]("psi_total"))
@@ -1791,7 +1832,8 @@ class StreamsSpec extends SparkSpec {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Option[Double], Boolean)]
     val stream = spark.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.fluencyBatches(stream, census) { (scored, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val scored = graft.ext.Text.lmFluencyAgainstOn(b, census)
       val rows = scored.collect().map(r =>
         (r.getLong(0), r.getLong(2), if (r.isNullAt(3)) None else Some(r.getDouble(3)), r.getBoolean(4)))
       buf.synchronized { buf ++= rows }
@@ -1829,7 +1871,8 @@ class StreamsSpec extends SparkSpec {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.assignCellsBatches(stream, cent) { (assigned, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val assigned = graft.ext.Similarity.assignCellsAgainstOn(b, cent)
       val rows = assigned.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       buf.synchronized { buf ++= rows }
     }
@@ -2232,7 +2275,8 @@ class StreamsSpec extends SparkSpec {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
     val stream = spark.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.bm25Batches(stream, dftP, statsP) { (out, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val out = graft.ext.Text.bm25ScoreAgainstOn(b, dftP, statsP)
       val rows = out.as[(Long, Long, Long, Double)].collect()
       buf.synchronized { buf ++= rows }
     }
@@ -2275,7 +2319,8 @@ class StreamsSpec extends SparkSpec {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double, Double, Long)]
     val stream = spark.readStream.schema(rows.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = Streams.hybridScoreBatches(stream, queries, dft, stats) { (out, _) =>
+    val q = Streams.eachBatch(stream) { (b, _) =>
+      val out = graft.ext.Text.hybridScoreAgainstOn(b, queries, dft, stats)
       val got = out.as[(Long, Long, Double, Double, Long)].collect()
       buf.synchronized { buf ++= got }
     }
