@@ -1951,18 +1951,14 @@ object Corpus {
     * pattern of `dd_clusters_incremental`): built once from the simulated
     * OLD snapshot, then every later invocation pays only the delta-bounded
     * update. View-sized (|langs × sources| rows), parquet-backed. */
-  private val ivmBaseCache = new graft.ops.FrozenCaches.Memo[Int, String](
-    beforeClear = _.forEach(p =>
-      graft.ops.FrozenCaches.deleteTree(java.nio.file.Paths.get(p).getParent.toString)),
-    label = "ivm_base")
+  private val ivmBaseCache = new graft.ops.FrozenCaches.DirMemo[Int, String]("ivm_base")
 
   def ivmStats(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val old = deltaOldSlice(docs)
     val nw = deltaNewSlice(docs)
-    val basePath = ivmBaseCache.get(dir, DeltaMod) {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivm_base")
-        .toString + "/base_view.parquet"
+    val basePath = ivmBaseCache.get(dir, DeltaMod) { base =>
+      val p = s"$base/base_view.parquet"
       ivmBaseViewOn(old).write.parquet(p)
       p
     }
@@ -2058,14 +2054,11 @@ object Corpus {
     * consumer of this family) reads FROZEN state: no manifest
     * recomposition, no corpus scan, just the permutation (the
     * `mm_epoch_shuffle` discipline, VERDICT r16 task 6). */
-  private val rolledManifestRowsCache = new graft.ops.FrozenCaches.Memo[Unit, String](
-    beforeClear = _.forEach(p =>
-      graft.ops.FrozenCaches.deleteTree(java.nio.file.Paths.get(p).getParent.toString)),
-    label = "t_epoch_manifest")
+  private val rolledManifestRowsCache =
+    new graft.ops.FrozenCaches.DirMemo[Unit, String]("t_epoch_manifest")
 
   private[graft] def frozenRolledManifestRows(spark: SparkSession, dir: String): String =
-    rolledManifestRowsCache.get(dir, ()) {
-      val base = java.nio.file.Files.createTempDirectory("graft_t_epoch").toString
+    rolledManifestRowsCache.get(dir, ()) { base =>
       manifestRolled(spark, dir).write.parquet(s"$base/manifest.parquet")
       s"$base/manifest.parquet"
     }
@@ -2316,7 +2309,7 @@ object Corpus {
     * bucket count scales with the cluster (buckets ≈ shuffle
     * parallelism), not with this row's demo constant. */
   val ManifestPublishBuckets = 8
-  private val publishCache = new graft.ops.FrozenCaches.Memo[Int, String]()
+  private val publishCache = new graft.ops.FrozenCaches.Memo[Int, String]("manifest_publish")
 
   private def publishedManifest(spark: SparkSession, dir: String): String =
     publishCache.get(dir, ManifestPublishBuckets) {
@@ -2338,7 +2331,8 @@ object Corpus {
         if (u.getScheme == null || u.getScheme == "file")
           graft.ops.FrozenCaches.deleteTree(
             java.nio.file.Paths.get(u.getPath).resolve(tbl).toString)
-      } catch { case _: Throwable => () }
+      } catch { case scala.util.control.NonFatal(e) =>
+        graft.ops.FrozenCaches.report(s"warehouse cleanup of $tbl", e) }
       graft.sources.Formats.writePartitionedBucketed(
         pipelineManifest(spark, dir), tbl, "split", Seq("doc_id"),
         ManifestPublishBuckets)
@@ -2583,12 +2577,10 @@ object Corpus {
     * pipelines literally share one warehouse.
     * Memo value: (state dir, threshold Σscores, threshold n). */
   private val manifestBaseCache =
-    new graft.ops.FrozenCaches.Memo[Unit, (String, Long, Long)](
-      beforeClear = _.forEach(p => graft.ops.FrozenCaches.deleteTree(p._1)),
-      label = "manifest_base")
+    new graft.ops.FrozenCaches.DirMemo[Unit, (String, Long, Long)]("manifest_base")
 
   private[ext] def frozenManifestBase(spark: SparkSession, dir: String): (String, Long, Long) =
-    manifestBaseCache.get(dir, ()) {
+    manifestBaseCache.get(dir, ()) { base =>
       val docs = Tables.documents(spark, dir)
       // BOOTSTRAP-ONLY persist: the base build reads the old snapshot from
       // ~11 subplans (three model trainings, eight feature/gate passes,
@@ -2597,7 +2589,6 @@ object Corpus {
       // to disk), released before returning; the steady-state update never
       // takes this path.
       val old = deltaOldSlice(docs).persist()
-      val base = java.nio.file.Files.createTempDirectory("graft_manifest_base").toString
       // models first (train-once); each is written then read back so every
       // downstream plan starts from a parquet leaf, not the training subtree
       graft.ext.Text.fluencyCensusOn(old).write.parquet(s"$base/census.parquet")
@@ -2808,105 +2799,115 @@ object Corpus {
     val featFreshWarm = graft.ops.Overlap.background(spark, "mwu: featFresh ckpt") {
       featFresh.count()
     }
-    // the carried majority: one anti join of narrow warehouse rows.
-    // NOT checkpointed (round 19): both consumers (reElect's (doc_id, fp)
-    // projection and featCanon itself) live inside featCanon's ONE plan,
-    // so a checkpoint here materialized a full corpus-wide feature copy
-    // only to save re-scanning the column-pruned features.parquet — the
-    // scan is the cheaper side at any scale.
-    val featNew = featOld.join(gone, Seq("doc_id"), "left_anti")
-      .unionByName(featFresh)
-    // exact-dup canonical re-election inside TOUCHED fingerprint groups
-    // only: a group's minimum can move iff the delta added or removed one
-    // of its members; every other doc carries its stored verdict.
-    // NOT checkpointed (round 19): reElect is its ONLY consumer, so the
-    // subtree runs exactly once inside featCanon's materialization — a
-    // checkpoint here paid its own job cascade for nothing.
-    val touchedFp = featOld.join(gone, Seq("doc_id"), "left_semi").select("fp")
-      .unionByName(featFresh.select("fp")).distinct()
-    val reElect = featNew.select("doc_id", "fp")
-      .join(touchedFp, Seq("fp"), "left_semi")
-      .groupBy("fp").agg(min("doc_id").as("canon_id"))
-    val featCanon = featNew.withColumnRenamed("is_canonical", "stored_canon")
-      .join(reElect, Seq("fp"), "left")
-      .withColumn("is_canonical",
-        when(col("canon_id").isNotNull, col("doc_id") === col("canon_id"))
-          .otherwise(col("stored_canon")))
-      .drop("canon_id", "stored_canon")
-      // repartitioned by key before the checkpoint (round 19, the
-      // mmManifestFromState stateCkpt rationale): the carried∪fresh union
-      // stacks partition counts and a localCheckpoint freezes them; one
-      // size-coalesced exchange keeps downstream task counts proportional
-      // to data, not to checkpoint arity
-      .repartition(col("doc_id"))
-      .localCheckpoint(eager = false)
-    // overlap (guide §2.6, round 19): the carried-feature/re-election chain
-    // is independent of the dedup/CC chain below given (delta, freshDocs,
-    // featFresh) — materialize featCanon on a background thread so its
-    // jobs back-fill executor slots while the driver walks the dedup
-    // update's actions (subEdges count, CC rounds); awaited before return.
-    val featCanonWarm = graft.ops.Overlap.background(spark, "mwu: featCanon ckpt") {
-      // chained behind featFresh's materialization: featCanon embeds the
-      // featFresh checkpoint, and two threads racing to compute the same
-      // un-materialized RDD would duplicate the feature pass's work
+    // a foreground failure must not orphan the background jobs: cancel
+    // what was started (featFresh first — featCanon's thread waits on it)
+    // and rethrow
+    var featCanonWarm: Option[graft.ops.Overlap.Handle] = None
+    try {
+      // the carried majority: one anti join of narrow warehouse rows.
+      // NOT checkpointed (round 19): both consumers (reElect's (doc_id, fp)
+      // projection and featCanon itself) live inside featCanon's ONE plan,
+      // so a checkpoint here materialized a full corpus-wide feature copy
+      // only to save re-scanning the column-pruned features.parquet — the
+      // scan is the cheaper side at any scale.
+      val featNew = featOld.join(gone, Seq("doc_id"), "left_anti")
+        .unionByName(featFresh)
+      // exact-dup canonical re-election inside TOUCHED fingerprint groups
+      // only: a group's minimum can move iff the delta added or removed one
+      // of its members; every other doc carries its stored verdict.
+      // NOT checkpointed (round 19): reElect is its ONLY consumer, so the
+      // subtree runs exactly once inside featCanon's materialization — a
+      // checkpoint here paid its own job cascade for nothing.
+      val touchedFp = featOld.join(gone, Seq("doc_id"), "left_semi").select("fp")
+        .unionByName(featFresh.select("fp")).distinct()
+      val reElect = featNew.select("doc_id", "fp")
+        .join(touchedFp, Seq("fp"), "left_semi")
+        .groupBy("fp").agg(min("doc_id").as("canon_id"))
+      val featCanon = featNew.withColumnRenamed("is_canonical", "stored_canon")
+        .join(reElect, Seq("fp"), "left")
+        .withColumn("is_canonical",
+          when(col("canon_id").isNotNull, col("doc_id") === col("canon_id"))
+            .otherwise(col("stored_canon")))
+        .drop("canon_id", "stored_canon")
+        // repartitioned by key before the checkpoint (round 19, the
+        // mmManifestFromState stateCkpt rationale): the carried∪fresh union
+        // stacks partition counts and a localCheckpoint freezes them; one
+        // size-coalesced exchange keeps downstream task counts proportional
+        // to data, not to checkpoint arity
+        .repartition(col("doc_id"))
+        .localCheckpoint(eager = false)
+      // overlap (guide §2.6, round 19): the carried-feature/re-election chain
+      // is independent of the dedup/CC chain below given (delta, freshDocs,
+      // featFresh) — materialize featCanon on a background thread so its
+      // jobs back-fill executor slots while the driver walks the dedup
+      // update's actions (subEdges count, CC rounds); awaited before return.
+      featCanonWarm = Some(graft.ops.Overlap.background(spark, "mwu: featCanon ckpt") {
+        // chained behind featFresh's materialization: featCanon embeds the
+        // featFresh checkpoint, and two threads racing to compute the same
+        // un-materialized RDD would duplicate the feature pass's work
+        featFreshWarm.await()
+        featCanon.count()
+      })
+      // near-dup clusters: the shared delta-bounded CC update, fed the
+      // ALREADY-computed delta and fresh slice so the corpus-proportional
+      // classify and the fresh text pass run once per snapshot, not once
+      // per update family; the state-rolling form, so the dup warehouse
+      // (manifest + edges + signatures) rolls forward with the features
+      val dupNew = graft.ext.Dedup.dupWarehouseUpdateOn(old, nw,
+          dupManifestOld, dupEdgesOld, oldSigs = Some(dupSigsOld),
+          precomputedDelta = Some(delta), precomputedFresh = Some(freshDocs))
+      // checkpointed: many genuinely separate consumers (movedIds, touched
+      // clusters, both kb branches, the assembly's dc side) — dropping this
+      // one was A/B'd in round 19 and measured WORSE (140→154 steady jobs)
+      val dcNew = dupNew.manifest.repartition(col("doc_id"))
+        .localCheckpoint(eager = false)
+      // keep-best re-election, touched clusters only: a cluster's winner can
+      // move iff its membership changed (fresh member, gone/changed member —
+      // including clusters that merely lost a doc while keeping their id) or
+      // a member's score changed (changed ⊆ fresh)
+      val goneOldClusters = dupManifestOld.join(gone, Seq("doc_id"), "left_semi")
+        .select("cluster_id")
+      val membersOfGone = dupManifestOld.join(goneOldClusters, Seq("cluster_id"), "left_semi")
+        .select("doc_id")
+      val movedIds = dcNew.select(col("doc_id"), col("cluster_id").as("new_cid"))
+        .join(dupManifestOld.select(col("doc_id"), col("cluster_id").as("old_cid")),
+          Seq("doc_id"), "left")
+        .filter(col("old_cid").isNull || col("new_cid") =!= col("old_cid"))
+        .select("doc_id")
+      // LAZY (round 19): consumed by kbTouched and the kbNew anti-join, both
+      // inside the assembly tail's one materializing action
+      val touchedClusters = dcNew
+        .join(fresh.unionByName(membersOfGone).unionByName(movedIds).distinct(),
+          Seq("doc_id"), "left_semi")
+        .select("cluster_id").distinct().localCheckpoint(eager = false)
+      val kbTouched = graft.ext.Dedup.keepBestFrom(
+        dcNew.join(touchedClusters, Seq("cluster_id"), "left_semi"),
+        featCanon.select("doc_id", "quality_score"))
+      // carried elections: clusters still PRESENT in the new manifest (a
+      // fully-vanished cluster's row must not survive) and not touched
+      val kbNew = kbOld
+        .join(dcNew.filter(col("is_canonical")).select("cluster_id"), Seq("cluster_id"), "left_semi")
+        .join(touchedClusters, Seq("cluster_id"), "left_anti")
+        .unionByName(kbTouched)
+      // every doc-local verdict input is a column of featCanon: ONE
+      // projection feeds the assembly tail (round 18 — the join form paid
+      // four featCanon re-reads composed back on doc_id for nothing)
+      val manifest = assembleManifestPre(
+        pre = manifestPreFromFeatures(featCanon),
+        dc = dcNew.select("doc_id", "cluster_id"),
+        kb = kbNew.select("cluster_id", "keep_doc_id"),
+        packTok = ids => featCanon.select("doc_id", "lang", "n_tok").join(ids, Seq("doc_id")))
+      // re-join the overlapped materializations: a failure there must
+      // surface HERE, not from some later consumer's stack
       featFreshWarm.await()
-      featCanon.count()
+      featCanonWarm.foreach(_.await())
+      ManifestWarehouse(featCanon, kbNew,
+        dupNew.copy(manifest = dcNew), manifest)
+    } catch { case e: Throwable =>
+      featFreshWarm.cancel()
+      featCanonWarm.foreach(_.cancel())
+      throw e
     }
-    // near-dup clusters: the shared delta-bounded CC update, fed the
-    // ALREADY-computed delta and fresh slice so the corpus-proportional
-    // classify and the fresh text pass run once per snapshot, not once
-    // per update family; the state-rolling form, so the dup warehouse
-    // (manifest + edges + signatures) rolls forward with the features
-    val dupNew = graft.ext.Dedup.dupWarehouseUpdateOn(old, nw,
-        dupManifestOld, dupEdgesOld, oldSigs = Some(dupSigsOld),
-        precomputedDelta = Some(delta), precomputedFresh = Some(freshDocs))
-    // checkpointed: many genuinely separate consumers (movedIds, touched
-    // clusters, both kb branches, the assembly's dc side) — dropping this
-    // one was A/B'd in round 19 and measured WORSE (140→154 steady jobs)
-    val dcNew = dupNew.manifest.repartition(col("doc_id"))
-      .localCheckpoint(eager = false)
-    // keep-best re-election, touched clusters only: a cluster's winner can
-    // move iff its membership changed (fresh member, gone/changed member —
-    // including clusters that merely lost a doc while keeping their id) or
-    // a member's score changed (changed ⊆ fresh)
-    val goneOldClusters = dupManifestOld.join(gone, Seq("doc_id"), "left_semi")
-      .select("cluster_id")
-    val membersOfGone = dupManifestOld.join(goneOldClusters, Seq("cluster_id"), "left_semi")
-      .select("doc_id")
-    val movedIds = dcNew.select(col("doc_id"), col("cluster_id").as("new_cid"))
-      .join(dupManifestOld.select(col("doc_id"), col("cluster_id").as("old_cid")),
-        Seq("doc_id"), "left")
-      .filter(col("old_cid").isNull || col("new_cid") =!= col("old_cid"))
-      .select("doc_id")
-    // LAZY (round 19): consumed by kbTouched and the kbNew anti-join, both
-    // inside the assembly tail's one materializing action
-    val touchedClusters = dcNew
-      .join(fresh.unionByName(membersOfGone).unionByName(movedIds).distinct(),
-        Seq("doc_id"), "left_semi")
-      .select("cluster_id").distinct().localCheckpoint(eager = false)
-    val kbTouched = graft.ext.Dedup.keepBestFrom(
-      dcNew.join(touchedClusters, Seq("cluster_id"), "left_semi"),
-      featCanon.select("doc_id", "quality_score"))
-    // carried elections: clusters still PRESENT in the new manifest (a
-    // fully-vanished cluster's row must not survive) and not touched
-    val kbNew = kbOld
-      .join(dcNew.filter(col("is_canonical")).select("cluster_id"), Seq("cluster_id"), "left_semi")
-      .join(touchedClusters, Seq("cluster_id"), "left_anti")
-      .unionByName(kbTouched)
-    // every doc-local verdict input is a column of featCanon: ONE
-    // projection feeds the assembly tail (round 18 — the join form paid
-    // four featCanon re-reads composed back on doc_id for nothing)
-    val manifest = assembleManifestPre(
-      pre = manifestPreFromFeatures(featCanon),
-      dc = dcNew.select("doc_id", "cluster_id"),
-      kb = kbNew.select("cluster_id", "keep_doc_id"),
-      packTok = ids => featCanon.select("doc_id", "lang", "n_tok").join(ids, Seq("doc_id")))
-    // re-join the overlapped materializations: a failure there must
-    // surface HERE, not from some later consumer's stack
-    featFreshWarm.await()
-    featCanonWarm.await()
-    ManifestWarehouse(featCanon, kbNew,
-      dupNew.copy(manifest = dcNew), manifest)
   }
 
   lazy val manifestIncrementalSql: String =
@@ -2927,12 +2928,11 @@ object Corpus {
     * dedup warehouse (same inputs, deterministic update), so the two
     * families keep sharing one warehouse across the WHOLE snapshot
     * timeline, not just at the base. */
-  private val manifestRolledCache = new graft.ops.FrozenCaches.Memo[Unit, String](
-    beforeClear = _.forEach(graft.ops.FrozenCaches.deleteTree(_)),
-    label = "manifest_rolled")
+  private val manifestRolledCache =
+    new graft.ops.FrozenCaches.DirMemo[Unit, String]("manifest_rolled")
 
   private def frozenRolledManifestBase(spark: SparkSession, dir: String): String =
-    manifestRolledCache.get(dir, ()) {
+    manifestRolledCache.get(dir, ()) { out =>
       val docs = Tables.documents(spark, dir)
       val s0 = deltaOldSlice(docs)
       val s1 = deltaNewSlice(docs)
@@ -2948,7 +2948,6 @@ object Corpus {
         weights = spark.read.parquet(s"$base/weights.parquet"),
         thrTot = thrTot, thrN = thrN,
         evalh = spark.read.parquet(s"$base/evalh.parquet"))
-      val out = java.nio.file.Files.createTempDirectory("graft_manifest_rolled").toString
       w1.features.write.parquet(s"$out/features.parquet")
       w1.kb.write.parquet(s"$out/kb.parquet")
       w1.manifest.write.parquet(s"$out/manifest.parquet")
@@ -3007,15 +3006,12 @@ object Corpus {
     * written once per corpus, the production shape (the update JOB writes
     * the refreshed manifest table; downstream readers consume the table,
     * never re-run the update). [[manifestDelta]] reads it. */
-  private val manifestNewCache = new graft.ops.FrozenCaches.Memo[Unit, String](
-    beforeClear = _.forEach(p =>
-      graft.ops.FrozenCaches.deleteTree(java.nio.file.Paths.get(p).getParent.toString)),
-    label = "manifest_new")
+  private val manifestNewCache =
+    new graft.ops.FrozenCaches.DirMemo[Unit, String]("manifest_new")
 
   private def frozenNewManifest(spark: SparkSession, dir: String): DataFrame = {
-    val path = manifestNewCache.get(dir, ()) {
-      val p = java.nio.file.Files.createTempDirectory("graft_manifest_new")
-        .toString + "/manifest.parquet"
+    val path = manifestNewCache.get(dir, ()) { base =>
+      val p = s"$base/manifest.parquet"
       manifestIncremental(spark, dir).write.parquet(p)
       p
     }

@@ -182,15 +182,12 @@ object Curation {
     * lives in a temp dir keyed by corpus (the dup-cluster-manifest
     * pattern); at 100 TB it is the same write, pointed at the warehouse.
     * Corpus-sized, so never collected to the driver. */
-  private val funnelManifestCache = new graft.ops.FrozenCaches.Memo[Unit, String](
-    beforeClear = _.forEach(p =>
-      graft.ops.FrozenCaches.deleteTree(java.nio.file.Paths.get(p).getParent.toString)),
-    label = "funnel_manifest")
+  private val funnelManifestCache =
+    new graft.ops.FrozenCaches.DirMemo[Unit, String]("funnel_manifest")
 
   private def frozenFunnelRows(spark: SparkSession, dir: String): DataFrame = {
-    val path = funnelManifestCache.get(dir, ()) {
-      val p = java.nio.file.Files.createTempDirectory("graft_funnel_manifest")
-        .toString + "/funnel.parquet"
+    val path = funnelManifestCache.get(dir, ()) { base =>
+      val p = s"$base/funnel.parquet"
       funnelFrozenRows(spark, dir).write.parquet(p)
       p
     }

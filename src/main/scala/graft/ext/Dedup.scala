@@ -1122,16 +1122,12 @@ object Dedup {
     * the manifest lives in a temp dir keyed by corpus; at 100 TB it is the
     * same write, pointed at the warehouse. Unlike the frozen ANN models
     * this is corpus-sized, so it is never collected to the driver. */
-  private val manifestCache = new graft.ops.FrozenCaches.Memo[(Int, Int), String](
-    // the manifest owns on-disk temp state: delete it, not just the keys
-    beforeClear = _.forEach(p =>
-      graft.ops.FrozenCaches.deleteTree(java.nio.file.Paths.get(p).getParent.toString)),
-    label = "dup_manifest")
+  private val manifestCache =
+    new graft.ops.FrozenCaches.DirMemo[(Int, Int), String]("dup_manifest")
 
   private def frozenManifest(spark: SparkSession, dir: String): DataFrame = {
-    val path = manifestCache.get(dir, (NumHashes, NumBands)) {
-      val p = java.nio.file.Files.createTempDirectory("graft_dup_manifest")
-        .toString + "/manifest.parquet"
+    val path = manifestCache.get(dir, (NumHashes, NumBands)) { base =>
+      val p = s"$base/manifest.parquet"
       dupClustersOn(Tables.documents(spark, dir)).write.parquet(p)
       p
     }
@@ -1146,11 +1142,8 @@ object Dedup {
     * snapshot lands; built once per corpus so the registered incremental
     * query measures the UPDATE, not the base build. */
   private val incrementalBaseCache =
-    new graft.ops.FrozenCaches.Memo[(Int, Int), (String, String, String, String)](
-      beforeClear = _.forEach(p =>
-        graft.ops.FrozenCaches.deleteTree(
-          java.nio.file.Paths.get(p._1).getParent.toString)),
-      label = "dup_incr_base")
+    new graft.ops.FrozenCaches.DirMemo[(Int, Int), (String, String, String, String)](
+      "dup_incr_base")
 
   /** Frozen (manifest, edges, signatures) warehouse state of the simulated
     * OLD snapshot, built once per corpus and shared by [[dupClustersBase]]
@@ -1160,8 +1153,7 @@ object Dedup {
     * fresh docs. */
   private[ext] def frozenIncrementalBase(spark: SparkSession, dir: String,
                                          old: DataFrame): (String, String, String, String) =
-    incrementalBaseCache.get(dir, (NumHashes, NumBands)) {
-      val base = java.nio.file.Files.createTempDirectory("graft_dup_incr_base").toString
+    incrementalBaseCache.get(dir, (NumHashes, NumBands)) { base =>
       // one signature table feeds the edge build AND freezes as warehouse
       // state; one edge computation feeds BOTH remaining artifacts — the
       // full MinHash-LSH pipeline over the old corpus is the expensive
@@ -1278,15 +1270,12 @@ object Dedup {
     * The in-process 2-hop chain (and its N-hop ScalaCheck form) lives in
     * DedupSpec. */
   private val rolledBaseCache =
-    new graft.ops.FrozenCaches.Memo[(Int, Int), (String, String, String, String)](
-      beforeClear = _.forEach(p =>
-        graft.ops.FrozenCaches.deleteTree(
-          java.nio.file.Paths.get(p._1).getParent.toString)),
-      label = "dup_rolled_base")
+    new graft.ops.FrozenCaches.DirMemo[(Int, Int), (String, String, String, String)](
+      "dup_rolled_base")
 
   private[ext] def frozenRolledWarehouse(spark: SparkSession, dir: String)
       : (String, String, String, String) =
-    rolledBaseCache.get(dir, (NumHashes, NumBands)) {
+    rolledBaseCache.get(dir, (NumHashes, NumBands)) { base =>
       val docs = Tables.documents(spark, dir)
       val s0 = graft.ext.Corpus.deltaOldSlice(docs)
       val s1 = graft.ext.Corpus.deltaNewSlice(docs)
@@ -1295,7 +1284,6 @@ object Dedup {
         spark.read.parquet(mPath), spark.read.parquet(ePath),
         oldSigs = Some(spark.read.parquet(sPath)),
         oldFps = Some(spark.read.parquet(fPath)))
-      val base = java.nio.file.Files.createTempDirectory("graft_dup_rolled").toString
       w1.manifest.write.parquet(s"$base/manifest.parquet")
       w1.edges.write.parquet(s"$base/edges.parquet")
       w1.sigs.write.parquet(s"$base/sigs.parquet")

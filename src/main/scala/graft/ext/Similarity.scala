@@ -1495,10 +1495,7 @@ object Similarity {
           - coalesce(col("n_removed"), lit(0L))).as("n_new"))
   }
 
-  private val ivfManifestCache = new graft.ops.FrozenCaches.Memo[Int, String](
-    beforeClear = _.forEach(p =>
-      graft.ops.FrozenCaches.deleteTree(java.nio.file.Paths.get(p).getParent.toString)),
-    label = "ivf_base")
+  private val ivfManifestCache = new graft.ops.FrozenCaches.DirMemo[Int, String]("ivf_base")
 
   /** Registered simulation: old snapshot = corpus minus the to-be-added
     * slice, new snapshot = corpus minus the removed slice (the
@@ -1511,9 +1508,8 @@ object Similarity {
     * corpus like every trained model — the warehouse state both the
     * occupancy ledger and the state-rolling update start from. */
   private def frozenIvfManifest(spark: SparkSession, dir: String): DataFrame = {
-    val basePath = ivfManifestCache.get(dir, Corpus.DeltaMod) {
-      val p = java.nio.file.Files.createTempDirectory("graft_ivf_base")
-        .toString + "/manifest.parquet"
+    val basePath = ivfManifestCache.get(dir, Corpus.DeltaMod) { base =>
+      val p = s"$base/manifest.parquet"
       assignCellsAgainstOn(
         Tables.embeddings(spark, dir)
           .filter(pmod(col("vec_id"), lit(Corpus.DeltaMod)) =!= lit(Corpus.DeltaAdded)),
@@ -1633,20 +1629,17 @@ object Similarity {
     * registered rolled row measures the steady-state regime (one update
     * FROM rolled state; `s_ivf_update` already measures hop 1's regime),
     * matching `dd_clusters_rolled`'s frozen-warehouse discipline. */
-  private val ivfRolledCache = new graft.ops.FrozenCaches.Memo[Int, String](
-    beforeClear = _.forEach(p =>
-      graft.ops.FrozenCaches.deleteTree(java.nio.file.Paths.get(p).getParent.toString)),
-    label = "ivf_rolled_base")
+  private val ivfRolledCache =
+    new graft.ops.FrozenCaches.DirMemo[Int, String]("ivf_rolled_base")
 
   private def frozenRolledManifest(spark: SparkSession, dir: String): DataFrame = {
-    val path = ivfRolledCache.get(dir, Corpus.DeltaMod) {
+    val path = ivfRolledCache.get(dir, Corpus.DeltaMod) { base =>
       val emb = Tables.embeddings(spark, dir)
       val cent = frozenCentroids(spark, dir, KmeansCfg(dims = Dims))
       val r = pmod(col("vec_id"), lit(Corpus.DeltaMod))
       val s0 = emb.filter(r =!= lit(Corpus.DeltaAdded))
       val s1 = emb.filter(r =!= lit(Corpus.DeltaRemoved))
-      val p = java.nio.file.Files.createTempDirectory("graft_ivf_rolled")
-        .toString + "/manifest.parquet"
+      val p = s"$base/manifest.parquet"
       ivfWarehouseUpdateOn(s0, s1, frozenIvfManifest(spark, dir), cent).write.parquet(p)
       p
     }

@@ -946,17 +946,12 @@ object Multimodal {
     * split assignments) of the simulated OLD snapshot — the companion of
     * [[frozenMediaBase]] for the composed-manifest rows. */
   private val mediaManifestBaseCache =
-    new graft.ops.FrozenCaches.Memo[Int, (String, String)](
-      beforeClear = _.forEach(p =>
-        graft.ops.FrozenCaches.deleteTree(
-          java.nio.file.Paths.get(p._1).getParent.toString)),
-      label = "mm_manifest_base")
+    new graft.ops.FrozenCaches.DirMemo[Int, (String, String)]("mm_manifest_base")
 
   private[graft] def frozenMediaManifestBase(spark: SparkSession, dir: String): (String, String) =
-    mediaManifestBaseCache.get(dir, AlignDim) {
+    mediaManifestBaseCache.get(dir, AlignDim) { base =>
       val old = graft.ext.Corpus.deltaOldSlice(Tables.documents(spark, dir))
       val emb = Tables.embeddings(spark, dir)
-      val base = java.nio.file.Files.createTempDirectory("graft_mm_manifest_base").toString
       alignFilterOn(old, emb).write.parquet(s"$base/af.parquet")
       mmDocLocalOn(old).write.parquet(s"$base/dl.parquet")
       (s"$base/af.parquet", s"$base/dl.parquet")
@@ -997,17 +992,12 @@ object Multimodal {
     * measures the UPDATE, not the bootstrap (the
     * [[graft.ext.Dedup.frozenIncrementalBase]] discipline). */
   private val mediaBaseCache =
-    new graft.ops.FrozenCaches.Memo[Int, (String, String, String, String)](
-      beforeClear = _.forEach(p =>
-        graft.ops.FrozenCaches.deleteTree(
-          java.nio.file.Paths.get(p._1).getParent.toString)),
-      label = "mm_incr_base")
+    new graft.ops.FrozenCaches.DirMemo[Int, (String, String, String, String)]("mm_incr_base")
 
   private[graft] def frozenMediaBase(spark: SparkSession, dir: String)
       : (String, String, String, String) =
-    mediaBaseCache.get(dir, DctHamMax) {
+    mediaBaseCache.get(dir, DctHamMax) { base =>
       val old = graft.ext.Corpus.deltaOldSlice(Tables.documents(spark, dir))
-      val base = java.nio.file.Files.createTempDirectory("graft_mm_incr_base").toString
       // one hash pass feeds the index freeze AND the pair build; one pair
       // computation feeds the pair freeze AND the cluster manifest
       val fp = dctHashOn(fromDocuments(old)).toDF().persist()
@@ -1092,15 +1082,12 @@ object Multimodal {
     * ([[graft.ext.Dedup.rolledFinalSlice]]) — one timeline across text
     * and media, as the manifest family already shares with dedup. */
   private val mediaRolledCache =
-    new graft.ops.FrozenCaches.Memo[Int, (String, String, String, String, String, String)](
-      beforeClear = _.forEach(p =>
-        graft.ops.FrozenCaches.deleteTree(
-          java.nio.file.Paths.get(p._1).getParent.toString)),
-      label = "mm_rolled_base")
+    new graft.ops.FrozenCaches.DirMemo[Int, (String, String, String, String, String, String)](
+      "mm_rolled_base")
 
   private[graft] def frozenMediaRolled(spark: SparkSession, dir: String)
       : (String, String, String, String, String, String) =
-    mediaRolledCache.get(dir, DctHamMax) {
+    mediaRolledCache.get(dir, DctHamMax) { base =>
       val docs = Tables.documents(spark, dir)
       val s0 = graft.ext.Corpus.deltaOldSlice(docs)
       val s1 = graft.ext.Corpus.deltaNewSlice(docs)
@@ -1112,7 +1099,6 @@ object Multimodal {
         spark.read.parquet(afPath), spark.read.parquet(nbPath),
         Tables.embeddings(spark, dir),
         oldFps = Some(spark.read.parquet(fPath)))
-      val base = java.nio.file.Files.createTempDirectory("graft_mm_rolled").toString
       w1.wh.hashes.write.parquet(s"$base/hashes.parquet")
       w1.wh.pairs.write.parquet(s"$base/pairs.parquet")
       w1.clusters.write.parquet(s"$base/manifest.parquet")
@@ -1279,15 +1265,12 @@ object Multimodal {
     * four rows at sf0.1). In-process the manifest lives in a temp dir
     * keyed by corpus; at 100 TB it is the same write, pointed at the
     * warehouse. Corpus-sized, so never collected to the driver. */
-  private val mediaClusterCache = new graft.ops.FrozenCaches.Memo[Int, String](
-    beforeClear = _.forEach(p =>
-      graft.ops.FrozenCaches.deleteTree(java.nio.file.Paths.get(p).getParent.toString)),
-    label = "mm_cluster_manifest")
+  private val mediaClusterCache =
+    new graft.ops.FrozenCaches.DirMemo[Int, String]("mm_cluster_manifest")
 
   private[graft] def frozenMediaClusters(spark: SparkSession, dir: String): DataFrame = {
-    val path = mediaClusterCache.get(dir, DctHamMax) {
-      val p = java.nio.file.Files.createTempDirectory("graft_mm_cluster_manifest")
-        .toString + "/manifest.parquet"
+    val path = mediaClusterCache.get(dir, DctHamMax) { base =>
+      val p = s"$base/manifest.parquet"
       mediaDupClustersOn(Tables.documents(spark, dir)).write.parquet(p)
       p
     }
@@ -1666,15 +1649,10 @@ object Multimodal {
     * suite already paid for instead of re-composing the four gate
     * subplans per consumer. */
   private val mmFunnelRowsCache =
-    new graft.ops.FrozenCaches.Memo[Int, String](
-      beforeClear = _.forEach(p =>
-        graft.ops.FrozenCaches.deleteTree(
-          java.nio.file.Paths.get(p).getParent.toString)),
-      label = "mm_funnel_rows")
+    new graft.ops.FrozenCaches.DirMemo[Int, String]("mm_funnel_rows")
 
   private def frozenMmFunnelRows(spark: SparkSession, dir: String): DataFrame = {
-    val path = mmFunnelRowsCache.get(dir, DctHamMax) {
-      val base = java.nio.file.Files.createTempDirectory("graft_mm_funnel").toString
+    val path = mmFunnelRowsCache.get(dir, DctHamMax) { base =>
       mmCurationFunnel(spark, dir).write.parquet(s"$base/rows.parquet")
       s"$base/rows.parquet"
     }
@@ -2334,15 +2312,10 @@ object Multimodal {
     * (VERDICT r15 task 2 — the `_rolled` discipline every other mm
     * steady-state row already follows). */
   private val mediaRolledManifestCache =
-    new graft.ops.FrozenCaches.Memo[Int, String](
-      beforeClear = _.forEach(p =>
-        graft.ops.FrozenCaches.deleteTree(
-          java.nio.file.Paths.get(p).getParent.toString)),
-      label = "mm_epoch_manifest")
+    new graft.ops.FrozenCaches.DirMemo[Int, String]("mm_epoch_manifest")
 
   private[graft] def frozenMediaRolledManifest(spark: SparkSession, dir: String): String =
-    mediaRolledManifestCache.get(dir, DctHamMax) {
-      val base = java.nio.file.Files.createTempDirectory("graft_mm_epoch").toString
+    mediaRolledManifestCache.get(dir, DctHamMax) { base =>
       mediaManifestRolled(spark, dir).write.parquet(s"$base/manifest.parquet")
       s"$base/manifest.parquet"
     }

@@ -2,8 +2,8 @@ package graft.ops
 
 /** Registry of the library's frozen per-corpus artifacts — trained ANN
   * models (IVF centroids, PQ codebooks), sketch/census bytes (CMS, eval
-  * bloom, fluency census), the materialized dup-cluster manifest, and the
-  * scan-widen decisions.
+  * bloom, fluency census), the materialized on-disk tables (manifests,
+  * warehouse state, sketch shards), and the scan-widen decisions.
   *
   * Artifacts key on (corpus path, content signature, residual key): the
   * signature — file count + total bytes + max mtime from the recursive
@@ -14,13 +14,14 @@ package graft.ops
   * cleaned) the first time the new generation is requested. The listing
   * goes through the Hadoop `FileSystem` of the path's URI, so plain
   * paths, `file:` URIs and remote stores (`s3a://`, `hdfs://`) all get a
-  * real signature. Artifacts live in this JVM only: there is no on-disk
+  * real signature. Artifacts live in this JVM only: there is no cross-JVM
   * store, so a fresh JVM starts empty and rebuilds.
   *
-  * Each hosting object registers its clear hook at class-init; hooks also
-  * best-effort delete any temp-dir artifacts they own (the dup-cluster
-  * manifest parquet), so [[clearAll]] doubles as cleanup for long-lived
-  * sessions.
+  * Each memo registers its clear hook at construction. Every on-disk
+  * artifact (manifest tables, warehouse state, sketch shards) lives in a
+  * temp dir its [[DirMemo]] owns; the dir is deleted when its build
+  * throws, when its generation is evicted, on [[clearAll]] and at JVM
+  * exit, so [[clearAll]] doubles as cleanup for long-lived sessions.
   *
   * INVARIANT: memo values must be parquet paths or plain values, NEVER
   * persisted/checkpointed DataFrames. [[graft.Bench]] blanket-unpersists
@@ -29,8 +30,6 @@ package graft.ops
   * later query with checkpoint-block-not-found. */
 object FrozenCaches {
   private val hooks = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
-
-  def register(hook: () => Unit): Unit = hooks.add(hook)
 
   def clearAll(): Unit = hooks.forEach(h => h())
 
@@ -58,20 +57,18 @@ object FrozenCaches {
     * as a regression when it was attribution). */
   final case class BuildEvent(artifact: String, dir: String, sec: Double)
 
-  // Per-thread stack of in-flight LABELED builds: each frame accumulates
-  // the wall time of nested labeled builds so the parent can subtract it.
-  // Nesting is same-thread by construction (a builder body calls the
-  // nested memo synchronously — see the BuildEvent scaladoc for the
-  // cross-thread caveat); unlabeled builds don't push a frame, so their
-  // time stays inside the nearest labeled ancestor (it is invisible to
-  // the ledger either way).
+  // Per-thread stack of in-flight builds: each frame accumulates the wall
+  // time of nested builds so the parent can subtract it. Nesting is
+  // same-thread by construction (a builder body calls the nested memo
+  // synchronously — see the BuildEvent scaladoc for the cross-thread
+  // caveat).
   private val inFlight = new ThreadLocal[java.util.ArrayDeque[Array[Double]]] {
     override def initialValue(): java.util.ArrayDeque[Array[Double]] =
       new java.util.ArrayDeque[Array[Double]]()
   }
 
   // ---------------------------------------------------------- build ledger
-  // Every labeled Memo build is recorded here so a bench harness can say
+  // Every Memo build is recorded here so a bench harness can say
   // WHICH query paid for WHICH one-time artifact (train-once costs are
   // attributed to whichever query first touches the memo — legible only
   // with this ledger; see Bench's "frozen_builds" output field).
@@ -86,11 +83,12 @@ object FrozenCaches {
     out.result()
   }
 
-  // artifacts that own on-disk state (the dup-cluster manifest's temp
-  // dirs) are cleaned by their beforeClear hooks — run them on JVM exit
-  // too, so short-lived sessions don't leak a parquet copy per corpus
-  private def report(what: String, e: Throwable): Unit =
+  /** Records a failed best-effort step with its cause, on stderr. */
+  private[graft] def report(what: String, e: Throwable): Unit =
     System.err.println(s"FrozenCaches: $what failed: ${e.getClass.getName}: ${e.getMessage}")
+
+  // DirMemo-owned temp dirs are deleted by clearAll — run it on JVM exit
+  // too, so short-lived sessions don't leak a parquet copy per corpus;
   // registering throws only once the JVM is already shutting down
   try Runtime.getRuntime.addShutdownHook(new Thread(() =>
     try clearAll() catch { case e: Throwable => report("clearAll at shutdown", e) }))
@@ -140,78 +138,87 @@ object FrozenCaches {
   /** A corpus-keyed artifact memo that self-registers with [[clearAll]].
     * `get` takes the corpus path EXPLICITLY (every frozen artifact
     * describes some corpus) and folds [[dirSig]] into the cache key, so
-    * no caller can opt out of content freshness. `beforeClear` runs over
-    * dropped values (for artifacts that own on-disk state, e.g. the
-    * dup-cluster manifest's temp dirs) — both on [[clearAll]] and when a
-    * stale generation is evicted.
+    * no caller can opt out of content freshness. Every build is logged to
+    * the build ledger under `label`. A stale generation is evicted the
+    * first time a new one is requested.
     *
     * Plain synchronized get-or-compute, by design: a null-returning
     * builder is cached like any value (no silent rebuild-per-call), and
     * a heavyweight builder (full Spark jobs, temp-dir writes) never runs
     * twice concurrently for the same memo — the lock is per-Memo, so
     * distinct artifact families still build in parallel. */
-  final class Memo[K, V](beforeClear: java.util.Collection[V] => Unit = null,
-                         label: String = null) {
+  final class Memo[K, V] private[FrozenCaches] (label: String, drop: V => Unit) {
+    def this(label: String) = this(label, _ => ())
+
     private val m = new java.util.HashMap[(String, Long, K), V]()
-    register { () =>
+    hooks.add { () =>
       this.synchronized {
-        if (beforeClear != null && !m.isEmpty) beforeClear(new java.util.ArrayList[V](m.values()))
+        m.values().forEach(v => drop(v))
         m.clear()
       }
     }
+
     def get(dir: String, k: K)(build: => V): V = {
       // the signature walk happens OUTSIDE the lock: concurrent readers of
       // different corpora must not serialize on each other's filesystem
       // stats (the builder itself still runs under the lock, by design)
       val key = (dir, dirSig(dir), k)
-      getWithKey(key)(build)
-    }
-
-    private def getWithKey(key: (String, Long, K))(build: => V): V = this.synchronized {
-      val (dir, _, k) = key
-      if (m.containsKey(key)) m.get(key)
-      else {
-        // a new generation of this corpus supersedes older ones: evict
-        // them (and clean their on-disk state) before building
-        val stale = new java.util.ArrayList[V]()
-        val it = m.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          if (e.getKey._1 == dir && e.getKey._3 == k) {
-            stale.add(e.getValue)
-            it.remove()
+      this.synchronized {
+        if (m.containsKey(key)) m.get(key)
+        else {
+          // a new generation of this corpus supersedes older ones: evict
+          // them (and clean their on-disk state) before building
+          val it = m.entrySet().iterator()
+          while (it.hasNext) {
+            val e = it.next()
+            if (e.getKey._1 == dir && e.getKey._3 == k) {
+              drop(e.getValue)
+              it.remove()
+            }
           }
+          val stack = inFlight.get()
+          stack.push(Array(0.0)) // nested labeled-build seconds
+          val t0 = System.nanoTime()
+          var exclusive = 0.0
+          val v =
+            try build
+            finally {
+              // the stack unwinds even on a failed build (the parent's
+              // accounting must survive), but only a SUCCESSFUL build
+              // logs an event — a thrown builder caches nothing and
+              // records nothing
+              val total = (System.nanoTime() - t0) / 1e9
+              val nested = stack.pop()(0)
+              if (!stack.isEmpty) stack.peek()(0) += total
+              exclusive = total - nested
+            }
+          buildLog.add(BuildEvent(label, dir, exclusive))
+          m.put(key, v)
+          v
         }
-        if (beforeClear != null && !stale.isEmpty) beforeClear(stale)
-        val v =
-          if (label == null) build
-          else {
-            val stack = inFlight.get()
-            stack.push(Array(0.0)) // nested labeled-build seconds
-            val t0 = System.nanoTime()
-            var exclusive = 0.0
-            val built =
-              try build
-              finally {
-                // the stack unwinds even on a failed build (the parent's
-                // accounting must survive), but only a SUCCESSFUL build
-                // logs an event — a thrown builder caches nothing and
-                // records nothing, as before
-                val total = (System.nanoTime() - t0) / 1e9
-                val nested = stack.pop()(0)
-                if (!stack.isEmpty) stack.peek()(0) += total
-                exclusive = total - nested
-              }
-            buildLog.add(BuildEvent(label, dir, exclusive))
-            built
-          }
-        m.put(key, v)
-        v
       }
     }
   }
 
-  /** Recursive best-effort delete for temp artifacts; never throws. */
+  /** A [[Memo]] for an artifact that lives on disk. Each build gets a
+    * fresh temp dir, `graft_<label>_<random>` under `java.io.tmpdir`,
+    * which the builder writes into and this memo owns: the dir is deleted
+    * when the build throws, when its generation is evicted, on
+    * [[clearAll]] and at JVM exit. `get` returns what the builder returns
+    * (the paths it wrote under the dir, plus any plain value). */
+  final class DirMemo[K, V](label: String) {
+    private val memo = new Memo[K, (String, V)](label, owned => deleteTree(owned._1))
+
+    def get(dir: String, k: K)(build: String => V): V =
+      memo.get(dir, k) {
+        val owned = java.nio.file.Files.createTempDirectory(s"graft_${label}_").toString
+        try (owned, build(owned))
+        catch { case e: Throwable => deleteTree(owned); throw e }
+      }._2
+  }
+
+  /** Recursive delete for temp artifacts; never throws. A failure is
+    * reported to stderr with its cause. */
   def deleteTree(path: String): Unit =
     try {
       val p = java.nio.file.Paths.get(path)
@@ -221,5 +228,5 @@ object FrozenCaches {
           .forEach(f => java.nio.file.Files.deleteIfExists(f))
         finally walk.close()
       }
-    } catch { case _: Throwable => () }
+    } catch { case scala.util.control.NonFatal(e) => report(s"deleteTree($path)", e) }
 }

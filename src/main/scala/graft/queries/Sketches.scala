@@ -332,10 +332,8 @@ object Sketches {
 
   /** Frozen per-shard sketch table (event_type, shard, cells array<bigint>)
     * per corpus — the simulated warehouse state the round-trip reads. */
-  private val shardSketchCache = new graft.ops.FrozenCaches.Memo[Long, String](
-    beforeClear = _.forEach(p =>
-      graft.ops.FrozenCaches.deleteTree(java.nio.file.Paths.get(p).getParent.toString)),
-    label = "qsketch_shards")
+  private val shardSketchCache =
+    new graft.ops.FrozenCaches.DirMemo[Long, String]("qsketch_shards")
 
   /** The quantile sketch ACROSS JOBS, not just partitions — the warehouse
     * round-trip of the mergeable design: an ingest-side job writes each
@@ -355,9 +353,8 @@ object Sketches {
     * — warehouse rows, not state; the corpus-wide quantile becomes a
     * ≤(groups·shards)-row re-aggregation with no raw-value rescan. */
   def quantileShards(spark: SparkSession, dir: String): DataFrame = {
-    val path = shardSketchCache.get(dir, QsShards) {
-      val p = java.nio.file.Files.createTempDirectory("graft_qsketch_shards")
-        .toString + "/shards.parquet"
+    val path = shardSketchCache.get(dir, QsShards) { base =>
+      val p = s"$base/shards.parquet"
       val cells = udaf(graft.functions.QuantileSketch.cellsAgg)
       Tables.events(spark, dir)
         .withColumn("cents", graft.ops.Num.cents(col("value")))

@@ -2,8 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Developer mains for inspecting registry queries — selective
-  * correctness dumps, executed plans and per-job profiles. Not part of the
+/** Developer mains for inspecting registry queries — executed plans and
+  * per-job profiles (a selective correctness dump is
+  * `runMain graft.Verify <sfDir> <outDir> <name>...`). Not part of the
   * query registry; each runs with one `runMain`. */
 object Tools {
   /** The session every main runs on (these, [[graft.Verify]] and
@@ -22,50 +23,6 @@ object Tools {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
-  }
-}
-
-/** Selective correctness dump for fast iteration on a few queries:
-  * `runMain graft.tools.VerifySome <sfDir> <outDir> <name>[,<name>...]`
-  * writes the named queries' parquet + an oracle_sql.json restricted to
-  * them, in the exact layout tools/check.py expects. */
-object VerifySome {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir, namesCsv) = args
-    val names = namesCsv.split(",").toSeq
-    val spark = Tools.session()
-    new java.io.File(outDir).mkdirs()
-    names.foreach { name =>
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      spark.catalog.clearCache()
-    }
-    import graft.Verify.jsonStr
-    val json = graft.SparkEntry.oracleSql.view.filterKeys(names.contains)
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-  }
-}
-
-/** Executed-plan dump for plan review:
-  * `runMain graft.tools.ExplainSome <sfDir> <name>[,<name>...]` executes
-  * each named registry query and prints its final (post-AQE) physical plan. */
-object ExplainSome {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, namesCsv) = args
-    val spark = Tools.session()
-    namesCsv.split(",").foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      // collect() executes THIS df's QueryExecution so its AdaptiveSparkPlan
-      // finalizes (count() would build and run a separate groupBy plan and
-      // leave this one at isFinalPlan=false)
-      df.collect()
-      println(s"===== $name =====")
-      println(df.queryExecution.executedPlan.toString)
-      spark.catalog.clearCache()
-    }
-    spark.stop()
   }
 }
 

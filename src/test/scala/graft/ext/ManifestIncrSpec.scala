@@ -2,7 +2,7 @@ package graft.ext
 
 import graft.SparkSpec
 import graft.ops.Tables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The incremental pipeline-manifest update (`t_manifest_incremental`):
@@ -709,4 +709,56 @@ class ManifestIncrSpec extends SparkSpec {
     }
     spark.catalog.clearCache()
   }
+
+  test("manifest update: a foreground failure cancels the overlapped feature job and rethrows") {
+    val docs = Tables.documents(spark, dir)
+    val old = Corpus.deltaOldSlice(docs)
+    val nw = Corpus.deltaNewSlice(docs)
+    val (base, thrTot, thrN) = Corpus.frozenManifestBase(spark, dir)
+    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(spark, dir, old)
+    val census = spark.read.parquet(s"$base/census.parquet")
+    val weights = spark.read.parquet(s"$base/weights.parquet")
+    val evalh = spark.read.parquet(s"$base/evalh.parquet")
+    // streamed-ingest features that stall a minute inside the background
+    // featFresh job (matched by its job label; repartitioned first, so the
+    // stalling column is computed after the semi-join's shuffle, in that
+    // job): the job is still running when the foreground fails on a
+    // feature table that lost a column
+    ManifestIncrSpec.stalled.set(false)
+    val stallInFeatFresh = udf { (n: Long) =>
+      val job = org.apache.spark.TaskContext.get().getLocalProperty("spark.job.description")
+      if (job == "mwu: featFresh ckpt" && ManifestIncrSpec.stalled.compareAndSet(false, true))
+        Thread.sleep(60000)
+      n
+    }
+    val pre = Corpus.manifestDocFeatures(nw, census, weights, thrTot, thrN, evalh)
+      .localCheckpoint()
+      .repartition(col("doc_id"))
+      .withColumn("n_tok", stallInFeatFresh(col("n_tok")))
+    val e = intercept[AnalysisException] {
+      Corpus.manifestWarehouseUpdateOn(spark, old, nw,
+        featOld = spark.read.parquet(s"$base/features.parquet").drop("quality_score"),
+        kbOld = spark.read.parquet(s"$base/kb.parquet"),
+        dupManifestOld = spark.read.parquet(mPath),
+        dupEdgesOld = spark.read.parquet(ePath),
+        dupSigsOld = spark.read.parquet(sPath),
+        census = census, weights = weights, thrTot = thrTot, thrN = thrN, evalh = evalh,
+        precomputedFeatFresh = Some(pre))
+    }
+    assert(e.getMessage.contains("quality_score"), e.getMessage)
+    // the status tracker is listener-fed: poll until no job is active
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + 15000000000L
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      "the overlapped feature job outlived the failed update")
+    spark.catalog.clearCache()
+  }
+}
+
+object ManifestIncrSpec {
+  /** JVM-wide one-shot latch for the stalling UDF (its closure is copied
+    * per task; an object field is not). */
+  val stalled = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

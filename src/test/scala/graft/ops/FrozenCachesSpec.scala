@@ -3,11 +3,12 @@ package graft.ops
 import graft.SparkSpec
 
 /** The frozen-artifact invalidation contract: clearAll() drops every
-  * path-keyed model/sketch/manifest/widen cache (and deletes the manifest
-  * temp dirs), and a rebuild from the same data reproduces the identical
+  * path-keyed model/sketch/manifest/widen cache (and deletes every owned
+  * temp dir), and a rebuild from the same data reproduces the identical
   * results — so a long-lived session that regenerates its data can
   * clearAll() and trust what comes back. */
 class FrozenCachesSpec extends SparkSpec {
+  import java.nio.file.{Files, Paths}
   private val dir = "/root/testdata/sf0.001"
 
   test("clearAll invalidates the dup-cluster manifest; the rebuild is identical") {
@@ -26,7 +27,7 @@ class FrozenCachesSpec extends SparkSpec {
     try {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(tmp, "a.txt"), "one")
       var builds = 0
-      val memo = new FrozenCaches.Memo[Unit, Int]()
+      val memo = new FrozenCaches.Memo[Unit, Int]("spec_fp")
       assert(memo.get(tmp, ()) { builds += 1; builds } === 1)
       assert(memo.get(tmp, ()) { builds += 1; builds } === 1) // unchanged data: cached
       // size change (mtime granularity can be coarse; size alone must trip it)
@@ -36,24 +37,85 @@ class FrozenCachesSpec extends SparkSpec {
     } finally FrozenCaches.deleteTree(tmp)
   }
 
-  test("memo: a stale generation is evicted (beforeClear runs) when data changes") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fp_evict").toString
+  test("memo: a stale generation's owned dir is deleted when data changes") {
+    val tmp = Files.createTempDirectory("graft_fp_evict").toString
     try {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(tmp, "a.txt"), "one")
-      val dropped = new java.util.ArrayList[Int]()
-      val memo = new FrozenCaches.Memo[Unit, Int](beforeClear = vs => dropped.addAll(vs))
-      assert(memo.get(tmp, ())(1) === 1)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(tmp, "a.txt"), "twoo")
-      assert(memo.get(tmp, ())(2) === 2)
-      assert(dropped.size === 1 && dropped.get(0) === 1)
+      Files.writeString(Paths.get(tmp, "a.txt"), "one")
+      val memo = new FrozenCaches.DirMemo[Unit, String]("spec_evict")
+      val first = memo.get(tmp, ())(base => base)
+      assert(Paths.get(first).getFileName.toString.startsWith("graft_spec_evict_"))
+      assert(Files.isDirectory(Paths.get(first)))
+      assert(memo.get(tmp, ())(_ => "rebuilt") === first) // unchanged data: cached
+      Files.writeString(Paths.get(tmp, "a.txt"), "twoo")
+      val second = memo.get(tmp, ())(base => base)
+      assert(second != first)
+      assert(!Files.exists(Paths.get(first)), "the stale generation's dir survived eviction")
+      assert(Files.isDirectory(Paths.get(second)), "eviction deleted the new generation's dir")
     } finally FrozenCaches.deleteTree(tmp)
+  }
+
+  test("dir memo: a builder that throws leaves no dir under its label's prefix, caches nothing") {
+    val tmp = Files.createTempDirectory("graft_fp_throw").toString
+    def owned: Seq[String] =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list()).toSeq.flatten
+        .filter(_.startsWith("graft_spec_throw_"))
+    try {
+      val memo = new FrozenCaches.DirMemo[Unit, String]("spec_throw")
+      FrozenCaches.drainBuildLog()
+      var seen: String = null
+      intercept[RuntimeException](memo.get(tmp, ()) { base =>
+        seen = base
+        Files.writeString(Paths.get(base, "part.txt"), "half-written")
+        throw new RuntimeException("nope")
+      })
+      assert(seen != null && !Files.exists(Paths.get(seen)), "the failed build's dir survived")
+      assert(owned.isEmpty, s"dirs left under the label's prefix: $owned")
+      assert(!FrozenCaches.drainBuildLog().exists(_.artifact == "spec_throw"))
+      var builds = 0
+      val built = memo.get(tmp, ()) { base => builds += 1; base } // nothing cached: builds
+      assert(builds === 1 && Files.isDirectory(Paths.get(built)))
+    } finally FrozenCaches.deleteTree(tmp)
+  }
+
+  test("dir memo: clearAll deletes every owned dir") {
+    val tmp = Files.createTempDirectory("graft_fp_clear").toString
+    try {
+      val a = new FrozenCaches.DirMemo[Int, String]("spec_clear_a")
+      val b = new FrozenCaches.DirMemo[Unit, String]("spec_clear_b")
+      val dirs = Seq(a.get(tmp, 1)(base => base), a.get(tmp, 2)(base => base),
+        b.get(tmp, ())(base => base))
+      // a registered on-disk artifact too: the dup-cluster manifest's dir,
+      // the `graft_dup_manifest_*` component of its input files' paths
+      val f = new java.net.URI(graft.ext.Dedup.dupClusters(spark, dir).inputFiles.head).getPath
+      val dup = f.substring(0, f.indexOf('/', f.indexOf("/graft_dup_manifest_") + 1))
+      assert((dirs :+ dup).forall(d => Files.isDirectory(Paths.get(d))))
+      FrozenCaches.clearAll()
+      val left = (dirs :+ dup).filter(d => Files.exists(Paths.get(d)))
+      assert(left.isEmpty, s"clearAll left owned dirs behind: $left")
+    } finally {
+      FrozenCaches.deleteTree(tmp)
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("the first t_manifest_consume call logs a manifest_publish ledger event") {
+    FrozenCaches.clearAll()
+    FrozenCaches.drainBuildLog()
+    val consume = graft.SparkEntry.queries("t_manifest_consume")
+    consume(spark, dir)
+    val events = FrozenCaches.drainBuildLog()
+    assert(events.exists(e => e.artifact == "manifest_publish" && e.dir == dir),
+      s"no manifest_publish event in ${events.map(_.artifact)}")
+    consume(spark, dir) // published once per corpus: no second event
+    assert(!FrozenCaches.drainBuildLog().exists(_.artifact == "manifest_publish"))
+    spark.catalog.clearCache()
   }
 
   test("memo: a null-returning builder is cached, not silently rebuilt per call") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_fp_null").toString
     try {
       var builds = 0
-      val memo = new FrozenCaches.Memo[Unit, String]()
+      val memo = new FrozenCaches.Memo[Unit, String]("spec_null")
       assert(memo.get(tmp, ()) { builds += 1; null } === null)
       assert(memo.get(tmp, ()) { builds += 1; null } === null)
       assert(builds === 1)
