@@ -2233,11 +2233,11 @@ object Corpus {
   /** The pre-verdict spine as ONE projection of a [[manifestDocFeatures]]
     * (+ is_canonical) feature frame — the warehouse paths' form of the
     * doc-local verdict columns. Same definitions the join form composes:
-    * [[graft.ext.Curation.verdictExprs]] via [[manifestFunnelFrom]]'s
-    * column seam for kept/drop_reason (bench-slice docs — which the
-    * funnel never judges — report kept=false / 'bench_slice', exactly the
-    * left join's NULL coalescing), n_copies carried as stored (never NULL
-    * by [[mixCopiesOn]] construction; coalesce kept as belt). */
+    * [[graft.ext.Curation.verdictExprs]] via [[funnelVerdictCols]] for
+    * kept/drop_reason (bench-slice docs — which the funnel never judges —
+    * report kept=false / 'bench_slice', exactly the left join's NULL
+    * coalescing), n_copies carried as stored (never NULL by
+    * [[mixCopiesOn]] construction; coalesce kept as belt). */
   private def manifestPreFromFeatures(feats: DataFrame): DataFrame = {
     val isTrain = pmod(col("doc_id"), lit(10L)) =!= lit(BenchSlice)
     val (fk, fr) = funnelVerdictCols
@@ -2540,22 +2540,11 @@ object Corpus {
         (contamination <= lit(MaxContamination)).as("pass_decontam"))
   }
 
-  /** The frozen funnel-verdict recomposition from warehouse gate bits and
-    * a CURRENT canonical verdict — [[graft.ext.Curation.verdictExprs]],
-    * the SAME expression definition the one-shot funnel composes, so a
-    * carried row recomposes identically by construction. Canonicality
-    * rides separately because it is membership state the delta update
-    * re-elects. */
-  private def manifestFunnelFrom(feats: DataFrame): DataFrame = {
-    val (kept, reason) = funnelVerdictCols
-    feats.filter(pmod(col("doc_id"), lit(10L)) =!= lit(BenchSlice))
-      .select(col("doc_id"), kept.as("f_kept"), reason.as("f_reason"))
-  }
-
   /** The (kept, drop_reason) column pair over a feature frame's stored
-    * gate bits — ONE definition ([[graft.ext.Curation.verdictExprs]])
-    * shared by [[manifestFunnelFrom]] and the fused pre-verdict spine
-    * ([[manifestPreFromFeatures]]), so the two forms cannot drift. */
+    * gate bits and CURRENT canonical verdict, for the fused pre-verdict
+    * spine ([[manifestPreFromFeatures]]) — [[graft.ext.Curation.verdictExprs]],
+    * the SAME expression definition the one-shot funnel composes, so a
+    * carried row recomposes identically by construction. */
   private def funnelVerdictCols: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =
     graft.ext.Curation.verdictExprs(
       coalesce(col("pass_quality"), lit(false)),
@@ -2608,7 +2597,7 @@ object Corpus {
       val feats = spark.read.parquet(s"$base/features.parquet")
       // keep-best over the shared dup warehouse, scored from the feature
       // table (one quality_score computation serves both elections)
-      val (mPath, _, _, _) = graft.ext.Dedup.frozenIncrementalBase(spark, dir, old)
+      val (mPath, _, _, _) = graft.ext.Dedup.frozenIncrementalBase(dir, old)
       graft.ext.Dedup.keepBestFrom(spark.read.parquet(mPath), feats)
         .write.parquet(s"$base/kb.parquet")
       val kb = spark.read.parquet(s"$base/kb.parquet")
@@ -2682,7 +2671,7 @@ object Corpus {
     val old = deltaOldSlice(docs)
     val nw = deltaNewSlice(docs)
     val (base, thrTot, thrN) = frozenManifestBase(spark, dir)
-    val (mPath, ePath, sPath, _) = graft.ext.Dedup.frozenIncrementalBase(spark, dir, old)
+    val (mPath, ePath, sPath, _) = graft.ext.Dedup.frozenIncrementalBase(dir, old)
     manifestIncrementalOn(spark, old, nw,
       featOld = spark.read.parquet(s"$base/features.parquet"),
       kbOld = spark.read.parquet(s"$base/kb.parquet"),
@@ -2767,10 +2756,8 @@ object Corpus {
     // checkpointed EAGERLY so the eight per-doc feature subplans read the
     // materialized |delta|-sized slice instead of each re-scanning the
     // corpus parquet through its own semi-join. delta and freshDocs stay
-    // EAGER deliberately: they are the shared roots of the two independent
-    // subtrees below (feature pass / dedup pass), and materializing them
-    // once up front keeps the concurrent branches from racing to compute
-    // the same partitions.
+    // EAGER deliberately: two actions consume each (the feature pass and
+    // the dedup pass below), and one up-front materialization serves both.
     val freshDocs = graft.ops.Prof(spark, "mwu: freshDocs ckpt")(
       nw.join(fresh, Seq("doc_id"), "left_semi").localCheckpoint())
     val featFresh0 = (precomputedFeatFresh match {
@@ -2787,127 +2774,98 @@ object Corpus {
       case None => manifestDocFeatures(freshDocs, census, weights, thrTot, thrN, evalh)
     })
       .withColumn("is_canonical", lit(null).cast("boolean")) // re-elected below
-    // LAZY checkpoint + background materialization (guide §2.6 "overlap
-    // independent jobs"): the fresh-slice feature pass and the dedup/CC
-    // path below are independent given (delta, freshDocs) — the feature
-    // jobs back-fill executor slots while the driver walks the dedup
-    // update's actions, instead of serializing ~1.5 s of feature jobs in
-    // front of them. The future is joined before this function returns,
-    // so failures still propagate to the caller and the frame is warm for
-    // the assembly tail.
+    // LAZY checkpoint, everything on the caller's thread. NB under AQE a
+    // lazy localCheckpoint is lazy only in its last stage: the call itself
+    // runs the adaptive plan's shuffle-map stages, and the final stage runs
+    // in the first action that reads the frame (measured: every fresh row
+    // of a feature column was computed while featCanon's lazy checkpoint
+    // call below ran)
     val featFresh = featFresh0.localCheckpoint(eager = false)
-    val featFreshWarm = graft.ops.Overlap.background(spark, "mwu: featFresh ckpt") {
-      featFresh.count()
-    }
-    // a foreground failure must not orphan the background jobs: cancel
-    // what was started (featFresh first — featCanon's thread waits on it)
-    // and rethrow
-    var featCanonWarm: Option[graft.ops.Overlap.Handle] = None
-    try {
-      // the carried majority: one anti join of narrow warehouse rows.
-      // NOT checkpointed (round 19): both consumers (reElect's (doc_id, fp)
-      // projection and featCanon itself) live inside featCanon's ONE plan,
-      // so a checkpoint here materialized a full corpus-wide feature copy
-      // only to save re-scanning the column-pruned features.parquet — the
-      // scan is the cheaper side at any scale.
-      val featNew = featOld.join(gone, Seq("doc_id"), "left_anti")
-        .unionByName(featFresh)
-      // exact-dup canonical re-election inside TOUCHED fingerprint groups
-      // only: a group's minimum can move iff the delta added or removed one
-      // of its members; every other doc carries its stored verdict.
-      // NOT checkpointed (round 19): reElect is its ONLY consumer, so the
-      // subtree runs exactly once inside featCanon's materialization — a
-      // checkpoint here paid its own job cascade for nothing.
-      val touchedFp = featOld.join(gone, Seq("doc_id"), "left_semi").select("fp")
-        .unionByName(featFresh.select("fp")).distinct()
-      val reElect = featNew.select("doc_id", "fp")
-        .join(touchedFp, Seq("fp"), "left_semi")
-        .groupBy("fp").agg(min("doc_id").as("canon_id"))
-      val featCanon = featNew.withColumnRenamed("is_canonical", "stored_canon")
-        .join(reElect, Seq("fp"), "left")
-        .withColumn("is_canonical",
-          when(col("canon_id").isNotNull, col("doc_id") === col("canon_id"))
-            .otherwise(col("stored_canon")))
-        .drop("canon_id", "stored_canon")
-        // repartitioned by key before the checkpoint (round 19, the
-        // mmManifestFromState stateCkpt rationale): the carried∪fresh union
-        // stacks partition counts and a localCheckpoint freezes them; one
-        // size-coalesced exchange keeps downstream task counts proportional
-        // to data, not to checkpoint arity
-        .repartition(col("doc_id"))
-        .localCheckpoint(eager = false)
-      // overlap (guide §2.6, round 19): the carried-feature/re-election chain
-      // is independent of the dedup/CC chain below given (delta, freshDocs,
-      // featFresh) — materialize featCanon on a background thread so its
-      // jobs back-fill executor slots while the driver walks the dedup
-      // update's actions (subEdges count, CC rounds); awaited before return.
-      featCanonWarm = Some(graft.ops.Overlap.background(spark, "mwu: featCanon ckpt") {
-        // chained behind featFresh's materialization: featCanon embeds the
-        // featFresh checkpoint, and two threads racing to compute the same
-        // un-materialized RDD would duplicate the feature pass's work
-        featFreshWarm.await()
-        featCanon.count()
-      })
-      // near-dup clusters: the shared delta-bounded CC update, fed the
-      // ALREADY-computed delta and fresh slice so the corpus-proportional
-      // classify and the fresh text pass run once per snapshot, not once
-      // per update family; the state-rolling form, so the dup warehouse
-      // (manifest + edges + signatures) rolls forward with the features
-      val dupNew = graft.ext.Dedup.dupWarehouseUpdateOn(old, nw,
-          dupManifestOld, dupEdgesOld, oldSigs = Some(dupSigsOld),
-          precomputedDelta = Some(delta), precomputedFresh = Some(freshDocs))
-      // checkpointed: many genuinely separate consumers (movedIds, touched
-      // clusters, both kb branches, the assembly's dc side) — dropping this
-      // one was A/B'd in round 19 and measured WORSE (140→154 steady jobs)
-      val dcNew = dupNew.manifest.repartition(col("doc_id"))
-        .localCheckpoint(eager = false)
-      // keep-best re-election, touched clusters only: a cluster's winner can
-      // move iff its membership changed (fresh member, gone/changed member —
-      // including clusters that merely lost a doc while keeping their id) or
-      // a member's score changed (changed ⊆ fresh)
-      val goneOldClusters = dupManifestOld.join(gone, Seq("doc_id"), "left_semi")
-        .select("cluster_id")
-      val membersOfGone = dupManifestOld.join(goneOldClusters, Seq("cluster_id"), "left_semi")
-        .select("doc_id")
-      val movedIds = dcNew.select(col("doc_id"), col("cluster_id").as("new_cid"))
-        .join(dupManifestOld.select(col("doc_id"), col("cluster_id").as("old_cid")),
-          Seq("doc_id"), "left")
-        .filter(col("old_cid").isNull || col("new_cid") =!= col("old_cid"))
-        .select("doc_id")
-      // LAZY (round 19): consumed by kbTouched and the kbNew anti-join, both
-      // inside the assembly tail's one materializing action
-      val touchedClusters = dcNew
-        .join(fresh.unionByName(membersOfGone).unionByName(movedIds).distinct(),
-          Seq("doc_id"), "left_semi")
-        .select("cluster_id").distinct().localCheckpoint(eager = false)
-      val kbTouched = graft.ext.Dedup.keepBestFrom(
-        dcNew.join(touchedClusters, Seq("cluster_id"), "left_semi"),
-        featCanon.select("doc_id", "quality_score"))
-      // carried elections: clusters still PRESENT in the new manifest (a
-      // fully-vanished cluster's row must not survive) and not touched
-      val kbNew = kbOld
-        .join(dcNew.filter(col("is_canonical")).select("cluster_id"), Seq("cluster_id"), "left_semi")
-        .join(touchedClusters, Seq("cluster_id"), "left_anti")
-        .unionByName(kbTouched)
-      // every doc-local verdict input is a column of featCanon: ONE
-      // projection feeds the assembly tail (round 18 — the join form paid
-      // four featCanon re-reads composed back on doc_id for nothing)
-      val manifest = assembleManifestPre(
-        pre = manifestPreFromFeatures(featCanon),
-        dc = dcNew.select("doc_id", "cluster_id"),
-        kb = kbNew.select("cluster_id", "keep_doc_id"),
-        packTok = ids => featCanon.select("doc_id", "lang", "n_tok").join(ids, Seq("doc_id")))
-      // re-join the overlapped materializations: a failure there must
-      // surface HERE, not from some later consumer's stack
-      featFreshWarm.await()
-      featCanonWarm.foreach(_.await())
-      ManifestWarehouse(featCanon, kbNew,
-        dupNew.copy(manifest = dcNew), manifest)
-    } catch { case e: Throwable =>
-      featFreshWarm.cancel()
-      featCanonWarm.foreach(_.cancel())
-      throw e
-    }
+    // the carried majority: one anti join of narrow warehouse rows.
+    // NOT checkpointed (round 19): both consumers (reElect's (doc_id, fp)
+    // projection and featCanon itself) live inside featCanon's ONE plan,
+    // so a checkpoint here materialized a full corpus-wide feature copy
+    // only to save re-scanning the column-pruned features.parquet — the
+    // scan is the cheaper side at any scale.
+    val featNew = featOld.join(gone, Seq("doc_id"), "left_anti")
+      .unionByName(featFresh)
+    // exact-dup canonical re-election inside TOUCHED fingerprint groups
+    // only: a group's minimum can move iff the delta added or removed one
+    // of its members; every other doc carries its stored verdict.
+    // NOT checkpointed (round 19): reElect is its ONLY consumer, so the
+    // subtree runs exactly once inside featCanon's materialization — a
+    // checkpoint here paid its own job cascade for nothing.
+    val touchedFp = featOld.join(gone, Seq("doc_id"), "left_semi").select("fp")
+      .unionByName(featFresh.select("fp")).distinct()
+    val reElect = featNew.select("doc_id", "fp")
+      .join(touchedFp, Seq("fp"), "left_semi")
+      .groupBy("fp").agg(min("doc_id").as("canon_id"))
+    val featCanon = featNew.withColumnRenamed("is_canonical", "stored_canon")
+      .join(reElect, Seq("fp"), "left")
+      .withColumn("is_canonical",
+        when(col("canon_id").isNotNull, col("doc_id") === col("canon_id"))
+          .otherwise(col("stored_canon")))
+      .drop("canon_id", "stored_canon")
+      // repartitioned by key before the checkpoint (round 19, the
+      // mmManifestFromState stateCkpt rationale): the carried∪fresh union
+      // stacks partition counts and a localCheckpoint freezes them; one
+      // size-coalesced exchange keeps downstream task counts proportional
+      // to data, not to checkpoint arity. LAZY like featFresh: this call
+      // runs the feature pass and the re-election's shuffle-map stages, and
+      // the first action that reads featCanon writes its blocks
+      .repartition(col("doc_id"))
+      .localCheckpoint(eager = false)
+    // near-dup clusters: the shared delta-bounded CC update, fed the
+    // ALREADY-computed delta and fresh slice so the corpus-proportional
+    // classify and the fresh text pass run once per snapshot, not once
+    // per update family; the state-rolling form, so the dup warehouse
+    // (manifest + edges + signatures) rolls forward with the features
+    val dupNew = graft.ext.Dedup.dupWarehouseUpdateOn(old, nw,
+      dupManifestOld, dupEdgesOld, oldSigs = Some(dupSigsOld),
+      precomputedDelta = Some(delta), precomputedFresh = Some(freshDocs))
+    // checkpointed: many genuinely separate consumers (movedIds, touched
+    // clusters, both kb branches, the assembly's dc side) — dropping this
+    // one was A/B'd in round 19 and measured WORSE (140→154 steady jobs)
+    val dcNew = dupNew.manifest.repartition(col("doc_id"))
+      .localCheckpoint(eager = false)
+    // keep-best re-election, touched clusters only: a cluster's winner can
+    // move iff its membership changed (fresh member, gone/changed member —
+    // including clusters that merely lost a doc while keeping their id) or
+    // a member's score changed (changed ⊆ fresh)
+    val goneOldClusters = dupManifestOld.join(gone, Seq("doc_id"), "left_semi")
+      .select("cluster_id")
+    val membersOfGone = dupManifestOld.join(goneOldClusters, Seq("cluster_id"), "left_semi")
+      .select("doc_id")
+    val movedIds = dcNew.select(col("doc_id"), col("cluster_id").as("new_cid"))
+      .join(dupManifestOld.select(col("doc_id"), col("cluster_id").as("old_cid")),
+        Seq("doc_id"), "left")
+      .filter(col("old_cid").isNull || col("new_cid") =!= col("old_cid"))
+      .select("doc_id")
+    // LAZY (round 19): consumed by kbTouched and the kbNew anti-join, both
+    // inside the assembly tail's one materializing action
+    val touchedClusters = dcNew
+      .join(fresh.unionByName(membersOfGone).unionByName(movedIds).distinct(),
+        Seq("doc_id"), "left_semi")
+      .select("cluster_id").distinct().localCheckpoint(eager = false)
+    val kbTouched = graft.ext.Dedup.keepBestFrom(
+      dcNew.join(touchedClusters, Seq("cluster_id"), "left_semi"),
+      featCanon.select("doc_id", "quality_score"))
+    // carried elections: clusters still PRESENT in the new manifest (a
+    // fully-vanished cluster's row must not survive) and not touched
+    val kbNew = kbOld
+      .join(dcNew.filter(col("is_canonical")).select("cluster_id"), Seq("cluster_id"), "left_semi")
+      .join(touchedClusters, Seq("cluster_id"), "left_anti")
+      .unionByName(kbTouched)
+    // every doc-local verdict input is a column of featCanon: ONE
+    // projection feeds the assembly tail (round 18 — the join form paid
+    // four featCanon re-reads composed back on doc_id for nothing)
+    val manifest = assembleManifestPre(
+      pre = manifestPreFromFeatures(featCanon),
+      dc = dcNew.select("doc_id", "cluster_id"),
+      kb = kbNew.select("cluster_id", "keep_doc_id"),
+      packTok = ids => featCanon.select("doc_id", "lang", "n_tok").join(ids, Seq("doc_id")))
+    ManifestWarehouse(featCanon, kbNew,
+      dupNew.copy(manifest = dcNew), manifest)
   }
 
   lazy val manifestIncrementalSql: String =
@@ -2937,7 +2895,7 @@ object Corpus {
       val s0 = deltaOldSlice(docs)
       val s1 = deltaNewSlice(docs)
       val (base, thrTot, thrN) = frozenManifestBase(spark, dir)
-      val (mPath, ePath, sPath, _) = graft.ext.Dedup.frozenIncrementalBase(spark, dir, s0)
+      val (mPath, ePath, sPath, _) = graft.ext.Dedup.frozenIncrementalBase(dir, s0)
       val w1 = manifestWarehouseUpdateOn(spark, s0, s1,
         featOld = spark.read.parquet(s"$base/features.parquet"),
         kbOld = spark.read.parquet(s"$base/kb.parquet"),

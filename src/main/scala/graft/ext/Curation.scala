@@ -74,7 +74,7 @@ object Curation {
   /** THE verdict expressions — (kept, drop_reason) from the six coalesced
     * gate bits, gate order = drop-reason priority. One definition shared
     * by the funnel tail and the manifest family's warehouse recomposition
-    * ([[graft.ext.Corpus]] `manifestFunnelFrom`), so a carried gate-bit
+    * ([[graft.ext.Corpus]] `funnelVerdictCols`), so a carried gate-bit
     * row recomposes to EXACTLY the one-shot funnel's verdict by
     * construction, not by parallel-maintained expression text. */
   private[ext] def verdictExprs(pq: org.apache.spark.sql.Column,

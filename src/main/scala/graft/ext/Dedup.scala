@@ -1151,7 +1151,7 @@ object Dedup {
     * measures the steady-state update). Signatures persist next to the
     * manifest — the production warehouse layout — so the update signs only
     * fresh docs. */
-  private[ext] def frozenIncrementalBase(spark: SparkSession, dir: String,
+  private[ext] def frozenIncrementalBase(dir: String,
                                          old: DataFrame): (String, String, String, String) =
     incrementalBaseCache.get(dir, (NumHashes, NumBands)) { base =>
       // one signature table feeds the edge build AND freezes as warehouse
@@ -1190,7 +1190,7 @@ object Dedup {
     * snapshot. */
   def dupClustersBase(spark: SparkSession, dir: String): DataFrame = {
     val old = graft.ext.Corpus.deltaOldSlice(Tables.documents(spark, dir))
-    val (manifestPath, _, _, _) = frozenIncrementalBase(spark, dir, old)
+    val (manifestPath, _, _, _) = frozenIncrementalBase(dir, old)
     spark.read.parquet(manifestPath)
   }
 
@@ -1216,7 +1216,7 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
     val old = graft.ext.Corpus.deltaOldSlice(docs)
     val nw = graft.ext.Corpus.deltaNewSlice(docs)
-    val (manifestPath, edgesPath, sigsPath, fpsPath) = frozenIncrementalBase(spark, dir, old)
+    val (manifestPath, edgesPath, sigsPath, fpsPath) = frozenIncrementalBase(dir, old)
     dupClustersIncrementalOn(old, nw,
       spark.read.parquet(manifestPath), spark.read.parquet(edgesPath),
       oldSigs = Some(spark.read.parquet(sigsPath)),
@@ -1279,7 +1279,7 @@ object Dedup {
       val docs = Tables.documents(spark, dir)
       val s0 = graft.ext.Corpus.deltaOldSlice(docs)
       val s1 = graft.ext.Corpus.deltaNewSlice(docs)
-      val (mPath, ePath, sPath, fPath) = frozenIncrementalBase(spark, dir, s0)
+      val (mPath, ePath, sPath, fPath) = frozenIncrementalBase(dir, s0)
       val w1 = dupWarehouseUpdateOn(s0, s1,
         spark.read.parquet(mPath), spark.read.parquet(ePath),
         oldSigs = Some(spark.read.parquet(sPath)),

@@ -2142,7 +2142,7 @@ object Text {
          |             ORDER BY score DESC, list_reverse(starts)) AS rn
          |    FROM upaths$r WHERE p = length(w) + 1)
          |  WHERE rn = 1)""".stripMargin
-    def piecesOf(rel: String): String =
+    val pieces =
       s"""unnest(list_transform(starts, (st, i) ->
          |  substr(w, CAST(st AS INT),
          |         CAST(coalesce(starts[CAST(i + 1 AS INT)], length(w) + 1) - st AS INT))))""".stripMargin
@@ -2150,7 +2150,7 @@ object Text {
       s"""${pathsSql(r)},
          |ucnt$r AS (
          |  SELECT piece, CAST(sum(freq) AS BIGINT) AS used
-         |  FROM (SELECT freq, ${piecesOf(s"ubest$r")} AS piece FROM ubest$r)
+         |  FROM (SELECT freq, $pieces AS piece FROM ubest$r)
          |  GROUP BY 1),
          |uvc${r + 1} AS (
          |  SELECT v.piece,

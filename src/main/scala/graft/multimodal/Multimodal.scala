@@ -1407,7 +1407,7 @@ object Multimodal {
     * (relations `kaj`, `kar`, `ka`) — composed by the aligned-keep-best
     * oracle AND every composed-manifest oracle so the election
     * arithmetic cannot drift between them. */
-  private def mediaKbaCtesFor(rel: String): String =
+  private def mediaKbaCtes: String =
     s"""kaj AS (
        |  SELECT c.cluster_id, c.doc_id, a.align_cos, s.cluster_size
        |  FROM comp c
@@ -1426,7 +1426,7 @@ object Multimodal {
   lazy val mediaKeepBestAlignedSql: String =
     s"""WITH RECURSIVE ${mediaClusterCtesFor("documents")},
        |af AS MATERIALIZED (${alignFilterSqlFor("documents")}),
-       |${mediaKbaCtesFor("documents")}
+       |$mediaKbaCtes
        |SELECT cluster_id, keep_doc_id, keep_align_cos,
        |       cluster_size, cluster_size - 1 AS n_removed
        |FROM ka ORDER BY cluster_id""".stripMargin
@@ -1683,7 +1683,7 @@ object Multimodal {
   lazy val mmCurationFunnelSql: String =
     s"""WITH RECURSIVE ${mediaClusterCtesFor("documents")},
        |af AS MATERIALIZED (${alignFilterSqlFor("documents")}),
-       |${mediaKbaCtesFor("documents")},
+       |$mediaKbaCtes,
        |dm AS (
        |  SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n
        |  FROM documents),
@@ -2064,7 +2064,7 @@ object Multimodal {
     * from-scratch oracle, and the rolled row's, so none can drift. Every
     * stage embeds its own registered oracle: [[alignFilterSqlFor]] whole
     * as the `af` CTE, the cluster closure via [[mediaClusterCtesFor]],
-    * the aligned election via [[mediaKbaCtesFor]], the split via the
+    * the aligned election via [[mediaKbaCtes]], the split via the
     * shared [[graft.ext.Corpus.splitHashSql]]/`splitCaseSql` pieces, and
     * the pack chain via [[graft.ext.Corpus.seqPackRowCtesSql]] over the
     * packed survivors (the `pipelineManifestCtesFor` discipline). The
@@ -2073,7 +2073,7 @@ object Multimodal {
   private def mmManifestCtesFor(rel: String): String =
     s"""${mediaClusterCtesFor(rel)},
        |af AS MATERIALIZED (${alignFilterSqlFor(rel)}),
-       |${mediaKbaCtesFor(rel)},
+       |$mediaKbaCtes,
        |${graft.ext.Corpus.inheritedSplitCtesFor(rel, "comp")},
        |meta2 AS (SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes FROM $rel),
        |verdict AS MATERIALIZED (

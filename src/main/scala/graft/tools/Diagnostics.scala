@@ -58,6 +58,50 @@ object PlanDump {
   }
 }
 
+/** Optimized-plan snapshot of the whole registry, for checking that a
+  * change leaves query plans alone:
+  * `runMain graft.tools.OptimizedPlans <sfDir> <out.json>` builds every
+  * registered query in one JVM and writes `{name: optimizedPlan}`; a query
+  * whose build throws gets `ERROR <class>: <message>` instead. Compare two
+  * snapshots with `python3 tools/plan_diff.py <a.json> <b.json>`.
+  *
+  * Identifiers that differ between two runs of the same code are
+  * normalized: exprIds are renumbered in order of first appearance,
+  * `plan_id`s, lambda class names and `@`-object hashes are masked, and
+  * `graft_<label>_<digits>` temp-dir names lose their random suffix. */
+object OptimizedPlans {
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outPath) = args
+    val spark = Tools.session()
+    val plans = graft.SparkEntry.registry.map(_.name).map { name =>
+      val plan =
+        try normalize(graft.SparkEntry.queries(name)(spark, sfDir)
+          .queryExecution.optimizedPlan.toString)
+        catch { case e: Throwable => s"ERROR ${e.getClass.getName}: ${e.getMessage}" }
+      spark.catalog.clearCache()
+      name -> plan
+    }
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
+      plans.map { case (k, v) => s"${graft.Verify.jsonStr(k)}: ${graft.Verify.jsonStr(v)}" }
+        .mkString("{\n", ",\n", "\n}\n"))
+    println(s"[plans] ${plans.size} optimized plans -> $outPath, " +
+      s"${plans.count(_._2.startsWith("ERROR "))} errored")
+    spark.stop()
+  }
+
+  private def normalize(plan: String): String = {
+    val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    val renumbered = "#(\\d+)".r.replaceAllIn(plan,
+      m => "#" + ids.getOrElseUpdate(m.group(1), ids.size))
+    Seq(
+      "plan_id=\\d+" -> "plan_id=_",
+      "\\$\\$Lambda[$/\\w]*" -> "\\$\\$Lambda",
+      "@[0-9a-f]{4,}\\b" -> "@_",
+      "(graft_\\w*?_)\\d+" -> "$1_"
+    ).foldLeft(renumbered) { case (p, (re, to)) => p.replaceAll(re, to) }
+  }
+}
+
 /** Per-job wall-clock profile of a registry query — the measurement behind
   * the round-18 job-count work on the incremental/rolled warehouse family:
   * those queries are many small reconciliation jobs, so the optimization
@@ -72,7 +116,7 @@ object JobProfile {
     val spark = Tools.session()
     spark.range(1000000).selectExpr("sum(id)").collect() // JIT warmup
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String, Int, Int)]()
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String, Int)]()
     val taskCount = new java.util.concurrent.atomic.AtomicInteger
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -87,7 +131,7 @@ object JobProfile {
         val s = starts.remove(j.jobId)
         if (s != null)
           done.add((j.jobId, (System.nanoTime() - s._1) / 1e6, s._2,
-            0, taskCount.get() - s._3))
+            taskCount.get() - s._3))
       }
     })
     namesCsv.split(",").foreach { name =>
@@ -102,9 +146,9 @@ object JobProfile {
         import scala.jdk.CollectionConverters._
         val jobs = done.asScala.toSeq.sortBy(_._1)
         println(f"== $name run $run: wall=$dt%.2f s, jobs=${jobs.size}, " +
-          f"job_ms_sum=${jobs.map(_._2).sum}%.0f, tasks=${jobs.map(_._5).sum}")
+          f"job_ms_sum=${jobs.map(_._2).sum}%.0f, tasks=${jobs.map(_._4).sum}")
         if (run == 2)
-          jobs.foreach { case (id, ms, site, _, tasks) =>
+          jobs.foreach { case (id, ms, site, tasks) =>
             println(f"  job $id%4d $ms%8.1f ms $tasks%4d tasks  $site") }
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))

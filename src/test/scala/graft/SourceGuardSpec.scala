@@ -3,7 +3,7 @@ package graft
 import java.io.File
 
 /** Source guard over `src/main` (the [[FoldingGuardSpec]] approach: scan
-  * the tree, fail on the pattern, self-check the scanner) for two rules
+  * the tree, fail on the pattern, self-check the scanner) for three rules
   * no compiler checks:
   *
   *  1. Temp dirs are created in ONE place: `createTempDirectory` appears
@@ -17,6 +17,10 @@ import java.io.File
   *     handler never mentions) must use what it caught — report its cause
   *     or rethrow it. A case for one specific exception class (a missing
   *     file read as "no data") is a decision, not a swallow, and passes.
+  *  3. The library drives Spark from the caller's thread: `new Thread(`,
+  *     `setJobGroup` and `cancelJobGroup` appear only in `FrozenCaches`'
+  *     shutdown hook. A background action needs a join and a cancel path
+  *     on every exit, or its jobs outlive the call that started them.
   */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -162,6 +166,21 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
+  private val threadRe = """new\s+Thread\s*\(|\bsetJobGroup\b|\bcancelJobGroup""".r
+  private val hookRe = """addShutdownHook\s*\(\s*new\s+Thread\s*\(""".r
+
+  /** Thread starts and job-group calls, as `file:line: call`, except the
+    * shutdown hook's thread in `ops/FrozenCaches.scala`. */
+  private def threadSites(file: String, src: String): Seq[String] = {
+    val code = blank(src, keepStrings = false)
+    val hooks =
+      if (file.endsWith("ops/FrozenCaches.scala")) hookRe.findAllMatchIn(code).map(_.end).toSet
+      else Set.empty[Int]
+    threadRe.findAllMatchIn(code).filterNot(m => hooks.contains(m.end)).map { m =>
+      s"$file:${src.substring(0, m.start).count(_ == '\n') + 1}: ${m.matched}"
+    }.toSeq
+  }
+
   test("src/main creates temp dirs only in ops/FrozenCaches.scala") {
     def creators(src: String) =
       "createTempDirectory".r.findAllIn(blank(src, keepStrings = false)).size
@@ -177,6 +196,32 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     val offenders = sources.flatMap { case (f, src) => silentCatches(f, src) }
     assert(offenders.isEmpty,
       s"catch-all cases that drop their cause (report or rethrow it):\n${offenders.mkString("\n")}")
+  }
+
+  test("src/main starts threads and job groups only in FrozenCaches' shutdown hook") {
+    val owner = sources.filter(_._1.endsWith("ops/FrozenCaches.scala"))
+    assert(owner.size === 1 &&
+      hookRe.findAllIn(blank(owner.head._2, keepStrings = false)).size === 1,
+      "the scan no longer sees FrozenCaches' shutdown hook")
+    val offenders = sources.flatMap { case (f, src) => threadSites(f, src) }
+    assert(offenders.isEmpty,
+      s"threads or job groups outside the shutdown hook (run actions on the caller's thread):\n${offenders.mkString("\n")}")
+  }
+
+  test("scanner self-check: thread starts and job groups are detected; the shutdown hook passes") {
+    val src =
+      """object X {
+        |  // new Thread(() => ()) and setJobGroup(g, d)   (a comment: ignored)
+        |  val s = "sc.cancelJobGroup(g)"
+        |  Runtime.getRuntime.addShutdownHook(new Thread(() => clearAll()))
+        |  val t = new Thread(() => body)
+        |  def a = { sc.setJobGroup(g, d, interruptOnCancel = true); f() }
+        |  def b = sc.cancelJobGroupAndFutureJobs(g)
+        |  val u = new  Thread (r)
+        |}""".stripMargin
+    val lines = (f: String) => threadSites(f, src).map(_.split(":")(1).toInt)
+    assert(lines("ops/FrozenCaches.scala") === Seq(5, 6, 7, 8))
+    assert(lines("ext/Corpus.scala") === Seq(4, 5, 6, 7, 8))
   }
 
   test("scanner self-check: silent catch-alls are detected; used and specific ones pass") {

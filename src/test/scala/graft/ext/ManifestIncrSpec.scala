@@ -207,7 +207,7 @@ class ManifestIncrSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir)
     val old = Corpus.deltaOldSlice(docs)
     val (base, thrTot, thrN) = Corpus.frozenManifestBase(spark, dir)
-    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(spark, dir, old)
+    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(dir, old)
     val noop = Corpus.manifestIncrementalOn(spark, old, old,
       featOld = spark.read.parquet(s"$base/features.parquet"),
       kbOld = spark.read.parquet(s"$base/kb.parquet"),
@@ -244,7 +244,7 @@ class ManifestIncrSpec extends SparkSpec {
           concat(col("text"), lit(" [rev3]"))).otherwise(col("text")))
       .filter(pmod(col("doc_id"), lit(Corpus.DeltaMod)) =!= lit(7))
     val (base, thrTot, thrN) = Corpus.frozenManifestBase(spark, dir)
-    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(spark, dir, s0)
+    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(dir, s0)
     val census = spark.read.parquet(s"$base/census.parquet")
     val weights = spark.read.parquet(s"$base/weights.parquet")
     val evalh = spark.read.parquet(s"$base/evalh.parquet")
@@ -322,7 +322,7 @@ class ManifestIncrSpec extends SparkSpec {
         (id, txt, lang, source, nch)
       }.toDF("doc_id", "text", "lang", "source", "n_chars")
     val (base, thrTot, thrN) = Corpus.frozenManifestBase(spark, dir)
-    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(spark, dir, s0df)
+    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(dir, s0df)
     val census = spark.read.parquet(s"$base/census.parquet")
     val weights = spark.read.parquet(s"$base/weights.parquet")
     val evalh = spark.read.parquet(s"$base/evalh.parquet")
@@ -383,7 +383,7 @@ class ManifestIncrSpec extends SparkSpec {
           concat(col("text"), lit(" [rev3]"))).otherwise(col("text")))
       .filter(pmod(col("doc_id"), lit(Corpus.DeltaMod)) =!= lit(7))
     val (base, thrTot, thrN) = Corpus.frozenManifestBase(spark, dir)
-    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(spark, dir, s0)
+    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(dir, s0)
     val census = spark.read.parquet(s"$base/census.parquet")
     val weights = spark.read.parquet(s"$base/weights.parquet")
     val evalh = spark.read.parquet(s"$base/evalh.parquet")
@@ -444,7 +444,7 @@ class ManifestIncrSpec extends SparkSpec {
     val old = Corpus.deltaOldSlice(docs)
     val nw = Corpus.deltaNewSlice(docs)
     val (base, thrTot, thrN) = Corpus.frozenManifestBase(spark, dir)
-    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(spark, dir, old)
+    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(dir, old)
     val census = spark.read.parquet(s"$base/census.parquet")
     val weights = spark.read.parquet(s"$base/weights.parquet")
     val evalh = spark.read.parquet(s"$base/evalh.parquet")
@@ -516,7 +516,7 @@ class ManifestIncrSpec extends SparkSpec {
     val s0 = Corpus.deltaOldSlice(docs)
     val empty = s0.limit(0)
     val (base, thrTot, thrN) = Corpus.frozenManifestBase(spark, dir)
-    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(spark, dir, s0)
+    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(dir, s0)
     val census = spark.read.parquet(s"$base/census.parquet")
     val weights = spark.read.parquet(s"$base/weights.parquet")
     val evalh = spark.read.parquet(s"$base/evalh.parquet")
@@ -556,7 +556,7 @@ class ManifestIncrSpec extends SparkSpec {
     val evalh = spark.read.parquet(s"$base/evalh.parquet")
     val featOld = spark.read.parquet(s"$base/features.parquet")
     val kbOld = spark.read.parquet(s"$base/kb.parquet")
-    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(spark, dir, s0)
+    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(dir, s0)
     def cum(k: Int) = s0.filter(pmod(col("doc_id"), lit(3)) <= lit(k))
     def ckpt(w: Corpus.ManifestWarehouse) = Corpus.ManifestWarehouse(
       w.features.localCheckpoint(), w.kb.localCheckpoint(),
@@ -710,31 +710,14 @@ class ManifestIncrSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("manifest update: a foreground failure cancels the overlapped feature job and rethrows") {
+  test("manifest update: a failing update propagates its own cause and leaves no job running") {
     val docs = Tables.documents(spark, dir)
     val old = Corpus.deltaOldSlice(docs)
     val nw = Corpus.deltaNewSlice(docs)
     val (base, thrTot, thrN) = Corpus.frozenManifestBase(spark, dir)
-    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(spark, dir, old)
-    val census = spark.read.parquet(s"$base/census.parquet")
-    val weights = spark.read.parquet(s"$base/weights.parquet")
-    val evalh = spark.read.parquet(s"$base/evalh.parquet")
-    // streamed-ingest features that stall a minute inside the background
-    // featFresh job (matched by its job label; repartitioned first, so the
-    // stalling column is computed after the semi-join's shuffle, in that
-    // job): the job is still running when the foreground fails on a
-    // feature table that lost a column
-    ManifestIncrSpec.stalled.set(false)
-    val stallInFeatFresh = udf { (n: Long) =>
-      val job = org.apache.spark.TaskContext.get().getLocalProperty("spark.job.description")
-      if (job == "mwu: featFresh ckpt" && ManifestIncrSpec.stalled.compareAndSet(false, true))
-        Thread.sleep(60000)
-      n
-    }
-    val pre = Corpus.manifestDocFeatures(nw, census, weights, thrTot, thrN, evalh)
-      .localCheckpoint()
-      .repartition(col("doc_id"))
-      .withColumn("n_tok", stallInFeatFresh(col("n_tok")))
+    val (mPath, ePath, sPath, _) = Dedup.frozenIncrementalBase(dir, old)
+    // a feature table that lost a column: the update fails part-way, after
+    // its eager checkpoints have run jobs
     val e = intercept[AnalysisException] {
       Corpus.manifestWarehouseUpdateOn(spark, old, nw,
         featOld = spark.read.parquet(s"$base/features.parquet").drop("quality_score"),
@@ -742,8 +725,10 @@ class ManifestIncrSpec extends SparkSpec {
         dupManifestOld = spark.read.parquet(mPath),
         dupEdgesOld = spark.read.parquet(ePath),
         dupSigsOld = spark.read.parquet(sPath),
-        census = census, weights = weights, thrTot = thrTot, thrN = thrN, evalh = evalh,
-        precomputedFeatFresh = Some(pre))
+        census = spark.read.parquet(s"$base/census.parquet"),
+        weights = spark.read.parquet(s"$base/weights.parquet"),
+        thrTot = thrTot, thrN = thrN,
+        evalh = spark.read.parquet(s"$base/evalh.parquet"))
     }
     assert(e.getMessage.contains("quality_score"), e.getMessage)
     // the status tracker is listener-fed: poll until no job is active
@@ -752,13 +737,7 @@ class ManifestIncrSpec extends SparkSpec {
     while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
       Thread.sleep(50)
     assert(sc.statusTracker.getActiveJobIds.isEmpty,
-      "the overlapped feature job outlived the failed update")
+      "a job outlived the failed update")
     spark.catalog.clearCache()
   }
-}
-
-object ManifestIncrSpec {
-  /** JVM-wide one-shot latch for the stalling UDF (its closure is copied
-    * per task; an object field is not). */
-  val stalled = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
